@@ -73,7 +73,10 @@ object Bench {
           val df = fn(spark, warmDir)
           df.count()
           WindowAudit.violation(name, df).foreach(winViolations += _)
-        } catch { case _: Throwable => () }
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+        }
       }
       require(winViolations.isEmpty,
         "unpartitioned-window audit failed:\n" + winViolations.mkString("\n"))

@@ -40,14 +40,20 @@ object JobCensus {
         }
       })
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-    qs.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
+    qs.foreach { case (name, fn) =>
+      try fn(spark, warmDir).count() catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+      }
     }
     try Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())
     catch { case _: Throwable => () }
     // cold pass (stages sfDir's staged tables, untimed here)
-    qs.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    qs.foreach { case (name, fn) =>
+      try fn(spark, sfDir).count() catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] cold $name failed: ${e.getMessage}")
+      }
     }
     println(f"${"query"}%-32s ${"wall"}%7s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"taskSec"}%8s")
     qs.foreach { case (name, fn) =>

@@ -30,8 +30,11 @@ object MicroBench {
     val fns = names.map(n => n -> SparkEntry.queries.getOrElse(n,
       sys.error(s"unknown query $n")))
     // untimed warmup at the smallest fixture (codegen/JIT, not data)
-    fns.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
+    fns.foreach { case (name, fn) =>
+      try fn(spark, warmDir).count() catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+      }
     }
     // footer caching for the benched fixture stays untimed (Bench parity)
     try Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())

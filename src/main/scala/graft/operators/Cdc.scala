@@ -341,7 +341,7 @@ object Cdc {
     * `asOfLsn` is the version row whose interval covers it — one
     * FILTER over the history, no changelog re-fold. This is why SCD2
     * is kept at all: any historical state is a predicate, and with the
-    * history in the partitioned store the filter composes with bucket
+    * history in a lake table the filter composes with file-stats
     * pruning. Interval semantics make the boundary exact: a version
     * created AT the cutoff is visible, a delete AT the cutoff has
     * already closed its interval (matching C4's fold, where the delete
@@ -576,10 +576,9 @@ object Cdc {
     * the result straight back onto the wire.
     *
     * Scale: one full outer join keyed by PK — each side shuffles once
-    * (or not at all when both snapshots come bucketed from the same
-    * keyed store, the [[graft.streaming.PartitionedSnapshotStore]]
-    * layout), and the per-column null-safe comparison is codegen'd
-    * row work. Nothing concentrates; nothing is driver-side.
+    * (two [[graft.sources.LakeFormat.readAsOf]] versions of one lake
+    * table diff the same way), and the per-column null-safe comparison
+    * is codegen'd row work. Nothing concentrates; nothing is driver-side.
     */
   def snapshotDiff(prev: DataFrame, next: DataFrame,
       keys: Seq[String]): DataFrame = {
@@ -1047,9 +1046,10 @@ object Cdc {
 
   /** Winner per composite key INCLUDING tombstones, for ANY
     * envelope-shaped frame — the table-agnostic, composite-key form of
-    * [[snapshotWithTombstones]] (the mergeable shape the epoch stores
-    * fold across micro-batches: a delete must retain its winning lsn so
-    * a redelivered older update cannot resurrect the row). Output:
+    * [[snapshotWithTombstones]] (the mergeable shape
+    * [[graft.sources.LakeFormat.merge]] folds across micro-batches: a
+    * delete must retain its winning lsn so a redelivered older update
+    * cannot resurrect the row). Output:
     * key columns (top level), `live`, `lsn`, then every non-key
     * after-image field, schema-derived.
     */

@@ -643,8 +643,7 @@ object LakeFormat {
     readGrouped(spark, root, files, identity)
 
   /** The committed snapshot (all stored rows — MERGE tombstones included;
-    * callers filter on `liveCol` for the live view, exactly like
-    * [[graft.streaming.PartitionedSnapshotStore]] readers). */
+    * callers filter on `liveCol` for the live view). */
   def snapshot(spark: SparkSession, root: String): DataFrame = {
     val st = state(spark, root)
     if (st.files.isEmpty) emptyLike(spark, st)

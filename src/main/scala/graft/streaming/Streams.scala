@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import graft.Schemas.{CdcEvent, CdcRow}
+import graft.sources.LakeFormat
 
 /** Structured Streaming surface (SURVEY.md §2.2 T1–T7). Every combinator
   * takes a DataFrame/Dataset that may be batch or streaming — the same
@@ -63,21 +64,17 @@ object Streams extends Serializable {
   def dedupWithinWatermark(events: DataFrame, delay: String = "1 hour"): DataFrame =
     events.withWatermark("ts", delay).dropDuplicatesWithinWatermark("event_id")
 
-  // ------------------------------------------------------------------ T6
-  /** Per-key running-snapshot state: the streaming twin of batch
-    * Cdc.snapshot (C4). Key-partitioned state via flatMapGroupsWithState —
-    * scales horizontally with executors; state per key is O(1) (latest lsn
-    * + row image).
+  // ----------------------------------------------------------------- T11
+  /** Per-key running-snapshot state: the in-memory twin of batch
+    * Cdc.snapshot (C4); state per key is O(1) (latest lsn + row image).
     */
   case class SnapState(lsn: Long, live: Boolean,
       first_name: Option[String], last_name: Option[String], email: Option[String])
   case class SnapUpdate(id: Long, live: Boolean, lsn: Long,
       first_name: Option[String], last_name: Option[String], email: Option[String])
 
-  /** The shared per-key fold: the winning (max-lsn) incoming event against
-    * the prior state; None when the batch is stale/out-of-order — the SAME
-    * state transition drives both the flatMapGroupsWithState form (T6) and
-    * the transformWithState form (T11), so the two APIs cannot drift.
+  /** The per-key fold: the winning (max-lsn) incoming event against the
+    * prior state; None when the batch is stale/out-of-order.
     */
   def advance(id: Long, prior: Option[SnapState],
       incoming: Seq[CdcEvent]): Option[SnapState] = {
@@ -94,42 +91,14 @@ object Streams extends Serializable {
     }
   }
 
-  def foldKey(id: Long, events: Iterator[CdcEvent],
-      state: GroupState[SnapState]): Iterator[SnapUpdate] =
-    advance(id, state.getOption, events.toSeq) match {
-      case None => Iterator.empty
-      case Some(next) =>
-        state.update(next)
-        Iterator.single(SnapUpdate(id, next.live, next.lsn,
-          next.first_name, next.last_name, next.email))
-    }
-
-  /** T6 — running CDC snapshot as an update stream; emit one row per key
-    * per micro-batch when its state advanced. Works on batch Datasets too
-    * (state starts empty, one "batch").
-    */
-  def snapshotStream(events: Dataset[CdcEvent]): Dataset[SnapUpdate] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      // keyless events (both images null — e.g. Debezium TRUNCATE/message
-      // records) carry no row state; dropping them up front keeps them from
-      // collapsing into one shared phantom key
-      .filter(e => e.after.orElse(e.before).isDefined)
-      .groupByKey(e => e.after.orElse(e.before).map(_.id).get)
-      .flatMapGroupsWithState[SnapState, SnapUpdate](
-        OutputMode.Update, GroupStateTimeout.NoTimeout)(foldKey)
-  }
-
-  // ----------------------------------------------------------------- T11
-  /** T11 — the same running snapshot on the Spark 4 arbitrary-state API
-    * (`transformWithState` + [[StatefulProcessor]]), the successor to
-    * flatMapGroupsWithState: typed named state ([[ValueState]]) with
-    * per-state TTL support, timers decoupled from output mode, and state
-    * evolution across query versions. Requires the RocksDB state store
-    * provider (`spark.sql.streaming.stateStore.providerClass`); state per
-    * key is the same O(1) (lsn, row image) record as T6, and the state
-    * transition is the SAME [[advance]] fold, spec-asserted equivalent.
+  /** T11 — the running snapshot as an update stream on the Spark 4
+    * arbitrary-state API (`transformWithState` + [[StatefulProcessor]]):
+    * typed named state ([[ValueState]]) with per-state TTL support, timers
+    * decoupled from output mode, and state evolution across query
+    * versions. Requires the RocksDB state store provider
+    * (`spark.sql.streaming.stateStore.providerClass`); the state
+    * transition is [[advance]]. The durable replica of the same fold is
+    * [[LakeSink]].
     */
   class SnapshotProcessor extends StatefulProcessor[Long, CdcEvent, SnapUpdate] {
     @transient private var latest: ValueState[SnapState] = _
@@ -161,161 +130,6 @@ object Streams extends Serializable {
         TimeMode.None(), OutputMode.Update())
   }
 
-  /** T6-alt — snapshot via foreachBatch + versioned commit: each
-    * micro-batch folds the batch's events with the previously COMMITTED
-    * snapshot and commits the merged table as a new version through
-    * [[SnapshotStore]] (stage data dir → atomic pointer write → GC).
-    * Simpler operational model than state stores — the snapshot IS the
-    * checkpoint — at the cost of rewriting the table per epoch; right when
-    * the snapshot is small relative to the stream (a dimension table fed
-    * by CDC). The version is the micro-batch id: monotonic across restarts
-    * via the query checkpoint, and a replayed batch after a crash commits
-    * the same version it was writing — idempotent recovery.
-    */
-  /** Shared epoch fold for both snapshot sinks: one winner per key from
-    * the union of prior committed state and the batch's winners, ranked by
-    * (lsn desc, incoming-wins). KEEP tombstones (live=false) in the
-    * persisted state: a delete must retain its winning lsn across epochs,
-    * or a redelivered older update in a later batch would resurrect the
-    * deleted row — consumers read live rows only via the read helpers.
-    *
-    * `allowMissingColumns = true` is the schema-evolution seam (C15): a
-    * batch carrying a NEW column (upstream additive DDL) widens the
-    * persisted schema on THIS write — prior rows null the new column —
-    * and a column the batch no longer carries survives with nulls on the
-    * batch's rows. TYPE evolution rides the same union: when a batch
-    * carries a WIDER type for an existing column (upstream
-    * `ALTER … TYPE BIGINT` — the int32→int64 case the typed C15 query
-    * exercises), the analyzer's set-operation coercion widens the merged
-    * column, so int-era prior rows fold into the long column losslessly.
-    * Untouched partitions keep their old files; reads reconcile schema
-    * vintages across them (`PartitionedSnapshotStore.read` groups bucket
-    * files by vintage and unions with the same widening), so a replica
-    * keeps serving through a rolling schema OR type migration with no
-    * rewrite of history.
-    */
-  def mergeEpoch(prior: Option[DataFrame], incoming: DataFrame): DataFrame =
-    mergeEpochBy(prior, incoming, Seq("id"))
-
-  /** [[mergeEpoch]] generalized to a COMPOSITE key (multi-tenant
-    * `(tenant_id, id)` replicas): the winner window partitions by the
-    * full key tuple — same single keyed shuffle, same tombstone and
-    * widening semantics.
-    */
-  def mergeEpochBy(prior: Option[DataFrame], incoming: DataFrame,
-      keyCols: Seq[String]): DataFrame = {
-    require(keyCols.nonEmpty, "mergeEpochBy needs at least one key column")
-    val merged = prior match {
-      case Some(p) => p.withColumn("__src", lit(0))
-        .unionByName(incoming.withColumn("__src", lit(1)),
-          allowMissingColumns = true)
-      case None => incoming.withColumn("__src", lit(1))
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col("lsn").desc, col("__src").desc)
-    merged.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn", "__src")
-  }
-
-  def snapshotForeachBatch(events: Dataset[CdcEvent], snapshotRoot: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[CdcEvent] = {
-    val spark = events.sparkSession
-    events.writeStream.foreachBatch { (batch: Dataset[CdcEvent], batchId: Long) =>
-      val incoming = graft.operators.Cdc.snapshotWithTombstones(batch.toDF)
-      // merge against the snapshot as of BEFORE this batch id — on crash
-      // replay the pointer may already name batchId (see readBefore)
-      val next = mergeEpoch(
-        SnapshotStore.readBefore(spark, snapshotRoot, batchId), incoming)
-      SnapshotStore.commit(next, snapshotRoot, batchId)
-      ()
-    }
-  }
-
-  /** T19 — [[snapshotForeachBatch]] that also EXPORTS a downstream
-    * changelog: after each epoch commits version v, diff the committed
-    * live view against its predecessor
-    * ([[graft.operators.Cdc.snapshotDiff]]) and publish the net change
-    * events under `exportDir/b=<v>` — the replica becomes a PRODUCER,
-    * re-emitting c/u/d events per epoch with no access to the upstream
-    * WAL (the re-emission half of the CDC ecosystem; R4's wire sink
-    * serializes the exported images directly). The [[SnapshotStore]] GC
-    * grace window (current + predecessor) retains EXACTLY the version
-    * each epoch's diff needs, so export costs one keyed full-outer join
-    * per epoch and no extra retention.
-    *
-    * IDEMPOTENT REPLAY: the diff derives from strictly-before state
-    * (`readBefore`) and the batch's own merge, and overwrites its own
-    * `b=<v>` dir — a crash-replayed epoch re-exports identical events.
-    * Downstream convergence is the C19 producer contract, spec'd: the
-    * exported epochs, re-wrapped as an envelope changelog
-    * ([[graft.operators.Cdc.diffAsChangelog]], lsn = epoch) and folded
-    * by C4, reproduce the upstream live view exactly.
-    */
-  def snapshotForeachBatchExport(events: Dataset[CdcEvent],
-      snapshotRoot: String, exportDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[CdcEvent] = {
-    val spark = events.sparkSession
-    events.writeStream.foreachBatch { (batch: Dataset[CdcEvent], batchId: Long) =>
-      val incoming = graft.operators.Cdc.snapshotWithTombstones(batch.toDF)
-      val prior = SnapshotStore.readBefore(spark, snapshotRoot, batchId)
-      val next = mergeEpoch(prior, incoming)
-      SnapshotStore.commit(next, snapshotRoot, batchId)
-      def live(df: DataFrame) =
-        df.filter(col("live")).drop("live", "lsn")
-      val prevLive = prior.map(live)
-        .getOrElse(live(next).filter(lit(false)))
-      graft.operators.Cdc.snapshotDiff(prevLive, live(next), Seq("id"))
-        .write.mode("overwrite").parquet(s"$exportDir/b=$batchId")
-      ()
-    }
-  }
-
-  /** The exported changelog (every epoch's net events, epoch in `b`). */
-  def readChangelogExport(spark: org.apache.spark.sql.SparkSession,
-      exportDir: String): DataFrame = {
-    val dirs = bandBatchDirs(spark, exportDir)
-    require(dirs.nonEmpty, s"no exported epochs under $exportDir")
-    dirs.map { case (id, p) =>
-      spark.read.parquet(p).withColumn("b", lit(id)) }
-      .reduce(_ unionByName _)
-  }
-
-  /** T6-merge — keyed-merge variant of [[snapshotForeachBatch]]: the
-    * snapshot is hash-partitioned by key into `buckets` directories
-    * ([[PartitionedSnapshotStore]]) and an epoch REWRITES ONLY the
-    * partitions its batch touched, merging the batch's winners against
-    * just those partitions' prior rows. Same fold, same crash-replay
-    * idempotence (merge reads strictly-before state; the epoch pointer is
-    * the single commit point) — but apply cost scales with the batch's
-    * key spread, not the table size: the 100 TB CDC-apply shape, where a
-    * micro-batch touches a handful of partitions of a huge replica.
-    */
-  def snapshotForeachBatchMerge(events: Dataset[CdcEvent], snapshotRoot: String,
-      buckets: Int = 16): org.apache.spark.sql.streaming.DataStreamWriter[CdcEvent] = {
-    val spark = events.sparkSession
-    val bcol = PartitionedSnapshotStore.bucketColName
-    events.writeStream.foreachBatch { (batch: Dataset[CdcEvent], batchId: Long) =>
-      import org.apache.spark.sql.functions._
-      // the key→bucket modulus must never change for this store: persist
-      // it on first commit, fail loudly on a misconfigured restart
-      PartitionedSnapshotStore.ensureBucketCount(spark, snapshotRoot, buckets)
-      val incoming = graft.operators.Cdc.snapshotWithTombstones(batch.toDF)
-        .withColumn(bcol, PartitionedSnapshotStore.bucketOf(col("id"), buckets))
-      // only the touched partitions participate in the merge; every other
-      // partition's files are not even read
-      val affected = incoming.select(col(bcol)).distinct()
-      val prior = PartitionedSnapshotStore.readBefore(spark, snapshotRoot, batchId)
-        .map(_.withColumn(bcol, PartitionedSnapshotStore.bucketOf(col("id"), buckets))
-          .join(broadcast(affected), bcol))
-      // same fold (and schema-widening seam) as the full-overwrite form
-      val next = mergeEpoch(prior, incoming)
-      PartitionedSnapshotStore.commit(next, snapshotRoot, batchId)
-      ()
-    }
-  }
-
   /** Durable incremental view maintenance (the production form of the
     * IVM the memory-sink spec demonstrates): each micro-batch folds its
     * OWN events to a per-group delta state (`Cdc.aggMaintainState` — no
@@ -324,10 +138,9 @@ object Streams extends Serializable {
     * through [[SnapshotStore]]'s versioned-dir + pointer protocol.
     * Groups whose merged count reaches zero are dropped from the
     * persisted state (retraction to absence; a future insert recreates
-    * the group from scratch). Crash replay is idempotent for the same
-    * reason the snapshot sinks are: the merge reads state strictly
-    * BEFORE the batch id and the commit overwrites the batch's own
-    * version.
+    * the group from scratch). Crash replay is idempotent: the merge
+    * reads state strictly BEFORE the batch id and the commit overwrites
+    * the batch's own version.
     *
     * Scale: the delta aggregate is one map-side-combined groupBy over
     * the (tiny) increment; the merge unions it with the committed
@@ -367,48 +180,6 @@ object Streams extends Serializable {
     committed.filter(col("n") > 0)
   }
 
-  /** [[snapshotForeachBatchMerge]] generalized to ANY envelope-shaped
-    * stream and a COMPOSITE key — the untyped DataFrame form a
-    * multi-table/multi-tenant replica sink actually needs (the typed
-    * CdcEvent form is the reference-schema convenience). Per batch:
-    * winners-with-tombstones by the key tuple
-    * (`Cdc.latestWithTombstonesBy`), bucket by the composite placement
-    * (`bucketOfKeys`), merge against ONLY the touched buckets' prior
-    * rows, commit through the epoch pointer — same crash-replay
-    * idempotence and schema/type-widening seams as the single-key sink.
-    */
-  def snapshotForeachBatchMergeBy(changelogStream: DataFrame,
-      snapshotRoot: String, keyCols: Seq[String], buckets: Int = 16)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val bcol = PartitionedSnapshotStore.bucketColName
-    changelogStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val spark = batch.sparkSession
-      PartitionedSnapshotStore.ensureBucketCount(spark, snapshotRoot, buckets)
-      def bucketed(df: DataFrame) = df.withColumn(bcol,
-        PartitionedSnapshotStore.bucketOfKeys(keyCols.map(col), buckets))
-      val incoming = bucketed(
-        graft.operators.Cdc.latestWithTombstonesBy(batch.toDF, keyCols))
-      val affected = incoming.select(col(bcol)).distinct()
-      val prior = PartitionedSnapshotStore.readBefore(spark, snapshotRoot, batchId)
-        .map(p => bucketed(p).join(broadcast(affected), bcol))
-      PartitionedSnapshotStore.commit(
-        mergeEpochBy(prior, incoming, keyCols), snapshotRoot, batchId)
-      ()
-    }
-  }
-
-  /** Consumer view of a [[snapshotForeachBatchMerge]] snapshot. */
-  def readMergedSnapshot(spark: org.apache.spark.sql.SparkSession,
-      snapshotRoot: String): DataFrame = {
-    val committed = PartitionedSnapshotStore.read(spark, snapshotRoot)
-      .getOrElse(sys.error(s"no committed snapshot under $snapshotRoot"))
-    committed.filter(org.apache.spark.sql.functions.col("live")).drop("live")
-  }
-
-  /** Consumer view of a foreachBatch-maintained snapshot: live rows only
-    * (the persisted table also carries tombstones — state, not output).
-    */
   /** T8 — streaming decontamination: a document stream checked against a
     * STATIC benchmark shingle set via a stream-static left-SEMI join. The
     * static side is small (eval suites) and broadcast, so each micro-batch
@@ -1110,9 +881,7 @@ object Streams extends Serializable {
     * after `compactVectorIndex(upTo)` the merged dir carries id `upTo`,
     * so as-of reads at t ≥ upTo stay exact (the merged rows are the
     * fold of everything ≤ upTo) while t < upTo is outside the retention
-    * window and REFUSED loudly — the same retention contract as
-    * `PartitionedSnapshotStore.readAsOf`, never a silently-partial
-    * answer.
+    * window and REFUSED loudly, never a silently-partial answer.
     */
   def readVectorIndexAsOf(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batchId: Long): DataFrame = {
@@ -2025,7 +1794,7 @@ object Streams extends Serializable {
     * a batch changelog, but a right-to-be-forgotten request arriving on a
     * LIVE pipeline has two more obligations the batch sweep cannot meet:
     * (1) every DURABLE store already derived from the log (the T23 SCD2
-    * history, the T6 merged snapshot) still holds the subject's PII and
+    * history, the [[LakeSink]] replica) still holds the subject's PII and
     * must be redacted IN PLACE — a full rebuild from the swept log
     * rescans the world; (2) events for the subject that arrive AFTER the
     * request (stragglers, upstream replays) must never land with PII
@@ -2038,19 +1807,18 @@ object Streams extends Serializable {
     *     over the ledger: composed in front of any store sink, it makes
     *     post-request arrivals PII-free at ingest (broadcast probe +
     *     projection, no shuffle of the batch);
-    *   - [[erasureApplyStore]] redacts a partitioned store in place:
-    *     only the buckets holding erased keys are read and rewritten
-    *     (the C20-repair discipline — 0.1% of subjects ⇒ ~0.1% of the
-    *     keyspace touched), committed as a normal epoch so readers see
-    *     an atomic pointer flip and crash replay re-derives from
-    *     strictly-before state.
+    *   - [[erasureApplyStore]] redacts a lake table in place: one
+    *     [[graft.sources.LakeFormat.merge]] of the erased keys' rows,
+    *     which rewrites only the files holding them (the C20-repair
+    *     discipline — 0.1% of subjects ⇒ ~0.1% of the table touched),
+    *     committed atomically with an exactly-once txn marker.
     *
     * Structure survives exactly as in C26: keys, intervals, lsns, and
     * tombstone markers are untouched — only the PII attribute columns
     * null out, so every downstream fold, audit, and join keeps its
-    * cardinality. The apply epoch must come from the same monotone
-    * sequence as the store's writer (in a deployment the requests ride
-    * the same changelog stream, so foreachBatch supplies it).
+    * cardinality. Sweep epochs must increase per store (in a deployment
+    * the requests ride the changelog stream, so foreachBatch supplies
+    * them).
     */
   def erasureLedgerBatch(requests: DataFrame, batchId: Long,
       ledgerRoot: String): Unit = {
@@ -2080,36 +1848,23 @@ object Streams extends Serializable {
       case None => batch
     }
 
-  /** Redact `piiCols` to null for the ledger's keys across one
-    * partitioned store, touching only the buckets that hold them. No-op
-    * before any request commits. Idempotent: redacting redacted rows
-    * changes nothing, and a replay of `epoch` re-derives from
-    * strictly-before state and overwrites its own version dirs.
+  /** Redact `piiCols` to null for the ledger's keys across one lake
+    * table: their stored rows merge back with PII nulled and the order
+    * value unchanged, so each ties with its stored row and the update
+    * wins. No-op before any request commits. The (`erasure`, `epoch`)
+    * txn marker makes a replayed sweep a no-op.
     */
   def erasureApplyStore(spark: org.apache.spark.sql.SparkSession,
       storeRoot: String, epoch: Long, piiCols: Seq[String],
       ledgerRoot: String, keyCol: String = "id"): Unit =
     readErased(spark, ledgerRoot).foreach { erased =>
-      val buckets = PartitionedSnapshotStore.bucketCount(spark, storeRoot)
-        .getOrElse(sys.error(s"no bucket count under $storeRoot"))
-      val bcol = PartitionedSnapshotStore.bucketColName
-      val req = erased.select(col("id").as("__erased")).distinct()
-        .withColumn(bcol,
-          PartitionedSnapshotStore.bucketOf(col("__erased"), buckets))
-      val affected = req.select(col(bcol)).distinct()
-      PartitionedSnapshotStore.readBefore(spark, storeRoot, epoch).foreach { p =>
-        val touched = p.withColumn(bcol,
-            PartitionedSnapshotStore.bucketOf(col(keyCol), buckets))
-          .join(broadcast(affected), bcol)
-        val marked = touched.join(
-          broadcast(req.select(col("__erased"))),
-          col(keyCol) === col("__erased"), "left")
-        val redacted = piiCols.foldLeft(marked) { (df, c) =>
-          df.withColumn(c, when(col("__erased").isNotNull,
-            lit(null).cast(df.schema(c).dataType)).otherwise(col(c)))
-        }.drop("__erased")
-        PartitionedSnapshotStore.commit(redacted, storeRoot, epoch)
+      val req = erased.select(col("id").as(keyCol)).distinct()
+      val hit = LakeFormat.snapshot(spark, storeRoot)
+        .join(broadcast(req), Seq(keyCol), "left_semi")
+      val redacted = piiCols.foldLeft(hit) { (df, c) =>
+        df.withColumn(c, lit(null).cast(df.schema(c).dataType))
       }
+      LakeFormat.merge(redacted, storeRoot, txn = Some(("erasure", epoch)))
     }
 
   /** Erasure propagation into the SEARCH-SERVING stores — the second
@@ -2182,56 +1937,51 @@ object Streams extends Serializable {
   // ------------------------- T23 incremental SCD2 history maintenance
   /** T23 — the OTHER classic CDC materialization (C4 keeps latest
     * state; SCD2 keeps every version with its validity interval),
-    * maintained incrementally through the partitioned store. The
-    * insight that makes this exact rather than approximate: the STORED
-    * history is a lossless compression of the key's event stream —
-    * every version row re-expands to an upsert at `valid_from`, and
-    * every delete persists as a ZERO-WIDTH marker row (valid_to =
-    * valid_from, null attributes) that re-expands to its `d` event. The
-    * marker is load-bearing: the random-split property test caught that
-    * a gap-based encoding (infer deletes from valid_to ≠ next
-    * valid_from) silently LOSES a dangling delete — one whose key has
-    * no earlier live version in the store yet because the create is
-    * still in flight in a later batch — and the fold then resurrects
-    * the row the delete should have killed. With markers, each epoch
-    * rebuilds ONLY the touched buckets' histories from compact state +
-    * the increment and re-runs the same per-key window fold as the
-    * batch operator, so late events (an lsn older than the key's open
-    * interval) land exactly where a close-and-append form would corrupt
-    * the history. [[readScd2]] hides the markers. Apply cost: the
-    * touched buckets' histories, never the table; same crash calculus
-    * as every keyed-merge sink (strictly-before read, epoch-keyed
-    * commit).
+    * maintained incrementally in a lake table keyed `(id, valid_from)`
+    * with `valid_from` as its order column. The insight that makes this
+    * exact rather than approximate: the STORED history is a lossless
+    * compression of the key's event stream — every version row
+    * re-expands to an upsert at `valid_from`, and every delete persists
+    * as a ZERO-WIDTH marker row (valid_to = valid_from, null attributes,
+    * `live` false) that re-expands to its `d` event. The marker is
+    * load-bearing: the random-split property test caught that a
+    * gap-based encoding (infer deletes from valid_to ≠ next valid_from)
+    * silently LOSES a dangling delete — one whose key has no earlier
+    * live version in the store yet because the create is still in
+    * flight in a later batch — and the fold then resurrects the row the
+    * delete should have killed. With markers, each batch rebuilds ONLY
+    * the touched keys' histories from compact state + the increment and
+    * re-runs the same per-key window fold as the batch operator, so late
+    * events (an lsn older than the key's open interval) land exactly
+    * where a close-and-append form would corrupt the history.
+    * [[readScd2]] hides the markers.
+    *
+    * Apply cost: one [[graft.sources.LakeFormat.merge]] that rewrites
+    * only the files holding touched keys. Every stored row of a touched
+    * key is part of its rebuild, so each rebuilt row ties with its stored
+    * row on `valid_from` and the update wins. The (`scd2`, batchId) txn
+    * marker commits with the data, so a replayed batch is a no-op.
     */
-  def scd2Batch(batch: DataFrame, batchId: Long, root: String,
-      buckets: Int = 16): Unit = {
+  def scd2Batch(batch: DataFrame, batchId: Long, root: String): Unit = {
     val spark = batch.sparkSession
-    val bcol = PartitionedSnapshotStore.bucketColName
-    PartitionedSnapshotStore.ensureBucketCount(spark, root, buckets)
     val ev = batch
       .withColumn("id", coalesce(col("after.id"), col("before.id")))
       .select(col("id"), col("op"), col("source.lsn").as("lsn"),
         col("after.email").as("email"))
-      .withColumn(bcol, PartitionedSnapshotStore.bucketOf(col("id"), buckets))
-    val affected = ev.select(col(bcol)).distinct()
-    val prior = PartitionedSnapshotStore.readBefore(spark, root, batchId)
-      .map(_.withColumn(bcol,
-          PartitionedSnapshotStore.bucketOf(col("id"), buckets))
-        .join(broadcast(affected), bcol))
-    // re-expand stored rows to events: version rows are upserts at
-    // valid_from, zero-width marker rows are the deletes themselves
-    val priorEvents = prior.map { h =>
-      h.select(col(bcol), col("id"),
-        when(col("valid_to") <=> col("valid_from"), lit("d"))
-          .otherwise(lit("u")).as("op"),
-        col("valid_from").as("lsn"), col("email"))
-    }
+    val exists = LakeFormat.tableExists(spark, root)
+    // re-expand the touched keys' stored rows to events: version rows are
+    // upserts at valid_from, markers are the deletes themselves
+    val priorEvents = Option.when(exists)(LakeFormat.snapshot(spark, root)
+      .join(ev.select(col("id")).distinct(), Seq("id"), "left_semi")
+      .select(col("id"),
+        when(col("live"), lit("u")).otherwise(lit("d")).as("op"),
+        col("valid_from").as("lsn"), col("email")))
     val all = priorEvents.map(_.unionByName(ev)).getOrElse(ev)
     // deterministic (id, lsn) dedup: replays and producer double-sends
     // collapse to one event, never a zero-width interval
-    val dedup = all.groupBy(col(bcol), col("id"), col("lsn"))
+    val dedup = all.groupBy(col("id"), col("lsn"))
       .agg(max(struct(col("op"), col("email"))).as("s"))
-      .select(col(bcol), col("id"), col("s.op").as("op"), col("lsn"),
+      .select(col("id"), col("s.op").as("op"), col("lsn"),
         col("s.email").as("email"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("id")).orderBy(col("lsn").asc)
@@ -2244,17 +1994,20 @@ object Streams extends Serializable {
       .withColumn("email",
         when(col("op") === "d", lit(null).cast("string"))
           .otherwise(col("email")))
-      .select(col(bcol), col("id"), col("lsn").as("valid_from"),
-        col("valid_to"), col("email"))
-    PartitionedSnapshotStore.commit(next, root, batchId)
+      .select(col("id"), col("lsn").as("valid_from"), col("valid_to"),
+        col("email"), (col("op") =!= "d").as("live"))
+    if (!exists)
+      LakeFormat.create(spark, root, Seq("id", "valid_from"),
+        orderCol = "valid_from", statsCols = Seq("id"),
+        schema = Some(next.schema))
+    LakeFormat.merge(next, root, txn = Some(("scd2", batchId)))
   }
 
-  def scd2ForeachBatch(events: Dataset[graft.Schemas.CdcEvent], root: String,
-      buckets: Int = 16)
+  def scd2ForeachBatch(events: Dataset[graft.Schemas.CdcEvent], root: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[graft.Schemas.CdcEvent] =
     events.writeStream.foreachBatch {
       (batch: Dataset[graft.Schemas.CdcEvent], batchId: Long) =>
-      scd2Batch(batch.toDF, batchId, root, buckets)
+      scd2Batch(batch.toDF, batchId, root)
     }
 
   /** The committed history (every version of every key with its
@@ -2263,8 +2016,8 @@ object Streams extends Serializable {
     */
   def readScd2(spark: org.apache.spark.sql.SparkSession,
       root: String): Option[DataFrame] =
-    PartitionedSnapshotStore.read(spark, root)
-      .map(_.filter(!(col("valid_to") <=> col("valid_from"))))
+    Option.when(LakeFormat.tableExists(spark, root))(
+      LakeFormat.snapshot(spark, root).filter(col("live")).drop("live"))
 
   // ---------------------- T24 continuous replica audit (C20 streaming)
   /** T24 — C20 as a monitoring LOOP instead of a quarterly full
@@ -2301,8 +2054,8 @@ object Streams extends Serializable {
     * for a batch fact table; real fact streams (orders, clicks,
     * payments) arrive continuously while the dimension history advances
     * underneath — so each micro-batch joins against the COMMITTED
-    * history as of its own read (the pointer protocol makes that a
-    * consistent snapshot, never a half-applied epoch), equi-key plus
+    * history as of its own read (the lake log makes that a consistent
+    * snapshot, never a half-applied commit), equi-key plus
     * the interval residual — Catalyst plans SMJ/SHJ on the key, never a
     * cartesian, the C22 plan shape exactly. Facts with no valid version
     * (out-of-history times, unknown keys) carry nulls rather than
@@ -2317,9 +2070,8 @@ object Streams extends Serializable {
     * byte-identically because the history it reads is versioned.
     *
     * Scale: per batch, one broadcast-or-shuffle equi-join of the batch
-    * against the history's touched keys; the history is bucketed by key
-    * (PartitionedSnapshotStore), so a cluster deployment prunes to the
-    * buckets the batch's keys hash into.
+    * against the history's committed snapshot
+    * ([[graft.sources.LakeFormat.snapshot]]).
     */
   def enrichFactsBatch(facts: DataFrame, batchId: Long, scd2Root: String,
       outDir: String, keyCol: String = "custkey",
@@ -2418,14 +2170,6 @@ object Streams extends Serializable {
       .map(_.asInstanceOf[Long]).map(math.max(_, hwm)).getOrElse(hwm)
     SnapshotStore.commit(Seq(newHwm).toDF("hwm").coalesce(1), root, batchId)
   }
-
-  def outboxPublishStream(outboxStream: DataFrame, root: String,
-      outDir: String, topicPrefix: String = "outbox.event")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    outboxStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      outboxPublishBatch(batch.toDF, batchId, root, outDir, topicPrefix)
-    }
 
   /** Every published record across all committed batches — each event
     * lsn appears exactly once by the hwm contract.
@@ -3179,11 +2923,4 @@ object Streams extends Serializable {
     left.withWatermark("l_ts", delay)
       .join(right.withWatermark("r_ts", delay),
         expr(s"l_key = r_key AND r_ts >= l_ts AND r_ts <= l_ts + INTERVAL $window"))
-
-  def readSnapshot(spark: org.apache.spark.sql.SparkSession,
-      snapshotRoot: String): DataFrame = {
-    val committed = SnapshotStore.read(spark, snapshotRoot)
-      .getOrElse(sys.error(s"no committed snapshot under $snapshotRoot"))
-    committed.filter(org.apache.spark.sql.functions.col("live")).drop("live")
-  }
 }

@@ -255,7 +255,7 @@ object CdcPropertySpec extends Properties("CdcSnapshot") {
           .toString + "/h"
         batches.zipWithIndex.foreach { case (b, i) =>
           graft.streaming.Streams.scd2Batch(
-            b.toSeq.toDS.toDF, i.toLong, root, buckets = 4)
+            b.toSeq.toDS.toDF, i.toLong, root)
         }
         def hist(df: org.apache.spark.sql.DataFrame) =
           df.select("id", "valid_from", "valid_to", "email").collect()

@@ -8,6 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.LakeFormat
 
+/** Composite-key envelope fixture (tenant, id). Top-level so Spark can
+  * derive an Encoder. */
+case class KSrc(lsn: Long)
+case class KRow(tenant: String, id: Long, v: String)
+case class KEvent(before: Option[KRow], after: Option[KRow],
+    source: KSrc, op: String)
+
 /** Protocol guarantees of [[graft.sources.LakeFormat]] — ACID commits over
   * immutable files, optimistic concurrency, merge semantics, time travel,
   * stats pruning, checkpoint replay, vacuum safety. These are the
@@ -456,5 +463,130 @@ class LakeSpec extends AnyFunSuite {
     val got = snap.select("id", "extra").as[(Long, Option[Long])]
       .collect().sortBy(_._1).toSeq
     assert(got === Seq(1L -> None, 2L -> Some(42L)))
+  }
+
+  test("merge widens a column from int to long across commits; the untouched int-era file reads back as long") {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+    val root = freshRoot()
+    LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
+    // int32-era rows, one file per key
+    Seq(1L, 2L).foreach(k => LakeFormat.merge(
+      Seq((k, 10L, true, k.toInt * 100)).toDF("id", "lsn", "live", "loyalty"),
+      root))
+    // upstream ALTER COLUMN TYPE BIGINT: key 2 updates and key 3 inserts
+    // with values beyond int32, so a mis-widened merge would overflow
+    LakeFormat.merge(Seq((2L, 20L, true, 5000000000L), (3L, 21L, true, 6000000000L))
+      .toDF("id", "lsn", "live", "loyalty"), root)
+    // key 1's file was not rewritten: it still holds the int vintage
+    val key1File = LakeFormat.state(spark, root).files
+      .filter(_.stats("id").min.contains("1"))
+    assert(key1File.map(a => StructType.fromDDL(a.schemaDdl)("loyalty").dataType)
+      === Seq(IntegerType))
+    val snap = LakeFormat.snapshot(spark, root)
+    assert(snap.schema("loyalty").dataType === LongType)
+    assert(snap.select("id", "loyalty").as[(Long, Long)].collect().sortBy(_._1)
+      .toSeq === Seq(1L -> 100L, 2L -> 5000000000L, 3L -> 6000000000L))
+  }
+
+  test("merge evolves the schema across additive DDL: older rows read null, a batch without the column keeps stored values") {
+    val root = freshRoot()
+    LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
+    LakeFormat.merge(Seq((1L, 10L, true, "ann"), (2L, 11L, true, "bob"))
+      .toDF("id", "lsn", "live", "first_name"), root)
+    // upstream DDL added phone: key 2 updates, key 3 inserts
+    LakeFormat.merge(Seq((2L, 20L, true, "bob", "555"), (3L, 21L, true, "cay", "777"))
+      .toDF("id", "lsn", "live", "first_name", "phone"), root)
+    def got() = LakeFormat.snapshot(spark, root)
+      .select("id", "first_name", "phone").as[(Long, String, Option[String])]
+      .collect().sortBy(_._1).toSeq
+    assert(got() === Seq((1L, "ann", None), (2L, "bob", Some("555")),
+      (3L, "cay", Some("777"))))
+    // a batch from a reverted producer (no phone) neither un-widens the
+    // table nor drops the phone of key 2 stored beside key 3
+    LakeFormat.merge(Seq((3L, 30L, true, "cay2"))
+      .toDF("id", "lsn", "live", "first_name"), root)
+    assert(got() === Seq((1L, "ann", None), (2L, "bob", Some("555")),
+      (3L, "cay2", None)))
+  }
+
+  test("a (tenant, id) table merged from Cdc.latestWithTombstonesBy equals Cdc.materializeLatestBy") {
+    import graft.operators.Cdc
+    val root = freshRoot()
+    val keys = Seq("tenant", "id")
+    LakeFormat.create(spark, root, keys)
+    def kr(t: String, id: Long, v: String) = Some(KRow(t, id, v))
+    // the same id under two tenants: a single-column fold would collapse them
+    val batches = Seq(
+      Seq(KEvent(None, kr("a", 1, "a1-v0"), KSrc(10), "c"),
+        KEvent(None, kr("b", 1, "b1-v0"), KSrc(11), "c"),
+        KEvent(None, kr("a", 2, "a2-v0"), KSrc(12), "c")),
+      Seq(KEvent(kr("a", 1, "a1-v0"), kr("a", 1, "a1-v1"), KSrc(20), "u"),
+        KEvent(kr("b", 1, "b1-v0"), None, KSrc(21), "d"),
+        KEvent(None, kr("b", 2, "b2-v0"), KSrc(22), "c")),
+      // a redelivered older update of the deleted (b, 1)
+      Seq(KEvent(kr("b", 1, "b1-v0"), kr("b", 1, "b1-stale"), KSrc(15), "u")))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      LakeFormat.merge(Cdc.latestWithTombstonesBy(b.toDS.toDF, keys), root,
+        txn = Some(("tenants", i.toLong)))
+    }
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select("tenant", "id", "v").as[(String, Long, String)].collect()
+        .sortBy(t => (t._1, t._2)).toSeq
+    val stored = LakeFormat.snapshot(spark, root)
+    val live = triples(stored.filter(col("live")))
+    assert(live === triples(
+      Cdc.materializeLatestBy(batches.flatten.toDS.toDF, keys)))
+    assert(live === Seq(("a", 1L, "a1-v1"), ("a", 2L, "a2-v0"), ("b", 2L, "b2-v0")))
+    // the delete is state, not output: its tombstone keeps the winning lsn
+    assert(stored.filter(!col("live")).select("tenant", "id", "lsn")
+      .as[(String, Long, Long)].collect().toSeq === Seq(("b", 1L, 21L)))
+  }
+
+  test("a replica chains from the change feed: cdcApply commits re-wrapped by diffAsChangelog fold to the live snapshot") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.Schemas.{CdcEvent, CdcRow, CdcSource}
+    import graft.operators.Cdc
+    implicit val ctx = spark.sqlContext
+    val root = freshRoot()
+    LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
+    def src(lsn: Long) = CdcSource("v", "postgresql", "cdctest", lsn, None,
+      "cdctest", "public", "customers", None, Some(lsn), None)
+    def row(id: Long, em: String) =
+      Some(CdcRow(id, Some("f"), Some("l"), Option(em)))
+    val mem = MemoryStream[CdcEvent]
+    val q = streaming.LakeSink.cdcApply(mem.toDF, root, "chain")
+      .option("checkpointLocation", Files.createTempDirectory("lake_ck").toString)
+      .start()
+    mem.addData(
+      CdcEvent(None, row(40, "a@x"), src(400), "c", 400),
+      CdcEvent(None, row(41, "b@x"), src(410), "c", 410))
+    q.processAllAvailable()
+    mem.addData(
+      CdcEvent(row(40, "a@x"), row(40, "a2@x"), src(401), "u", 401),
+      CdcEvent(row(41, "b@x"), None, src(411), "d", 411),
+      CdcEvent(None, row(42, "c@x"), src(420), "c", 420))
+    q.processAllAvailable(); q.stop()
+    val feed = LakeFormat.changeFeed(spark, root, 1L,
+      LakeFormat.state(spark, root).version)
+    // one commit per data batch: two creates, then u(40), d(41), c(42)
+    val byCommit = feed.select("_commit_version", "_change_type", "id")
+      .as[(Long, String, Long)].collect().groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.map(r => (r._2, r._3)).toSet)
+    assert(byCommit === Seq(Set(("c", 40L), ("c", 41L)),
+      Set(("u", 40L), ("d", 41L), ("c", 42L))))
+    // the feed's image is the post-image (the pre-image for deletes):
+    // re-wrapped as envelopes with lsn = commit version and folded by C4,
+    // it reproduces the live snapshot — a replica chains from a replica
+    val payload = Seq("first_name", "last_name", "email")
+    val diff = feed.select(Seq(col("id"), col("_change_type").as("op"),
+        col("_commit_version")) ++ payload.flatMap(c => Seq(
+        when(col("_change_type") === "d", col(c)).as(s"b_$c"),
+        col(c).as(s"a_$c"))): _*)
+    val chained = Cdc.diffAsChangelog(diff, Seq("id"), col("_commit_version"))
+    val downstream = Cdc.materializeLatest(chained)
+      .orderBy("id").collect().map(_.toSeq).toSeq
+    val upstream = LakeFormat.snapshot(spark, root).filter(col("live"))
+      .drop("live", "lsn").orderBy("id").collect().map(_.toSeq).toSeq
+    assert(downstream === upstream && downstream.size === 2)
   }
 }

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.Schemas.{CdcEvent, CdcRow, CdcSource}
-import graft.streaming.{RetryRunner, SnapshotStore, Streams}
+import graft.sources.LakeFormat
+import graft.streaming.{LakeSink, RetryRunner, SnapshotStore, Streams}
 import java.sql.Timestamp
 
 /** Top-level so Spark can derive an Encoder (inner classes of a suite
@@ -17,12 +18,6 @@ case class DocE(doc_id: Long, text: String)
 
 case class LOrd(l_key: Long, l_ts: Timestamp, amount: Double)
 case class RPay(r_key: Long, r_ts: Timestamp)
-
-/** Composite-key envelope fixture (tenant, id) for the generic sink. */
-case class KSrc(lsn: Long)
-case class KRow(tenant: String, id: Long, v: String)
-case class KEvent(before: Option[KRow], after: Option[KRow],
-    source: KSrc, op: String)
 
 /** T1–T7 driven through MicroBatchExecution via MemoryStream (S2 stand-in —
   * no Kafka broker in this environment), cross-checked against the same
@@ -213,44 +208,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(SnapshotStore.read(spark, root).get.count() === 1) // no n=0 rows
   }
 
-  test("T6 stateful snapshot stream: latest state per key survives micro-batches, matches batch C4") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[CdcEvent]
-    val q = Streams.snapshotStream(mem.toDS).writeStream
-      .format("memory").queryName("t6").outputMode("update").start()
-    // batch 1: insert both keys; batch 2: update 20, delete 21, stale event for 20
-    mem.addData(
-      CdcEvent(None, row(20, "a@x"), src(100), "c", 100),
-      CdcEvent(None, row(21, "b@x"), src(200), "c", 200))
-    q.processAllAvailable()
-    mem.addData(
-      CdcEvent(row(20, "a@x"), row(20, "a2@x"), src(101), "u", 101),
-      CdcEvent(row(20, "zzz@stale"), row(20, "zzz@stale"), src(99), "u", 99), // out-of-order: must lose
-      CdcEvent(row(21, "b@x"), None, src(201), "d", 201))
-    q.processAllAvailable(); q.stop()
-    // max-lsn row per id via struct-max (lsn leads the struct): a hash
-    // aggregation does not preserve sorted-within-group order, so
-    // orderBy + first() would be partitioning-dependent
-    val last = spark.table("t6")
-      .groupBy("id")
-      .agg(max(struct(col("lsn"), col("live"), col("email"))).as("s"))
-      .select(col("id"), col("s.live").as("live"), col("s.email").as("email"),
-        col("s.lsn").as("lsn"))
-      .orderBy("id").collect()
-    assert(last.length === 2)
-    assert(last(0).getBoolean(1) === true && last(0).getString(2) === "a2@x")
-    assert(last(1).getBoolean(1) === false) // deleted
-    // cross-check against the oracle-verified batch fold on the same events
-    val all = Seq(
-      CdcEvent(None, row(20, "a@x"), src(100), "c", 100),
-      CdcEvent(row(20, "a@x"), row(20, "a2@x"), src(101), "u", 101),
-      CdcEvent(row(20, "zzz@stale"), row(20, "zzz@stale"), src(99), "u", 99),
-      CdcEvent(None, row(21, "b@x"), src(200), "c", 200),
-      CdcEvent(row(21, "b@x"), None, src(201), "d", 201))
-    val batchSnap = operators.Cdc.snapshot(all.toDS.toDF).collect()
-    assert(batchSnap.length === 1 && batchSnap(0).getString(3) === "a2@x")
-  }
-
   test("T12 cross-table tx gate: a commit is invisible until complete across BOTH streams") {
     implicit val ctx = spark.sqlContext
     import graft.streaming.Streams.TxInput
@@ -353,9 +310,10 @@ class StreamingSpec extends AnyFunSuite {
 
   test("T6-alt foreachBatch idempotent snapshot merges across micro-batches") {
     implicit val ctx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("snap").toString + "/snap"
+    val root = java.nio.file.Files.createTempDirectory("snap").toString + "/snap"
+    LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
     val mem = MemoryStream[CdcEvent]
-    val q = Streams.snapshotForeachBatch(mem.toDS, tmp)
+    val q = LakeSink.cdcApply(mem.toDF, root, "t6alt")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt").toString)
       .start()
@@ -369,126 +327,21 @@ class StreamingSpec extends AnyFunSuite {
     q.processAllAvailable()
     // epoch 3: redelivered OLDER update for the deleted key — the persisted
     // tombstone (lsn 311) must outrank it; no resurrection
-    mem.addData(CdcEvent(row(31, "b@x"), row(31, "stale@x"), src(309), "u", 309))
+    val stale = CdcEvent(row(31, "b@x"), row(31, "stale@x"), src(309), "u", 309)
+    mem.addData(stale)
     q.processAllAvailable(); q.stop()
-    val live = Streams.readSnapshot(spark, tmp).orderBy("id").collect()
-    assert(live.length === 1)
-    assert(live(0).getLong(0) === 30L && live(0).getString(4) === "a2@x")
-    // raw committed state keeps the tombstone with its winning lsn
-    val raw = SnapshotStore.read(spark, tmp).get.orderBy("id").collect()
-    assert(raw.length === 2 && !raw(1).getBoolean(1) && raw(1).getLong(2) === 311L)
-  }
-
-  test("T19 changelog export: per-epoch net events, downstream fold converges, replay re-exports identical bytes") {
-    import graft.operators.Cdc
-    implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("exp").toString
-    val snap = s"$root/snap"; val out = s"$root/changelog"
-    val mem = MemoryStream[CdcEvent]
-    val q = Streams.snapshotForeachBatchExport(mem.toDS, snap, out)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt19").toString)
-      .start()
-    mem.addData(
-      CdcEvent(None, row(40, "a@x"), src(400), "c", 400),
-      CdcEvent(None, row(41, "b@x"), src(410), "c", 410))
-    q.processAllAvailable()
-    mem.addData(
-      CdcEvent(row(40, "a@x"), row(40, "a2@x"), src(401), "u", 401),
-      CdcEvent(row(41, "b@x"), None, src(411), "d", 411),
-      CdcEvent(None, row(42, "c@x"), src(420), "c", 420))
-    q.processAllAvailable(); q.stop()
-    // epoch 0 exports two creates; epoch 1 exports u(40), d(41), c(42)
-    val byEpoch = Streams.readChangelogExport(spark, out)
-      .select("b", "id", "op").as[(Long, Long, String)].collect().toSet
-    assert(byEpoch === Set(
-      (0L, 40L, "c"), (0L, 41L, "c"),
-      (1L, 40L, "u"), (1L, 41L, "d"), (1L, 42L, "c")))
-    // the producer contract: the exported epochs re-wrapped as an
-    // envelope changelog (lsn = epoch) and folded by C4 reproduce the
-    // upstream live view EXACTLY — a replica can chain from a replica
-    val chained = Cdc.diffAsChangelog(
-      Streams.readChangelogExport(spark, out), Seq("id"), col("b"))
-    val downstream = Cdc.materializeLatest(chained)
-      .orderBy("id").collect().map(_.toSeq).toSeq
-    val upstream = Streams.readSnapshot(spark, snap)
-      .drop("live", "lsn").orderBy("id").collect().map(_.toSeq).toSeq
-    assert(downstream === upstream && downstream.nonEmpty)
-    // replaying the last epoch re-exports identical rows (readBefore
-    // still sees epoch 0 thanks to the GC grace window)
-    val before = Streams.readChangelogExport(spark, out)
-      .collect().map(_.toSeq).toSet
-    val replay = Seq(
-      CdcEvent(row(40, "a@x"), row(40, "a2@x"), src(401), "u", 401),
-      CdcEvent(row(41, "b@x"), None, src(411), "d", 411),
-      CdcEvent(None, row(42, "c@x"), src(420), "c", 420))
-    // drive the same batch id through the batch body
-    val incoming = Cdc.snapshotWithTombstones(replay.toDS.toDF)
-    val prior = SnapshotStore.readBefore(spark, snap, 1L)
-    val next = Streams.mergeEpoch(prior, incoming)
-    SnapshotStore.commit(next, snap, 1L)
-    def live(df: org.apache.spark.sql.DataFrame) =
-      df.filter(col("live")).drop("live", "lsn")
-    Cdc.snapshotDiff(live(prior.get), live(next), Seq("id"))
-      .write.mode("overwrite").parquet(s"$out/b=1")
-    val after = Streams.readChangelogExport(spark, out)
-      .collect().map(_.toSeq).toSet
-    assert(after === before, "replayed epoch changed the export")
-  }
-
-  test("T6-merge keyed sink rewrites only touched partitions and matches the full-overwrite fold") {
-    implicit val ctx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("psnap").toString + "/snap"
-    val full = java.nio.file.Files.createTempDirectory("fsnap").toString + "/snap"
-    def dirState(root: String): Map[String, Set[String]] = {
-      val r = new java.io.File(root)
-      r.listFiles().filter(_.getName.startsWith("p="))
-        .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
-    }
-    // same event stream through the partitioned-merge sink and the
-    // full-overwrite reference sink
-    val batch0 = (0L to 7L).map(id =>
-      CdcEvent(None, row(id, s"e$id@x"), src(id * 10), "c", id * 10))
-    val batch1 = Seq(
-      CdcEvent(row(4, "e4@x"), row(4, "e4b@x"), src(41), "u", 41),
-      CdcEvent(row(5, "e5@x"), None, src(51), "d", 51))
-    for ((sink, root) <- Seq(
-        (Streams.snapshotForeachBatchMerge(_: org.apache.spark.sql.Dataset[CdcEvent], tmp, buckets = 4), tmp),
-        (Streams.snapshotForeachBatch(_: org.apache.spark.sql.Dataset[CdcEvent], full), full))) {
-      val mem = MemoryStream[CdcEvent]
-      val q = sink(mem.toDS)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ckpt").toString)
-        .start()
-      mem.addData(batch0: _*)
-      q.processAllAvailable()
-      if (root == tmp) {
-        // epoch 0 touched all 4 buckets
-        assert(dirState(tmp).keySet === Set("p=0", "p=1", "p=2", "p=3"))
-      }
-      val before = if (root == tmp) dirState(tmp) else Map.empty[String, Set[String]]
-      mem.addData(batch1: _*)
-      q.processAllAvailable(); q.stop()
-      if (root == tmp) {
-        val after = dirState(tmp)
-        // batch 1's keys 4, 5 live in buckets 0 and 1: those gained v=1
-        assert(after("p=0") === before("p=0") + "v=1")
-        assert(after("p=1") === before("p=1") + "v=1")
-        // untouched buckets: file sets byte-for-byte identical, no rewrite
-        assert(after("p=2") === before("p=2"))
-        assert(after("p=3") === before("p=3"))
-      }
-    }
-    // the merged snapshot equals the full-overwrite fold, tombstones and all
-    val got = graft.streaming.PartitionedSnapshotStore.read(spark, tmp).get
-      .orderBy("id").collect().toSeq
-    val want = SnapshotStore.read(spark, full).get.orderBy("id").collect().toSeq
-    assert(got === want)
-    assert(got.length === 8)
-    // live view drops the tombstoned key 5 and sees key 4's update
-    val live = Streams.readMergedSnapshot(spark, tmp).orderBy("id").collect()
-    assert(live.length === 7)
-    assert(live.find(_.getLong(0) == 4L).get.getString(4) === "e4b@x")
+    val stored = LakeFormat.snapshot(spark, root)
+    val live = stored.filter(col("live")).select("id", "email")
+      .as[(Long, String)].collect().toSeq
+    assert(live === Seq((30L, "a2@x")))
+    // the stored state keeps the tombstone with its winning lsn
+    assert(stored.filter(!col("live")).select("id", "lsn")
+      .as[(Long, Long)].collect().toSeq === Seq((31L, 311L)))
+    // replaying the last applied batch id is a no-op: its txn marker
+    // committed with its data
+    val st = LakeFormat.state(spark, root)
+    LakeSink.applyBatch(Seq(stale).toDF, root, "t6alt", st.txns("t6alt"))
+    assert(LakeFormat.state(spark, root).version === st.version)
   }
 
   test("T24 continuous audit: per-epoch verdicts committed; divergence surfaces the epoch it happens; history answers when") {
@@ -521,21 +374,22 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("C20 x T6: the replica store audits against upstream, repair rewrites only the diverged key's bucket, re-audit is clean") {
-    import spark.implicits._
-    import graft.streaming.PartitionedSnapshotStore
     import graft.operators.Cdc
     val root = java.nio.file.Files.createTempDirectory("paudit").toString + "/s"
     val n = 8
-    PartitionedSnapshotStore.ensureBucketCount(spark, root, n)
-    def wb(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn(PartitionedSnapshotStore.bucketColName,
-        PartitionedSnapshotStore.bucketOf(col("id"), n))
+    LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
     // upstream truth vs a replica that silently lost key 13's last update
     val src = (0 until 32).map(i => (i.toLong, s"v$i")).toDF("id", "v")
     val stale = (0 until 32)
       .map(i => (i.toLong, if (i == 13) "STALE" else s"v$i")).toDF("id", "v")
-    PartitionedSnapshotStore.commit(wb(stale), root, 0L)
-    val rep = PartitionedSnapshotStore.read(spark, root).get
+      .withColumn("lsn", lit(0L)).withColumn("live", lit(true))
+    // the replica lands as four files of eight consecutive keys each
+    (0 until 4).foreach(f => LakeFormat.append(
+      stale.filter(col("id") >= f * 8 && col("id") < f * 8 + 8).coalesce(1),
+      root))
+    def replica() = LakeFormat.snapshot(spark, root)
+      .filter(col("live")).select("id", "v")
+    val rep = replica()
     // the checksum audit sees the divergence without a row-level compare
     val audit = Cdc.reconcileChecksums(src, rep, Seq("id"), n)
     assert(audit.filter(!col("is_match")).count() === 1)
@@ -544,396 +398,21 @@ class StreamingSpec extends AnyFunSuite {
     val fixes = repair.collect()
     assert(fixes.length === 1 && fixes(0).getLong(0) === 13L
       && fixes(0).getString(1) === "u")
-    // apply as ONE store epoch: rewrite only the diverged key's STORE
-    // bucket (13 mod 8 = 5) with its repaired content — untouched
-    // buckets keep their epoch-0 files
-    val storeBuckets = Set((13L % n).toInt)
-    val bucketRows = stale
-      .withColumn("__b", PartitionedSnapshotStore.bucketOf(col("id"), n))
-      .filter(col("__b").isin(storeBuckets.toSeq.map(Integer.valueOf): _*))
-      .drop("__b")
-    val repaired = bucketRows.join(repair.select("id"), Seq("id"), "left_anti")
-      .unionByName(repair.filter(col("op") =!= "d")
-        .select(col("id"), col("a_v").as("v")))
-    PartitionedSnapshotStore.commit(wb(repaired), root, 1L)
-    assert(new java.io.File(s"$root/p=${(14L % n).toInt}/v=1").exists() === false)
+    // apply as ONE merge at a newer lsn: only the file holding key 13
+    // (keys 8..15) is rewritten, the other three keep their files
+    val before = LakeFormat.state(spark, root).files
+    LakeFormat.merge(repair.select(col("id"), col("a_v").as("v"),
+      lit(1L).as("lsn"), (col("op") =!= "d").as("live")), root)
+    val after = LakeFormat.state(spark, root).files.map(_.path).toSet
+    val removed = before.filterNot(a => after.contains(a.path))
+    assert(removed.map(_.stats("id").min) === Seq(Some("8")))
     // clean audit, and the serving path returns the repaired value
-    val rep2 = PartitionedSnapshotStore.read(spark, root).get
-    assert(Cdc.reconcileChecksums(src, rep2, Seq("id"), n)
+    assert(Cdc.reconcileChecksums(src, replica(), Seq("id"), n)
       .filter(!col("is_match")).count() === 0)
-    val got = PartitionedSnapshotStore
-      .lookup(spark, root, Seq(13L).toDF("id"), Seq("id")).get
-      .select("id", "v").collect()
-    assert(got.length === 1 && got(0).getString(1) === "v13")
-  }
-
-  test("store rebucket: migrated state identical, new modulus serves lookups, old store untouched, next epoch merges on top") {
-    import spark.implicits._
-    import graft.streaming.PartitionedSnapshotStore
-    val oldRoot = java.nio.file.Files.createTempDirectory("rb_old").toString + "/s"
-    val newRoot = java.nio.file.Files.createTempDirectory("rb_new").toString + "/s"
-    PartitionedSnapshotStore.ensureBucketCount(spark, oldRoot, 4)
-    def wb(df: org.apache.spark.sql.DataFrame, n: Int) =
-      df.withColumn(PartitionedSnapshotStore.bucketColName,
-        PartitionedSnapshotStore.bucketOf(col("id"), n))
-    PartitionedSnapshotStore.commit(
-      wb((0 until 24).map(i => (i.toLong, s"v$i")).toDF("id", "v"), 4),
-      oldRoot, 0L)
-    // keyed-merge contract: an epoch's bucket dir holds the FULL bucket
-    // content — epoch 1 updates key 5, so it rewrites all of bucket 1
-    PartitionedSnapshotStore.commit(
-      wb(Seq(1L, 5L, 9L, 13L, 17L, 21L)
-        .map(i => (i, if (i == 5L) "v5b" else s"v$i")).toDF("id", "v"), 4),
-      oldRoot, 1L)
-    val before = PartitionedSnapshotStore.read(spark, oldRoot).get
-      .orderBy("id").collect().toSeq
-    PartitionedSnapshotStore.rebucket(spark, oldRoot, newRoot, 16, Seq("id"))
-    // contents identical under the new layout
-    assert(PartitionedSnapshotStore.read(spark, newRoot).get
-      .orderBy("id").collect().toSeq === before)
-    assert(PartitionedSnapshotStore.bucketCount(spark, newRoot) === Some(16))
-    // lookups recompute buckets with the NEW modulus
-    val got = PartitionedSnapshotStore
-      .lookup(spark, newRoot, Seq(5L, 13L).toDF("id"), Seq("id")).get
-      .select("id", "v").orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(got === Seq((5L, "v5b"), (13L, "v13")))
-    // the old store is byte-untouched (still 4 buckets, same rows)
-    assert(PartitionedSnapshotStore.bucketCount(spark, oldRoot) === Some(4))
-    assert(PartitionedSnapshotStore.read(spark, oldRoot).get
-      .orderBy("id").collect().toSeq === before)
-    // the seed sits strictly before batch 0: the first post-cutover
-    // epoch's strictly-before read sees the migrated state and merges
-    assert(PartitionedSnapshotStore.readBefore(spark, newRoot, 0L).get
-      .orderBy("id").collect().toSeq === before)
-    // at 16 buckets, id 13 is alone in bucket 13 among ids 0..23, so a
-    // full-bucket epoch write is exactly its one updated row
-    PartitionedSnapshotStore.commit(
-      wb(Seq((13L, "v13c")).toDF("id", "v"), 16), newRoot, 0L)
-    val after = PartitionedSnapshotStore.read(spark, newRoot).get
-    assert(after.filter(col("id") === 13L).head().getString(1) === "v13c")
-    assert(after.count() === before.size)
-  }
-
-  test("store point lookup touches only the keys' buckets: every other bucket can vanish mid-serve") {
-    import spark.implicits._
-    import graft.streaming.PartitionedSnapshotStore
-    val root = java.nio.file.Files.createTempDirectory("plookup").toString + "/s"
-    val n = 8
-    PartitionedSnapshotStore.ensureBucketCount(spark, root, n)
-    def df(rows: (Long, String)*) = rows.toDF("id", "v")
-      .withColumn(PartitionedSnapshotStore.bucketColName,
-        PartitionedSnapshotStore.bucketOf(col("id"), n))
-    PartitionedSnapshotStore.commit(
-      df((0 until 32).map(i => (i.toLong, s"v$i")): _*), root, 0L)
-    // epoch 1 rewrites two keys — lookup must serve the latest version
-    PartitionedSnapshotStore.commit(df((5L, "v5b"), (13L, "v13b")), root, 1L)
-    def get(ids: Long*): Seq[(Long, String)] =
-      PartitionedSnapshotStore.lookup(spark, root, ids.toDF("id"), Seq("id"))
-        .map(_.select("id", "v").orderBy("id").collect()
-          .map(r => (r.getLong(0), r.getString(1))).toSeq)
-        .getOrElse(Seq.empty)
-    assert(get(5L, 12L) === Seq((5L, "v5b"), (12L, "v12")))
-    // equals the full-read path filtered to the same keys
-    val full = PartitionedSnapshotStore.read(spark, root).get
-      .filter(col("id").isin(5L, 12L)).select("id", "v").orderBy("id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(get(5L, 12L) === full)
-    // pruning proof: physically delete every bucket EXCEPT 5 and 12's
-    // (ids are single numeric keys, so bucket = id mod n) — the lookup
-    // result is unchanged because those directories were never read
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    val keep = Set((5L % n).toInt, (12L % n).toInt)
-    (0 until n).filterNot(keep).foreach { b =>
-      val d = new java.io.File(s"$root/p=$b")
-      if (d.exists()) rm(d)
-    }
-    assert(get(5L, 12L) === Seq((5L, "v5b"), (12L, "v12")))
-    // a key whose bucket is gone simply doesn't appear — no error
-    assert(get(5L, 999L) === Seq((5L, "v5b")))
-  }
-
-  test("partitioned commit protocol: staged buckets above the pointer stay invisible until the epoch commits") {
-    import spark.implicits._
-    import graft.streaming.PartitionedSnapshotStore
-    val root = java.nio.file.Files.createTempDirectory("pstore").toString + "/s"
-    def df(rows: (Long, String)*) = rows.toDF("id", "v")
-      .withColumn(PartitionedSnapshotStore.bucketColName,
-        PartitionedSnapshotStore.bucketOf(col("id"), 4))
-    // epoch 0 commits keys in buckets 1 and 2
-    PartitionedSnapshotStore.commit(df((1L, "a"), (2L, "b")), root, 0L)
-    assert(PartitionedSnapshotStore.read(spark, root).get.orderBy("id")
-      .collect().map(_.getString(1)).toSeq === Seq("a", "b"))
-    // epoch 1 CRASHES between staging bucket 1's new version and the
-    // pointer write: simulate by placing the staged dir without committing
-    val staged = new java.io.File(s"$root/p=1/v=1"); staged.mkdirs()
-    Seq((1L, "CRASHED")).toDF("id", "v").write.mode("overwrite")
-      .parquet(staged.toString)
-    // readers still see epoch 0 everywhere — the dangling dir is above the
-    // pointer and ignored
-    assert(PartitionedSnapshotStore.read(spark, root).get.orderBy("id")
-      .collect().map(_.getString(1)).toSeq === Seq("a", "b"))
-    // the replay of epoch 1 merges against strictly-before state…
-    assert(PartitionedSnapshotStore.readBefore(spark, root, 1L).get
-      .orderBy("id").collect().map(_.getString(1)).toSeq === Seq("a", "b"))
-    // …and its commit overwrites the dangling dir idempotently
-    PartitionedSnapshotStore.commit(df((1L, "a2")), root, 1L)
-    assert(PartitionedSnapshotStore.read(spark, root).get.orderBy("id")
-      .collect().map(_.getString(1)).toSeq === Seq("a2", "b"))
-    // GC keeps ≤ 2 versions per touched bucket; untouched bucket unchanged
-    PartitionedSnapshotStore.commit(df((1L, "a3")), root, 2L)
-    PartitionedSnapshotStore.commit(df((1L, "a4")), root, 3L)
-    val b1 = new java.io.File(s"$root/p=1").listFiles().map(_.getName)
-      .filter(_.startsWith("v=")).sorted
-    assert(b1.toSeq === Seq("v=2", "v=3"))
-    val b2 = new java.io.File(s"$root/p=2").listFiles().map(_.getName)
-      .filter(_.startsWith("v=")).sorted
-    assert(b2.toSeq === Seq("v=0"))
-    assert(PartitionedSnapshotStore.read(spark, root).get.orderBy("id")
-      .collect().map(_.getString(1)).toSeq === Seq("a4", "b"))
-    // time travel: epoch 2 is inside the retention window (bucket 1 keeps
-    // v=2,3; bucket 2 serves its untouched v=0)
-    assert(PartitionedSnapshotStore.readAsOf(spark, root, 2L).get
-      .orderBy("id").collect().map(_.getString(1)).toSeq === Seq("a3", "b"))
-    // epoch 1 was GC'd out of bucket 1 → refuse rather than serve a
-    // partial snapshot; the future is not readable either
-    assert(PartitionedSnapshotStore.readAsOf(spark, root, 1L).isEmpty)
-    assert(PartitionedSnapshotStore.readAsOf(spark, root, 99L).isEmpty)
-  }
-
-  test("compaction collapses bucket versions without changing data; reads merge schemas") {
-    import spark.implicits._
-    import graft.streaming.PartitionedSnapshotStore
-    val root = java.nio.file.Files.createTempDirectory("cstore").toString + "/s"
-    PartitionedSnapshotStore.ensureBucketCount(spark, root, 4)
-    // a mis-sized restart fails loudly instead of corrupting placement
-    intercept[IllegalArgumentException] {
-      PartitionedSnapshotStore.ensureBucketCount(spark, root, 8)
-    }
-    def df(rows: (Long, String)*) = rows.toDF("id", "v")
-      .withColumn(PartitionedSnapshotStore.bucketColName,
-        PartitionedSnapshotStore.bucketOf(col("id"), 4))
-    PartitionedSnapshotStore.commit(
-      df((0L, "a"), (1L, "b"), (2L, "c"), (3L, "d")), root, 0L)
-    PartitionedSnapshotStore.commit(df((0L, "a2")), root, 1L)
-    PartitionedSnapshotStore.commit(df((1L, "b2")), root, 2L)
-    val before = PartitionedSnapshotStore.read(spark, root).get
-      .select("id", "v").orderBy("id").collect().toSeq
-    PartitionedSnapshotStore.compact(spark, root, 3L)
-    val after = PartitionedSnapshotStore.read(spark, root).get
-      .select("id", "v").orderBy("id").collect().toSeq
-    assert(after === before) // data unchanged, layout only
-    // every bucket now resolves to the compacted epoch, one data file each
-    (0 to 3).foreach { b =>
-      val v3 = new java.io.File(s"$root/p=$b/v=3")
-      assert(v3.isDirectory, s"bucket $b not compacted")
-      assert(v3.listFiles().count(_.getName.endsWith(".parquet")) === 1)
-    }
-    // schema evolution: a later epoch carries an extra column; mergeSchema
-    // reads serve old buckets with nulls instead of failing the union
-    val widened = Seq((0L, "a3", "x")).toDF("id", "v", "extra")
-      .withColumn(PartitionedSnapshotStore.bucketColName,
-        PartitionedSnapshotStore.bucketOf(col("id"), 4))
-    PartitionedSnapshotStore.commit(widened, root, 4L)
-    val merged = PartitionedSnapshotStore.read(spark, root).get
-      .select("id", "v", "extra").orderBy("id").collect()
-    assert(merged.length === 4)
-    assert(merged(0).getString(2) === "x")
-    assert((1 to 3).forall(merged(_).isNullAt(2)))
-  }
-
-  test("mergeEpoch widens the persisted schema on write across additive DDL (C15)") {
-    import spark.implicits._
-    import graft.streaming.PartitionedSnapshotStore
-    val root = java.nio.file.Files.createTempDirectory("wstore").toString + "/s"
-    def bucketed(d: org.apache.spark.sql.DataFrame) = d
-      .withColumn(PartitionedSnapshotStore.bucketColName,
-        PartitionedSnapshotStore.bucketOf(col("id"), 4))
-    // epoch 0: v1 schema (no phone); keys 1 and 2
-    val e0 = bucketed(Seq((1L, true, 10L, "ann"), (2L, true, 11L, "bob"))
-      .toDF("id", "live", "lsn", "first_name"))
-    PartitionedSnapshotStore.commit(Streams.mergeEpoch(None, e0), root, 0L)
-    // epoch 1: upstream DDL added phone; the batch updates key 2 and
-    // inserts key 3 — the merge itself must widen: key 1's prior winner
-    // survives with phone null, key 2's prior row loses to the new one
-    val e1 = bucketed(Seq((2L, true, 20L, "bob", "555"), (3L, true, 21L, "cay", "777"))
-      .toDF("id", "live", "lsn", "first_name", "phone"))
-    val prior1 = PartitionedSnapshotStore.readBefore(spark, root, 1L)
-      .map(p => bucketed(p.drop(PartitionedSnapshotStore.bucketColName)))
-    val m1 = Streams.mergeEpoch(prior1, e1)
-    // the fold output is already widened: prior-only winners null phone
-    assert(m1.columns.contains("phone"))
-    PartitionedSnapshotStore.commit(m1, root, 1L)
-    val got = PartitionedSnapshotStore.read(spark, root).get
-      .select("id", "first_name", "phone").orderBy("id").collect()
-    assert(got.map(r => (r.getLong(0), r.getString(1))).toSeq ===
-      Seq((1L, "ann"), (2L, "bob"), (3L, "cay")))
-    assert(got(0).isNullAt(2))            // pre-DDL winner: widened to null
-    assert(got(1).getString(2) === "555") // post-DDL update carries phone
-    assert(got(2).getString(2) === "777")
-    // epoch 2: a batch from a REVERTED producer (no phone) must not
-    // un-widen committed state nor fail the union: key 3's new winner
-    // nulls phone; key 2 keeps its phone from epoch 1
-    val e2 = bucketed(Seq((3L, true, 30L, "cay2"))
-      .toDF("id", "live", "lsn", "first_name"))
-    val prior2 = PartitionedSnapshotStore.readBefore(spark, root, 2L)
-      .map(p => bucketed(p.drop(PartitionedSnapshotStore.bucketColName)))
-    PartitionedSnapshotStore.commit(Streams.mergeEpoch(prior2, e2), root, 2L)
-    val got2 = PartitionedSnapshotStore.read(spark, root).get
-      .select("id", "first_name", "phone").orderBy("id").collect()
-    assert(got2.map(r => (r.getLong(0), r.getString(1))).toSeq ===
-      Seq((1L, "ann"), (2L, "bob"), (3L, "cay2")))
-    assert(got2(1).getString(2) === "555")
-    assert(got2(2).isNullAt(2))
-  }
-
-  test("mergeEpoch widens a column's TYPE across epochs (int32-era rows fold into int64)") {
-    import spark.implicits._
-    import org.apache.spark.sql.types.LongType
-    val root = java.nio.file.Files.createTempDirectory("tstore").toString + "/s"
-    // epoch 0: loyalty declared int32 upstream — committed as IntegerType
-    val e0 = Seq((1L, true, 10L, 100), (2L, true, 11L, 200))
-      .toDF("id", "live", "lsn", "loyalty")
-    SnapshotStore.commit(Streams.mergeEpoch(None, e0), root, 0L)
-    // epoch 1: upstream ALTER COLUMN TYPE BIGINT; the batch's values
-    // exceed int32 range, so a mis-widened merge would overflow, not
-    // just mistype. Key 2 updates, key 3 inserts; key 1's int-era row
-    // must fold into the long column losslessly.
-    val e1 = Seq((2L, true, 20L, 5000000000L), (3L, true, 21L, 6000000000L))
-      .toDF("id", "live", "lsn", "loyalty")
-    val m1 = Streams.mergeEpoch(
-      SnapshotStore.readBefore(spark, root, 1L), e1)
-    assert(m1.schema("loyalty").dataType === LongType)
-    SnapshotStore.commit(m1, root, 1L)
-    val got = SnapshotStore.read(spark, root).get
-      .select("id", "loyalty").orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got === Seq((1L, 100L), (2L, 5000000000L), (3L, 6000000000L)))
-  }
-
-  test("keyed-merge store serves across a rolling TYPE migration: untouched int-era buckets union with long-era buckets") {
-    import spark.implicits._
-    import graft.streaming.PartitionedSnapshotStore
-    import org.apache.spark.sql.types.LongType
-    val root = java.nio.file.Files.createTempDirectory("tpstore").toString + "/s"
-    def bucketed(d: org.apache.spark.sql.DataFrame) = d
-      .withColumn(PartitionedSnapshotStore.bucketColName,
-        PartitionedSnapshotStore.bucketOf(col("id"), 4))
-    // epoch 0: keys 1, 2 (buckets 1, 2) with int32-era loyalty
-    val e0 = bucketed(Seq((1L, true, 10L, 100), (2L, true, 11L, 200))
-      .toDF("id", "live", "lsn", "loyalty"))
-    PartitionedSnapshotStore.commit(Streams.mergeEpoch(None, e0), root, 0L)
-    // epoch 1 touches ONLY bucket 3 (key 3) with a post-ALTER long value;
-    // buckets 1 and 2 keep their int32 parquet files — the read must
-    // reconcile the two vintages (parquet mergeSchema would refuse)
-    val e1 = bucketed(Seq((3L, true, 20L, 7000000000L))
-      .toDF("id", "live", "lsn", "loyalty"))
-    PartitionedSnapshotStore.commit(Streams.mergeEpoch(None, e1), root, 1L)
-    val snap = PartitionedSnapshotStore.read(spark, root).get
-    assert(snap.schema("loyalty").dataType === LongType)
-    val got = snap.select("id", "loyalty").orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got === Seq((1L, 100L), (2L, 200L), (3L, 7000000000L)))
-    // readBefore (the merge input path) reconciles the same way
-    val before = PartitionedSnapshotStore.readBefore(spark, root, 2L).get
-    assert(before.schema("loyalty").dataType === LongType)
-    assert(before.count() === 3)
-  }
-
-  test("composite-key streaming sink: generic keyed-merge replica over (tenant, id) envelopes") {
-    implicit val ctx = spark.sqlContext
-    import graft.streaming.PartitionedSnapshotStore
-    def kr(t: String, id: Long, v: String) = Some(KRow(t, id, v))
-    val batch1 = Seq(
-      KEvent(None, kr("a", 1, "a1-v0"), KSrc(10), "c"),
-      KEvent(None, kr("b", 1, "b1-v0"), KSrc(11), "c"),
-      KEvent(None, kr("a", 2, "a2-v0"), KSrc(12), "c"))
-    val batch2 = Seq(
-      KEvent(kr("a", 1, "a1-v0"), kr("a", 1, "a1-v1"), KSrc(20), "u"),
-      KEvent(kr("b", 1, "b1-v0"), None, KSrc(21), "d"),
-      KEvent(None, kr("b", 2, "b2-v0"), KSrc(22), "c"))
-    val root = java.nio.file.Files.createTempDirectory("kstore").toString + "/s"
-    val mem = MemoryStream[KEvent]
-    val q = Streams.snapshotForeachBatchMergeBy(
-        mem.toDF, root, Seq("tenant", "id"), buckets = 4)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckptk").toString)
-      .start()
-    mem.addData(batch1: _*); q.processAllAvailable()
-    mem.addData(batch2: _*); q.processAllAvailable(); q.stop()
-    val committed = PartitionedSnapshotStore.read(spark, root).get
-    val live = committed.filter(col("live"))
-      .select("tenant", "id", "v").orderBy("tenant", "id").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
-    assert(live === Seq(("a", 1L, "a1-v1"), ("a", 2L, "a2-v0"), ("b", 2L, "b2-v0")))
-    // the delete is state, not output: tombstone retained with its lsn
-    val tomb = committed.filter(!col("live")).collect()
-    assert(tomb.length === 1)
-    assert(tomb(0).getAs[String]("tenant") === "b" && tomb(0).getAs[Long]("id") === 1L)
-    assert(tomb(0).getAs[Long]("lsn") === 21L)
-    // ≡ the batch fold over the concatenated changelog
-    val batchFold = graft.streaming.Streams.mergeEpochBy(None,
-        graft.operators.Cdc.latestWithTombstonesBy(
-          (batch1 ++ batch2).toDS.toDF, Seq("tenant", "id")),
-        Seq("tenant", "id"))
-      .filter(col("live")).select("tenant", "id", "v")
-      .orderBy("tenant", "id").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
-    assert(live === batchFold)
-  }
-
-  test("composite-key epoch merge: (tenant, id) keys fold, bucket, and tombstone across epochs") {
-    import spark.implicits._
-    import graft.streaming.PartitionedSnapshotStore
-    val root = java.nio.file.Files.createTempDirectory("cstore").toString + "/s"
-    val keys = Seq("tenant", "id")
-    PartitionedSnapshotStore.ensureBucketCount(spark, root, 4)
-    def bucketed(d: org.apache.spark.sql.DataFrame) = d
-      .withColumn(PartitionedSnapshotStore.bucketColName,
-        PartitionedSnapshotStore.bucketOfKeys(keys.map(col), 4))
-    // epoch 0: same id under two tenants — a single-column fold would
-    // collapse them into one key
-    val e0 = bucketed(Seq(
-      ("a", 1L, true, 10L, "a1-v0"), ("b", 1L, true, 11L, "b1-v0"),
-      ("a", 2L, true, 12L, "a2-v0"))
-      .toDF("tenant", "id", "live", "lsn", "v"))
-    PartitionedSnapshotStore.commit(
-      Streams.mergeEpochBy(None, e0, keys), root, 0L)
-    // epoch 1: update (a,1), DELETE (b,1), insert (b,2)
-    val e1 = bucketed(Seq(
-      ("a", 1L, true, 20L, "a1-v1"), ("b", 1L, false, 21L, null),
-      ("b", 2L, true, 22L, "b2-v0"))
-      .toDF("tenant", "id", "live", "lsn", "v"))
-    val prior1 = PartitionedSnapshotStore.readBefore(spark, root, 1L)
-      .map(p => bucketed(p.drop(PartitionedSnapshotStore.bucketColName)))
-    PartitionedSnapshotStore.commit(
-      Streams.mergeEpochBy(prior1, e1, keys), root, 1L)
-    val live = PartitionedSnapshotStore.read(spark, root).get
-      .filter(col("live")).select("tenant", "id", "v")
-      .orderBy("tenant", "id").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
-    assert(live === Seq(("a", 1L, "a1-v1"), ("a", 2L, "a2-v0"), ("b", 2L, "b2-v0")))
-    // epoch 2: a REDELIVERED older update of the deleted (b,1) must not
-    // resurrect it — the tombstone's winning lsn is retained in state
-    val e2 = bucketed(Seq(("b", 1L, true, 15L, "b1-stale"))
-      .toDF("tenant", "id", "live", "lsn", "v"))
-    val prior2 = PartitionedSnapshotStore.readBefore(spark, root, 2L)
-      .map(p => bucketed(p.drop(PartitionedSnapshotStore.bucketColName)))
-    PartitionedSnapshotStore.commit(
-      Streams.mergeEpochBy(prior2, e2, keys), root, 2L)
-    val after2 = PartitionedSnapshotStore.read(spark, root).get
-    assert(after2.filter(col("tenant") === "b" && col("id") === 1L)
-      .select("live").collect().map(_.getBoolean(0)).toSeq === Seq(false))
-    // composite compaction preserves the data under the same placement
-    PartitionedSnapshotStore.compact(spark, root, 3L, keys)
-    val compacted = PartitionedSnapshotStore.read(spark, root).get
-      .filter(col("live")).select("tenant", "id", "v")
-      .orderBy("tenant", "id").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
-    assert(compacted === live)
+    val got = LakeFormat.scan(spark, root, col("id") === 13L)
+    assert(got.keptFiles === 1L)
+    assert(got.df.select("id", "v").as[(Long, String)].collect().toSeq ===
+      Seq((13L, "v13")))
   }
 
   test("snapshot commit protocol: a crash between stage and pointer leaves the prior version readable") {
@@ -1289,18 +768,24 @@ class StreamingSpec extends AnyFunSuite {
       case "u" => CdcEvent(row(id, "old"), row(id, em), src(lsn), "u", lsn)
       case "d" => CdcEvent(row(id, em), None, src(lsn), "d", lsn)
     }
+    // key 4 arrives alone, so its rows sit in a file no later batch touches
+    val b4 = Seq(e(4, "c", 50, "d1"))
     val b0 = Seq(e(1, "c", 100, "a1"), e(2, "c", 200, "b1"), e(3, "c", 300, "c1"))
     val b1 = Seq(e(1, "u", 110, "a2"), e(2, "d", 210, "b1"), e(3, "u", 310, "c2"))
     // b2: key 2 re-created AFTER its delete; key 1 gets a LATE event
     // (lsn 105, older than the open interval's 110) plus a fresh update
     val b2 = Seq(e(2, "c", 230, "b2"), e(1, "u", 105, "a1b"), e(1, "u", 120, "a3"))
     val mem = MemoryStream[CdcEvent]
-    val q = Streams.scd2ForeachBatch(mem.toDS, root, buckets = 4)
+    val q = Streams.scd2ForeachBatch(mem.toDS, root)
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt23").toString)
       .start()
+    def files() = LakeFormat.state(spark, root).files
+    mem.addData(b4: _*); q.processAllAvailable()
+    val key4Files = files().map(_.path)
     mem.addData(b0: _*); q.processAllAvailable()
     mem.addData(b1: _*); q.processAllAvailable()
+    val beforeB2 = files()
     mem.addData(b2: _*); q.processAllAvailable(); q.stop()
     def hist(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "valid_from", "valid_to", "email")
@@ -1310,18 +795,27 @@ class StreamingSpec extends AnyFunSuite {
     val got = hist(Streams.readScd2(spark, root).get)
     // the batch operator over the concatenated changelog is the oracle —
     // including the late event, which a close-and-append form would corrupt
-    val expected = hist(Cdc.scd2((b0 ++ b1 ++ b2).toDS.toDF))
+    val expected = hist(Cdc.scd2((b4 ++ b0 ++ b1 ++ b2).toDS.toDF))
     assert(got === expected)
     // the re-created key's history shows the gap: [200,210) then [230,)
     assert(got.contains((2L, 200L, Some(210L), "b1")))
     assert(got.contains((2L, 230L, None, "b2")))
     // the late event landed inside key 1's history
     assert(got.contains((1L, 105L, Some(110L), "a1b")))
-    // b2 touched keys 1 and 2 only -> bucket 3 (key 3) has no v=2 epoch
-    assert(!new java.io.File(s"$root/p=3/v=2").exists())
-    assert(new java.io.File(s"$root/p=1/v=2").exists())
-    // crash replay: strictly-before state makes the rebuild idempotent
-    Streams.scd2Batch(b2.toDS.toDF, 2L, root, buckets = 4)
+    // b2 touched keys 1 and 2 only: its commit removed only files holding
+    // them, and key 4's file survived every commit
+    val afterB2 = files().map(_.path).toSet
+    val removed = beforeB2.filterNot(a => afterB2.contains(a.path))
+    assert(removed.nonEmpty &&
+      removed.forall(_.stats("id").min.exists(_.toLong <= 2L)))
+    assert(key4Files.nonEmpty && key4Files.forall(afterB2.contains))
+    // crash replay of the last batch id: its txn marker makes it a no-op
+    val st = LakeFormat.state(spark, root)
+    Streams.scd2Batch(b2.toDS.toDF, st.txns("scd2"), root)
+    assert(LakeFormat.state(spark, root).version === st.version)
+    // redelivery under a NEW batch id: the (id, lsn) dedup keeps the
+    // rebuilt history identical
+    Streams.scd2Batch(b2.toDS.toDF, st.txns("scd2") + 1, root)
     assert(hist(Streams.readScd2(spark, root).get) === expected)
   }
 
@@ -1487,7 +981,7 @@ class StreamingSpec extends AnyFunSuite {
       e(1, "u", 110, "a2"), e(2, "d", 210, "b1"), e(3, "u", 310, "c2"),
       e(2, "c", 230, "b2"), e(1, "u", 105, "a1b"), e(1, "u", 120, "a3"))
     val dmem = MemoryStream[CdcEvent]
-    val dq = Streams.scd2ForeachBatch(dmem.toDS, root, buckets = 4)
+    val dq = Streams.scd2ForeachBatch(dmem.toDS, root)
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt27d").toString)
       .start()
@@ -2980,8 +2474,10 @@ class StreamingSpec extends AnyFunSuite {
     val b0 = Seq(e(1, "c", 100, "a1"), e(2, "c", 200, "b1"),
       e(3, "c", 300, "c1"), e(4, "c", 400, "d1"))
     val b1 = Seq(e(1, "u", 110, "a2"), e(2, "u", 210, "b2"))
-    Streams.scd2Batch(b0.toDS.toDF, 0L, root, buckets = 4)
-    Streams.scd2Batch(b1.toDS.toDF, 1L, root, buckets = 4)
+    // one batch per create: the history spans several files
+    b0.zipWithIndex.foreach { case (ev, i) =>
+      Streams.scd2Batch(Seq(ev).toDS.toDF, i.toLong, root) }
+    Streams.scd2Batch(b1.toDS.toDF, 4L, root)
     def hist() = Streams.readScd2(spark, root).get
       .select("id", "valid_from", "valid_to", "email").collect()
       .map(r => (r.getLong(0), r.getLong(1),
@@ -2994,24 +2490,32 @@ class StreamingSpec extends AnyFunSuite {
       .except(b1.toDS.toDF).count() === 0)
     // request: erase key 2 (ledger epoch 2), sweep the store in place
     Streams.erasureLedgerBatch(Seq(2L).toDF("id"), 2L, ledger)
+    val filesBefore = LakeFormat.state(spark, root).files
     Streams.erasureApplyStore(spark, root, 2L, Seq("email"), ledger)
     val after = hist()
     // key 2 keeps its exact interval structure, PII gone; others untouched
     assert(after.filter(_._1 == 2L) ===
       before.filter(_._1 == 2L).map(t => (t._1, t._2, t._3, Option.empty[String])))
     assert(after.filter(_._1 != 2L) === before.filter(_._1 != 2L))
-    // bucket granularity: only key 2's bucket (pmod(2,4)=2) gained a v=2
-    assert(new java.io.File(s"$root/p=2/v=2").exists())
-    Seq(0, 1, 3).foreach(b =>
-      assert(!new java.io.File(s"$root/p=$b/v=2").exists()))
-    // crash replay of the sweep epoch re-derives from strictly-before state
+    // file granularity: the sweep commit removed only the files holding
+    // key 2; the files of keys 3 and 4 survive
+    val filesAfter = LakeFormat.state(spark, root).files.map(_.path).toSet
+    def holds(a: LakeFormat.AddFile, k: Long) = {
+      val st = a.stats("id")
+      st.min.exists(_.toLong <= k) && st.max.exists(_.toLong >= k)
+    }
+    val removed = filesBefore.filterNot(a => filesAfter.contains(a.path))
+    assert(filesBefore.size > 2)
+    assert(removed.nonEmpty && removed === filesBefore.filter(holds(_, 2L)))
+    // crash replay of the sweep epoch: its txn marker makes it a no-op
+    val v = LakeFormat.state(spark, root).version
     Streams.erasureApplyStore(spark, root, 2L, Seq("email"), ledger)
+    assert(LakeFormat.state(spark, root).version === v)
     assert(hist() === after)
     // stragglers: a later update for the erased key loses its PII at
     // ingest, an unrelated key's update lands verbatim
     val b2 = Seq(e(2, "u", 220, "b3"), e(3, "u", 310, "c2"))
-    Streams.scd2Batch(Streams.redactIncoming(b2.toDS.toDF, ledger), 3L,
-      root, buckets = 4)
+    Streams.scd2Batch(Streams.redactIncoming(b2.toDS.toDF, ledger), 5L, root)
     val h3 = hist()
     assert(h3.filter(_._1 == 2L).forall(_._4.isEmpty))
     assert(h3.contains((2L, 210L, Some(220L), None)) &&
@@ -3026,18 +2530,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(h4.filter(t => Set(2L, 4L)(t._1)).forall(_._4.isEmpty))
     assert(h4.filter(t => !Set(2L, 4L)(t._1)) ===
       h3.filter(t => !Set(2L, 4L)(t._1)))
-    // the sweep generalizes across store SCHEMAS: a merged-snapshot
-    // store (3 PII columns, T6 shape) sweeps with the same function —
-    // erased keys stay PRESENT (cardinality preserved) but carry no PII
-    implicit val ctx = spark.sqlContext
+    // the sweep generalizes across store SCHEMAS: a LakeSink replica
+    // (3 PII columns) sweeps with the same function — erased keys stay
+    // PRESENT (cardinality preserved) but carry no PII
     val snapRoot = java.nio.file.Files.createTempDirectory("t34s").toString + "/s"
-    val mem = MemoryStream[CdcEvent]
-    val q = Streams.snapshotForeachBatchMerge(mem.toDS, snapRoot, buckets = 4)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt34").toString)
-      .start()
-    mem.addData(b0: _*); q.processAllAvailable(); q.stop()
-    def snap() = Streams.readMergedSnapshot(spark, snapRoot)
+    LakeFormat.create(spark, snapRoot, Seq("id"), statsCols = Seq("id"))
+    LakeSink.applyBatch(b0.toDS.toDF, snapRoot, "t34", 0L)
+    def snap() = LakeFormat.snapshot(spark, snapRoot).filter(col("live"))
       .select("id", "first_name", "last_name", "email").collect()
       .map(r => (r.getLong(0), Option(r.getString(1)),
         Option(r.getString(2)), Option(r.getString(3)))).toSet
