@@ -169,17 +169,28 @@ object Cdc {
     * with the winning lsn — the mergeable form used by incremental
     * snapshot maintenance (streaming foreachBatch upsert): a delete must
     * outrank a previously materialized live row when snapshots are folded
-    * across epochs.
+    * across epochs. The newest-per-key fold of [[eventsWithTombstones]].
     */
-  def snapshotWithTombstones(changelog: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("key")).orderBy(col("source.lsn").desc)
-    changelog
-      .withColumn("key", coalesce(col("after.id"), col("before.id")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("key").as("id"), (col("op") =!= "d").as("live"),
-        col("source.lsn").as("lsn"), col("after.first_name"),
-        col("after.last_name"), col("after.email"))
+  def snapshotWithTombstones(changelog: DataFrame): DataFrame =
+    newestPerKey(eventsWithTombstones(changelog), Seq("id"))
+
+  /** One row per envelope in the mergeable shape of
+    * [[snapshotWithTombstones]] (`id`, `live`, `lsn`, after-image) —
+    * unfolded: [[graft.sources.LakeFormat.merge]] folds any number of
+    * rows per key against the stored rows in its own window, so a sink
+    * hands it this projection and skips a fold (and its shuffle) of its
+    * own.
+    */
+  def eventsWithTombstones(changelog: DataFrame): DataFrame =
+    changelog.select(coalesce(col("after.id"), col("before.id")).as("id"),
+      (col("op") =!= "d").as("live"), col("source.lsn").as("lsn"),
+      col("after.first_name"), col("after.last_name"), col("after.email"))
+
+  // newest row per key by lsn — the C4 fold over the mergeable shape
+  private def newestPerKey(events: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("lsn").desc)
+    events.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
   }
 
   val cdcSnapshot: Q = (spark, dir) => snapshot(changelog(spark, dir)).orderBy(col("id"))
@@ -1051,22 +1062,26 @@ object Cdc {
     * delete must retain its winning lsn so a redelivered older update
     * cannot resurrect the row). Output:
     * key columns (top level), `live`, `lsn`, then every non-key
-    * after-image field, schema-derived.
+    * after-image field, schema-derived. The newest-per-key fold of
+    * [[eventsWithTombstonesBy]].
     */
   def latestWithTombstonesBy(changelog: DataFrame,
+      keyCols: Seq[String]): DataFrame =
+    newestPerKey(eventsWithTombstonesBy(changelog, keyCols), keyCols)
+
+  /** [[eventsWithTombstones]] for ANY envelope-shaped frame and composite
+    * key: one row per envelope in the [[latestWithTombstonesBy]] shape,
+    * unfolded (the form a sink hands [[graft.sources.LakeFormat.merge]]).
+    */
+  def eventsWithTombstonesBy(changelog: DataFrame,
       keyCols: Seq[String]): DataFrame = {
-    require(keyCols.nonEmpty, "latestWithTombstonesBy needs at least one key column")
-    val keyed = keyCols.foldLeft(changelog)((df, k) =>
-      df.withColumn(s"__k_$k", coalesce(col(s"after.`$k`"), col(s"before.`$k`"))))
-    val w = Window.partitionBy(keyCols.map(k => col(s"__k_$k")): _*)
-      .orderBy(col("source.lsn").desc)
+    require(keyCols.nonEmpty, "CDC key folds need at least one key column")
     val valueFields = changelog.select("after.*").columns
       .filterNot(keyCols.contains)
-    keyed.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(keyCols.map(k => col(s"__k_$k").as(k)) ++
-        Seq((col("op") =!= "d").as("live"), col("source.lsn").as("lsn")) ++
-        valueFields.map(f => col(s"after.`$f`").as(f)): _*)
+    changelog.select(keyCols.map(k =>
+        coalesce(col(s"after.`$k`"), col(s"before.`$k`")).as(k)) ++
+      Seq((col("op") =!= "d").as("live"), col("source.lsn").as("lsn")) ++
+      valueFields.map(f => col(s"after.`$f`").as(f)): _*)
   }
 
   /** Registered composite-key query: the orders changelog folded by

@@ -140,8 +140,9 @@ class GraftLakeProvider extends DataSourceRegister with StreamSourceProvider
     * the [[graft.streaming.LakeSink]] exactly-once apply behind Spark's
     * sink resolution, closing the format round trip (a lake table is
     * now a first-class source AND sink of the streaming engine).
-    * Modes: `option("mode", "cdc")` (default) folds CDC envelope rows
-    * to newest-per-key with tombstones before merging; `"merge"` takes
+    * Modes: `option("mode", "cdc")` (default) projects CDC envelope
+    * rows to the mergeable per-event shape with tombstones, which the
+    * merge folds to newest-per-key; `"merge"` takes
     * rows already in the merge shape (key cols + orderCol + liveCol).
     * Exactly-once identity: the engine replays at most the last batch
     * on restart, and the merge's `txn(appId, batchId)` marker absorbs
@@ -305,7 +306,7 @@ class GraftLakeTxProvider extends DataSourceRegister with StreamSourceProvider
   * exactly-once marker — the engine's at-most-one-batch replay no-ops
   * through it. The incoming frame is re-wrapped the `ForeachBatchSink`
   * way ([[GraftBridge.sinkBatchDataFrame]]: execute the incremental
-  * plan once, defensive row copies) before the fold/merge consumes it
+  * plan once, defensive row copies) before the merge consumes it
   * through shuffles. */
 private[sources] class GraftLakeSink(root: String, appId: String,
     mode: String) extends Sink {
@@ -313,7 +314,7 @@ private[sources] class GraftLakeSink(root: String, appId: String,
       data: org.apache.spark.sql.Dataset[Row]): Unit = {
     val batch = GraftBridge.sinkBatchDataFrame(data.toDF)
     val shaped =
-      if (mode == "cdc") graft.operators.Cdc.snapshotWithTombstones(batch)
+      if (mode == "cdc") graft.operators.Cdc.eventsWithTombstones(batch)
       else batch
     LakeFormat.merge(shaped, root, txn = Some((appId, batchId)))
     ()

@@ -58,10 +58,13 @@ import org.apache.spark.sql.catalyst.expressions.{
   * parquet file plus the JSON tail instead of the whole history (the
   * Delta `_last_checkpoint` design). Reads prune files by the per-column
   * min/max stats BEFORE any scan ([[scan]]): a predicate that touches 1%
-  * of a 100 TB table's key range opens ~1% of its files. MERGE rewrites
-  * only the files that actually contain touched keys — stats-pruned
-  * first, then confirmed by one key-probe scan — so applying a
-  * kilobyte-sized CDC batch never rewrites terabytes.
+  * of a 100 TB table's key range opens ~1% of its files. Those stats
+  * are gathered by the write tasks while they write each file, so every
+  * write (merge, append, overwrite, optimize, delete, update) is one
+  * write job with no read-back. MERGE rewrites only the files that
+  * actually contain touched keys — stats-pruned first, then confirmed by
+  * one key-probe scan — so applying a kilobyte-sized CDC batch never
+  * rewrites terabytes, in five Spark jobs ([[merge]]).
   */
 object LakeFormat {
 
@@ -341,21 +344,26 @@ object LakeFormat {
     }
   }
 
+  // the checkpoint's fixed row schema ([[writeCheckpointFile]]): reading
+  // with it skips parquet schema inference, a job of its own per replay
+  private val CheckpointSchema = StructType.fromDDL(
+    "kind STRING, path STRING, rows BIGINT, bytes BIGINT, " +
+      "schemaDdl STRING, stats STRING, appId STRING, txnVersion BIGINT")
+
   // checkpoint rows are a tagged union: kind=add carries a file entry,
   // kind=txn an (appId, version) high-water mark — txn state MUST ride
   // the checkpoint or a replay-from-checkpoint would forget applied
   // batches and double-merge them
   private def readCheckpoint(spark: SparkSession, root: String,
       v: Long): (Seq[AddFile], Map[String, Long]) = {
-    val df0 = spark.read.parquet(checkpointFile(root, v).toString)
-    // pre-r17 checkpoints lack the bytes column → 0 (legacy degradation)
-    val df = if (df0.columns.contains("bytes")) df0
-      else df0.withColumn("bytes", lit(0L))
-    val rows = df.select("kind", "path", "rows", "bytes", "schemaDdl",
-      "stats", "appId", "txnVersion").collect().toSeq
+    val rows = spark.read.schema(CheckpointSchema)
+      .parquet(checkpointFile(root, v).toString).collect().toSeq
     val adds = rows.filter(_.getString(0) == "add")
+      // pre-r17 checkpoints lack the bytes column: it reads NULL → 0
+      // (legacy degradation)
       .map(r => AddFile(r.getString(1), r.getLong(2), r.getString(4),
-        parseStats(mapper.readTree(r.getString(5))), r.getLong(3)))
+        parseStats(mapper.readTree(r.getString(5))),
+        if (r.isNullAt(3)) 0L else r.getLong(3)))
       .sortBy(_.path)
     val txns = rows.filter(_.getString(0) == "txn")
       .map(r => r.getString(6) -> r.getLong(7)).toMap
@@ -407,12 +415,14 @@ object LakeFormat {
 
   /** Write `df` as fresh immutable files under `root/data/` (inside
     * their hive partition directories when the table is partitioned) and
-    * return their add actions: ONE distributed write + ONE distributed
-    * stats job grouped by `_metadata.file_path` (min/max/nulls per stats
-    * column, row count) — never a per-file driver loop over data.
-    * Partition columns are implicitly stats columns: each file holds one
-    * partition tuple, so its min=max singleton IS the partition value
-    * and partition pruning needs no machinery beyond [[mayMatch]]. */
+    * return their add actions: ONE distributed write whose tasks record
+    * each file's row count and per-column min/max/null-count as they
+    * write it ([[FileStatsTracker]] — the public Delta design), so no
+    * job reads the new files back and no per-file driver loop touches
+    * data. Partition columns are implicitly stats columns: each file
+    * holds one partition tuple, so its min=max singleton IS the
+    * partition value and partition pruning needs no machinery beyond
+    * [[mayMatch]]. */
   private def writeData(df: DataFrame, root: String,
       meta: LakeMeta): Seq[AddFile] = {
     val spark = df.sparkSession
@@ -420,8 +430,13 @@ object LakeFormat {
     val tmp = new Path(root, s"_tmp-${UUID.randomUUID.toString.take(12)}")
     meta.partitionCols.foreach(c => require(df.columns.contains(c),
       s"partition column $c missing from the written frame"))
-    if (meta.partitionCols.isEmpty) df.write.parquet(tmp.toString)
-    else df.write.partitionBy(meta.partitionCols: _*).parquet(tmp.toString)
+    val present = (meta.statsCols ++ meta.partitionCols).distinct
+      .filter(df.columns.contains)
+    val tracker = new FileStatsTracker(df.schema, meta.partitionCols,
+      present, spark.conf.get("spark.sql.session.timeZone"))
+    org.apache.spark.sql.GraftBridge.writeParquet(df, tmp.toString,
+      meta.partitionCols, Seq(tracker))
+    val byFile = tracker.files
     f.mkdirs(new Path(root, "data"))
     // collect leaf part files with their partition-dir suffix preserved
     val tmpUri = tmp.toUri.getPath
@@ -430,60 +445,36 @@ object LakeFormat {
     while (it.hasNext) {
       val st = it.next()
       val name = st.getPath.getName
-      if (name.startsWith("part-") && name.endsWith(".parquet")) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(tmpUri)
-          .stripPrefix("/").split("/").dropRight(1).mkString("/")
-        staged += st.getPath -> rel
+      if (name.startsWith("part-") && name.endsWith(".parquet"))
+        staged += st.getPath -> st.getPath.toUri.getPath.stripPrefix(tmpUri)
+          .stripPrefix("/")
+    }
+    val typOf = present.map(c => c -> df.schema(c).dataType.simpleString).toMap
+    val ddl = df.schema.toDDL
+    val adds = staged.toSeq.flatMap { case (src, tmpRel) =>
+      // a staged file the write tasks reported no stats for would commit
+      // without pruning stats — refuse rather than guess
+      val fs0 = byFile.getOrElse(tmpRel, throw new IllegalStateException(
+        s"no write-time stats for staged file $tmpRel"))
+      if (fs0.rows == 0L) None // an empty task's schema-only file
+      else {
+        val pdir = tmpRel.split("/").dropRight(1).mkString("/")
+        val rel = (if (pdir.isEmpty) "data" else s"data/$pdir") +
+          s"/${UUID.randomUUID.toString}.parquet"
+        f.mkdirs(new Path(root, rel).getParent)
+        // rename reports failure by RETURN VALUE on most FileSystems —
+        // silently proceeding would commit a log entry missing these rows
+        require(f.rename(src, new Path(root, rel)),
+          s"failed to publish $src as $rel")
+        val stats = fs0.cols.map { case (c, (lo, hi, nulls)) =>
+          c -> ColStats(typOf(c), lo, hi, nulls)
+        }
+        Some(AddFile(rel, fs0.rows, ddl, stats,
+          f.getFileStatus(new Path(root, rel)).getLen))
       }
     }
-    val rels = staged.toSeq.map { case (src, pdir) =>
-      val rel = (if (pdir.isEmpty) "data" else s"data/$pdir") +
-        s"/${UUID.randomUUID.toString}.parquet"
-      f.mkdirs(new Path(root, rel).getParent)
-      // rename reports failure by RETURN VALUE on most FileSystems —
-      // silently proceeding would commit a log entry missing these rows
-      require(f.rename(src, new Path(root, rel)),
-        s"failed to publish $src as $rel")
-      rel -> f.getFileStatus(new Path(root, rel)).getLen
-    }
     f.delete(tmp, true)
-    if (rels.isEmpty) return Seq.empty
-    val present = (meta.statsCols ++ meta.partitionCols).distinct
-      .filter(df.columns.contains)
-    val typOf = present.map(c => c -> df.schema(c).dataType.simpleString).toMap
-    // read back with the ORIGINAL schema + basePath: partition columns
-    // come from the directory names but keep their written types (path
-    // re-inference would narrow e.g. long → int)
-    val read = spark.read.schema(df.schema)
-      .option("basePath", new Path(root, "data").toString)
-      .parquet(rels.map(r => new Path(root, r._1).toString): _*)
-    val aggs = count(lit(1)).as("__rows") +: present.flatMap(c => Seq(
-      min(col(c)).cast("string").as(s"__min_$c"),
-      max(col(c)).cast("string").as(s"__max_$c"),
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c")))
-    val byFile = read
-      .groupBy(col("_metadata.file_path").as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val uri = r.getAs[String]("__f")
-        val stats = present.map { c =>
-          c -> ColStats(typOf(c),
-            Option(r.getAs[String](s"__min_$c")),
-            Option(r.getAs[String](s"__max_$c")),
-            r.getAs[Long](s"__nulls_$c"))
-        }.toMap
-        uri -> (r.getAs[Long]("__rows"), stats)
-      }.toMap
-    val ddl = df.schema.toDDL
-    rels.flatMap { case (rel, bytes) =>
-      val name = rel.split("/").last
-      byFile.collectFirst { case (uri, (rows, st)) if uri.endsWith("/" + name) =>
-        AddFile(rel, rows, ddl, st, bytes)
-      } // a file the stats job produced no group for is empty: drop it
-        .filter(_.rows > 0L)
-        .orElse { f.delete(new Path(root, rel), false); None }
-    }
+    adds
   }
 
   /** Table metadata without a state replay: it is immutable and lives in
@@ -979,29 +970,34 @@ object LakeFormat {
   val DefaultBroadcastKeyLimit: Long = 1L << 20
 
   /** Broadcast-hint `keySet` only when `rows` (the batch's row count,
-    * an upper bound on distinct keys — [[merge]] reads it off the SAME
-    * aggregation job that computes the key range, never a separate
-    * count pass) is under `limit`; above it the un-hinted join lets the
-    * planner decide from actual sizes. */
+    * an upper bound on distinct keys — [[merge]] observes it on the SAME
+    * job that materializes the batch, never a separate count pass) is
+    * under `limit`; above it the un-hinted join lets the planner decide
+    * from actual sizes. */
   private[graft] def gatedBroadcast(keySet: DataFrame, rows: Long,
       limit: Long): DataFrame =
     if (rows <= limit) broadcast(keySet) else keySet
 
-  /** Transactional CDC MERGE: fold `updates` (one row per key, carrying
-    * `meta.orderCol` and `meta.liveCol` — the
-    * [[graft.operators.Cdc.snapshotWithTombstones]] shape) into the
-    * table, rewriting ONLY the files that contain touched keys.
+  /** Transactional CDC MERGE: fold `updates` (any number of rows per
+    * key, each carrying `meta.orderCol` and `meta.liveCol` — e.g. one
+    * row per CDC event, [[graft.operators.Cdc.eventsWithTombstones]])
+    * into the table, rewriting ONLY the files that contain touched keys.
     *
-    * Steps: (1) stats-prune candidate files by the updates' key range;
-    * (2) confirm with one key-probe scan over the candidates
-    * (`_metadata.file_path` semi-joined against the key set —
-    * broadcast-hinted only under `broadcastKeyLimit` distinct keys, see
-    * [[gatedBroadcast]]) — the touched set; (3) fold stored-touched ∪
-    * updates to the newest row per key (orderCol DESC, updates outrank
-    * stored on ties), KEEPING tombstones — a late-arriving stale event
-    * must lose to a stored delete, so deletes stay materialized until
-    * [[vacuum]]-era compaction; (4) write the folded rows as fresh files
-    * and commit add(new) + remove(touched).
+    * Steps: (1) materialize the batch once, observing its key range and
+    * row count on that same job, and stats-prune candidate files by the
+    * range; (2) confirm with one key-probe scan over the candidates
+    * (`_metadata.file_path` semi-joined against the batch's key column —
+    * broadcast-hinted only under `broadcastKeyLimit` rows, see
+    * [[gatedBroadcast]]; each task reports its distinct hit paths) — the
+    * touched set; (3) fold stored-touched ∪ updates to the newest row
+    * per key (orderCol DESC, updates outrank stored on ties), KEEPING
+    * tombstones — a late-arriving stale event must lose to a stored
+    * delete, so deletes stay materialized until [[vacuum]]-era
+    * compaction; (4) write the folded rows as fresh files (stats from
+    * the write tasks, [[writeData]]) and commit add(new) +
+    * remove(touched). With a broadcast key set that is five Spark jobs:
+    * the materialization, the key broadcast, the probe, and the fold's
+    * shuffle and write.
     *
     * Concurrency: the commit claims exactly read-version+1. Any
     * intervening commit aborts with ConcurrentModificationException —
@@ -1021,38 +1017,37 @@ object LakeFormat {
     val m = st.meta
     (m.keyCols :+ m.orderCol :+ m.liveCol).foreach(c =>
       require(updatesIn.columns.contains(c), s"merge updates missing column $c"))
-    // the batch is consumed three times (key-range agg, key-probe set,
-    // fold union): materialize it once instead of re-deriving the
-    // caller's plan per consumer — also truncates lineage, so repeated
-    // streaming merges don't grow task binaries
-    val updates = updatesIn.localCheckpoint()
+    // the batch is consumed twice (key-probe set, fold union):
+    // materialize it once instead of re-deriving the caller's plan per
+    // consumer — also truncates lineage, so repeated
+    // streaming merges don't grow task binaries. The key range and row
+    // count are OBSERVED on that same job (no aggregation job of their
+    // own); a single key gets its range, every key shape its count.
+    val singleKey = m.keyCols.size == 1
+    val obs = org.apache.spark.sql.Observation(
+      s"lake-merge-${UUID.randomUUID}")
+    val rangeAggs =
+      if (!singleKey) Seq.empty
+      else {
+        val k = col(m.keyCols.head)
+        Seq(min(k).cast("string").as("lo"), max(k).cast("string").as("hi"))
+      }
+    val updates = updatesIn
+      .observe(obs, count(lit(1)).as("n"), rangeAggs: _*)
+      .localCheckpoint()
+    val observed = obs.get
+    // rows ≥ distinct keys, so gating the broadcast on rows is
+    // conservative-safe for the driver
+    val batchRows = observed("n").asInstanceOf[Long]
     // (1) candidate files by single-key range overlap (conservative:
     // composite keys or missing stats keep everything). The key range is
     // ALSO the rebase-safety proof below: None = no proof possible
     // (composite key), Some(None) = empty updates (disjoint from
     // everything), Some(Some((lo, hi))) = the updates' closed key range.
-    // the broadcast gate's row count rides the SAME aggregation job —
-    // no separate count pass over the batch (rows ≥ distinct keys, so
-    // gating on rows is conservative-safe for the driver). Composite
-    // keys have no range job to ride, so their count is LAZY: it runs
-    // only if the key-probe branch below actually consults the gate
-    // (a no-op/disjoint merge never pays it).
-    val singleKeyAgg: Option[org.apache.spark.sql.Row] =
-      if (m.keyCols.size != 1) None
-      else {
-        val k = m.keyCols.head
-        Some(updates.agg(min(col(k)).cast("string").as("lo"),
-          max(col(k)).cast("string").as("hi"),
-          count(lit(1)).as("n")).head())
-      }
-    val keyRange: Option[Option[(String, String)]] = singleKeyAgg.map { r =>
-      if (r.isNullAt(0)) None // empty updates touch nothing
-      else Some((r.getString(0), r.getString(1)))
-    }
-    lazy val batchRows: Long = singleKeyAgg match {
-      case Some(r) => r.getLong(2)
-      case None    => updates.agg(count(lit(1))).head().getLong(0)
-    }
+    val keyRange: Option[Option[(String, String)]] =
+      if (!singleKey) None
+      else Some(Option(observed("lo")).map(lo =>
+        (lo.toString, observed("hi").toString)))
     // a file whose key stats are provably OUTSIDE the updates' range
     def keyDisjoint(a: AddFile): Boolean = keyRange match {
       case Some(None) => true
@@ -1063,23 +1058,25 @@ object LakeFormat {
               cmpVals(s.typ, s.min.get, hi) > 0))
       case None => false
     }
-    val cands: Seq[AddFile] = keyRange match {
-      case Some(None) => Seq.empty
-      case _ => st.files.filterNot(keyDisjoint)
-    }
+    val cands: Seq[AddFile] =
+      if (batchRows == 0L) Seq.empty else st.files.filterNot(keyDisjoint)
     // (2) exact touched set: one scan over candidates, semi-joined
-    // against the update keys; the file_path projection happens PER
-    // VINTAGE (hidden _metadata does not survive a union), and mixed
-    // vintages probe correctly
+    // against the update keys (a semi-join needs no distinct key set);
+    // the file_path projection happens PER VINTAGE (hidden _metadata
+    // does not survive a union), and mixed vintages probe correctly.
+    // Each task reports its distinct hit paths, the driver unions them.
     val touched: Seq[AddFile] =
       if (cands.isEmpty) Seq.empty
       else {
-        val keySet = updates.select(m.keyCols.map(col): _*).distinct()
+        val keySet = updates.select(m.keyCols.map(col): _*)
+        val str = org.apache.spark.sql.Encoders.STRING
         val hit = readGrouped(spark, root, cands, df => df.select(
             col("_metadata.file_path").as("__f") +: m.keyCols.map(col): _*))
           .join(gatedBroadcast(keySet, batchRows, broadcastKeyLimit),
             m.keyCols, "left_semi")
-          .select("__f").distinct().collect().map(_.getString(0)).toSet
+          .select("__f").as(str)
+          .mapPartitions(_.toSet.iterator)(str)
+          .collect().toSet
         cands.filter(a => hit.exists(_.endsWith("/" + a.path.split("/").last)))
       }
     // (3) fold: newest row per key wins; updates outrank stored on an
@@ -1098,7 +1095,10 @@ object LakeFormat {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "__src")
-    val adds = writeData(folded, root, m)
+    // nothing stored and nothing incoming: only the marker commits
+    val adds =
+      if (stored.isEmpty && batchRows == 0L) Seq.empty
+      else writeData(folded, root, m)
     // (4) optimistic commit with file-level conflict detection — the txn
     // marker rides the same atomic commit as the data it marks applied.
     // An intervening commit is provably disjoint from this merge when:
@@ -1521,13 +1521,19 @@ object LakeFormat {
     * a continuously-ingesting table whose operator never calls
     * [[checkpoint]] by hand. Best-effort — a checkpoint failure never
     * fails the commit that triggered it (the commit is already
-    * durable; the checkpoint is an accelerator). */
+    * durable; the checkpoint is an accelerator), but it is reported on
+    * stderr as `[lake] auto-checkpoint at v<N> failed: <msg>`. */
   val AutoCheckpointInterval: Long = 20L
 
   private def maybeAutoCheckpoint(spark: SparkSession, root: String,
       v: Long): Unit =
     if (v > 0L && v % AutoCheckpointInterval == 0L)
-      scala.util.Try(checkpoint(spark, root))
+      try checkpoint(spark, root)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(
+            s"[lake] auto-checkpoint at v$v failed: ${e.getMessage}")
+      }
 
   /** Write the parquet checkpoint rows for `st` at its version (no
     * pointer update). File BYTES ride the checkpoint (r17) so a
@@ -1776,5 +1782,119 @@ object LakeFormat {
         && now - s.getModificationTime >= olderThanMs)
       .foreach(s => f.delete(s.getPath, true))
     deleted
+  }
+}
+
+/** One written file's write-time stats: rows, then per stats column
+  * (min, max, null count) with min/max cast to string (None when every
+  * value is NULL). Keyed by `rel`, the file's path relative to the write
+  * task's attempt directory — partition directories included, because
+  * one task writing several partitions reuses its `part-…` name in each. */
+private[sources] final case class WrittenFileStats(rel: String, rows: Long,
+    cols: Map[String, (Option[String], Option[String], Long)])
+
+private[sources] final case class WrittenTaskStats(files: Seq[WrittenFileStats])
+    extends org.apache.spark.sql.execution.datasources.WriteTaskStats
+
+/** WRITE-TIME FILE STATS for [[LakeFormat]]: each write task folds every
+  * row it writes into its file's row count and per-column min/max/null
+  * count, and the driver collects them when the job commits — the same
+  * numbers a `groupBy(_metadata.file_path)` read-back aggregation gives,
+  * without the second job. Values compare with the column type's Spark
+  * ordering (NaN above everything, as `min`/`max` order it) and render
+  * through the same `CAST(… AS STRING)` in the session time zone.
+  * Partition columns are not in the written rows: their value comes from
+  * the task's current partition tuple, a min=max singleton. */
+private[sources] final class FileStatsTracker(schema: StructType,
+    partitionCols: Seq[String], statsCols: Seq[String], timeZone: String)
+    extends org.apache.spark.sql.execution.datasources.WriteJobStatsTracker {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+  import org.apache.spark.sql.execution.datasources.{WriteTaskStats,
+    WriteTaskStatsTracker}
+  import org.apache.spark.sql.types.{DataType, StringType}
+
+  // the written rows carry the data columns only (partition columns
+  // move into the directory names), in schema order
+  private val dataFields = schema.fields.filterNot(f => partitionCols.contains(f.name))
+  private val valueCols = statsCols.filterNot(partitionCols.contains).toArray
+  private val valueIdx = valueCols.map(c => dataFields.indexWhere(_.name == c))
+  private val valueTypes = valueIdx.map(i => dataFields(i).dataType)
+  private val partStats = statsCols.filter(partitionCols.contains)
+    .map(c => (c, partitionCols.indexOf(c), schema(c).dataType))
+
+  @transient private lazy val collected =
+    scala.collection.mutable.ArrayBuffer.empty[WrittenFileStats]
+
+  /** Every committed file's stats by task-relative path (driver side,
+    * after the write job commits). */
+  def files: Map[String, WrittenFileStats] =
+    collected.synchronized(collected.map(s => s.rel -> s).toMap)
+
+  private def str(v: Any, dt: DataType): Option[String] =
+    Option(v).map(x => Cast(Literal(x, dt), StringType, Some(timeZone))
+      .eval().toString)
+
+  override def newTaskInstance(): WriteTaskStatsTracker =
+    new WriteTaskStatsTracker {
+      private val orderings = valueTypes.map(
+        org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering)
+      private var partition: InternalRow = InternalRow.empty
+      private val open =
+        scala.collection.mutable.LinkedHashMap.empty[String, FileAcc]
+
+      final class FileAcc(val partition: InternalRow) {
+        var rows = 0L
+        val mins = new Array[Any](valueCols.length)
+        val maxs = new Array[Any](valueCols.length)
+        val nulls = new Array[Long](valueCols.length)
+        def add(row: InternalRow): Unit = {
+          rows += 1
+          var j = 0
+          while (j < valueCols.length) {
+            val i = valueIdx(j)
+            if (row.isNullAt(i)) nulls(j) += 1
+            else {
+              val v = row.get(i, valueTypes(j))
+              // copy on replace only: the writer reuses the row buffer
+              if (mins(j) == null || orderings(j).lt(v, mins(j)))
+                mins(j) = InternalRow.copyValue(v)
+              if (maxs(j) == null || orderings(j).gt(v, maxs(j)))
+                maxs(j) = InternalRow.copyValue(v)
+            }
+            j += 1
+          }
+        }
+      }
+
+      override def newPartition(values: InternalRow): Unit =
+        partition = values.copy()
+      override def newFile(path: String): Unit =
+        open(path) = new FileAcc(partition)
+      override def closeFile(path: String): Unit = ()
+      override def newRow(path: String, row: InternalRow): Unit =
+        open(path).add(row)
+      override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+        WrittenTaskStats(open.toSeq.map { case (path, a) =>
+          val values = valueCols.indices.map { j =>
+            valueCols(j) -> (str(a.mins(j), valueTypes(j)),
+              str(a.maxs(j), valueTypes(j)), a.nulls(j))
+          }
+          val parts = partStats.map { case (c, i, dt) =>
+            val v = str(a.partition.get(i, dt), dt)
+            c -> (v, v, if (v.isEmpty) a.rows else 0L)
+          }
+          WrittenFileStats(
+            path.split("/").takeRight(partitionCols.size + 1).mkString("/"),
+            a.rows, (values ++ parts).toMap)
+        })
+    }
+
+  override def processStats(stats: Seq[WriteTaskStats],
+      jobCommitTime: Long): Unit = collected.synchronized {
+    stats.foreach {
+      case t: WrittenTaskStats => collected ++= t.files
+      case _ => ()
+    }
   }
 }

@@ -11,33 +11,38 @@ import graft.sources.LakeFormat
   * message, at-least-once autocommit) upgraded to transactional
   * micro-batch merges.
   *
-  * Exactly-once mechanics: each micro-batch folds its envelopes to the
-  * newest event per key (the C4 discipline —
-  * [[graft.operators.Cdc.snapshotWithTombstones]]) and merges with a
-  * `txn(appId, batchId)` marker in the SAME atomic log commit as the
-  * data. A crash between the commit and the stream checkpoint advance
-  * replays the batch; the replay reads the marker at-or-above its
-  * batchId and no-ops — so the table applies every batch exactly once
-  * even though the stream delivers at-least-once. This is the marker's
-  * job, not the checkpoint's: the two systems (stream checkpoint, table
-  * log) cannot commit atomically together, so the table must dedupe.
+  * Exactly-once mechanics: each micro-batch projects its envelopes to
+  * one mergeable row per event ([[graft.operators.Cdc.eventsWithTombstones]])
+  * and merges them with a `txn(appId, batchId)` marker in the SAME
+  * atomic log commit as the data. The merge's window keeps the newest
+  * event per key over stored ∪ batch (the C4 discipline), so the sink
+  * runs no fold of its own. A crash between the commit and the stream
+  * checkpoint advance replays the batch; the replay reads the marker
+  * at-or-above its batchId and no-ops — so the table applies every
+  * batch exactly once even though the stream delivers at-least-once.
+  * This is the marker's job, not the checkpoint's: the two systems
+  * (stream checkpoint, table log) cannot commit atomically together, so
+  * the table must dedupe.
   *
   * Scale: per batch, merge rewrites only the files containing the
   * batch's keys (stats-pruned + key-probe confirmed) — a kilobyte batch
-  * against a 100 TB replica touches a handful of files; periodic
+  * against a 100 TB replica touches a handful of files, in five Spark
+  * jobs (materialize, key broadcast, probe, fold shuffle, write — the
+  * file stats come from the write tasks); periodic
   * [[graft.sources.LakeFormat.optimize]] + [[graft.sources.LakeFormat.checkpoint]]
   * keep file counts and log replay bounded.
   */
 object LakeSink {
 
-  /** Apply ONE micro-batch of envelope rows: fold to newest-per-key,
-    * merge with the (appId, batchId) exactly-once marker. Public so
-    * tests and backfills can drive batches with explicit ids (the T29
-    * discipline — MemoryStream batch ids are not 1:1 with addData). */
+  /** Apply ONE micro-batch of envelope rows: merge one row per event
+    * (the merge folds to newest-per-key) with the (appId, batchId)
+    * exactly-once marker. Public so tests and backfills can drive
+    * batches with explicit ids (the T29 discipline — MemoryStream batch
+    * ids are not 1:1 with addData). */
   def applyBatch(envelopes: DataFrame, root: String, appId: String,
       batchId: Long): Unit = {
-    val folded = graft.operators.Cdc.snapshotWithTombstones(envelopes)
-    LakeFormat.merge(folded, root, txn = Some((appId, batchId)))
+    LakeFormat.merge(graft.operators.Cdc.eventsWithTombstones(envelopes),
+      root, txn = Some((appId, batchId)))
     ()
   }
 

@@ -14,9 +14,10 @@ import graft.sources.LakeTx
   * [[LakeSink]] exactly-once discipline, lifted from one table to the
   * distributed-transaction layer.
   *
-  * Per micro-batch: split the envelopes by `source.table`, fold each
-  * table's slice to its newest event per key
-  * ([[graft.operators.Cdc.latestWithTombstonesBy]] — the C4 discipline,
+  * Per micro-batch: split the envelopes by `source.table`, project each
+  * table's slice to the mergeable per-event shape
+  * ([[graft.operators.Cdc.eventsWithTombstonesBy]] — each member merge
+  * folds it to the newest event per key, the C4 discipline,
   * table-generic), and [[graft.sources.LakeTx.commitTx]] the map with
   * `(appId, batchId)`. Member merges carry per-table exactly-once
   * markers and ONE manifest publish makes the whole batch visible, so:
@@ -59,9 +60,10 @@ object LakeTxSink {
         "silently would desynchronize the replica")
     // one pass over the batch per table: micro-batches are
     // increment-sized, and the localCheckpoint inside each member merge
-    // already bounds re-derivation
+    // already bounds re-derivation. Each table's events go to its merge
+    // unfolded — the merge's own window keeps the newest per key
     val updates = tableKeys.map { case (t, keys) =>
-      t -> graft.operators.Cdc.latestWithTombstonesBy(
+      t -> graft.operators.Cdc.eventsWithTombstonesBy(
         envelopes.filter(col("source.table") === t), keys)
     }
     LakeTx.commitTx(spark, root, updates, appId, batchId)

@@ -46,4 +46,51 @@ object GraftBridge {
     cs.internalCreateDataFrame(
       df.queryExecution.toRdd.map(_.copy()), df.schema, isStreaming = false)
   }
+
+  /** Write `df` as parquet files under `path` (hive directories for
+    * `partitionCols`) and hand each write task's files to `trackers` —
+    * the `df.write.partitionBy(..).parquet(path)` job with stats
+    * trackers attached, which the public writer API does not expose.
+    * This is the public Delta Lake construction (TransactionalWrite):
+    * `FileFormatWriter.write` under `SQLExecution.withNewExecutionId`,
+    * with the same empty-string → NULL conversion of nullable string
+    * partition columns the `DataFrameWriter` plans (V1Writes), the
+    * session's commit protocol, and the writer's own basic tracker (task
+    * output metrics and SQL write metrics stay as `df.write` reports
+    * them). The writer sorts by the partition columns itself when the
+    * plan's ordering does not already match.
+    */
+  def writeParquet(df: DataFrame, path: String, partitionCols: Seq[String],
+      trackers: Seq[execution.datasources.WriteJobStatsTracker]): Unit = {
+    import execution.datasources._
+    val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val analyzed = df.queryExecution.analyzed
+    val parts = partitionCols.map(c => analyzed.output.find(_.name == c).get)
+    val empty2Null = V1WritesUtils.convertEmptyToNull(analyzed.output, parts)
+    val qe = (if (empty2Null.isEmpty) df else ofRows(cs,
+      catalyst.plans.logical.Project(empty2Null, analyzed))).queryExecution
+    val plan = qe.executedPlan
+    val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+      cs.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID.toString, path)
+    val hadoopConf = cs.sessionState.newHadoopConfWithOptions(Map.empty)
+    val basic = new BasicWriteJobStatsTracker(
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+      BasicWriteJobStatsTracker.metrics)
+    execution.SQLExecution.withNewExecutionId(qe, Some("lakeWrite")) {
+      FileFormatWriter.write(
+        sparkSession = cs,
+        plan = plan,
+        fileFormat = new parquet.ParquetFileFormat,
+        committer = committer,
+        outputSpec = FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
+        hadoopConf = hadoopConf,
+        partitionColumns =
+          partitionCols.map(c => plan.output.find(_.name == c).get),
+        bucketSpec = None,
+        statsTrackers = basic +: trackers,
+        options = Map.empty)
+    }
+    ()
+  }
 }

@@ -269,6 +269,47 @@ object CdcPropertySpec extends Properties("CdcSnapshot") {
       }
     }
 
+  // --------------------------------------------- LakeSink durable replica
+  /** The durable replica path: random batch splits of a changelog with
+    * deletes, re-creates and redeliveries (the same event, same lsn,
+    * again in the same or another batch), applied through
+    * [[graft.streaming.LakeSink.applyBatch]] — whose merge does the only
+    * newest-per-key fold — must serve exactly [[Cdc.snapshot]] over all
+    * the events; replaying an applied batch id commits nothing.
+    */
+  property("LakeSink.applyBatch over random batch splits == Cdc.snapshot") =
+    forAll(genChangelog, Gen.choose(1, 3), Gen.long) { (keyed, nBatches, seed) =>
+      import spark.implicits._
+      import org.apache.spark.sql.functions.col
+      import graft.sources.LakeFormat
+      val events = materialize(keyed)
+      if (events.isEmpty) Prop.passed
+      else {
+        val rnd = new scala.util.Random(seed)
+        val batches = Array.fill(nBatches)(
+          scala.collection.mutable.Buffer.empty[CdcEvent])
+        events.foreach { e =>
+          batches(rnd.nextInt(nBatches)) += e
+          if (rnd.nextInt(4) == 0) batches(rnd.nextInt(nBatches)) += e
+        }
+        val root = java.nio.file.Files.createTempDirectory("sinkp")
+          .toString + "/t"
+        LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
+        def apply(i: Int): Unit = graft.streaming.LakeSink.applyBatch(
+          batches(i).toSeq.toDS.toDF, root, "prop", i.toLong)
+        batches.indices.foreach(apply)
+        val tip = LakeFormat.state(spark, root).version
+        apply(rnd.nextInt(nBatches))
+        val cols = Seq("id", "first_name", "last_name", "email").map(col)
+        val got = LakeFormat.snapshot(spark, root).filter(col("live"))
+          .select(cols: _*).collect().toSet
+        val expected = Cdc.snapshot(events.toDS.toDF).collect().toSet
+        Prop(got == expected &&
+          LakeFormat.state(spark, root).version == tip) :|
+          s"got=$got expected=$expected"
+      }
+    }
+
   // -------------------------------------------- C20 audit/repair closure
   /** For ANY corruption of the replica (rows dropped, modified, or
     * invented), the checksum audit + bucket-restricted repair restores

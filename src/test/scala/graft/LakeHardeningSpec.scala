@@ -96,45 +96,59 @@ class LakeHardeningSpec extends AnyFunSuite {
     assert(build(0L) === build(LakeFormat.DefaultBroadcastKeyLimit))
   }
 
-  test("the merge broadcast gate rides the key-range aggregation — no separate count job") {
+  test("a single-key merge into a one-file table runs at most five jobs and never reads its written files back") {
     val root = freshRoot()
     LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
-    LakeFormat.merge(spark.range(100).select(col("id"), lit(1L).as("lsn"),
-      lit(true).as("live"), col("id").cast("string").as("v")), root)
+    LakeFormat.append(spark.range(100).select(col("id"), lit(1L).as("lsn"),
+      lit(true).as("live"), col("id").cast("string").as("v")).coalesce(1),
+      root)
+    assert(LakeFormat.state(spark, root).files.size === 1)
     // record every job THIS thread's job group launches during a merge
-    // (suites share the session concurrently — group-filter the bus)
-    val group = s"gate-probe-${java.util.UUID.randomUUID}"
-    val stages = collection.mutable.Buffer.empty[String]
+    // (suites share the session concurrently — group-filter the bus),
+    // and which stages wrote output
+    val group = s"merge-budget-${java.util.UUID.randomUUID}"
+    val jobs = collection.mutable.Map.empty[Int, (Seq[Int], Seq[String])]
+    val writers = collection.mutable.Set.empty[Int]
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (js.properties != null &&
             group == js.properties.getProperty("spark.jobGroup.id"))
-          stages.synchronized { stages ++= js.stageInfos.map(_.name) }
+          jobs.synchronized {
+            jobs(js.jobId) = (js.stageIds, js.stageInfos.map(_.name))
+          }
+      override def onStageCompleted(
+          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val m = sc.stageInfo.taskMetrics
+        if (m != null && m.outputMetrics.bytesWritten > 0L)
+          writers.synchronized { writers += sc.stageInfo.stageId }
+      }
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      spark.sparkContext.setJobGroup(group, "merge gate probe")
+      spark.sparkContext.setJobGroup(group, "merge job budget")
       LakeFormat.merge(spark.range(30).select(col("id"), lit(2L).as("lsn"),
         lit(true).as("live"), lit("u").as("v")), root)
     } finally {
       spark.sparkContext.clearJobGroup()
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(l)
     }
-    // the async listener bus needs a beat to drain
-    val deadline = System.nanoTime() + 10e9.toLong
-    var last = -1
-    while (System.nanoTime() < deadline &&
-        stages.synchronized(stages.size) != last) {
-      last = stages.synchronized(stages.size); Thread.sleep(200)
-    }
-    spark.sparkContext.removeSparkListener(l)
-    val got = stages.synchronized(stages.toList)
-    assert(got.nonEmpty, "the probe merge must have run jobs in its group")
-    // the gate reads its row count off the key-range agg ("head at") —
-    // a `count at LakeFormat` stage would be the separate gate job
-    // this test exists to forbid
-    assert(!got.exists(_.startsWith("count at")),
-      s"merge ran a standalone count job: $got")
+    val got = jobs.synchronized(jobs.toMap)
+    val wrote = writers.synchronized(writers.toSet)
+    val shown = got.toSeq.sortBy(_._1).map { case (id, (_, names)) =>
+      s"$id:${names.mkString("+")}" }.mkString(", ")
+    // materialize (+ observed key range and count), key broadcast,
+    // probe, fold shuffle, write
+    assert(got.nonEmpty, "the merge must have run jobs in its group")
+    assert(got.size <= 5, s"merge ran ${got.size} jobs: $shown")
+    val writeJobs = got.collect { case (id, (st, _)) if st.exists(wrote) => id }
+    assert(writeJobs.size === 1, s"expected one write job: $shown")
+    // the file stats come from the write tasks: nothing runs after the
+    // write, so nothing reads the new files back
+    assert(got.keys.forall(_ <= writeJobs.head),
+      s"a job ran after the write: $shown")
+    assert(LakeFormat.snapshot(spark, root).filter(col("v") === "u").count() === 30L)
   }
 
   test("selective OPTIMIZE rewrites only the fragmented partition; other entries untouched") {

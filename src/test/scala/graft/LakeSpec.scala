@@ -424,6 +424,69 @@ class LakeSpec extends AnyFunSuite {
     assert(after.filter(col("id") === 0L).select("m").as[Long].head() === 99L)
   }
 
+  test("write-time file stats equal the read-back aggregation over the committed files") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType.fromDDL("id BIGINT, lsn BIGINT, live BOOLEAN, " +
+      "i INT, s STRING, d DOUBLE, dt DATE, ts TIMESTAMP, dec DECIMAL(12,3), " +
+      "nothing STRING, day INT, region STRING")
+    val statsCols = Seq("id", "i", "s", "d", "dt", "ts", "dec", "nothing")
+    val data = (0 until 60).map { n =>
+      def orNull[T](v: T): Any = if (n % 7 == 3) null else v
+      Row(n.toLong, 1L, true, orNull(n * 37 % 23 - 11),
+        orNull(Seq("b", "Ä", "a", "\uD83D\uDE00", "")(n % 5) + n),
+        if (n % 11 == 5) Double.NaN else orNull(n * 1.25 - 30.0),
+        orNull(java.sql.Date.valueOf(s"2024-0${n % 9 + 1}-1${n % 10}")),
+        orNull(java.sql.Timestamp.valueOf(s"2024-03-${10 + n % 19} 0${n % 10}:15:30.123456")),
+        orNull(new java.math.BigDecimal(s"${n * 13 - 400}.${n % 10}05")),
+        null, n % 4, if (n % 13 == 0) null else Seq("x", "y")(n / 4 % 2))
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 3), schema)
+    // the oracle: the aggregation the committed files read back to
+    def checkStats(root: String): Unit = {
+      val st = LakeFormat.state(spark, root)
+      val present = (statsCols ++ st.meta.partitionCols).distinct
+      val aggs = count(lit(1)).as("__rows") +: present.flatMap(c => Seq(
+        min(col(c)).cast("string").as(s"__min_$c"),
+        max(col(c)).cast("string").as(s"__max_$c"),
+        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c")))
+      val byFile = spark.read.schema(schema)
+        .option("basePath", new java.io.File(root, "data").toString)
+        .parquet(st.files.map(a => new java.io.File(root, a.path).toString): _*)
+        .groupBy(col("_metadata.file_path").as("__f"))
+        .agg(aggs.head, aggs.tail: _*).collect()
+      assert(byFile.length === st.files.size)
+      st.files.foreach { a =>
+        val r = byFile.find(_.getAs[String]("__f").endsWith("/" + a.path)).get
+        assert(a.rows === r.getAs[Long]("__rows"), a.path)
+        present.foreach { c =>
+          assert(a.stats(c) === LakeFormat.ColStats(
+            schema(c).dataType.simpleString,
+            Option(r.getAs[String](s"__min_$c")),
+            Option(r.getAs[String](s"__max_$c")),
+            r.getAs[Long](s"__nulls_$c")), s"${a.path} $c")
+        }
+      }
+    }
+    val flat = freshRoot()
+    LakeFormat.create(spark, flat, Seq("id"), statsCols = statsCols)
+    LakeFormat.append(df.drop("day", "region"), flat)
+    LakeFormat.merge(df.drop("day", "region").filter(col("id") < 10)
+      .withColumn("lsn", lit(2L)).withColumn("s", lit("merged")), flat)
+    assert(LakeFormat.state(spark, flat).files.size >= 3)
+    checkStats(flat)
+    // ONE task writes every (day, region) directory: its part-file name
+    // repeats across them, and a NULL region lands in the default dir
+    val parted = freshRoot()
+    LakeFormat.create(spark, parted, Seq("id"), statsCols = statsCols,
+      partitionCols = Seq("day", "region"))
+    LakeFormat.append(df.coalesce(1), parted)
+    val files = LakeFormat.state(spark, parted).files
+    assert(files.size === 12, files.map(_.path))
+    assert(files.count(_.stats("region").nulls > 0L) === 4)
+    checkStats(parted)
+  }
+
   test("pruning handles IN-lists and null-count probes") {
     val root = freshRoot()
     LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("x"))
