@@ -449,14 +449,13 @@ object LakeFormat {
         staged += st.getPath -> st.getPath.toUri.getPath.stripPrefix(tmpUri)
           .stripPrefix("/")
     }
-    val typOf = present.map(c => c -> df.schema(c).dataType.simpleString).toMap
     val ddl = df.schema.toDDL
     val adds = staged.toSeq.flatMap { case (src, tmpRel) =>
       // a staged file the write tasks reported no stats for would commit
       // without pruning stats — refuse rather than guess
-      val fs0 = byFile.getOrElse(tmpRel, throw new IllegalStateException(
+      val written = byFile.getOrElse(tmpRel, throw new IllegalStateException(
         s"no write-time stats for staged file $tmpRel"))
-      if (fs0.rows == 0L) None // an empty task's schema-only file
+      if (written.rows == 0L) None // an empty task's schema-only file
       else {
         val pdir = tmpRel.split("/").dropRight(1).mkString("/")
         val rel = (if (pdir.isEmpty) "data" else s"data/$pdir") +
@@ -466,10 +465,7 @@ object LakeFormat {
         // silently proceeding would commit a log entry missing these rows
         require(f.rename(src, new Path(root, rel)),
           s"failed to publish $src as $rel")
-        val stats = fs0.cols.map { case (c, (lo, hi, nulls)) =>
-          c -> ColStats(typOf(c), lo, hi, nulls)
-        }
-        Some(AddFile(rel, fs0.rows, ddl, stats,
+        Some(AddFile(rel, written.rows, ddl, written.cols,
           f.getFileStatus(new Path(root, rel)).getLen))
       }
     }
@@ -1785,13 +1781,13 @@ object LakeFormat {
   }
 }
 
-/** One written file's write-time stats: rows, then per stats column
-  * (min, max, null count) with min/max cast to string (None when every
-  * value is NULL). Keyed by `rel`, the file's path relative to the write
-  * task's attempt directory — partition directories included, because
-  * one task writing several partitions reuses its `part-…` name in each. */
+/** One written file's write-time stats: rows and per-column
+  * [[LakeFormat.ColStats]]. Keyed by `rel`, the file's path relative to
+  * the write task's attempt directory — partition directories included,
+  * because one task writing several partitions reuses its `part-…` name
+  * in each. */
 private[sources] final case class WrittenFileStats(rel: String, rows: Long,
-    cols: Map[String, (Option[String], Option[String], Long)])
+    cols: Map[String, LakeFormat.ColStats])
 
 private[sources] final case class WrittenTaskStats(files: Seq[WrittenFileStats])
     extends org.apache.spark.sql.execution.datasources.WriteTaskStats
@@ -1877,12 +1873,14 @@ private[sources] final class FileStatsTracker(schema: StructType,
       override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
         WrittenTaskStats(open.toSeq.map { case (path, a) =>
           val values = valueCols.indices.map { j =>
-            valueCols(j) -> (str(a.mins(j), valueTypes(j)),
-              str(a.maxs(j), valueTypes(j)), a.nulls(j))
+            val dt = valueTypes(j)
+            valueCols(j) -> LakeFormat.ColStats(dt.simpleString,
+              str(a.mins(j), dt), str(a.maxs(j), dt), a.nulls(j))
           }
           val parts = partStats.map { case (c, i, dt) =>
             val v = str(a.partition.get(i, dt), dt)
-            c -> (v, v, if (v.isEmpty) a.rows else 0L)
+            c -> LakeFormat.ColStats(dt.simpleString, v, v,
+              if (v.isEmpty) a.rows else 0L)
           }
           WrittenFileStats(
             path.split("/").takeRight(partitionCols.size + 1).mkString("/"),
