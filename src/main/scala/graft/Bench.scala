@@ -25,14 +25,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // task-binary budget guard: capture the DAGScheduler's large-binary
     // WARNs, attribute them to the query being timed, and fail the bench
     // on an unjustified or over-budget closure (TaskBinaryAudit)
@@ -49,33 +42,25 @@ object Bench {
     // and timed — inside the first timed pass; nothing data-sized leaves
     // the measurement window.
     // Warmup fixture: the smallest sf* sibling of sfDir (or an explicit
-    // SPARK_GRAFT_WARM_DIR override) — not a hardcoded path, so the bench
-    // survives a relocated testdata layout; the chosen mode is logged so
-    // every bench record is self-describing about what its cold pass means.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", {
-      val parent = new java.io.File(sfDir).getAbsoluteFile.getParentFile
-      Option(parent).flatMap(p => Option(p.listFiles)).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("sf"))
-        .flatMap(f => scala.util.Try(f.getName.drop(2).toDouble).toOption
-          .map(_ -> f.getPath))
-        .sortBy(_._1).headOption.map(_._2).getOrElse(sfDir)
-    })
+    // SPARK_GRAFT_WARM_DIR override, Harness.warmDir); the chosen mode is
+    // logged so every bench record is self-describing about what its cold
+    // pass means.
+    val warmDir = Harness.warmDir(sfDir)
     if (warmDir != sfDir && new java.io.File(warmDir).isDirectory) {
       System.err.println(s"[bench] warmup=catalog dir=$warmDir")
-      // the warmup pass doubles as the unpartitioned-window audit: plans
-      // are AQE-finalized here, and a query with a NEW global window
-      // (outside WindowAudit.justified) FAILS the bench loudly — the
-      // known-benign tiny-table warnings can no longer hide an offender
+      // the warmup pass doubles as the unpartitioned-window audit: a query
+      // with a NEW global window (outside WindowAudit.justified) FAILS the
+      // bench loudly — the known-benign tiny-table warnings can no longer
+      // hide an offender. `df.count()` executes its own aggregate's
+      // QueryExecution, so the audit reads df's planned (not executed)
+      // adaptive plan, the same plan ContractSpec checks at sf0.001
       val winViolations = scala.collection.mutable.ArrayBuffer.empty[String]
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        try {
+        Harness.warm(s"warmup $name") {
           TaskBinaryAudit.setQuery(name)
           val df = fn(spark, warmDir)
           df.count()
           WindowAudit.violation(name, df).foreach(winViolations += _)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
         }
       }
       require(winViolations.isEmpty,
@@ -86,19 +71,19 @@ object Bench {
       // to warming just the heavy codegen kernels on tiny slices — running
       // the catalog at sfDir would stage sfDir's tables untimed and hide
       // the producer passes from cold_total
-      try {
+      Harness.warm("kernel warmup") {
         SparkEntry.entry(spark).count()
         val e64 = graft.Tables.embeddings(spark, sfDir).limit(64)
         operators.Vectors.cosineTopK(e64, e64, 2).count()
         operators.Vectors.x3dTopKAgg(spark, sfDir).limit(1).count()
         operators.Text.shingles(
           graft.Tables.documents(spark, sfDir).limit(32)).count()
-      } catch { case _: Throwable => () }
+      }
     }
     // footer caching for the benched fixture itself stays untimed too
-    try {
+    Harness.warm("footer caching") {
       graft.Tables.names.foreach(t => graft.Tables.load(spark, sfDir, t).count())
-    } catch { case _: Throwable => () }
+    }
     // Staged intermediates (graft.Staged) are keyed and shared across
     // queries, so checkpoint-block footprint is bounded by the handful of
     // distinct staged tables — no per-query unpersist sweep needed (and
@@ -114,11 +99,7 @@ object Bench {
     // abort the benchmark (perfdiff falls back to raw comparison).
     val CalEvery = 25
     def safeCal(): Double =
-      try calibrate(spark) catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] calibration failed: ${e.getMessage}")
-          -1.0
-      }
+      Harness.warm("calibration")(calibrate(spark)).getOrElse(-1.0)
     def pass(): (Seq[(String, Double)], Seq[Double]) = {
       val cals = scala.collection.mutable.ArrayBuffer.empty[Double]
       val times = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
@@ -143,7 +124,7 @@ object Bench {
     // `cold_total` keeps the first-pass sum (includes one-time staging of
     // the shared changelog/shingle/pair tables) so nothing is hidden.
     // One untimed kernel run first (its own codegen/JIT compile).
-    try calibrate(spark) catch { case _: Throwable => () }
+    safeCal()
     val (p1, cals1) = pass()
     val (p2raw, cals2) = pass()
     val p2 = p2raw.toMap

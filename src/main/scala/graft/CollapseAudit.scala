@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Executed-plan estimate-collapse sweep (the r6 audit as a permanent
-  * tool): EXECUTES every registered query at the given fixture and scans
+/** Executed-plan estimate-collapse check (the r6 audit as a permanent
+  * tool), applied to one EXECUTED query: it scans
   * the finalized AQE plan for a `BroadcastExchange` subtree containing a
   * `Generate` (explode) that is NOT below an aggregate — the signature of
   * Catalyst broadcasting a corpus-proportional derived stream because
@@ -14,12 +12,11 @@ import org.apache.spark.sql.SparkSession
   * query-side probes) are legitimate and not flagged.
   *
   * The PlanSpec regression test guards the four historically-affected
-  * queries per test run; this main is the full-catalog sweep to run when
-  * NEW queries land:
+  * queries per test run; `Harness audit` executes the whole catalog and
+  * applies this check to every query, the sweep to run when NEW queries
+  * land:
   *
-  *   sbt "runMain graft.CollapseAudit /root/testdata/sf0.1"
-  *
-  * Exit code 1 if any query is flagged; prints one line per query.
+  *   sbt "runMain graft.Harness audit <sf0.1 dir>"
   */
 object CollapseAudit {
   /** A broadcast subtree is the collapse signature iff it contains a
@@ -83,30 +80,4 @@ object CollapseAudit {
     "x3j_pq_recall", "x3l_incr_index", "x3n_filtered_ivf",
     "x3p_pq_residual", "x3q_filtered_index", "x5e_phash_pairs",
     "x4v_hybrid_ann")
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var bad = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val verdict =
-        try {
-          val df = fn(spark, sfDir)
-          df.collect() // finalize the AQE plan — the static plan lies here
-          val spans = flaggedSpans(df.queryExecution.executedPlan.toString)
-          if (spans.isEmpty) "ok"
-          else if (boundedByDesign(name)) "allowed (bounded by design, see scaladoc)"
-          else { bad += 1; s"FLAGGED raw-explode broadcast:\n${spans.head}" }
-        } catch { case e: Throwable => s"error: ${e.getMessage}" }
-      println(s"$name: $verdict")
-    }
-    spark.stop()
-    if (bad > 0) sys.exit(1)
-  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
@@ -12,12 +12,13 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   * anywhere else. The catalog's bench tail used to carry the benign
   * warnings as NOISE, which would have hidden a future real offender;
   * this audit makes the justified set EXPLICIT and fails loudly on any
-  * new one. [[graft.Bench]] runs it over every query during the warmup
-  * pass (plans are AQE-finalized there), so a driver bench cannot
-  * silently time a query whose window shape regressed; the standalone
-  * main sweeps any fixture:
+  * new one. `ContractSpec` runs [[violation]] over every registered
+  * query's planned `executedPlan` at sf0.001 (spec suite), [[graft.Bench]]
+  * over every query of its warm pass (there `df.count()` executes its
+  * own aggregate's plan, so `df`'s plan is planned, not executed), and
+  * `Harness audit` over every query's AQE-finalized plan at any fixture:
   *
-  *   sbt "runMain graft.WindowAudit /root/testdata/sf0.001"
+  *   sbt "runMain graft.Harness audit <sf0.001 dir>"
   */
 object WindowAudit {
 
@@ -43,7 +44,8 @@ object WindowAudit {
       "fold as x4i"))
 
   /** Pretty names of every unpartitioned window/group-limit node in the
-    * (AQE-finalized) plan. */
+    * plan, through AQE wrappers (an unexecuted adaptive plan's
+    * `executedPlan` is its initial plan, an executed one's the final). */
   def globalWindows(plan: SparkPlan): Seq[String] = plan.collect {
     case a: AdaptiveSparkPlanExec => globalWindows(a.executedPlan)
     case s: QueryStageExec => globalWindows(s.plan)
@@ -53,7 +55,8 @@ object WindowAudit {
       Seq("WindowGroupLimitExec limit=" + w.limit)
   }.flatten
 
-  /** Audit one executed query; returns a violation message or None. */
+  /** Audit one query's `executedPlan`; returns a violation message or
+    * None. */
   def violation(name: String, df: DataFrame): Option[String] = {
     val gw = globalWindows(df.queryExecution.executedPlan)
     if (gw.nonEmpty && !justified.contains(name))
@@ -61,30 +64,5 @@ object WindowAudit {
         gw.mkString("; ") +
         " — partition it, or justify it in WindowAudit.justified")
     else None
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var bad = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val verdict = try {
-        val df = fn(spark, sfDir)
-        df.count() // finalize AQE
-        val gw = globalWindows(df.queryExecution.executedPlan)
-        if (gw.isEmpty) "ok"
-        else if (justified.contains(name)) s"allowed (${justified(name)})"
-        else { bad += 1; s"FLAGGED ${gw.mkString("; ")}" }
-      } catch { case e: Throwable => s"error: ${e.getMessage}" }
-      println(s"$name: $verdict")
-    }
-    spark.stop()
-    if (bad > 0) sys.exit(1)
   }
 }

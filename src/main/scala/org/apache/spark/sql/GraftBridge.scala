@@ -12,6 +12,13 @@ object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The listener bus's own drain, which Spark keeps package-private: it
+    * returns once every event posted before the call has been delivered,
+    * so a listener's counters are complete without sleeping on the bus.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Build a DataFrame from a hand-constructed logical plan (the entry
     * point every DataFrame API method uses internally).
     */

@@ -20,11 +20,15 @@ import graft.operators.Text
   */
 class ContractSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  /** Every registered query, constructed once at sf0.001. */
+  lazy val frames = SparkEntry.queries.toSeq.sortBy(_._1).map {
+    case (name, fn) => name -> fn(spark, TestSpark.sf)
+  }
 
   test("every registered query emits only atomic driver-sortable columns") {
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        fn(spark, TestSpark.sf).schema.fields.collect {
+    val bad = frames.flatMap {
+      case (name, df) =>
+        df.schema.fields.collect {
           case f if f.dataType.isInstanceOf[ArrayType] ||
               f.dataType.isInstanceOf[MapType] ||
               f.dataType.isInstanceOf[StructType] ||
@@ -34,6 +38,13 @@ class ContractSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty,
       s"non-atomic output columns (driver hash cannot sort these): $bad")
+  }
+
+  test("every registered query's planned executedPlan passes the unpartitioned-window audit") {
+    // the check graft.Bench runs in its warm pass: a NEW global window
+    // fails the spec suite, not only a driver bench
+    val bad = frames.flatMap { case (name, df) => WindowAudit.violation(name, df) }
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("BPE encode memoizes the merge chain over the distinct-word dictionary") {

@@ -131,7 +131,7 @@ class LakeHardeningSpec extends AnyFunSuite {
         lit(true).as("live"), lit("u").as("v")), root)
     } finally {
       spark.sparkContext.clearJobGroup()
-      org.apache.spark.TestBus.drain(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(l)
     }
     val got = jobs.synchronized(jobs.toMap)
