@@ -1864,7 +1864,7 @@ object Cdc {
     * deletes folds to n = −1 — a retraction that must survive until it
     * meets the prior epoch's +1). [[aggMaintain]] is this with the
     * live-groups filter, correct only over a COMPLETE from-empty log;
-    * the durable streaming sink ([[graft.streaming.Streams.aggMaintainForeachBatch]])
+    * the durable streaming sink ([[graft.streaming.Streams.aggMaintainBatch]])
     * merges these per-batch states additively across epochs instead.
     */
   def aggMaintainState(changelog: DataFrame, groupOf: Column => Column): DataFrame = {

@@ -331,10 +331,14 @@ object LakeFormat {
 
   // ------------------------------------------------------------ replay
 
-  private def lastCheckpointVersion(spark: SparkSession,
-      root: String): Option[Long] = {
-    val f = fs(spark, root)
-    val p = lastCheckpointPtr(root)
+  /** A POINTER file: one small file naming a version, the commit point
+    * of every pointer-published state here (`_last_checkpoint`, a
+    * consumer's `_offset`, the T18 generation `_LATEST`). Absent, empty
+    * and unparsable all read as None — a torn write (possible only on a
+    * store with neither atomic rename nor atomic PUT) must never read as
+    * a committed version. One `exists` and one `open`. */
+  private[graft] def readPointer(spark: SparkSession, p: Path): Option[Long] = {
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(p)) None
     else {
       val in = f.open(p)
@@ -342,6 +346,22 @@ object LakeFormat {
         .trim.toLongOption
       finally in.close()
     }
+  }
+
+  /** Publish `v` at pointer `p`: write a temp file beside it, then rename
+    * it over `p` with OVERWRITE. `create(overwrite=true)` would
+    * truncate-then-write, letting a concurrent reader observe an empty
+    * pointer on local FS / HDFS; the rename is atomic there, and object
+    * stores with atomic PUT are covered either way. */
+  private[graft] def writePointer(spark: SparkSession, p: Path,
+      v: Long): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tmp = new Path(p.getParent,
+      s".${p.getName}-${UUID.randomUUID.toString.take(8)}")
+    val out = tmp.getFileSystem(conf).create(tmp, true)
+    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+    FileContext.getFileContext(p.toUri, conf)
+      .rename(tmp, p, Options.Rename.OVERWRITE)
   }
 
   // the checkpoint's fixed row schema ([[writeCheckpointFile]]): reading
@@ -388,7 +408,7 @@ object LakeFormat {
     // historical checkpoints keep retained versions replayable after
     // [[pruneLog]] reclaims the JSON entries below them)
     val cp = listCheckpointVersions(spark, root).filter(_ <= target)
-      .maxOption.orElse(lastCheckpointVersion(spark, root)
+      .maxOption.orElse(readPointer(spark, lastCheckpointPtr(root))
         .filter(_ <= target))
     val files = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
     val txns = scala.collection.mutable.Map.empty[String, Long]
@@ -571,12 +591,18 @@ object LakeFormat {
     * strict write-serializable rule (no rebase): an overwrite derived
     * its intent from the read snapshot, so ANY intervening commit
     * aborts with ConcurrentModificationException and the caller
-    * re-runs. */
-  def overwrite(df: DataFrame, root: String): Long = {
+    * re-runs. `txn` is [[merge]]'s exactly-once marker: it commits with
+    * the new contents, and a replayed (appId, version) at-or-below the
+    * committed mark is a no-op. */
+  def overwrite(df: DataFrame, root: String,
+      txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
     val st = state(spark, root)
+    if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
+      return st.version
     val adds = writeData(df, root, st.meta)
-    val lines = st.files.map(a => removeJson(a.path)) ++ adds.map(addJson)
+    val lines = st.files.map(a => removeJson(a.path)) ++ adds.map(addJson) ++
+      txn.map { case (app, tv) => txnJson(app, tv) }
     strictCommit(spark, root, st.version, lines, adds, "overwrite")
   }
 
@@ -1334,36 +1360,18 @@ object LakeFormat {
 
   /** The consumer's durable high-water mark: the highest lake commit
     * version fully applied by this consumer (absent before the first
-    * drain). One small file, atomic pointer-overwrite publish — the
-    * SnapshotStore pointer discipline. */
-  def consumerOffset(spark: SparkSession, dir: String): Option[Long] = {
-    val f = fs(spark, dir)
-    val p = offsetPtr(dir)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        .trim.toLongOption
-      finally in.close()
-    }
-  }
+    * drain) — one [[readPointer]] pointer. */
+  def consumerOffset(spark: SparkSession, dir: String): Option[Long] =
+    readPointer(spark, offsetPtr(dir))
 
-  /** Advance the consumer offset to `v` (tmp + rename-with-overwrite:
-    * atomic on HDFS/local, single PUT on object stores). Refuses to move
-    * BACKWARD — a regressed pointer would re-deliver already-applied
+  /** Advance the consumer offset to `v` ([[writePointer]]). Refuses to
+    * move BACKWARD — a regressed pointer would re-deliver already-applied
     * commits to a consumer that believes it is tailing. */
   def commitConsumerOffset(spark: SparkSession, dir: String, v: Long): Unit = {
     val prev = consumerOffset(spark, dir)
     require(prev.forall(_ <= v),
       s"consumer offset moving backward: ${prev.get} -> $v at $dir")
-    val f = fs(spark, dir)
-    f.mkdirs(new Path(dir))
-    val tmp = new Path(dir, s".off-${UUID.randomUUID.toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(new Path(dir).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, offsetPtr(dir), Options.Rename.OVERWRITE)
+    writePointer(spark, offsetPtr(dir), v)
   }
 
   /** Advance the consumer offset to `v` ONLY IF it is ahead of the
@@ -1560,15 +1568,7 @@ object LakeFormat {
   def checkpoint(spark: SparkSession, root: String): Long = {
     val st = state(spark, root)
     writeCheckpointFile(spark, root, st)
-    // pointer publish: tmp + rename-with-overwrite (atomic on HDFS/local;
-    // single atomic PUT on object stores) — the SnapshotStore discipline
-    val f = fs(spark, root)
-    val tmp = new Path(logDir(root), s".cp-${UUID.randomUUID.toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(st.version.toString.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(new Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, lastCheckpointPtr(root), Options.Rename.OVERWRITE)
+    writePointer(spark, lastCheckpointPtr(root), st.version)
     st.version
   }
 

@@ -130,17 +130,62 @@ object Streams extends Serializable {
         TimeMode.None(), OutputMode.Update())
   }
 
+  /** Drive `f` with each micro-batch of `ds` and its batch id — the one
+    * `foreachBatch` adapter for this module's `*Batch` functions, each of
+    * which is replay-safe per batch id (at-least-once delivery). */
+  def eachBatch[T](ds: Dataset[T])(f: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[T] =
+    ds.writeStream.foreachBatch { (batch: Dataset[T], batchId: Long) =>
+      f(batch.toDF, batchId)
+    }
+
+  // the txn app id every whole-state store's commits carry
+  private val FoldApp = "fold"
+
+  /** The one commit path of every WHOLE-STATE stream store (T14, T20,
+    * T21, T22, T24, T26, T28, T29, T31, the T34 ledger, T36): a lake
+    * table under `root` whose every commit replaces the whole state.
+    *
+    * A batch id at-or-below the table's (`fold`, id) txn mark already
+    * landed: return WITHOUT calling `f`, so a replayed (or older) batch
+    * is a no-op — the table version does not move, and side effects
+    * inside `f` (T28's publish dir) are not redone. Otherwise `f` maps
+    * the committed state (None before the first commit) to the new one,
+    * which commits as ONE [[LakeFormat.overwrite]] carrying the marker:
+    * a crash before the commit leaves the prior state readable, and the
+    * re-run completes it. [[LakeFormat.vacuum]] then keeps the data files
+    * of the current version and its predecessor (a reader grace window).
+    * One writer per root — the foreachBatch protocol.
+    */
+  private def foldStore(spark: org.apache.spark.sql.SparkSession,
+      root: String, batchId: Long)(f: Option[DataFrame] => DataFrame): Unit = {
+    val exists = LakeFormat.tableExists(spark, root)
+    if (exists && LakeFormat.state(spark, root).txns.get(FoldApp)
+        .exists(_ >= batchId)) return
+    val state = f(Option.when(exists)(LakeFormat.snapshot(spark, root)))
+    if (!exists)
+      LakeFormat.create(spark, root, Seq.empty, schema = Some(state.schema))
+    LakeFormat.overwrite(state, root, txn = Some((FoldApp, batchId)))
+    LakeFormat.vacuum(spark, root, keepVersions = 2, olderThanMs = 0L)
+    ()
+  }
+
+  /** A [[foldStore]] table's committed state (None before its first
+    * commit). */
+  private def readStore(spark: org.apache.spark.sql.SparkSession,
+      root: String): Option[DataFrame] =
+    Option.when(LakeFormat.tableExists(spark, root))(
+      LakeFormat.snapshot(spark, root))
+
   /** Durable incremental view maintenance (the production form of the
     * IVM the memory-sink spec demonstrates): each micro-batch folds its
     * OWN events to a per-group delta state (`Cdc.aggMaintainState` — no
     * live filter, so a batch carrying only deletes keeps its −1
     * retraction) and merges it ADDITIVELY with the committed aggregate
-    * through [[SnapshotStore]]'s versioned-dir + pointer protocol.
-    * Groups whose merged count reaches zero are dropped from the
-    * persisted state (retraction to absence; a future insert recreates
-    * the group from scratch). Crash replay is idempotent: the merge
-    * reads state strictly BEFORE the batch id and the commit overwrites
-    * the batch's own version.
+    * through [[foldStore]]. Groups whose merged count reaches zero are
+    * dropped from the persisted state (retraction to absence; a future
+    * insert recreates the group from scratch). A replayed batch id is a
+    * no-op.
     *
     * Scale: the delta aggregate is one map-side-combined groupBy over
     * the (tiny) increment; the merge unions it with the committed
@@ -150,35 +195,26 @@ object Streams extends Serializable {
     */
   def aggMaintainBatch(batch: DataFrame, batchId: Long, root: String,
       groupOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Unit = {
-    val spark = batch.sparkSession
     val delta = graft.operators.Cdc.aggMaintainState(batch, groupOf)
-    val merged = SnapshotStore.readBefore(spark, root, batchId) match {
-      case Some(p) => p.unionByName(delta)
-        .groupBy(col("grp"))
-        .agg(sum(col("n")).as("n"), sum(col("sum_id")).as("sum_id"))
-      case None => delta
+    foldStore(batch.sparkSession, root, batchId) { prior =>
+      prior.map(_.unionByName(delta)
+          .groupBy(col("grp"))
+          .agg(sum(col("n")).as("n"), sum(col("sum_id")).as("sum_id")))
+        .getOrElse(delta)
+        .filter(col("n") =!= 0L)
     }
-    SnapshotStore.commit(merged.filter(col("n") =!= 0L), root, batchId)
   }
 
-  def aggMaintainForeachBatch(events: Dataset[CdcEvent], root: String,
-      groupOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : org.apache.spark.sql.streaming.DataStreamWriter[CdcEvent] =
-    events.writeStream.foreachBatch { (batch: Dataset[CdcEvent], batchId: Long) =>
-      aggMaintainBatch(batch.toDF, batchId, root, groupOf)
-    }
-
-  /** Consumer view of an [[aggMaintainForeachBatch]] aggregate: live
-    * groups only (the persisted state can briefly hold negative counts
-    * only mid-protocol, never at a committed version fed from a
-    * complete log).
+  /** Consumer view of an [[aggMaintainBatch]] aggregate: live groups
+    * only (the persisted state can briefly hold negative counts only
+    * mid-protocol, never at a committed version fed from a complete
+    * log).
     */
   def readAggSnapshot(spark: org.apache.spark.sql.SparkSession,
-      root: String): DataFrame = {
-    val committed = SnapshotStore.read(spark, root)
+      root: String): DataFrame =
+    readStore(spark, root)
       .getOrElse(sys.error(s"no committed aggregate under $root"))
-    committed.filter(col("n") > 0)
-  }
+      .filter(col("n") > 0)
 
   /** T8 — streaming decontamination: a document stream checked against a
     * STATIC benchmark shingle set via a stream-static left-SEMI join. The
@@ -278,20 +314,11 @@ object Streams extends Serializable {
     * store) and overwrites the identical output, instead of
     * double-appending pairs and re-probing its own half-written bands as
     * "prior" — the failure mode a flat append store has. The batch id is
-    * monotonic across restarts via the query checkpoint (the same
-    * versioning contract as [[SnapshotStore]]).
-    */
-  def nearDupStream(docStream: DataFrame, bandDir: String, pairDir: String,
-      maxBucket: Int = graft.operators.Text.defaultMaxBucket)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      nearDupBatch(batch.toDF, batchId, bandDir, pairDir, maxBucket)
-    }
-
-  /** One micro-batch of [[nearDupStream]], factored out so a crash
-    * replay is directly testable: calling it twice with the same
-    * (batch, batchId) leaves both stores byte-for-row identical.
+    * monotonic across restarts via the query checkpoint.
+    *
+    * One micro-batch ([[eachBatch]] drives it from a stream): calling it
+    * twice with the same (batch, batchId) leaves both stores
+    * byte-for-row identical.
     */
   def nearDupBatch(batch: DataFrame, batchId: Long, bandDir: String,
       pairDir: String,
@@ -447,7 +474,7 @@ object Streams extends Serializable {
           .select(df.columns.map(col): _*)
     }
 
-  /** All discovered pairs (the consumer view of [[nearDupStream]]'s
+  /** All discovered pairs (the consumer view of [[nearDupBatch]]'s
     * pair store): the union of every batch's pair directory. Pairs are
     * already globally unique — each is discovered exactly once, in the
     * batch where its later member arrived.
@@ -792,14 +819,6 @@ object Streams extends Serializable {
     ()
   }
 
-  def vectorIndexStream(embStream: DataFrame, indexDir: String,
-      coarse: Array[Array[Float]], books: Array[Array[Array[Float]]])
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    embStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      vectorIndexBatch(batch.toDF, batchId, indexDir, coarse, books)
-    }
-
   /** The full CDC → re-embed → index pipeline in one micro-batch: a
     * DOCUMENT changelog batch (envelope-shaped, `after.id`/`after.text`)
     * folds to its winners (latest live image per key — the C4 fold), the
@@ -995,13 +1014,6 @@ object Streams extends Serializable {
       batchId, postingsDir)
   }
 
-  def postingsStream(docChangelogStream: DataFrame, postingsDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docChangelogStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      bm25IndexBatch(batch.toDF, batchId, postingsDir)
-    }
-
   /** LAKE → search-index integration: maintain the T30 postings store by
     * TAILING A LAKE TABLE'S COMMITS
     * ([[graft.sources.LakeFormat.consumeChangeFeed]]) instead of
@@ -1162,13 +1174,6 @@ object Streams extends Serializable {
       batchId, positionsDir)
   }
 
-  def positionsStream(docChangelogStream: DataFrame, positionsDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docChangelogStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      phraseIndexBatch(batch.toDF, batchId, positionsDir)
-    }
-
   /** Consumer view: each doc's HIGHEST epoch's positional rows, dead
     * docs dropped after the fold (the [[readPostings]] contract). */
   def readPositions(spark: org.apache.spark.sql.SparkSession,
@@ -1213,18 +1218,13 @@ object Streams extends Serializable {
     * streaming-vocabulary tracking (hot URLs, emerging tokens) whose
     * state stays ≤ k−1 counters forever.
     *
-    * Durability is [[SnapshotStore]]'s pointer protocol (the T14
-    * discipline): the merged summary commits as version=batchId; a
-    * crash replay merges the batch's summary against strictly-before
-    * state (`readBefore`), so the running total N is never
-    * double-counted and the recommitted summary satisfies the same
-    * bound. (Replay idempotence is at the CONTRACT level, not the byte
-    * level: MG estimates are partition-order-dependent — the x4l
-    * documented property — and a replayed batch may repartition; the
-    * store's one-committed-summary-per-version makes the estimate
-    * variance invisible to readers.) The driver-side merge is the
-    * bounded-materialization tier by construction: ≤ 2(k−1) counters
-    * ever cross the wire.
+    * Durability is [[foldStore]] (the T14 discipline): the merged
+    * summary commits with the batch's txn marker, so a replayed batch id
+    * is a no-op and the running total N is never double-counted. (MG
+    * estimates are partition-order-dependent — the x4l documented
+    * property — so only that gate, not a recompute, makes a replay
+    * exact.) The driver-side merge is the bounded-materialization tier
+    * by construction: ≤ 2(k−1) counters ever cross the wire.
     *
     * `tokens` must carry one string column `token`; the summary stores
     * (token, cnt) plus the running total as `n_total` on every row.
@@ -1234,47 +1234,33 @@ object Streams extends Serializable {
     val spark = tokens.sparkSession
     import spark.implicits._
     val agg = graft.functions.MisraGries.mg(k)
-    val batchSummary = tokens.select(col("token").as[String])
-      .select(agg.toColumn).head()
-    val batchN = tokens.count()
-    val (priorCounters, priorN) =
-      SnapshotStore.readBefore(spark, root, batchId) match {
-        case Some(df) =>
-          val rows = df.select(col("token"), col("cnt"), col("n_total"))
-            .as[(String, Long, Long)].collect()
-          (rows.map(r => r._1 -> r._2).toMap,
-            rows.headOption.map(_._3).getOrElse(0L))
-        case None => (Map.empty[String, Long], 0L)
-      }
-    val merged = agg.merge(
-      graft.functions.MisraGries.Buf(priorCounters),
-      graft.functions.MisraGries.Buf(batchSummary)).counters
-    val n = priorN + batchN
-    SnapshotStore.commit(
+    foldStore(spark, root, batchId) { prior =>
+      val batchSummary = tokens.select(col("token").as[String])
+        .select(agg.toColumn).head()
+      val batchN = tokens.count()
+      val rows = prior.toSeq.flatMap(_.select(col("token"), col("cnt"),
+        col("n_total")).as[(String, Long, Long)].collect())
+      val merged = agg.merge(
+        graft.functions.MisraGries.Buf(rows.map(r => r._1 -> r._2).toMap),
+        graft.functions.MisraGries.Buf(batchSummary)).counters
+      val n = rows.headOption.map(_._3).getOrElse(0L) + batchN
       merged.toSeq.sortBy(_._1).toDF("token", "cnt")
-        .withColumn("n_total", lit(n)).coalesce(1),
-      root, batchId)
-  }
-
-  def heavyHittersStream(tokenStream: DataFrame, root: String, k: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    tokenStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      heavyHittersBatch(batch.toDF, batchId, root, k)
+        .withColumn("n_total", lit(n)).coalesce(1)
     }
+  }
 
   /** The committed summary: (token, cnt) estimates + total stream count
     * `n_total`. Estimates undercount by ≤ n_total/k in sum.
     */
   def readHeavyHitters(spark: org.apache.spark.sql.SparkSession,
       root: String): DataFrame =
-    SnapshotStore.read(spark, root).getOrElse(
+    readStore(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed summary under $root"))
 
   // --------------------- T31 durable streaming anomaly moments (q36 twin)
   /** T31 — q36's streaming half: per-user exact integer moments
     * (n, Σv, Σv², max|v| for the overflow guard) maintained ADDITIVELY
-    * (sums; max|v| by max) through the versioned store (the
+    * (sums; max|v| by max) through [[foldStore]] (the
     * T14 aggregate-maintenance shape) — moments are the z-test's
     * sufficient statistics and merge by plain BIGINT addition, so the
     * committed state after any batch split equals the all-at-once
@@ -1284,36 +1270,28 @@ object Streams extends Serializable {
     * flags against full-history state match the batch operator by
     * construction (spec). Per batch: one map-side-combined groupBy over
     * the increment, a #users-row union + re-sum against committed state,
-    * an epoch-keyed commit; crash replay reads strictly-before state.
+    * one commit with the batch's txn marker; a replayed batch id is a
+    * no-op.
     * The serving join is user-keyed; committed state is user-count-
     * proportional, never event-proportional.
     */
   def momentsBatch(ev: DataFrame, batchId: Long, root: String): Unit = {
-    val spark = ev.sparkSession
     val delta = graft.operators.Relational.momentsByKey(ev)
-    val merged = SnapshotStore.readBefore(spark, root, batchId) match {
-      case Some(p) => p.unionByName(delta).groupBy(col("user_id"))
-        .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
-          sum(col("q")).as("q"), max(col("m")).as("m"))
-      case None => delta
+    foldStore(ev.sparkSession, root, batchId) { prior =>
+      val merged = prior.map(_.unionByName(delta).groupBy(col("user_id"))
+          .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
+            sum(col("q")).as("q"), max(col("m")).as("m")))
+        .getOrElse(delta)
+      // re-guard the MERGED state: each increment can pass the headroom
+      // bound while the lifetime sum crosses it — the commit that crosses
+      // THROWS (and commits nothing) instead of storing wrap-prone moments
+      graft.operators.Relational.guardMoments(merged)
     }
-    // re-guard the MERGED state: each increment can pass the headroom
-    // bound while the lifetime sum crosses it — the commit that crosses
-    // THROWS (and commits nothing) instead of storing wrap-prone moments
-    SnapshotStore.commit(
-      graft.operators.Relational.guardMoments(merged), root, batchId)
   }
-
-  def momentsStream(evStream: DataFrame, root: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    evStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      momentsBatch(batch.toDF, batchId, root)
-    }
 
   def readMoments(spark: org.apache.spark.sql.SparkSession,
       root: String): DataFrame =
-    SnapshotStore.read(spark, root).getOrElse(
+    readStore(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed moments under $root"))
 
   /** Flag a (possibly historical) event set against the COMMITTED
@@ -1482,20 +1460,6 @@ object Streams extends Serializable {
     ()
   }
 
-  def graphEdgesStream(edgeStream: DataFrame, graphDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    edgeStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      graphEdgesBatch(batch.toDF, batchId, graphDir)
-    }
-
-  def graphEdgesOpsStream(opsStream: DataFrame, graphDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    opsStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      graphEdgesOpsBatch(batch.toDF, batchId, graphDir)
-    }
-
   /** The committed symmetric edge set: weight fold over the epoch union
     * (keeps w = 1, THROWS outside {0,1}); after compaction the store is
     * tombstone-free so the fold degenerates to a scan-shaped groupBy
@@ -1563,40 +1527,27 @@ object Streams extends Serializable {
     * revisions) stream in; each batch folds through
     * [[graft.operators.Graph.hierarchyApply]] — affected-subtree
     * recompute against the stored closure, never a full-forest re-walk
-    * — and commits the merged closure as a [[SnapshotStore]] version.
-    * Crash replay derives from strictly-before state and overwrites its
-    * own version (the T31 protocol), so re-delivery is a no-op; a
-    * cycle-introducing upsert THROWS inside the fold and the failed
-    * commit leaves the store at its prior version (readers never see a
-    * corrupt closure).
+    * — and commits the merged closure through [[foldStore]], so a
+    * replayed batch id is a no-op; a cycle-introducing upsert THROWS
+    * inside the fold and the failed commit leaves the store at its prior
+    * version (readers never see a corrupt closure).
     */
-  /** Shared T36 fold scaffold: read the strictly-before closure (empty
-    * seed on the first batch), apply `f`, commit as this batch's version.
-    */
+  /** Shared T36 fold scaffold: [[foldStore]] seeded with the empty
+    * closure on the first batch. */
   private def foldClosure(spark: org.apache.spark.sql.SparkSession,
-      batchId: Long, root: String)(f: DataFrame => DataFrame): Unit = {
-    val prior = SnapshotStore.readBefore(spark, root, batchId)
-      .getOrElse(graft.operators.Graph.emptyClosure(spark))
-    SnapshotStore.commit(f(prior), root, batchId)
-  }
+      batchId: Long, root: String)(f: DataFrame => DataFrame): Unit =
+    foldStore(spark, root, batchId)(prior =>
+      f(prior.getOrElse(graft.operators.Graph.emptyClosure(spark))))
 
   def hierarchyBatch(upserts: DataFrame, batchId: Long,
       root: String): Unit =
     foldClosure(upserts.sparkSession, batchId, root)(
       graft.operators.Graph.hierarchyApply(_, upserts))
 
-  def hierarchyStream(upsertStream: DataFrame, root: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    upsertStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      hierarchyBatch(batch.toDF, batchId, root)
-    }
-
   /** T36 delete half: SUBTREE removals (node column) fold through
     * [[graft.operators.Graph.hierarchyDelete]] and commit as the next
-    * store version — the [[hierarchyBatch]] replay discipline (derive
-    * from strictly-before state, overwrite own version), and absent
-    * deletes are no-ops so a replayed batch reproduces its bytes.
+    * store version — the [[hierarchyBatch]] replay discipline; absent
+    * deletes are no-ops too.
     */
   def hierarchyDeleteBatch(deletes: DataFrame, batchId: Long,
       root: String): Unit =
@@ -1647,17 +1598,10 @@ object Streams extends Serializable {
     }
   }
 
-  def hierarchyOpsStream(opsStream: DataFrame, root: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    opsStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      hierarchyOpsBatch(batch.toDF, batchId, root)
-    }
-
   /** The committed closure (None before the first batch commits). */
   def readHierarchy(spark: org.apache.spark.sql.SparkSession,
       root: String): Option[DataFrame] =
-    SnapshotStore.read(spark, root)
+    readStore(spark, root)
 
   // ------------------- T33 durable leakage-split registry (x6h's sticky half)
   /** T33 — the STICKY train/val split registry: x6h's group-aware split
@@ -1756,15 +1700,6 @@ object Streams extends Serializable {
     ()
   }
 
-  def splitRegistryStream(docStream: DataFrame, regDir: String,
-      clusterDir: String,
-      valPct: Int = graft.operators.Curation.splitValPct)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      splitRegistryBatch(batch.toDF, batchId, regDir, clusterDir, valPct)
-    }
-
   /** The committed write-once assignments: (doc_id, grp-at-assignment,
     * split). Epochs are disjoint → plain union, no fold window. */
   def readSplits(spark: org.apache.spark.sql.SparkSession,
@@ -1801,8 +1736,8 @@ object Streams extends Serializable {
     * again. Three pieces close both:
     *
     *   - [[erasureLedgerBatch]] folds requests into a durable id ledger
-    *     (versioned [[SnapshotStore]], request-count-bounded — the only
-    *     state erasure needs to remember forever);
+    *     ([[foldStore]], request-count-bounded — the only state
+    *     erasure needs to remember forever);
     *   - [[redactIncoming]] wraps [[graft.operators.Cdc.erasureSweep]]
     *     over the ledger: composed in front of any store sink, it makes
     *     post-request arrivals PII-free at ingest (broadcast probe +
@@ -1822,20 +1757,16 @@ object Streams extends Serializable {
     */
   def erasureLedgerBatch(requests: DataFrame, batchId: Long,
       ledgerRoot: String): Unit = {
-    val spark = requests.sparkSession
     val ids = requests.select(col("id")).distinct()
-    val merged = SnapshotStore.readBefore(spark, ledgerRoot, batchId) match {
-      case Some(p) => p.unionByName(ids).distinct()
-      case None => ids
-    }
     // the ledger is erasure-request-bounded: one file per version
-    SnapshotStore.commit(merged.coalesce(1), ledgerRoot, batchId)
+    foldStore(requests.sparkSession, ledgerRoot, batchId)(prior =>
+      prior.map(_.unionByName(ids).distinct()).getOrElse(ids).coalesce(1))
   }
 
   /** The durable erased-key set (None before any request committed). */
   def readErased(spark: org.apache.spark.sql.SparkSession,
       ledgerRoot: String): Option[DataFrame] =
-    SnapshotStore.read(spark, ledgerRoot)
+    readStore(spark, ledgerRoot)
 
   /** Ingest-side guard: redact an incoming changelog batch against the
     * ledger so post-request events never reintroduce PII. Pass-through
@@ -2003,21 +1934,13 @@ object Streams extends Serializable {
     LakeFormat.merge(next, root, txn = Some(("scd2", batchId)))
   }
 
-  def scd2ForeachBatch(events: Dataset[graft.Schemas.CdcEvent], root: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[graft.Schemas.CdcEvent] =
-    events.writeStream.foreachBatch {
-      (batch: Dataset[graft.Schemas.CdcEvent], batchId: Long) =>
-      scd2Batch(batch.toDF, batchId, root)
-    }
-
   /** The committed history (every version of every key with its
     * validity interval; open versions have null valid_to). Zero-width
     * delete markers are storage detail, not history — hidden here.
     */
   def readScd2(spark: org.apache.spark.sql.SparkSession,
       root: String): Option[DataFrame] =
-    Option.when(LakeFormat.tableExists(spark, root))(
-      LakeFormat.snapshot(spark, root).filter(col("live")).drop("live"))
+    readStore(spark, root).map(_.filter(col("live")).drop("live"))
 
   // ---------------------- T24 continuous replica audit (C20 streaming)
   /** T24 — C20 as a monitoring LOOP instead of a quarterly full
@@ -2028,24 +1951,25 @@ object Streams extends Serializable {
     * the per-bucket verdicts to an alert store. Divergence surfaces
     * one epoch after it happens, at the bucket granularity the repair
     * path ([[graft.operators.Cdc.repairFromAudit]]) consumes directly.
-    * The alert store is itself versioned, so "when did we diverge" is
-    * a readBefore walk, not archaeology. Cost per epoch: one replica
+    * The alert store is a [[foldStore]] lake table, so "when did we
+    * diverge" is a time-travel read at the version whose commit carries
+    * the epoch's txn marker, not archaeology. Cost per epoch: one replica
     * scan (map-side combined to nBuckets rows) + an nBuckets-row join.
     */
   def auditReplicaBatch(srcChecksums: DataFrame, replicaView: DataFrame,
       batchId: Long, alertRoot: String, keys: Seq[String],
       nBuckets: Int): Unit = {
-    val verdicts = graft.operators.Cdc.reconcileChecksumTables(
-        srcChecksums,
-        graft.operators.Cdc.bucketChecksums(replicaView, keys, nBuckets))
-      .withColumn("epoch", lit(batchId))
-    SnapshotStore.commit(verdicts.coalesce(1), alertRoot, batchId)
+    foldStore(replicaView.sparkSession, alertRoot, batchId)(_ =>
+      graft.operators.Cdc.reconcileChecksumTables(
+          srcChecksums,
+          graft.operators.Cdc.bucketChecksums(replicaView, keys, nBuckets))
+        .withColumn("epoch", lit(batchId)).coalesce(1))
   }
 
   /** Latest verdicts (filter `!is_match` for the alerts). */
   def readAuditVerdicts(spark: org.apache.spark.sql.SparkSession,
       alertRoot: String): Option[DataFrame] =
-    SnapshotStore.read(spark, alertRoot)
+    readStore(spark, alertRoot)
 
   // ----------- T27 streaming temporal enrichment join (C22 streaming)
   /** T27 — the canonical production CDC CONSUMER: a fact stream
@@ -2090,14 +2014,6 @@ object Streams extends Serializable {
     enriched.write.mode("overwrite").parquet(s"$outDir/b=$batchId")
   }
 
-  def enrichFactsStream(factStream: DataFrame, scd2Root: String,
-      outDir: String, keyCol: String = "custkey", timeCol: String = "flsn")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    factStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      enrichFactsBatch(batch.toDF, batchId, scd2Root, outDir, keyCol, timeCol)
-    }
-
   /** Every enriched fact across all committed batches. */
   def readEnrichedFacts(spark: org.apache.spark.sql.SparkSession,
       outDir: String): DataFrame =
@@ -2116,10 +2032,12 @@ object Streams extends Serializable {
     * mark". Per batch: route inserts ([[graft.operators.Cdc
     * .outboxRoute]] — purges never publish), keep lsn > hwm (in-batch
     * duplicates collapse on lsn), append to a batchId-keyed overwrite
-    * dir, commit max(lsn) as the new hwm through the versioned store.
-    * Replay derives from strictly-before state → identical publish set
-    * → same dir overwritten: exactly-once survives both re-delivered
-    * batches AND overlapping re-sends inside later batches. The ordered-
+    * dir, commit max(lsn) as the new hwm through [[foldStore]]. A
+    * re-delivered batch id is a no-op at the fold's txn gate, before
+    * anything is published; a crash between the publish and the hwm
+    * commit re-runs from the same hwm → identical publish set → same dir
+    * overwritten: exactly-once survives both re-delivered batches AND
+    * overlapping re-sends inside later batches. The ordered-
     * arrival ASSUMPTION is audited per batch (skipped lsns must exist in
     * the published store, else THROW — see the inline note), so a
     * reordered source degrades to a loud failure, not at-most-once.
@@ -2133,42 +2051,41 @@ object Streams extends Serializable {
       auditOrdering: Boolean = true): Unit = {
     val spark = outbox.sparkSession
     import spark.implicits._
-    val hwm: Long = SnapshotStore.readBefore(spark, root, batchId) match {
-      case Some(df) => df.select(col("hwm")).as[Long].collect()
-        .headOption.getOrElse(Long.MinValue)
-      case None => Long.MinValue
+    foldStore(spark, root, batchId) { prior =>
+      val hwm: Long = prior.flatMap(_.select(col("hwm")).as[Long].collect()
+        .headOption).getOrElse(Long.MinValue)
+      val routed = graft.operators.Cdc.outboxRoute(outbox, topicPrefix)
+        .localCheckpoint() // read twice: fresh split + ordering audit
+      val fresh = routed
+        .filter(col("lsn") > hwm)
+        .dropDuplicates("lsn")
+        .localCheckpoint() // read twice: publish + new hwm
+      // ORDERING AUDIT: "lsn ≤ hwm ⇒ already published" is the load-bearing
+      // assumption of the O(1) ledger — under reordered delivery it silently
+      // degrades exactly-once to at-most-once (a never-published low lsn is
+      // dropped as a duplicate). Enforce it: every skipped lsn must exist in
+      // the published store, else THROW. Cost: the probe side is only the
+      // batch's skipped lsns (empty outside replay/overlap); the store side
+      // is a scan of published epochs — increment-sized stores fine; a
+      // deployment whose store outgrows this audit disables it after its
+      // broker guarantees per-partition order (`auditOrdering = false`).
+      if (auditOrdering && hwm > Long.MinValue) {
+        val skipped = routed.filter(col("lsn") <= hwm)
+          .select(col("lsn")).distinct()
+        val missing = skipped.join(
+          readPublished(spark, outDir).select(col("lsn")), Seq("lsn"),
+          "left_anti")
+        if (!missing.isEmpty) throw new IllegalStateException(
+          "outboxPublishBatch: out-of-order delivery — lsn(s) at or below " +
+            "the committed high-water mark were never published and would " +
+            "be silently dropped; restore ordered delivery or key the hwm " +
+            "by source partition.")
+      }
+      fresh.write.mode("overwrite").parquet(s"$outDir/b=$batchId")
+      val newHwm = Option(fresh.agg(max(col("lsn"))).head().get(0))
+        .map(_.asInstanceOf[Long]).map(math.max(_, hwm)).getOrElse(hwm)
+      Seq(newHwm).toDF("hwm").coalesce(1)
     }
-    val routed = graft.operators.Cdc.outboxRoute(outbox, topicPrefix)
-      .localCheckpoint() // read twice: fresh split + ordering audit
-    val fresh = routed
-      .filter(col("lsn") > hwm)
-      .dropDuplicates("lsn")
-      .localCheckpoint() // read twice: publish + new hwm
-    // ORDERING AUDIT: "lsn ≤ hwm ⇒ already published" is the load-bearing
-    // assumption of the O(1) ledger — under reordered delivery it silently
-    // degrades exactly-once to at-most-once (a never-published low lsn is
-    // dropped as a duplicate). Enforce it: every skipped lsn must exist in
-    // the published store, else THROW. Cost: the probe side is only the
-    // batch's skipped lsns (empty outside replay/overlap); the store side
-    // is a scan of published epochs — increment-sized stores fine; a
-    // deployment whose store outgrows this audit disables it after its
-    // broker guarantees per-partition order (`auditOrdering = false`).
-    if (auditOrdering && hwm > Long.MinValue) {
-      val skipped = routed.filter(col("lsn") <= hwm)
-        .select(col("lsn")).distinct()
-      val missing = skipped.join(
-        readPublished(spark, outDir).select(col("lsn")), Seq("lsn"),
-        "left_anti")
-      if (!missing.isEmpty) throw new IllegalStateException(
-        "outboxPublishBatch: out-of-order delivery — lsn(s) at or below " +
-          "the committed high-water mark were never published and would " +
-          "be silently dropped; restore ordered delivery or key the hwm " +
-          "by source partition.")
-    }
-    fresh.write.mode("overwrite").parquet(s"$outDir/b=$batchId")
-    val newHwm = Option(fresh.agg(max(col("lsn"))).head().get(0))
-      .map(_.asInstanceOf[Long]).map(math.max(_, hwm)).getOrElse(hwm)
-    SnapshotStore.commit(Seq(newHwm).toDF("hwm").coalesce(1), root, batchId)
   }
 
   /** Every published record across all committed batches — each event
@@ -2180,7 +2097,7 @@ object Streams extends Serializable {
 
   // ------------- T29 bucketed sketch store (per-day HLL, range-union reads)
   /** T29 — the BUCKETED form of the durable sketch tier: one HLL sketch
-    * PER TIME BUCKET (day), maintained through the versioned store, so
+    * PER TIME BUCKET (day), maintained through [[foldStore]], so
     * any trailing-window distinct count — q33's DAU/WAU pair at
     * unbounded scale — reads as a UNION OF SKETCHES over the bucket
     * range instead of a rescan of raw events. This is the documented
@@ -2193,13 +2110,14 @@ object Streams extends Serializable {
     * Per batch: ONE codegen'd `hll_sketch_agg` pass grouped by bucket
     * (map-side merged), then per-bucket `hll_union` against the
     * committed sketch table — state is O(#buckets × 2^lgK bytes),
-    * additions are register-max so replay recommits BYTE-identical rows
-    * (the T21 contract, per bucket). The strictly-before read is what
-    * carries that contract: re-unioning already-included data into a
-    * sketch is semantically idempotent but NOT byte-canonical in the
-    * DataSketches serialization (the HIP accumulator moves), so a
-    * replay that merged against its own epoch's output would commit
-    * different bytes for identical estimates. Reads union the committed rows
+    * and a replayed batch id is a no-op at the fold's txn gate, so the
+    * committed rows stay BYTE-identical (the T21 contract, per bucket).
+    * That gate is what carries the contract: re-unioning
+    * already-included data into a sketch is semantically idempotent but
+    * NOT byte-canonical in the DataSketches serialization (the HIP
+    * accumulator moves), so a replay that merged against its own epoch's
+    * output would commit different bytes for identical estimates. Reads
+    * union the committed rows
     * with `hll_union_agg` — nothing rescans events, and a dashboard
     * asking for any [d−w, d] window touches w rows.
     *
@@ -2207,30 +2125,20 @@ object Streams extends Serializable {
     */
   def bucketSketchBatch(events: DataFrame, batchId: Long, root: String,
       lgK: Int = 12): Unit = {
-    val spark = events.sparkSession
     val batchSk = events
       .groupBy(col("bucket"))
       .agg(expr(s"hll_sketch_agg(CAST(item AS STRING), $lgK)").as("sk"))
-    val merged = SnapshotStore.readBefore(spark, root, batchId) match {
-      case Some(prior) =>
-        prior.select(col("bucket"), col("sketch").as("prior_sk"))
+    foldStore(events.sparkSession, root, batchId) { prior =>
+      prior.map(_.select(col("bucket"), col("sketch").as("prior_sk"))
           .join(batchSk, Seq("bucket"), "full_outer")
           .select(col("bucket"),
             when(col("prior_sk").isNull, col("sk"))
               .when(col("sk").isNull, col("prior_sk"))
-              .otherwise(expr("hll_union(prior_sk, sk)")).as("sketch"))
-      case None => batchSk.select(col("bucket"), col("sk").as("sketch"))
+              .otherwise(expr("hll_union(prior_sk, sk)")).as("sketch")))
+        .getOrElse(batchSk.select(col("bucket"), col("sk").as("sketch")))
+        .orderBy(col("bucket")).coalesce(1)
     }
-    SnapshotStore.commit(merged.orderBy(col("bucket")).coalesce(1),
-      root, batchId)
   }
-
-  def bucketSketchStream(eventStream: DataFrame, root: String, lgK: Int = 12)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    eventStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      bucketSketchBatch(batch.toDF, batchId, root, lgK)
-    }
 
   /** Distinct-count estimate over any bucket range [lo, hi] — a union of
     * ≤ (hi−lo+1) committed sketch rows; 0 for an empty range or
@@ -2238,7 +2146,7 @@ object Streams extends Serializable {
     */
   def readRangeDistinct(spark: org.apache.spark.sql.SparkSession,
       root: String, lo: Long, hi: Long): Long =
-    SnapshotStore.read(spark, root) match {
+    readStore(spark, root) match {
       case Some(df) =>
         val in = df.filter(col("bucket") >= lo && col("bucket") <= hi)
         if (in.isEmpty) 0L
@@ -2255,56 +2163,42 @@ object Streams extends Serializable {
     * `hll_sketch_estimate`, the SPARK-16484 lineage). Per batch, ONE
     * codegen'd aggregation pass reduces the increment to a ≤ ~2^lgK-byte
     * sketch (internally merged map-side under the same union rule), and
-    * the committed sketch merges with it through the versioned store's
-    * pointer protocol — state is O(2^lgK) bytes forever, the classic
+    * the committed sketch merges with it through [[foldStore]] — state
+    * is O(2^lgK) bytes forever, the classic
     * "how many distinct users/tokens/URLs has this stream ever seen"
-    * without storing the key set. Replay derives from strictly-before
-    * state (`readBefore`), and — unlike T20's partition-order-dependent
-    * MG estimates — HLL register merges are order-insensitive, so a
-    * replayed batch recommits a BYTE-identical sketch. The q9d oracle
-    * query is the batch twin of exactly this union rule.
+    * without storing the key set. A replayed batch id is a no-op, so the
+    * committed sketch stays BYTE-identical; and — unlike T20's
+    * partition-order-dependent MG estimates — HLL register merges are
+    * order-insensitive, so any batch split commits the same estimate.
+    * The q9d oracle query is the batch twin of exactly this union rule.
     */
   def distinctCountBatch(items: DataFrame, batchId: Long, root: String,
       itemCol: String = "item", lgK: Int = 12): Unit = {
     val spark = items.sparkSession
     import spark.implicits._
-    val batchSk: Option[Array[Byte]] = Option(
-      items.select(expr(s"hll_sketch_agg(`$itemCol`, $lgK)").as("sk"))
-        .head().getAs[Array[Byte]]("sk"))
-    val priorSk: Option[Array[Byte]] =
-      SnapshotStore.readBefore(spark, root, batchId)
-        .flatMap(_.collect().headOption)
-        .flatMap(r => Option(r.getAs[Array[Byte]]("sketch")))
-    val merged: Option[Array[Byte]] = (priorSk, batchSk) match {
-      case (Some(p), Some(b)) =>
-        // one-row plan: the union itself is the engine's own expression,
-        // not a reimplementation
-        Some(Seq((p, b)).toDF("a", "b")
-          .select(expr("hll_union(a, b)").as("u"))
-          .head().getAs[Array[Byte]]("u"))
-      case (p, b) => b.orElse(p)
+    foldStore(spark, root, batchId) { prior =>
+      val batchSk: Option[Array[Byte]] = Option(
+        items.select(expr(s"hll_sketch_agg(`$itemCol`, $lgK)").as("sk"))
+          .head().getAs[Array[Byte]]("sk"))
+      val merged: Option[Array[Byte]] = (sketchOf(prior), batchSk) match {
+        case (Some(p), Some(b)) =>
+          // one-row plan: the union itself is the engine's own
+          // expression, not a reimplementation
+          Some(Seq((p, b)).toDF("a", "b")
+            .select(expr("hll_union(a, b)").as("u"))
+            .head().getAs[Array[Byte]]("u"))
+        case (p, b) => b.orElse(p)
+      }
+      sketchFrame(spark, merged)
     }
-    SnapshotStore.commit(
-      merged.map(m => Seq(Tuple1(m)).toDF("sketch"))
-        .getOrElse(Seq.empty[Tuple1[Array[Byte]]].toDF("sketch"))
-        .coalesce(1),
-      root, batchId)
   }
-
-  def distinctCountStream(itemStream: DataFrame, root: String,
-      itemCol: String = "item", lgK: Int = 12)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    itemStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      distinctCountBatch(batch.toDF, batchId, root, itemCol, lgK)
-    }
 
   /** The committed estimate (0 for a never-fed stream). Relative error
     * ~1.04/√2^lgK (≈1.6% at the default lgK=12).
     */
   def readDistinctCount(spark: org.apache.spark.sql.SparkSession,
       root: String): Long =
-    SnapshotStore.read(spark, root) match {
+    readStore(spark, root) match {
       case Some(df) if !df.isEmpty =>
         df.select(expr("CAST(hll_sketch_estimate(sketch) AS BIGINT)").as("n"))
           .head().getLong(0)
@@ -2318,9 +2212,20 @@ object Streams extends Serializable {
     */
   def readDistinctSketch(spark: org.apache.spark.sql.SparkSession,
       root: String): Option[Array[Byte]] =
-    SnapshotStore.read(spark, root)
-      .flatMap(_.collect().headOption)
+    sketchOf(readStore(spark, root))
+
+  /** The one binary `sketch` cell of a T21/T22 store state: None before
+    * the first commit or while the store holds no row. */
+  private def sketchOf(state: Option[DataFrame]): Option[Array[Byte]] =
+    state.flatMap(_.collect().headOption)
       .flatMap(r => Option(r.getAs[Array[Byte]]("sketch")))
+
+  /** The T21/T22 store state for `sketch` (no row for None). */
+  private def sketchFrame(spark: org.apache.spark.sql.SparkSession,
+      sketch: Option[Array[Byte]]): DataFrame = {
+    import spark.implicits._
+    sketch.toSeq.map(Tuple1(_)).toDF("sketch").coalesce(1)
+  }
 
   // ------------------- T22 durable streaming frequency oracle (CMS merge)
   /** T22 — durable point-frequency estimation, completing the streaming
@@ -2335,49 +2240,34 @@ object Streams extends Serializable {
     * merged), then the committed ~10 KB sketch merges with the batch's
     * via Spark's own `CountMinSketch.mergeInPlace` (same eps/confidence/
     * seed ⇒ same grid shape — the store carries one sketch config for
-    * its lifetime, like `_BUCKETS`). Replay derives from strictly-before
-    * state and counter addition is deterministic, so a re-delivered
-    * batch recommits BYTE-identical state (the T21 contract, stronger
-    * than T20's). Reads probe the grid with the codegen'd `cms_probe`
-    * expression — the sketch is a plan literal, no broadcast, no join.
+    * its lifetime, like `_BUCKETS`). A re-delivered batch id is a no-op
+    * at the [[foldStore]] gate, so the committed bytes never move on
+    * replay (the T21 contract); counter addition is deterministic, so
+    * the grid is the same under any batch split. Reads probe the grid
+    * with the codegen'd `cms_probe` expression — the sketch is a plan
+    * literal, no broadcast, no join.
     */
   def cmsBatch(items: DataFrame, batchId: Long, root: String,
       itemCol: String = "item", eps: Double = 0.01,
       confidence: Double = 0.99, seed: Int = 42): Unit = {
     val spark = items.sparkSession
-    import spark.implicits._
-    val batchSk: Option[Array[Byte]] = Option(
-      items.agg(count_min_sketch(col(itemCol), lit(eps), lit(confidence),
-        lit(seed)).as("s")).head().getAs[Array[Byte]]("s"))
-    val priorSk: Option[Array[Byte]] =
-      SnapshotStore.readBefore(spark, root, batchId)
-        .flatMap(_.collect().headOption)
-        .flatMap(r => Option(r.getAs[Array[Byte]]("sketch")))
-    val merged: Option[Array[Byte]] = (priorSk, batchSk) match {
-      case (Some(p), Some(b)) =>
-        val acc = org.apache.spark.util.sketch.CountMinSketch.readFrom(p)
-        acc.mergeInPlace(
-          org.apache.spark.util.sketch.CountMinSketch.readFrom(b))
-        val bos = new java.io.ByteArrayOutputStream()
-        acc.writeTo(bos)
-        Some(bos.toByteArray)
-      case (p, b) => b.orElse(p)
+    foldStore(spark, root, batchId) { prior =>
+      val batchSk: Option[Array[Byte]] = Option(
+        items.agg(count_min_sketch(col(itemCol), lit(eps), lit(confidence),
+          lit(seed)).as("s")).head().getAs[Array[Byte]]("s"))
+      val merged: Option[Array[Byte]] = (sketchOf(prior), batchSk) match {
+        case (Some(p), Some(b)) =>
+          val acc = org.apache.spark.util.sketch.CountMinSketch.readFrom(p)
+          acc.mergeInPlace(
+            org.apache.spark.util.sketch.CountMinSketch.readFrom(b))
+          val bos = new java.io.ByteArrayOutputStream()
+          acc.writeTo(bos)
+          Some(bos.toByteArray)
+        case (p, b) => b.orElse(p)
+      }
+      sketchFrame(spark, merged)
     }
-    SnapshotStore.commit(
-      merged.map(m => Seq(Tuple1(m)).toDF("sketch"))
-        .getOrElse(Seq.empty[Tuple1[Array[Byte]]].toDF("sketch"))
-        .coalesce(1),
-      root, batchId)
   }
-
-  def cmsStream(itemStream: DataFrame, root: String,
-      itemCol: String = "item", eps: Double = 0.01,
-      confidence: Double = 0.99, seed: Int = 42)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    itemStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      cmsBatch(batch.toDF, batchId, root, itemCol, eps, confidence, seed)
-    }
 
   /** Probe the committed grid for each row of `probes`: adds an `est`
     * column via the codegen'd `cms_probe` expression (grid as plan
@@ -2397,9 +2287,7 @@ object Streams extends Serializable {
 
   def readCmsSketch(spark: org.apache.spark.sql.SparkSession,
       root: String): Option[Array[Byte]] =
-    SnapshotStore.read(spark, root)
-      .flatMap(_.collect().headOption)
-      .flatMap(r => Option(r.getAs[Array[Byte]]("sketch")))
+    sketchOf(readStore(spark, root))
 
   // -------------------- T26 durable streaming quantiles (Q-digest merge)
   /** T26 — durable QUANTILE estimation, the last member of the streaming
@@ -2416,10 +2304,10 @@ object Streams extends Serializable {
     * CONSTANT bound independent of batch size (the bounded-
     * materialization tier; c.f. T22's ~10 KB grid) — compressed
     * driver-side to ≤ 3k nodes and merged with the committed digest
-    * under the store's pointer protocol. Count addition and the sorted
-    * compress are deterministic, so a replayed batch recommits
-    * BYTE-identical state (the T21/T22 contract). The committed NODE
-    * MAP after an epoch sequence is not in general byte-equal to the
+    * through [[foldStore]]. A replayed batch id is a no-op, so the
+    * committed state stays BYTE-identical (the T21/T22 contract). The
+    * committed NODE MAP after an epoch sequence is not in general
+    * byte-equal to the
     * single-pass digest (compression decisions depend on intermediate
     * thresholds), but both satisfy the same rank bound and hold the
     * same total — which is the digest's contract, and what the spec
@@ -2435,53 +2323,35 @@ object Streams extends Serializable {
     val spark = values.sparkSession
     import spark.implicits._
     val Q = graft.functions.QDigest
-    // sum on collision: out-of-domain values CLAMP to the edge leaves
-    // (QDigest.leaf), so two distinct v can share a leaf — a plain
-    // .toMap would keep only one row (collect order — nondeterministic),
-    // losing counts and breaking the byte-identical replay contract
-    val leafCounts: Map[Long, Long] = values
-      .groupBy(col("v")).agg(count(lit(1)).as("c"))
-      .select(col("v"), col("c")).as[(Long, Long)].collect()
-      .groupMapReduce { case (v, _) => Q.leaf(v) } { case (_, c) => c }(_ + _)
-    val batchN = leafCounts.valuesIterator.sum
-    val (priorDigest, priorN) =
-      SnapshotStore.readBefore(spark, root, batchId) match {
-        case Some(df) =>
-          val rows = df.select(col("node"), col("cnt"), col("n_total"))
-            .as[(Long, Long, Long)].collect()
-          (rows.map(r => r._1 -> r._2).toMap,
-            rows.headOption.map(_._3).getOrElse(0L))
-        case None => (Map.empty[Long, Long], 0L)
-      }
-    val n = priorN + batchN
-    val merged = Q.merge(priorDigest, leafCounts, n, k)
-    SnapshotStore.commit(
-      merged.toSeq.sorted.toDF("node", "cnt")
-        .withColumn("n_total", lit(n)).coalesce(1),
-      root, batchId)
-  }
-
-  def quantileStream(valueStream: DataFrame, root: String, k: Int = 512)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    valueStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      quantileBatch(batch.toDF, batchId, root, k)
+    foldStore(spark, root, batchId) { prior =>
+      // sum on collision: out-of-domain values CLAMP to the edge leaves
+      // (QDigest.leaf), so two distinct v can share a leaf — a plain
+      // .toMap would keep only one row (collect order —
+      // nondeterministic), losing counts
+      val leafCounts: Map[Long, Long] = values
+        .groupBy(col("v")).agg(count(lit(1)).as("c"))
+        .select(col("v"), col("c")).as[(Long, Long)].collect()
+        .groupMapReduce { case (v, _) => Q.leaf(v) } { case (_, c) => c }(_ + _)
+      val (priorDigest, priorN) = digestOf(prior)
+      val n = priorN + leafCounts.valuesIterator.sum
+      Q.merge(priorDigest, leafCounts, n, k).toSeq.sorted.toDF("node", "cnt")
+        .withColumn("n_total", lit(n)).coalesce(1)
     }
+  }
 
   /** The committed digest as (nodes map, n_total); empty for a never-fed
     * stream.
     */
   def readQuantileDigest(spark: org.apache.spark.sql.SparkSession,
-      root: String): (Map[Long, Long], Long) = {
-    import spark.implicits._
-    SnapshotStore.read(spark, root) match {
-      case Some(df) if !df.isEmpty =>
-        val rows = df.select(col("node"), col("cnt"), col("n_total"))
-          .as[(Long, Long, Long)].collect()
-        (rows.map(r => r._1 -> r._2).toMap,
-          rows.headOption.map(_._3).getOrElse(0L))
-      case _ => (Map.empty[Long, Long], 0L)
-    }
+      root: String): (Map[Long, Long], Long) =
+    digestOf(readStore(spark, root))
+
+  private def digestOf(state: Option[DataFrame]): (Map[Long, Long], Long) = {
+    val rows = state.toSeq.flatMap(df => df.select(col("node"), col("cnt"),
+        col("n_total")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    (rows.map(r => r._1 -> r._2).toMap,
+      rows.headOption.map(_._3).getOrElse(0L))
   }
 
   // ------------------------------ T18 index generation retrain + cutover
@@ -2502,15 +2372,15 @@ object Streams extends Serializable {
     *   root/_LATEST                 committed generation number
     * }}}
     *
-    * The cutover is [[SnapshotStore.commitPointer]]'s atomic small-object
+    * The cutover is [[LakeFormat.writePointer]]'s atomic small-object
     * write: the next generation is fit, fully encoded, and seeded while
     * generation n serves unperturbed; flipping `_LATEST` is the commit
     * point; [[gcGenerations]] keeps the predecessor as the reader grace
     * window (a reader that resolved gen n before the flip finishes its
     * query against files that still exist). A crash mid-build leaves a
     * dangling uncommitted `g=<n+1>` and a fully-served gen n — repaired
-    * by re-running the retrain; the same crash calculus as
-    * [[SnapshotStore]], because it IS that protocol, one level up.
+    * by re-running the retrain; the same crash calculus as the lake
+    * log's `_last_checkpoint` pointer, through the same helper.
     *
     * Scale: the refit itself is the bounded-sample fit + one full-corpus
     * encode pass (per-row expression work) — the expensive, rare path;
@@ -2570,12 +2440,15 @@ object Streams extends Serializable {
     writeGenerationModels(spark, root, gen, coarse, books)
     seedVectorIndex(corpus, s"${generationDir(root, gen)}/index",
       coarse, books)
-    SnapshotStore.commitPointer(spark, root, gen)
+    LakeFormat.writePointer(spark, generationPtr(root), gen)
   }
+
+  private def generationPtr(root: String) =
+    new org.apache.hadoop.fs.Path(root, "_LATEST")
 
   def currentGeneration(spark: org.apache.spark.sql.SparkSession,
       root: String): Option[Long] =
-    SnapshotStore.latestVersion(spark, root)
+    LakeFormat.readPointer(spark, generationPtr(root))
 
   /** Drop committed-over generations, keeping `current` and its
     * predecessor (the reader grace window).
@@ -2622,14 +2495,13 @@ object Streams extends Serializable {
     */
   def vectorIndexStreamGen(embStream: DataFrame, root: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    embStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    eachBatch(embStream) { (batch, batchId) =>
       val spark = batch.sparkSession
       val gen = currentGeneration(spark, root).getOrElse(
         throw new IllegalStateException(
           s"no committed generation under $root — seed with retrainGeneration first"))
       val (coarse, books) = readGenerationModels(spark, root, gen)
-      vectorIndexBatch(batch.toDF, batchId,
+      vectorIndexBatch(batch, batchId,
         s"${generationDir(root, gen)}/index", coarse, books)
     }
 
@@ -2670,13 +2542,6 @@ object Streams extends Serializable {
       .write.mode("overwrite").parquet(s"$clusterDir/b=$batchId")
     ()
   }
-
-  def clusterIndexStream(pairStream: DataFrame, clusterDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    pairStream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      clusterIndexBatch(batch.toDF, batchId, clusterDir)
-    }
 
   /** The latest-batch-wins fold shared by the read view, the prior of
     * the next batch, and compaction. A node appears at most once per

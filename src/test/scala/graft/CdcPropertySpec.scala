@@ -310,6 +310,65 @@ object CdcPropertySpec extends Properties("CdcSnapshot") {
       }
     }
 
+  // ------------------------------------- durable IVM, exactly-once
+  /** The durable aggregate ([[graft.streaming.Streams.aggMaintainBatch]])
+    * over random contiguous splits of a consistent changelog (c/u/d with
+    * true before-images; updates move rows between groups), with random
+    * replays of already-applied batch ids — the last one or an older
+    * one — must equal [[Cdc.aggMaintain]] over the whole log, and no
+    * replay may move the store's table version.
+    */
+  property("durable IVM over random batch splits and replays == Cdc.aggMaintain") =
+    forAll(Gen.choose(1, 24), Gen.choose(1, 4), Gen.long) {
+        (nEvents, nBatches, seed) =>
+      import spark.implicits._
+      import graft.sources.LakeFormat
+      import graft.streaming.Streams
+      val rnd = new scala.util.Random(seed)
+      def img(id: Long, g: String) =
+        Some(CdcRow(id, Some(g), Some("l"), Some(s"$id@x")))
+      val live = scala.collection.mutable.Map.empty[Long, String]
+      val events = (1 to nEvents).map { i =>
+        val (lsn, id) = (i.toLong, 1L + rnd.nextInt(6))
+        val g = Seq("a", "b", "c")(rnd.nextInt(3))
+        live.get(id) match {
+          case None =>
+            live(id) = g; CdcEvent(None, img(id, g), src(lsn), "c", lsn)
+          case Some(old) if rnd.nextBoolean() =>
+            live(id) = g; CdcEvent(img(id, old), img(id, g), src(lsn), "u", lsn)
+          case Some(old) =>
+            live -= id; CdcEvent(img(id, old), None, src(lsn), "d", lsn)
+        }
+      }
+      // contiguous cuts (empty batches allowed): every batch boundary is
+      // a consistent prefix of the log
+      val cuts = 0 +: Seq.fill(nBatches - 1)(rnd.nextInt(nEvents + 1)).sorted :+
+        nEvents
+      val batches = cuts.sliding(2).map(w => events.slice(w(0), w(1))).toSeq
+      val root = java.nio.file.Files.createTempDirectory("ivmp")
+        .toString + "/a"
+      val grp = (img: org.apache.spark.sql.Column) => img.getField("first_name")
+      def apply(i: Int): Unit = Streams.aggMaintainBatch(
+        batches(i).toDS.toDF, i.toLong, root, grp)
+      val moved = batches.indices.flatMap { i =>
+        apply(i)
+        Option.when(rnd.nextBoolean()) {
+          val j = rnd.nextInt(i + 1)
+          val v = LakeFormat.state(spark, root).version
+          apply(j)
+          (j, v, LakeFormat.state(spark, root).version)
+        }.filter { case (_, v, after) => v != after }
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("grp", "n", "sum_id").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      val got = rows(Streams.readAggSnapshot(spark, root))
+      val expected = rows(Cdc.aggMaintain(events.toDS.toDF, grp))
+      Prop(moved.isEmpty && got == expected) :|
+        s"replays that moved the version (id, before, after): $moved; " +
+          s"got=$got expected=$expected"
+    }
+
   // -------------------------------------------- C20 audit/repair closure
   /** For ANY corruption of the replica (rows dropped, modified, or
     * invented), the checksum audit + bucket-restricted repair restores

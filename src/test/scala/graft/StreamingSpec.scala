@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.Schemas.{CdcEvent, CdcRow, CdcSource}
 import graft.sources.LakeFormat
-import graft.streaming.{LakeSink, RetryRunner, SnapshotStore, Streams}
+import graft.streaming.{LakeSink, RetryRunner, Streams}
 import java.sql.Timestamp
 
 /** Top-level so Spark can derive an Encoder (inner classes of a suite
@@ -181,7 +181,7 @@ class StreamingSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("ivmstore").toString + "/s"
     val grp = (img: org.apache.spark.sql.Column) => img.getField("first_name")
     val mem = MemoryStream[CdcEvent]
-    val q = Streams.aggMaintainForeachBatch(mem.toDS, root, grp)
+    val q = Streams.eachBatch(mem.toDS)(Streams.aggMaintainBatch(_, _, root, grp))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckptivm").toString)
       .start()
@@ -196,16 +196,19 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(state() === batchFold)
     assert(state() === Seq(("alpha", 1L, 1L), ("beta", 1L, 2L)))
-    // crash replay of the LAST batch: merge reads strictly-before state
-    // and the commit overwrites the same version — state unchanged
-    Streams.aggMaintainBatch(batch2.toDF, 1L, root, grp)
+    // crash replay of the LAST batch (its true id is the store's txn
+    // mark): a no-op — state and table version unchanged
+    val st = LakeFormat.state(spark, root)
+    val lastId = st.txns("fold")
+    Streams.aggMaintainBatch(batch2.toDF, lastId, root, grp)
     assert(state() === batchFold)
+    assert(LakeFormat.state(spark, root).version === st.version)
     // a delete-only epoch retracts alpha's last row to ABSENCE: the
     // group leaves the persisted state entirely (not a zero-count row)
     val batch3 = Seq(CdcEvent(fr(1, "alpha"), None, src(101), "d", 101))
-    Streams.aggMaintainBatch(batch3.toDF, 2L, root, grp)
+    Streams.aggMaintainBatch(batch3.toDF, lastId + 1, root, grp)
     assert(state() === Seq(("beta", 1L, 2L)))
-    assert(SnapshotStore.read(spark, root).get.count() === 1) // no n=0 rows
+    assert(LakeFormat.snapshot(spark, root).count() === 1) // no n=0 rows
   }
 
   test("T12 cross-table tx gate: a commit is invisible until complete across BOTH streams") {
@@ -368,9 +371,15 @@ class StreamingSpec extends AnyFunSuite {
         s"CAST(conv(substr(md5(CAST(CAST(id AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % $nB"))
       .head().getLong(0)
     assert(bad.toSeq === Seq(expectBucket))
-    // the alert store is versioned: epoch 0's clean verdicts still readable
-    val prior = graft.streaming.SnapshotStore.readBefore(spark, alertRoot, 1L).get
+    // the alert store is a lake table: "when" is the version whose
+    // commit carries epoch 0's txn marker, and its clean verdicts are
+    // still readable there
+    val v0At = LakeFormat.history(spark, alertRoot)
+      .filter(col("txns") === "fold=0").select("version").as[Long].head()
+    val prior = LakeFormat.readAsOf(spark, alertRoot, v0At)
     assert(prior.filter(!col("is_match")).count() === 0)
+    assert(prior.select("epoch").distinct().as[Long].collect().toSeq ===
+      Seq(0L))
   }
 
   test("C20 x T6: the replica store audits against upstream, repair rewrites only the diverged key's bucket, re-audit is clean") {
@@ -415,52 +424,81 @@ class StreamingSpec extends AnyFunSuite {
       Seq((13L, "v13")))
   }
 
-  test("snapshot commit protocol: a crash between stage and pointer leaves the prior version readable") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("store").toString + "/s"
-    // epoch 0 commits
-    SnapshotStore.commit(Seq((1L, "a")).toDF("id", "v"), root, 0L)
-    assert(SnapshotStore.latestVersion(spark, root) === Some(0L))
-    // epoch 1 CRASHES between writing its data and the pointer write:
-    // simulate by staging without committing
-    SnapshotStore.writeVersion(Seq((1L, "b")).toDF("id", "v"), root, 1L)
-    // a reader still sees epoch 0, not the half-finished epoch 1
-    assert(SnapshotStore.latestVersion(spark, root) === Some(0L))
-    assert(SnapshotStore.read(spark, root).get.collect()(0).getString(1) === "a")
-    // the replay of epoch 1 (same version id — checkpoint replays the same
-    // batch) merges against the committed state and completes the commit
-    assert(SnapshotStore.readBefore(spark, root, 1L)
-      .get.collect()(0).getString(1) === "a")
-    SnapshotStore.commit(Seq((1L, "b")).toDF("id", "v"), root, 1L)
-    assert(SnapshotStore.read(spark, root).get.collect()(0).getString(1) === "b")
-    // replay when the pointer ALREADY names the replayed version: merge
-    // source must be the predecessor (kept by the GC grace window)
-    assert(SnapshotStore.readBefore(spark, root, 1L)
-      .get.collect()(0).getString(1) === "a")
-    // GC keeps current + predecessor only
-    SnapshotStore.commit(Seq((1L, "c")).toDF("id", "v"), root, 2L)
-    SnapshotStore.commit(Seq((1L, "d")).toDF("id", "v"), root, 3L)
-    val dirs = new java.io.File(root).listFiles().map(_.getName).filter(_.startsWith("v=")).sorted
-    assert(dirs.toSeq === Seq("v=2", "v=3"))
+  test("whole-state fold: a commit that throws leaves the prior state readable; re-running the batch id completes it") {
+    val root = java.nio.file.Files.createTempDirectory("fold").toString + "/s"
+    def ids() = Streams.readErased(spark, root).get.as[Long].collect().toSet
+    Streams.erasureLedgerBatch(Seq(1L).toDF("id"), 0L, root)
+    val v0 = LakeFormat.state(spark, root).version
+    // epoch 1 CRASHES after staging its data, before its commit lands
+    LakeFormat.beforeCommitHook = () => {
+      LakeFormat.beforeCommitHook = () => ()
+      throw new RuntimeException("crash before commit")
+    }
+    try intercept[RuntimeException](
+      Streams.erasureLedgerBatch(Seq(2L).toDF("id"), 1L, root))
+    finally LakeFormat.beforeCommitHook = () => ()
+    // a reader still sees epoch 0, and no marker for epoch 1 landed
+    assert(LakeFormat.state(spark, root).version === v0)
+    assert(LakeFormat.state(spark, root).txns === Map("fold" -> 0L))
+    assert(ids() === Set(1L))
+    // the replay of epoch 1 (same batch id) completes the commit
+    Streams.erasureLedgerBatch(Seq(2L).toDF("id"), 1L, root)
+    assert(ids() === Set(1L, 2L))
+    assert(LakeFormat.state(spark, root).txns === Map("fold" -> 1L))
   }
 
-  test("snapshot pointer: commit leaves no temp file; a torn pointer reads as absent, then recovers") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("ptr").toString + "/s"
-    SnapshotStore.commit(Seq((1L, "a")).toDF("id", "v"), root, 0L)
-    assert(SnapshotStore.latestVersion(spark, root) === Some(0L))
-    // the temp-and-rename protocol must not leave its staging file behind
-    assert(!new java.io.File(root, "_LATEST.tmp").exists())
-    // simulate a torn pointer (a store with neither atomic rename nor
-    // atomic PUT crashing mid-write): empty file must not throw, and must
-    // not be mistaken for a committed version
+  test("whole-state fold: after five folds only the current and previous versions' data files remain") {
+    val root = java.nio.file.Files.createTempDirectory("foldgc").toString + "/s"
+    def dataFiles() = {
+      val it = org.apache.commons.io.FileUtils.listFiles(
+        new java.io.File(root, "data"), Array("parquet"), true).iterator()
+      val b = Set.newBuilder[String]
+      while (it.hasNext)
+        b += it.next().getPath.stripPrefix(root + "/")
+      b.result()
+    }
+    (0L until 5L).foreach(i =>
+      Streams.erasureLedgerBatch(Seq(i).toDF("id"), i, root))
+    val tip = LakeFormat.state(spark, root).version
+    val kept = (tip - 1 to tip)
+      .flatMap(v => LakeFormat.state(spark, root, Some(v)).files.map(_.path))
+    assert(kept.nonEmpty && dataFiles() === kept.toSet)
+    assert(Streams.readErased(spark, root).get.as[Long].collect().toSet ===
+      (0L until 5L).toSet)
+  }
+
+  test("pointer helper: an empty pointer reads as absent, no temp file is left, the next write repairs it") {
+    def pointerFiles(dir: String) = new java.io.File(dir).listFiles()
+      .map(_.getName).filterNot(_.endsWith(".crc")).toSet
+    // the T18 generation pointer (the write `retrainGeneration` ends with)
+    val root = java.nio.file.Files.createTempDirectory("ptr").toString
+    val latest = new org.apache.hadoop.fs.Path(root, "_LATEST")
+    assert(Streams.currentGeneration(spark, root) === None)
+    LakeFormat.writePointer(spark, latest, 0L)
+    assert(Streams.currentGeneration(spark, root) === Some(0L))
+    assert(pointerFiles(root) === Set("_LATEST"))
     java.nio.file.Files.write(java.nio.file.Paths.get(root, "_LATEST"),
       Array.emptyByteArray)
-    assert(SnapshotStore.latestVersion(spark, root) === None)
-    // the next commit repairs the pointer
-    SnapshotStore.commit(Seq((1L, "b")).toDF("id", "v"), root, 1L)
-    assert(SnapshotStore.latestVersion(spark, root) === Some(1L))
-    assert(SnapshotStore.read(spark, root).get.collect()(0).getString(1) === "b")
+    assert(Streams.currentGeneration(spark, root) === None)
+    // a lake consumer offset, through the same helper
+    val dir = java.nio.file.Files.createTempDirectory("off").toString
+    LakeFormat.commitConsumerOffset(spark, dir, 3L)
+    assert(LakeFormat.consumerOffset(spark, dir) === Some(3L))
+    assert(pointerFiles(dir) === Set("_offset"))
+    // an unparsable pointer too (written through the FS, so the local
+    // checksum file stays consistent)
+    val off = new org.apache.hadoop.fs.Path(dir, "_offset")
+    val out = off.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(off, true)
+    try out.write("not-a-version".getBytes("UTF-8")) finally out.close()
+    assert(LakeFormat.consumerOffset(spark, dir) === None)
+    // the next write repairs each pointer
+    LakeFormat.commitConsumerOffset(spark, dir, 4L)
+    assert(LakeFormat.consumerOffset(spark, dir) === Some(4L))
+    assert(pointerFiles(dir) === Set("_offset"))
+    LakeFormat.writePointer(spark, latest, 1L)
+    assert(Streams.currentGeneration(spark, root) === Some(1L))
+    assert(pointerFiles(root) === Set("_LATEST"))
   }
 
   test("R6 retry runner: bounded restarts recover a failing query with no loss or duplication") {
@@ -614,7 +652,7 @@ class StreamingSpec extends AnyFunSuite {
     // seed the store with the static corpus's bands (the "existing index")
     Streams.seedBandStore(Text.minhashBands(Text.shingles(static0.toDF)), bandDir)
     val mem = MemoryStream[DocE]
-    val q = Streams.nearDupStream(mem.toDF, bandDir, pairDir)
+    val q = Streams.eachBatch(mem.toDF)(Streams.nearDupBatch(_, _, bandDir, pairDir))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt13").toString)
       .start()
@@ -720,7 +758,8 @@ class StreamingSpec extends AnyFunSuite {
     val b2 = Seq.fill(15)("hot") ++ Seq.fill(5)("warm") ++ colds(27, 40)
     val all = b0 ++ b1 ++ b2
     val mem = MemoryStream[String]
-    val q = Streams.heavyHittersStream(mem.toDF.toDF("token"), root, k)
+    val q = Streams.eachBatch(mem.toDF.toDF("token"))(
+        Streams.heavyHittersBatch(_, _, root, k))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt20").toString)
       .start()
@@ -741,13 +780,8 @@ class StreamingSpec extends AnyFunSuite {
       assert(e <= truth(t), s"$t overcounted: $e > ${truth(t)}")
       assert(truth(t) - e <= n / k, s"$t undercount exceeds N/k")
     }
-    // crash replay: the merge reads strictly-before state (readBefore,
-    // grace window), so N is NOT double-counted and the guarantee holds
-    // for the recommitted summary. (MG estimates are partition-order-
-    // dependent — x4l's documented property — so replay idempotence is
-    // at the CONTRACT level, not the byte level: same version, same N,
-    // same theorem; the store's one-committed-summary-per-version makes
-    // the estimate variance invisible to readers.)
+    // crash replay: a no-op at the txn gate, so N is NOT double-counted
+    // and the committed summary keeps its guarantee
     Streams.heavyHittersBatch(b2.toDF("token"), 2L, root, k)
     val replayed = Streams.readHeavyHitters(spark, root)
       .as[(String, Long, Long)].collect()
@@ -776,7 +810,7 @@ class StreamingSpec extends AnyFunSuite {
     // (lsn 105, older than the open interval's 110) plus a fresh update
     val b2 = Seq(e(2, "c", 230, "b2"), e(1, "u", 105, "a1b"), e(1, "u", 120, "a3"))
     val mem = MemoryStream[CdcEvent]
-    val q = Streams.scd2ForeachBatch(mem.toDS, root)
+    val q = Streams.eachBatch(mem.toDS)(Streams.scd2Batch(_, _, root))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt23").toString)
       .start()
@@ -827,7 +861,8 @@ class StreamingSpec extends AnyFunSuite {
     val b1 = (20 until 60).map(i => s"u$i")
     val b2 = (50 until 80).map(i => s"u$i")
     val mem = MemoryStream[String]
-    val q = Streams.distinctCountStream(mem.toDF.toDF("item"), root)
+    val q = Streams.eachBatch(mem.toDF.toDF("item"))(
+        Streams.distinctCountBatch(_, _, root))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt21").toString)
       .start()
@@ -841,9 +876,8 @@ class StreamingSpec extends AnyFunSuite {
     // 5% bound (at these cardinalities the sketch is in its exact regime)
     assert(est0 <= est1 && est1 <= est2)
     assert(math.abs(est2 - 80L) * 100 <= 80L * 5, s"estimate $est2 off 80")
-    // replay of the last batch derives from strictly-before state: the
-    // recommitted sketch is BYTE-identical (HLL register merges are
-    // order-insensitive, unlike T20's MG counters)
+    // replay of the last batch is a no-op at the txn gate: the committed
+    // sketch stays BYTE-identical
     val before = Streams.readDistinctSketch(spark, root).get
     Streams.distinctCountBatch(b2.toDF("item"), 2L, root)
     val after = Streams.readDistinctSketch(spark, root).get
@@ -867,7 +901,8 @@ class StreamingSpec extends AnyFunSuite {
     val b2 = Seq.fill(12)("warm") ++ colds(40, 60)
     val all = b0 ++ b1 ++ b2
     val mem = MemoryStream[String]
-    val q = Streams.cmsStream(mem.toDF.toDF("item"), root, eps = eps)
+    val q = Streams.eachBatch(mem.toDF.toDF("item"))(
+        Streams.cmsBatch(_, _, root, eps = eps))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt22").toString)
       .start()
@@ -894,7 +929,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(est(t) - c <= (2 * eps * n).toLong, s"$t overcount unbounded")
     }
     assert(est("never_seen") >= 0L)
-    // replay: strictly-before state + deterministic addition -> identical bytes
+    // replay is a no-op at the txn gate -> identical bytes
     Streams.cmsBatch(b2.toDF("item"), 2L, root, eps = eps)
     assert(java.util.Arrays.equals(
       Streams.readCmsSketch(spark, root).get, committed))
@@ -916,7 +951,8 @@ class StreamingSpec extends AnyFunSuite {
     val b2 = (0 until 300).map(i => (i * 31 % 2000).toLong)
     val all = b0 ++ b1 ++ b2
     val mem = MemoryStream[Long]
-    val q = Streams.quantileStream(mem.toDF.toDF("v"), root, k)
+    val q = Streams.eachBatch(mem.toDF.toDF("v"))(
+        Streams.quantileBatch(_, _, root, k))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt26").toString)
       .start()
@@ -939,15 +975,14 @@ class StreamingSpec extends AnyFunSuite {
       assert(rHi >= target - bound && rLo <= target + bound,
         s"p$p: dv=$dv rank[$rLo,$rHi] target=$target bound=$bound")
     }
-    // replay derives from strictly-before state; sorted compress is
-    // deterministic -> byte-identical recommit
-    def stateRows() = graft.streaming.SnapshotStore.read(spark, root).get
+    // replay is a no-op at the txn gate: committed digest unchanged
+    def stateRows() = LakeFormat.snapshot(spark, root)
       .select("node", "cnt", "n_total").orderBy("node")
       .as[(Long, Long, Long)].collect().toSeq
     val before = stateRows()
     // replay the LAST batch at its true id (the engine may have burned a
-    // batch id on an initial empty batch — read it from the pointer)
-    val lastId = graft.streaming.SnapshotStore.latestVersion(spark, root).get
+    // batch id on an initial empty batch — read it from the txn mark)
+    val lastId = LakeFormat.state(spark, root).txns("fold")
     Streams.quantileBatch(b2.toDF("v"), lastId, root, k)
     assert(stateRows() === before, "replay changed the committed digest")
     // an empty batch carries the state unchanged
@@ -981,7 +1016,7 @@ class StreamingSpec extends AnyFunSuite {
       e(1, "u", 110, "a2"), e(2, "d", 210, "b1"), e(3, "u", 310, "c2"),
       e(2, "c", 230, "b2"), e(1, "u", 105, "a1b"), e(1, "u", 120, "a3"))
     val dmem = MemoryStream[CdcEvent]
-    val dq = Streams.scd2ForeachBatch(dmem.toDS, root)
+    val dq = Streams.eachBatch(dmem.toDS)(Streams.scd2Batch(_, _, root))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt27d").toString)
       .start()
@@ -992,8 +1027,8 @@ class StreamingSpec extends AnyFunSuite {
     val fb1 = Seq((4L, 2L, 215L), (5L, 2L, 240L), (6L, 3L, 305L),
       (7L, 99L, 100L), (8L, 1L, 50L))
     val fmem = MemoryStream[(Long, Long, Long)]
-    val fq = Streams.enrichFactsStream(
-        fmem.toDF.toDF("orderkey", "custkey", "flsn"), root, outDir)
+    val fq = Streams.eachBatch(fmem.toDF.toDF("orderkey", "custkey", "flsn"))(
+        Streams.enrichFactsBatch(_, _, root, outDir))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt27f").toString)
       .start()
@@ -1058,11 +1093,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === Seq((10L, "1", "p10"), (20L, "2", "p20"),
       (30L, "3", "p30"), (40L, "4", "p40"), (50L, "5", "p50")))
     // the ledger is ONE row
-    assert(graft.streaming.SnapshotStore.read(spark, root).get.count() === 1L)
-    // crash replay of the last batch: strictly-before hwm -> same
-    // publish set, same dir overwritten, ledger recommits same value
+    assert(LakeFormat.snapshot(spark, root).count() === 1L)
+    // crash replay of the last batch: a no-op at the txn gate — nothing
+    // re-published, the ledger's version does not move
+    val v2 = LakeFormat.state(spark, root).version
     Streams.outboxPublishBatch(toDf(b2), 2L, root, outDir)
     assert(published() === got)
+    assert(LakeFormat.state(spark, root).version === v2)
     // an empty batch advances nothing
     Streams.outboxPublishBatch(toDf(Seq.empty), 3L, root, outDir)
     assert(published() === got)
@@ -1116,7 +1153,7 @@ class StreamingSpec extends AnyFunSuite {
     // out-of-range and never-written buckets read 0
     assert(Streams.readRangeDistinct(spark, root, 100L, 200L) === 0L)
     // replay of the last batch recommits byte-identical sketch rows
-    def stateRows() = graft.streaming.SnapshotStore.read(spark, root).get
+    def stateRows() = LakeFormat.snapshot(spark, root)
       .select("bucket", "sketch").orderBy("bucket").collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSeq
     val before = stateRows()
@@ -1129,7 +1166,8 @@ class StreamingSpec extends AnyFunSuite {
     // reads sane estimates
     val root2 = java.nio.file.Files.createTempDirectory("t29b").toString + "/sk"
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.bucketSketchStream(mem.toDF.toDF("bucket", "item"), root2)
+    val q = Streams.eachBatch(mem.toDF.toDF("bucket", "item"))(
+        Streams.bucketSketchBatch(_, _, root2))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt29").toString)
       .start()
@@ -1215,7 +1253,7 @@ class StreamingSpec extends AnyFunSuite {
     val all = inc0 ++ inc1 ++ inc2
     val dir = java.nio.file.Files.createTempDirectory("t17").toString
     val mem = MemoryStream[(Long, Long)]
-    val q = Streams.clusterIndexStream(mem.toDF, dir)
+    val q = Streams.eachBatch(mem.toDF)(Streams.clusterIndexBatch(_, _, dir))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt17").toString)
       .start()
@@ -1501,8 +1539,8 @@ class StreamingSpec extends AnyFunSuite {
     val inc1 = rows(e.filter(col("vec_id") % 3 === 1))
     val inc2 = rows(e.filter(col("vec_id") % 3 === 2)) ++ rows(negated)
     val mem = MemoryStream[(Long, Seq[Float])]
-    val q = Streams.vectorIndexStream(
-        mem.toDF.toDF("vec_id", "embedding"), dir, coarse, books)
+    val q = Streams.eachBatch(mem.toDF.toDF("vec_id", "embedding"))(
+        Streams.vectorIndexBatch(_, _, dir, coarse, books))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt16").toString)
       .start()
@@ -1978,7 +2016,7 @@ class StreamingSpec extends AnyFunSuite {
       "CASE WHEN op <> 'd' THEN named_struct('id', id, 'text', text) END AS after",
       "CASE WHEN op <> 'c' THEN named_struct('id', id, 'text', text) END AS before",
       "named_struct('lsn', lsn) AS source", "op")
-    val q = Streams.positionsStream(stream, dir2)
+    val q = Streams.eachBatch(stream)(Streams.phraseIndexBatch(_, _, dir2))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt35").toString)
       .start()
@@ -2057,7 +2095,7 @@ class StreamingSpec extends AnyFunSuite {
       "CASE WHEN op <> 'd' THEN named_struct('id', id, 'text', text) END AS after",
       "CASE WHEN op <> 'c' THEN named_struct('id', id, 'text', text) END AS before",
       "named_struct('lsn', lsn) AS source", "op")
-    val q = Streams.postingsStream(stream, dir2)
+    val q = Streams.eachBatch(stream)(Streams.bm25IndexBatch(_, _, dir2))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt30").toString)
       .start()
@@ -2177,8 +2215,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(flagged === Relational.outliersByKey(all)
       .as[(Long, Long, Long)].collect().toSeq)
     assert(flagged === Seq((13L, 1L, 30000L)))
-    // CRASH REPLAY: re-committing the last batch reads strictly-before
-    // state, so the merged result is identical
+    // CRASH REPLAY: the last batch id again is a no-op at the txn gate,
+    // so the merged result is identical
     Streams.momentsBatch(batches.last.toDF("event_id", "user_id", "v_c"),
       (batches.size - 1).toLong, root)
     assert(moments(Streams.readMoments(spark, root)) ===
@@ -2187,8 +2225,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val root2 = java.nio.file.Files.createTempDirectory("moments2").toString
     val mem = MemoryStream[(Long, Long, Long)]
-    val q = Streams.momentsStream(
-        mem.toDS().toDF("event_id", "user_id", "v_c"), root2)
+    val q = Streams.eachBatch(mem.toDS().toDF("event_id", "user_id", "v_c"))(
+        Streams.momentsBatch(_, _, root2))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt31").toString)
       .start()
@@ -2258,8 +2296,8 @@ class StreamingSpec extends AnyFunSuite {
     val regDir2 = java.nio.file.Files.createTempDirectory("reg33b").toString
     val ccDir2 = java.nio.file.Files.createTempDirectory("cc33b").toString
     val mem = MemoryStream[Long]
-    val q = Streams.splitRegistryStream(mem.toDS().toDF("doc_id"),
-        regDir2, ccDir2, valPct = 50)
+    val q = Streams.eachBatch(mem.toDS().toDF("doc_id"))(
+        Streams.splitRegistryBatch(_, _, regDir2, ccDir2, valPct = 50))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt33").toString)
       .start()
@@ -2298,8 +2336,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(closure() === batchRef(after2))
     // crash replay of the LAST batch (the only replay foreachBatch can
     // deliver — an older batch committing implies its checkpoint
-    // advanced): derives from strictly-before state, overwrites its own
-    // version — the committed closure is unchanged
+    // advanced): a no-op at the txn gate — the committed closure is
+    // unchanged
     Streams.hierarchyBatch(Seq((113L, Some(11L))).toDF("node", "parent"),
       2L, root)
     assert(closure() === batchRef(after2))
@@ -2314,7 +2352,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val root2 = java.nio.file.Files.createTempDirectory("t36b").toString + "/h"
     val mem = MemoryStream[(Long, Option[Long])]
-    val q = Streams.hierarchyStream(mem.toDS().toDF("node", "parent"), root2)
+    val q = Streams.eachBatch(mem.toDS().toDF("node", "parent"))(
+        Streams.hierarchyBatch(_, _, root2))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt36").toString)
       .start()
@@ -2341,8 +2380,7 @@ class StreamingSpec extends AnyFunSuite {
     Streams.hierarchyDeleteBatch(Seq(11L).toDF("node"), 1L, root)
     val after1 = b0.filterNot(r => Set(11L, 111L, 112L)(r._1))
     assert(closure() === batchRef(after1))
-    // crash replay of the delete batch: the subtree is already gone —
-    // absent deletes no-op and the committed bytes are reproduced
+    // crash replay of the delete batch: a no-op at the txn gate
     Streams.hierarchyDeleteBatch(Seq(11L).toDF("node"), 1L, root)
     assert(closure() === batchRef(after1))
     // batch 2: deleting a node that never existed is also a no-op
@@ -2381,8 +2419,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val root2 = java.nio.file.Files.createTempDirectory("t36d2").toString + "/h"
     val mem = MemoryStream[(Long, Option[Long], String)]
-    val q = Streams.hierarchyOpsStream(
-        mem.toDS().toDF("node", "parent", "op"), root2)
+    val q = Streams.eachBatch(mem.toDS().toDF("node", "parent", "op"))(
+        Streams.hierarchyOpsBatch(_, _, root2))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt36d").toString)
       .start()
@@ -2593,7 +2631,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val dir2 = java.nio.file.Files.createTempDirectory("gstore2").toString
     val mem = MemoryStream[(Long, Long)]
-    val q = Streams.graphEdgesStream(mem.toDS().toDF("src", "dst"), dir2)
+    val q = Streams.eachBatch(mem.toDS().toDF("src", "dst"))(
+        Streams.graphEdgesBatch(_, _, dir2))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckpt32").toString)
       .start()
@@ -2705,8 +2744,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val dir2 = java.nio.file.Files.createTempDirectory("gops2").toString
     val mem = MemoryStream[(Long, Long, String)]
-    val q = Streams.graphEdgesOpsStream(
-        mem.toDS().toDF("src", "dst", "op"), dir2)
+    val q = Streams.eachBatch(mem.toDS().toDF("src", "dst", "op"))(
+        Streams.graphEdgesOpsBatch(_, _, dir2))
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("ckptops").toString)
       .start()
