@@ -437,9 +437,10 @@ object Lake {
   /** Staged CONSUMER REPLAY of the multi-table feed: drain the staged
     * [[stagedMultiTableTxRoot]] root's manifest versions through
     * [[graft.sources.LakeTx.consumeChanges]] into per-table EPOCH stores
-    * (`<table>/b=<manifestV>` dirs — the T30 store discipline: one
-    * idempotent overwrite per (table, version), tombstones as dead
-    * rows), draining twice so the second pass must deliver nothing.
+    * (one [[graft.streaming.Streams.appendEpoch]] table per member,
+    * epoch = manifest version — the T30 store discipline: a replayed
+    * (table, version) is a no-op, tombstones are dead rows), draining
+    * twice so the second pass must deliver nothing.
     * This is S7's read half exercised end-to-end: a downstream replica
     * maintained purely from transaction-aligned increments. */
   def stagedTxFeedStoreDir(spark: SparkSession, dir: String): String =
@@ -449,9 +450,9 @@ object Lake {
       val cons = s"$out/_offset"
       def drain(): Seq[Long] =
         LakeTx.consumeChanges(spark, root, cons) { (t, batch, mv) =>
-          batch.withColumn("__live", col("_change_type") =!= "d")
-            .drop("_change_type", "_commit_version")
-            .write.mode("overwrite").parquet(s"$out/$t/b=$mv")
+          graft.streaming.Streams.appendEpoch(spark, s"$out/$t", mv)(
+            batch.withColumn("__live", col("_change_type") =!= "d")
+              .drop("_change_type", "_commit_version"))
         }
       val applied = drain()
       require(applied.nonEmpty, "feed drain delivered no manifest versions")
@@ -469,7 +470,7 @@ object Lake {
   val lakeTxFeedJoin: Q = (spark, dir) => {
     val out = stagedTxFeedStoreDir(spark, dir)
     def serve(table: String): DataFrame = {
-      val df = spark.read.parquet(s"$out/$table") // partition col b = manifestV
+      val df = graft.streaming.Streams.epochs(spark, s"$out/$table", table)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("id")).orderBy(col("b").desc)
       df.withColumn("__rn", row_number().over(w))

@@ -333,10 +333,11 @@ object LakeFormat {
 
   /** A POINTER file: one small file naming a version, the commit point
     * of every pointer-published state here (`_last_checkpoint`, a
-    * consumer's `_offset`, the T18 generation `_LATEST`). Absent, empty
-    * and unparsable all read as None — a torn write (possible only on a
-    * store with neither atomic rename nor atomic PUT) must never read as
-    * a committed version. One `exists` and one `open`. */
+    * consumer's `_offset`, the T18 generation `_LATEST`). Absent, empty,
+    * unparsable and checksum-mismatched (bytes rewritten behind a
+    * checksumming FileSystem's back) all read as None — a torn or foreign
+    * write must never read as a committed version, and the next
+    * [[writePointer]] repairs it. One `exists` and one `open`. */
   private[graft] def readPointer(spark: SparkSession, p: Path): Option[Long] = {
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(p)) None
@@ -344,6 +345,7 @@ object LakeFormat {
       val in = f.open(p)
       try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
         .trim.toLongOption
+      catch { case _: org.apache.hadoop.fs.ChecksumException => None }
       finally in.close()
     }
   }
@@ -607,15 +609,44 @@ object LakeFormat {
   }
 
   /** Blind append: no read-set, so a lost race just retries on the new
-    * tip — two concurrent appends both land, at consecutive versions. */
-  def append(df: DataFrame, root: String): Long = {
+    * tip — two concurrent appends both land, at consecutive versions.
+    * `txn` is [[merge]]'s exactly-once marker: a replayed (appId, version)
+    * at-or-below the committed mark is a no-op, and a retry that finds
+    * the same app's mark at-or-above ours among the commits it raced
+    * (a concurrent replay of this very batch landed first) drops its
+    * staged files and returns, as [[merge]]'s rule (c) does. */
+  def append(df: DataFrame, root: String,
+      txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
+    // the version the exactly-once gate last checked (txn appends only)
+    var seen = -1L
+    txn.foreach { case (app, tv) =>
+      val st = state(spark, root)
+      if (st.txns.get(app).exists(_ >= tv)) return st.version
+      seen = st.version
+    }
     val adds = writeData(df, root, readMeta(spark, root))
-    val lines = adds.map(addJson)
+    val lines = adds.map(addJson) ++
+      txn.map { case (app, tv) => txnJson(app, tv) }
+    beforeCommitHook()
     var attempts = 0
     while (attempts < 1000) {
       val claimed = lockFor(root).synchronized {
-        val v = listLogVersions(spark, root).max + 1
+        val tip = listLogVersions(spark, root).max
+        val replayed = txn.exists { case (app, tv) =>
+          (seen + 1 to tip).exists(v =>
+            readLogLines(spark, root, v).map(parseLine).exists {
+              case TxnA(`app`, t) => t >= tv
+              case _              => false
+            })
+        }
+        if (replayed) {
+          val f = fs(spark, root)
+          adds.foreach(a => f.delete(new Path(root, a.path), false))
+          return tip
+        }
+        seen = tip
+        val v = tip + 1
         if (tryCommit(spark, root, v, lines, op = "append")) Some(v) else None
       }
       claimed.foreach { v =>
@@ -1406,9 +1437,9 @@ object LakeFormat {
     * `maxCommits` per call), one `apply(batch, version)` per commit, and
     * advance the offset AFTER each apply returns — so a crash replays at
     * most the in-flight commit (at-least-once). Consumers are expected
-    * to be idempotent per commit version (the epoch-keyed store writes —
-    * postings/band/vector batches keyed `b=<version>` — are: a replayed
-    * epoch overwrites its own directory with identical rows). This is
+    * to be idempotent per commit version (the epoch-keyed stores —
+    * postings/band/vector epochs keyed by the version — are: a replayed
+    * epoch is a no-op at the store's exactly-once txn gate). This is
     * how a 100 TB deployment chains replica → serving indexes: each
     * maintained store tails the TABLE's commits instead of re-reading
     * the table or re-subscribing to the raw changelog.

@@ -43,9 +43,9 @@ object LakeTxSink {
       batchId: Long): Unit = {
     val spark = envelopes.sparkSession
     // an event for a table nobody configured must REFUSE, not vanish:
-    // silently dropping it would desynchronize the replica forever (the
-    // bandBatchDirs loud-failure discipline, applied to routing). One
-    // cheap aggregation over the increment-sized batch.
+    // silently dropping it would desynchronize the replica forever
+    // (fail loudly rather than serve a silent hole, applied to routing).
+    // One cheap aggregation over the increment-sized batch.
     // NULL source.table must count as stray too: `!isin(...)` is NULL
     // (not true) for NULL, which would slip past this guard and then
     // match no per-table `===` filter — vanishing silently

@@ -177,6 +177,102 @@ object Streams extends Serializable {
     Option.when(LakeFormat.tableExists(spark, root))(
       LakeFormat.snapshot(spark, root))
 
+  // the txn app ids every batch-keyed store's commits carry: `epoch`
+  // marks the last applied batch, `compact` the last compaction bound
+  private val EpochApp = "epoch"
+  private val CompactApp = "compact"
+
+  /** The one commit path of every BATCH-KEYED stream store (T13 bands
+    * and pairs, the retired-doc sets, T16, T17, T25, T27, T28's publish
+    * log, T30, T32, T33, T35, the S7 transaction feed): a lake table
+    * under `root` that grows by one epoch per batch, every row tagged
+    * with its batch id in column `b`.
+    *
+    * A batch id at-or-below the table's (`epoch`, id) txn mark already
+    * landed: return WITHOUT evaluating `rows`, so a replayed batch —
+    * the latest or any older one, before or after compaction — is a
+    * no-op and the table version does not move. Otherwise `rows` commits
+    * as ONE [[LakeFormat.append]] carrying the marker: a crash before the
+    * commit applied nothing, and the re-run completes it. Because every
+    * row carries `b`, a batch's prior state ([[epochsBelow]]) does not
+    * depend on which of its tables committed first when it writes two.
+    * One writer per root — the foreachBatch protocol; ids must rise.
+    */
+  private[graft] def appendEpoch(spark: org.apache.spark.sql.SparkSession,
+      root: String, batchId: Long)(rows: => DataFrame): Unit = {
+    val exists = LakeFormat.tableExists(spark, root)
+    if (exists && LakeFormat.state(spark, root).txns.get(EpochApp)
+        .exists(_ >= batchId)) return
+    val tagged = rows.withColumn("b", lit(batchId))
+    if (!exists)
+      LakeFormat.create(spark, root, Seq.empty, statsCols = Seq("b"),
+        schema = Some(tagged.schema))
+    LakeFormat.append(tagged, root, txn = Some((EpochApp, batchId)))
+    ()
+  }
+
+  /** Every committed row of the epochs strictly below `batchId` — a
+    * batch's prior state (None before the first commit). Pruned by the
+    * per-file `b` stats, so a batch never reads its own epoch. */
+  private def epochsBelow(spark: org.apache.spark.sql.SparkSession,
+      root: String, batchId: Long): Option[DataFrame] =
+    Option.when(LakeFormat.tableExists(spark, root))(
+      LakeFormat.scan(spark, root, col("b") < batchId).df)
+
+  /** Every committed row of an [[appendEpoch]] table, `b` included. */
+  private[graft] def epochs(spark: org.apache.spark.sql.SparkSession,
+      root: String, what: String): DataFrame = {
+    require(LakeFormat.tableExists(spark, root),
+      s"no committed $what batches under $root")
+    LakeFormat.snapshot(spark, root)
+  }
+
+  /** The rows of epochs ≤ `batchId` — the input of every as-of read.
+    * Refused loudly, never answered partially, when `batchId` falls
+    * below the last compaction bound (those epochs were folded together)
+    * or below the first committed epoch. */
+  private def epochsAsOf(spark: org.apache.spark.sql.SparkSession,
+      root: String, batchId: Long, what: String): DataFrame = {
+    val st = Option.when(LakeFormat.tableExists(spark, root))(
+      LakeFormat.state(spark, root))
+    val first = st.toSeq.flatMap(_.files)
+      .flatMap(_.stats.get("b").flatMap(_.min)).map(_.toLong).minOption
+    require(st.exists(_.txns.get(CompactApp).forall(_ <= batchId)) &&
+        first.forall(_ <= batchId),
+      s"no $what batches ≤ $batchId under $root " +
+        "(outside the compaction retention window, or before the seed)")
+    LakeFormat.scan(spark, root, col("b") <= batchId).df
+  }
+
+  /** Compact an [[appendEpoch]] table: ONE [[LakeFormat.overwrite]] of
+    * `transform(epochs ≤ upTo)` plus the epochs above `upTo` verbatim,
+    * carrying the (`compact`, upTo) txn marker — so a crash before the
+    * commit leaves reads unchanged and a re-run with the same bound is a
+    * no-op. A `transform` that aggregates `b` away (sums, re-written
+    * tombstone-free edges) gets `b = upTo` on its rows; one that keeps
+    * rows keeps their own `b`, so winner folds read identically before
+    * and after. Then [[LakeFormat.vacuum]] keeps only the current
+    * version's files: content `transform` dropped (shadowed versions,
+    * retired docs) is physically gone. Run the vacuum at a quiescent
+    * barrier: a reader still scanning the previous version would lose
+    * its files. As-of reads below `upTo` are refused from then on
+    * ([[epochsAsOf]]).
+    */
+  private def compactEpochs(spark: org.apache.spark.sql.SparkSession,
+      root: String, upTo: Long)(transform: DataFrame => DataFrame): Unit = {
+    require(LakeFormat.tableExists(spark, root),
+      s"no batches ≤ $upTo under $root")
+    val all = LakeFormat.snapshot(spark, root)
+    val folded = transform(all.filter(col("b") <= upTo))
+    LakeFormat.overwrite(
+      (if (folded.columns.contains("b")) folded
+       else folded.withColumn("b", lit(upTo)))
+        .unionByName(all.filter(col("b") > upTo)),
+      root, txn = Some((CompactApp, upTo)))
+    LakeFormat.vacuum(spark, root, keepVersions = 1, olderThanMs = 0L)
+    ()
+  }
+
   /** Durable incremental view maintenance (the production form of the
     * IVM the memory-sink spec demonstrates): each micro-batch folds its
     * OWN events to a per-group delta state (`Cdc.aggMaintainState` — no
@@ -302,23 +398,21 @@ object Streams extends Serializable {
     * cap (asserted by the spec's precondition; a production deployment
     * re-caps the store on compaction as a skew guard, a policy choice).
     *
-    * `docStream` must carry (doc_id, text); emits parquet under
-    * `pairDir` with (doc_a, doc_b) — read it via [[readNearDupPairs]].
+    * `docStream` must carry (doc_id, text); emits (doc_a, doc_b) rows
+    * into the `pairDir` store — read it via [[readNearDupPairs]].
     *
-    * IDEMPOTENT REPLAY: both stores are keyed by micro-batch —
-    * `<dir>/b=<batchId>/` — and a batch's write is a full OVERWRITE of
-    * its own subdirectory, with "prior" defined as the union of band
-    * directories with id strictly below the current batch. foreachBatch
-    * is at-least-once, so a crash-replayed batch recomputes from the
-    * identical inputs (its own increment + the same strictly-earlier
-    * store) and overwrites the identical output, instead of
-    * double-appending pairs and re-probing its own half-written bands as
-    * "prior" — the failure mode a flat append store has. The batch id is
-    * monotonic across restarts via the query checkpoint.
+    * IDEMPOTENT REPLAY: both stores are [[appendEpoch]] tables, "prior"
+    * is the band epochs strictly below the current batch
+    * ([[epochsBelow]]), and a batch id at-or-below a store's epoch mark
+    * is a no-op. foreachBatch is at-least-once, so a crash-replayed
+    * batch neither double-appends pairs nor re-probes its own bands as
+    * "prior" — the failure mode a flat append store has; a batch that
+    * committed its pairs but not its bands completes only the bands. The
+    * batch id is monotonic across restarts via the query checkpoint.
     *
     * One micro-batch ([[eachBatch]] drives it from a stream): calling it
-    * twice with the same (batch, batchId) leaves both stores
-    * byte-for-row identical.
+    * twice with the same (batch, batchId) leaves both stores untouched
+    * the second time.
     */
   def nearDupBatch(batch: DataFrame, batchId: Long, bandDir: String,
       pairDir: String,
@@ -327,25 +421,20 @@ object Streams extends Serializable {
     val bands = graft.operators.Text.minhashBands(
       graft.operators.Text.shingles(batch), maxBucket)
       .persist() // read 3x below: prior-probe, self-join, store write
-    val priorPaths = bandBatchDirs(spark, bandDir)
-      .collect { case (id, p) if id < batchId => p }
-    // a retired (erased) doc's stored bands must not form NEW pairs —
-    // the probe drops them like the readers do
-    val prior =
-      if (priorPaths.isEmpty) None
-      else Some(dropDead(spark.read.parquet(priorPaths: _*),
-        readDeadDocs(spark, bandDir)))
-    val vsPrior = prior.map { p =>
-      bands.join(p.withColumnRenamed("doc_id", "prior_id"), Seq("band", "key"))
-        .filter(col("doc_id") =!= col("prior_id"))
-        .select(least(col("doc_id"), col("prior_id")).as("doc_a"),
-          greatest(col("doc_id"), col("prior_id")).as("doc_b"))
+    appendEpoch(spark, pairDir, batchId) {
+      // a retired (erased) doc's stored bands must not form NEW pairs —
+      // the probe drops them like the readers do
+      val vsPrior = epochsBelow(spark, bandDir, batchId).map { p =>
+        bands.join(dropDead(p.drop("b"), readDeadDocs(spark, bandDir))
+            .withColumnRenamed("doc_id", "prior_id"), Seq("band", "key"))
+          .filter(col("doc_id") =!= col("prior_id"))
+          .select(least(col("doc_id"), col("prior_id")).as("doc_a"),
+            greatest(col("doc_id"), col("prior_id")).as("doc_b"))
+      }
+      val inBatch = graft.operators.Text.bandPairs(bands)
+      vsPrior.map(_.unionByName(inBatch)).getOrElse(inBatch).distinct()
     }
-    val inBatch = graft.operators.Text.bandPairs(bands)
-    val pairs = vsPrior.map(_.unionByName(inBatch)).getOrElse(inBatch)
-      .distinct()
-    pairs.write.mode("overwrite").parquet(s"$pairDir/b=$batchId")
-    bands.write.mode("overwrite").parquet(s"$bandDir/b=$batchId")
+    appendEpoch(spark, bandDir, batchId)(bands)
     bands.unpersist()
     ()
   }
@@ -354,62 +443,7 @@ object Streams extends Serializable {
     * batch id −1, below every real micro-batch id).
     */
   def seedBandStore(bands: DataFrame, bandDir: String): Unit =
-    bands.write.mode("overwrite").parquet(s"$bandDir/b=-1")
-
-  private def bandBatchDirs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[(Long, String)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val all = fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("b="))
-        .flatMap(s => s.getPath.getName.stripPrefix("b=").toLongOption
-          .map(_ -> s.getPath.toString))
-      // a batch dir is COMMITTED only once the job committer's _SUCCESS
-      // marker lands. A dir without it is a torn write from a crash
-      // mid-batch: the sink write happens before the checkpoint
-      // advances, so that batch WILL be replayed and its dir rewritten —
-      // readers must skip it rather than union partial parquet into a
-      // serve (the T33-manifest lesson, applied to every band store).
-      val (committed, torn) = all.partition { case (_, path) =>
-        fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")) }
-      // every dir torn is a different story: either the store is wholly
-      // corrupt or the committer runs with marksuccessfuljobs=false —
-      // serving an EMPTY view of a non-empty store must fail loudly
-      require(torn.isEmpty || committed.nonEmpty,
-        s"every batch dir under $dir lacks a _SUCCESS marker — torn " +
-          "store or a committer configured without success markers; " +
-          "refusing to serve an empty view of a non-empty store")
-      // under the single-writer foreachBatch protocol only the
-      // MAX-batch-id dir can legitimately be torn (crash mid-batch; the
-      // checkpoint hasn't advanced, so that batch replays and rewrites
-      // it). A torn INTERIOR dir — one below a committed id — cannot be
-      // a pending replay: serving around it would be a silent hole in
-      // the store (manual cleanup / fs fault), so fail loudly instead.
-      if (torn.nonEmpty) {
-        val maxCommitted = committed.map(_._1).max
-        val interior = torn.filter(_._1 < maxCommitted).map(_._1).sorted
-        require(interior.isEmpty,
-          s"batch dir(s) b=${interior.mkString(",")} under $dir lack a " +
-            s"_SUCCESS marker but sit BELOW committed batch " +
-            s"b=$maxCommitted — an interior gap can never be replayed " +
-            "by the single writer; refusing to serve a view with a hole")
-      }
-      committed.sortBy(_._1)
-    }
-  }
-
-  /** Union of every committed `b=*` directory under a batch-keyed store
-    * — the one reader shape every such store shares (pairs, bands,
-    * enriched facts, published events).
-    */
-  private def readBatchStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, what: String): DataFrame = {
-    val paths = bandBatchDirs(spark, dir).map(_._2)
-    require(paths.nonEmpty, s"no committed $what batches under $dir")
-    spark.read.parquet(paths: _*)
-  }
+    appendEpoch(bands.sparkSession, bandDir, -1L)(bands)
 
   // ---------------- dead-doc retirement for the content-keyed stores
   /** DEAD-DOC RETIREMENT for the append-only content-keyed stores
@@ -418,9 +452,9 @@ object Streams extends Serializable {
     * — their rows are content-derived and IMMUTABLE (a band signature,
     * a shingle hash, a discovered pair), with no per-key versioning to
     * tombstone through — so retirement is a store-side dead set: an
-    * epoch-keyed `_dead/b=<id>` marker dir (outside the `b=*` data
-    * namespace, so data readers never union it) holding the retired
-    * doc ids. Readers anti-join it (erasure-request-bounded, so the
+    * [[appendEpoch]] table at `<store>/_dead` (beside the store's own
+    * log and data, never read as store rows) holding the retired doc
+    * ids. Readers anti-join it (erasure-request-bounded, so the
     * probe broadcasts); PROBES skip dead docs too, so an erased doc
     * stops forming new pairs; compaction drops the dead docs' rows
     * PHYSICALLY — after sweep + compaction no store retains
@@ -428,25 +462,20 @@ object Streams extends Serializable {
     * (tiny, and they keep a replayed pre-compaction epoch from
     * resurrecting retired rows into the read view).
     *
-    * Replay: a marker write is a full overwrite of its own epoch dir
-    * derived from its own rows only — re-delivery reproduces its
-    * bytes; retiring an unknown/already-dead doc is a no-op by the
-    * anti-join semantics.
+    * Replay: a re-delivered epoch is a no-op at the epoch gate;
+    * retiring an unknown/already-dead doc is a no-op by the anti-join
+    * semantics.
     */
   def retireDocsBatch(deleteIds: DataFrame, batchId: Long,
-      storeDir: String): Unit = {
-    deleteIds.select(col("doc_id")).distinct()
-      .write.mode("overwrite").parquet(s"$storeDir/_dead/b=$batchId")
-    ()
-  }
+      storeDir: String): Unit =
+    appendEpoch(deleteIds.sparkSession, s"$storeDir/_dead", batchId)(
+      deleteIds.select(col("doc_id")).distinct())
 
   /** The store's retired-doc set (None when nothing was ever retired). */
   def readDeadDocs(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Option[DataFrame] = {
-    val paths = bandBatchDirs(spark, s"$storeDir/_dead").map(_._2)
-    if (paths.isEmpty) None
-    else Some(spark.read.parquet(paths: _*).select(col("doc_id")).distinct())
-  }
+      storeDir: String): Option[DataFrame] =
+    readStore(spark, s"$storeDir/_dead")
+      .map(_.select(col("doc_id")).distinct())
 
   /** Id columns a store row can reference a document through — every
     * one must clear the dead set for the row to survive. */
@@ -475,71 +504,58 @@ object Streams extends Serializable {
     }
 
   /** All discovered pairs (the consumer view of [[nearDupBatch]]'s
-    * pair store): the union of every batch's pair directory. Pairs are
-    * already globally unique — each is discovered exactly once, in the
-    * batch where its later member arrived.
+    * pair store): every committed epoch's rows. Pairs are already
+    * globally unique — each is discovered exactly once, in the batch
+    * where its later member arrived.
     */
   def readNearDupPairs(spark: org.apache.spark.sql.SparkSession,
       pairDir: String): DataFrame =
-    dropDead(readBatchStore(spark, pairDir, "pair"),
+    dropDead(epochs(spark, pairDir, "pair").drop("b"),
       readDeadDocs(spark, pairDir))
 
   /** The full band index (seed + every committed batch), retired docs
     * dropped. */
   def readBandStore(spark: org.apache.spark.sql.SparkSession,
       bandDir: String): DataFrame =
-    dropDead(readBatchStore(spark, bandDir, "band"),
+    dropDead(epochs(spark, bandDir, "band").drop("b"),
       readDeadDocs(spark, bandDir))
 
-  /** Compact the band store: merge every batch directory with id ≤
-    * `upTo` into ONE directory keyed `b=upTo`, optionally RE-CAPPING
-    * (band, key) buckets to `maxBucket` members — the small-files AND
-    * skew repair for a long-running incremental near-dup index. A store
-    * accumulates one directory per micro-batch forever, and a
-    * boilerplate-heavy bucket that stayed under the per-batch cap can
-    * grow unboundedly ACROSS batches; the per-batch probe join against
-    * such a bucket is exactly the hot-key melt the batch path's cap
-    * exists to prevent. Re-capping on compaction is the documented
+  /** Compact the band store: rewrite every epoch ≤ `upTo` as one
+    * ([[compactEpochs]]), dropping retired docs and optionally
+    * RE-CAPPING (band, key) buckets to `maxBucket` members — the
+    * small-files AND skew repair for a long-running incremental near-dup
+    * index. A store grows by one epoch of files per micro-batch
+    * forever, and a boilerplate-heavy bucket that stayed under the
+    * per-batch cap can grow unboundedly ACROSS batches; the per-batch
+    * probe join against such a bucket is exactly the hot-key melt the
+    * batch path's cap exists to prevent. Re-capping on compaction is the documented
     * skew-guard policy: after it, a degenerate bucket stops producing
     * new pairs (a deliberate recall trade, same as the batch cap).
     *
-    * MUST run at a quiescent barrier: no in-flight micro-batch, and no
-    * possible replay of a batch id ≤ `upTo` (a replayed batch excludes
-    * its own id from "prior", but the compacted directory carries id
-    * `upTo` ≥ the replayed id, so the replay would see almost no prior
-    * and emit wrong pairs). Running it between `processAllAvailable()`
-    * and the next `start()` — or any checkpoint-committed boundary —
-    * satisfies this; the same barrier every streaming-store compaction
-    * (RocksDB, Delta OPTIMIZE) requires.
-    *
-    * Crash-safe via [[compactStore]]'s staged-merge protocol.
+    * A replayed batch id ≤ `upTo` stays a no-op at the epoch gate, so
+    * compaction needs no barrier against replays; only its vacuum wants
+    * a quiescent moment ([[compactEpochs]]).
     */
   def compactBandStore(spark: org.apache.spark.sql.SparkSession,
       bandDir: String, upTo: Long, maxBucket: Int = Int.MaxValue): Unit = {
     val dead = readDeadDocs(spark, bandDir) // retired rows leave PHYSICALLY
-    compactStore(spark, bandDir, upTo,
-      df => {
-        val live = dropDead(df, dead)
-        if (maxBucket == Int.MaxValue) live
-        else graft.operators.Text.capBuckets(live, maxBucket)
-      })
+    compactEpochs(spark, bandDir, upTo) { df =>
+      val live = dropDead(df, dead)
+      if (maxBucket == Int.MaxValue) live
+      else graft.operators.Text.capBuckets(live, maxBucket)
+    }
   }
 
-  /** Compact the PAIR store: [[nearDupBatch]] grows one `pairDir`
-    * directory per micro-batch forever and [[readNearDupPairs]] unions
-    * all of them — the same small-files pathology the band side has.
-    * Pairs are globally unique (each discovered exactly once, in the
-    * batch where its later member arrived), so compaction is pure
-    * concatenation under the same staged protocol: afterwards the
-    * consumer reads ONE directory. Same quiescent-barrier requirement
-    * as [[compactBandStore]] — no in-flight batch, no possible replay
-    * of an id ≤ `upTo` (a replayed batch would overwrite the compacted
-    * `b=upTo` dir with only its own pairs).
+  /** Compact the PAIR store: [[nearDupBatch]] grows one epoch of files
+    * per micro-batch forever — the same small-files pathology the band
+    * side has. Pairs are globally unique (each discovered exactly once,
+    * in the batch where its later member arrived), so compaction is
+    * pure concatenation minus retired docs ([[compactEpochs]]).
     */
   def compactPairStore(spark: org.apache.spark.sql.SparkSession,
       pairDir: String, upTo: Long): Unit = {
     val dead = readDeadDocs(spark, pairDir) // retired rows leave PHYSICALLY
-    compactStore(spark, pairDir, upTo, df => dropDead(df, dead))
+    compactEpochs(spark, pairDir, upTo)(dropDead(_, dead))
   }
 
   /** T25 — INCREMENTAL containment detection: the x2e/x7m verbatim-embed
@@ -562,9 +578,9 @@ object Streams extends Serializable {
     *      docs (join bounded by candidates) and verifies exact shared
     *      counts — emitted verdicts are exact regardless of the prune;
     *   4. adds in-batch pairs via the batch verifier on the increment;
-    *   5. writes pairs and the increment's shingles to batchId-keyed
-    *      overwrite dirs — T13's idempotent-replay protocol; compaction
-    *      via [[compactShingleStore]]/[[compactPairStore]].
+    *   5. appends pairs and the increment's shingles as epochs of their
+    *      stores ([[appendEpoch]]) — T13's idempotent-replay protocol;
+    *      compaction via [[compactShingleStore]]/[[compactPairStore]].
     *
     * Each pair is discovered exactly once, in the batch where its later
     * member arrives, so [[readNearDupPairs]] is the consumer here too.
@@ -587,153 +603,76 @@ object Streams extends Serializable {
     val spark = batch.sparkSession
     val T = graft.operators.Text
     val sh = T.shingles(batch).persist()
-    val priorPaths = bandBatchDirs(spark, shingleDir)
-      .collect { case (id, p) if id < batchId => p }
-    val inBatch = T.containmentPairs(sh, maxDf, cNum, cDen)
     var hitRef: Option[DataFrame] = None
-    val pairs = if (priorPaths.isEmpty) inBatch else {
-      // retired docs' shingles neither form new candidates nor count
-      // toward df — the store is probed as if they were never written
-      val store = dropDead(spark.read.parquet(priorPaths: _*),
-        readDeadDocs(spark, shingleDir))
-      // prior-doc rows sharing any shingle with the increment (equi-join).
-      // df is computed FIRST, over the unpersisted hit stream (column-
-      // pruned to hs), and the hit set is pruned to rare shingles BEFORE
-      // it is persisted or joined — a hot boilerplate shingle with df far
-      // above maxDf can never form a candidate pair, so caching its
-      // store-row explosion would be pure memory/skew cost (the batch
-      // path prunes hot shingles before its self-join for the same
-      // reason).
-      val hit0 = store.join(sh.select(col("hs")).distinct(), Seq("hs"))
-        .withColumnRenamed("doc_id", "prior_id")
-      // df at current state, for the increment's shingles only
-      val dfTab = sh.groupBy(col("hs")).agg(count(lit(1)).as("n_inc"))
-        .join(hit0.groupBy(col("hs")).agg(count(lit(1)).as("n_prior")),
-          Seq("hs"), "left")
-        .select(col("hs"),
-          (col("n_inc") + coalesce(col("n_prior"), lit(0L))).as("df"))
-      val rare = dfTab.filter(col("df") <= maxDf).select(col("hs"))
-      val hit = hit0.join(rare, Seq("hs")).persist()
-      hitRef = Some(hit)
-      val cand = sh.join(rare, Seq("hs")).join(hit, Seq("hs"))
-        .filter(col("doc_id") =!= col("prior_id"))
-        .select(col("doc_id"), col("prior_id")).distinct()
-      // full shingle sets of candidate prior docs only
-      val priorSh = store.join(
-        cand.select(col("prior_id").as("doc_id")).distinct(), Seq("doc_id"))
-      val cntInc = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("ni"))
-      val cntPrior = priorSh.groupBy(col("doc_id")).agg(count(lit(1)).as("np"))
-      val shared = cand.as("c")
-        .join(sh.as("x"), col("c.doc_id") === col("x.doc_id"))
-        .join(priorSh.as("y"),
-          col("c.prior_id") === col("y.doc_id") && col("x.hs") === col("y.hs"))
-        .groupBy(col("c.doc_id").as("i"), col("c.prior_id").as("p"))
-        .agg(count(lit(1)).as("shared"))
-      val cross = shared
-        .join(cntInc.as("ci"), col("i") === col("ci.doc_id"))
-        .join(cntPrior.as("cp"), col("p") === col("cp.doc_id"))
-        .select(least(col("i"), col("p")).as("da"),
-          greatest(col("i"), col("p")).as("db"),
-          col("shared"),
-          when(col("i") < col("p"), col("ni")).otherwise(col("np")).as("na"),
-          when(col("i") < col("p"), col("np")).otherwise(col("ni")).as("nb"))
-        .filter(col("shared") * cDen >= least(col("na"), col("nb")) * cNum)
-        // tie-break matches Text.containmentOf: equal sizes drop the
-        // larger doc_id, the min-id doc survives
-        .withColumn("contained",
-          when(col("na") < col("nb"), col("da")).otherwise(col("db")))
-      inBatch.unionByName(cross)
+    appendEpoch(spark, pairDir, batchId) {
+      val inBatch = T.containmentPairs(sh, maxDf, cNum, cDen)
+      epochsBelow(spark, shingleDir, batchId).fold(inBatch) { prior =>
+        // retired docs' shingles neither form new candidates nor count
+        // toward df — the store is probed as if they were never written
+        val store = dropDead(prior.drop("b"), readDeadDocs(spark, shingleDir))
+        // prior-doc rows sharing any shingle with the increment (equi-join).
+        // df is computed FIRST, over the unpersisted hit stream (column-
+        // pruned to hs), and the hit set is pruned to rare shingles BEFORE
+        // it is persisted or joined — a hot boilerplate shingle with df far
+        // above maxDf can never form a candidate pair, so caching its
+        // store-row explosion would be pure memory/skew cost (the batch
+        // path prunes hot shingles before its self-join for the same
+        // reason).
+        val hit0 = store.join(sh.select(col("hs")).distinct(), Seq("hs"))
+          .withColumnRenamed("doc_id", "prior_id")
+        // df at current state, for the increment's shingles only
+        val dfTab = sh.groupBy(col("hs")).agg(count(lit(1)).as("n_inc"))
+          .join(hit0.groupBy(col("hs")).agg(count(lit(1)).as("n_prior")),
+            Seq("hs"), "left")
+          .select(col("hs"),
+            (col("n_inc") + coalesce(col("n_prior"), lit(0L))).as("df"))
+        val rare = dfTab.filter(col("df") <= maxDf).select(col("hs"))
+        val hit = hit0.join(rare, Seq("hs")).persist()
+        hitRef = Some(hit)
+        val cand = sh.join(rare, Seq("hs")).join(hit, Seq("hs"))
+          .filter(col("doc_id") =!= col("prior_id"))
+          .select(col("doc_id"), col("prior_id")).distinct()
+        // full shingle sets of candidate prior docs only
+        val priorSh = store.join(
+          cand.select(col("prior_id").as("doc_id")).distinct(), Seq("doc_id"))
+        val cntInc = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("ni"))
+        val cntPrior = priorSh.groupBy(col("doc_id")).agg(count(lit(1)).as("np"))
+        val shared = cand.as("c")
+          .join(sh.as("x"), col("c.doc_id") === col("x.doc_id"))
+          .join(priorSh.as("y"),
+            col("c.prior_id") === col("y.doc_id") && col("x.hs") === col("y.hs"))
+          .groupBy(col("c.doc_id").as("i"), col("c.prior_id").as("p"))
+          .agg(count(lit(1)).as("shared"))
+        val cross = shared
+          .join(cntInc.as("ci"), col("i") === col("ci.doc_id"))
+          .join(cntPrior.as("cp"), col("p") === col("cp.doc_id"))
+          .select(least(col("i"), col("p")).as("da"),
+            greatest(col("i"), col("p")).as("db"),
+            col("shared"),
+            when(col("i") < col("p"), col("ni")).otherwise(col("np")).as("na"),
+            when(col("i") < col("p"), col("np")).otherwise(col("ni")).as("nb"))
+          .filter(col("shared") * cDen >= least(col("na"), col("nb")) * cNum)
+          // tie-break matches Text.containmentOf: equal sizes drop the
+          // larger doc_id, the min-id doc survives
+          .withColumn("contained",
+            when(col("na") < col("nb"), col("da")).otherwise(col("db")))
+        inBatch.unionByName(cross)
+      }
     }
-    pairs.write.mode("overwrite").parquet(s"$pairDir/b=$batchId")
-    sh.write.mode("overwrite").parquet(s"$shingleDir/b=$batchId")
+    appendEpoch(spark, shingleDir, batchId)(sh)
     hitRef.foreach(_.unpersist())
     sh.unpersist()
     ()
   }
 
-  /** Compact the T25 shingle store: per-batch dirs are disjoint by
-    * doc_id (each doc shingled once, in its arrival batch), so the merge
-    * is pure concatenation under [[compactStore]]'s staged protocol.
-    * Same quiescent-barrier requirement as [[compactBandStore]].
+  /** Compact the T25 shingle store: epochs are disjoint by doc_id
+    * (each doc shingled once, in its arrival batch), so the merge is
+    * pure concatenation minus retired docs ([[compactEpochs]]).
     */
   def compactShingleStore(spark: org.apache.spark.sql.SparkSession,
       shingleDir: String, upTo: Long): Unit = {
     val dead = readDeadDocs(spark, shingleDir) // retired rows leave PHYSICALLY
-    compactStore(spark, shingleDir, upTo, df => dropDead(df, dead))
-  }
-
-  /** Staged-merge compaction shared by every batchId-keyed directory
-    * store here (bands, pairs, vector index): merge every `b=<id>` dir
-    * with id ≤ `upTo` into ONE dir keyed `b=upTo`, `transform` applied
-    * to the merged frame (bucket re-cap for bands; identity for pairs).
-    *
-    * Protocol: (1) merge into a `_compact_b=<upTo>` staging dir —
-    * invisible to readers, which list only `b=*` dirs — then record the
-    * merged batch-id set in a `_MANIFEST` file written AFTER the data
-    * (parquet `_SUCCESS` + manifest together mark a COMPLETE stage);
-    * (2) delete the source batch dirs; (3) rename the stage into place.
-    * The rename result is CHECKED: Hadoop FileSystem.rename reports
-    * failure by returning false, not by throwing, and ignoring it would
-    * leave the merged store invisible in the staging dir — every later
-    * probe would then silently see an empty prior index and emit wrong
-    * (missing) pairs. A failed rename aborts loudly with the staged
-    * data retained; the re-run adopts the completed stage.
-    *
-    * Crash/staleness rules (a stage can be left over from a crash at
-    * any point, or from an ABANDONED compaction after which new batches
-    * landed): a re-run ADOPTS a completed stage iff its manifest COVERS
-    * the batch dirs still present (⊇ — a mid-delete crash leaves a
-    * subset of what was merged); a completed stage whose manifest
-    * misses a present batch dir is STALE — adopting it verbatim would
-    * delete data it never merged — so it is discarded and re-merged.
-    * Incomplete stages (no `_SUCCESS`/manifest) and stages at other
-    * `upTo` values are likewise deleted on entry.
-    */
-  private def compactStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, upTo: Long, transform: DataFrame => DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // GC stages abandoned at OTHER upTo values — never adoptable here,
-    // and left alone they accumulate forever
-    if (fs.exists(root))
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("_compact_b=")
-          && s.getPath.getName != s"_compact_b=$upTo")
-        .foreach(s => fs.delete(s.getPath, true))
-    val tmp = new Path(dir, s"_compact_b=$upTo")
-    val manifest = new Path(tmp, "_MANIFEST")
-    def manifestIds(): Option[Set[Long]] =
-      if (!fs.exists(manifest)) None
-      else {
-        val in = fs.open(manifest)
-        try Some(new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-          .trim.split(",").filter(_.nonEmpty).map(_.toLong).toSet)
-        finally in.close()
-      }
-    val present = bandBatchDirs(spark, dir).filter(_._1 <= upTo)
-    // empty `present` adopts even without a manifest: a crash between
-    // the manifest delete and the rename leaves the stage as the ONLY
-    // copy of the merged data
-    val adoptable = fs.exists(new Path(tmp, "_SUCCESS")) &&
-      (present.isEmpty ||
-        manifestIds().exists(ids => present.map(_._1).toSet.subsetOf(ids)))
-    if (!adoptable) {
-      require(present.nonEmpty, s"no batches ≤ $upTo under $dir")
-      if (fs.exists(tmp)) fs.delete(tmp, true) // incomplete or stale stage
-      transform(spark.read.parquet(present.map(_._2): _*))
-        .write.mode("overwrite").parquet(tmp.toString)
-      val out = fs.create(manifest, true)
-      try out.write(present.map(_._1).sorted.mkString(",").getBytes("UTF-8"))
-      finally out.close()
-    }
-    bandBatchDirs(spark, dir).filter(_._1 <= upTo)
-      .foreach { case (_, p) => fs.delete(new Path(p), true) }
-    fs.delete(manifest, false) // keep the published layout parquet-only
-    require(fs.rename(tmp, new Path(dir, s"b=$upTo")),
-      s"compaction rename of $tmp failed; staged data retained — re-run adopts it")
-    ()
+    compactEpochs(spark, shingleDir, upTo)(dropDead(_, dead))
   }
 
   // --------------------------------- T16 incremental vector-index upsert
@@ -748,8 +687,8 @@ object Streams extends Serializable {
     * against the EXISTING codebooks (frozen models: production refits
     * them offline, rarely — [[graft.operators.Vectors.encodeForIndex]],
     * shuffle-free per-row expression work over the increment only) and
-    * written under `indexDir/b=<batchId>`, each row tagged with its
-    * batch id.
+    * appended as one epoch of the `indexDir` store ([[appendEpoch]]),
+    * each row tagged with its batch id.
     *
     * UPSERT semantics ride the layout: [[readVectorIndex]] folds
     * latest-batch-wins per vec_id, so a re-embedded doc's newest
@@ -760,20 +699,18 @@ object Streams extends Serializable {
     * exactly (T16 spec; `x3l` oracle-checks the same equivalence
     * inline).
     *
-    * IDEMPOTENT REPLAY, the [[nearDupBatch]] contract: a batch's write
-    * is a full overwrite of its own subdirectory, derived only from its
-    * own rows and the frozen models, so an at-least-once replay
-    * rewrites identical bytes.
+    * IDEMPOTENT REPLAY, the [[nearDupBatch]] contract: a batch id
+    * at-or-below the store's epoch mark is a no-op, so an at-least-once
+    * replay — even of an older id after [[compactVectorIndex]] — cannot
+    * resurrect an encoding a later epoch superseded or deleted.
     */
   def vectorIndexBatch(batch: DataFrame, batchId: Long, indexDir: String,
       coarse: Array[Array[Float]],
       books: Array[Array[Array[Float]]],
       encoder: (DataFrame, Array[Array[Float]], Array[Array[Array[Float]]])
         => DataFrame = graft.operators.Vectors.encodeForIndex): Unit =
-    writeIndexEpoch(
-      encoder(batch, coarse, books)
-        .withColumn("live", lit(true)),
-      batchId, indexDir)
+    appendEpoch(batch.sparkSession, indexDir, batchId)(
+      encoder(batch, coarse, books).withColumn("live", lit(true)))
 
   /** Upserts AND deletions in one index epoch: a deletion rides as a
     * TOMBSTONE row (live=false, cluster −1, null codes/embedding)
@@ -791,33 +728,28 @@ object Streams extends Serializable {
       batchId: Long, indexDir: String, coarse: Array[Array[Float]],
       books: Array[Array[Array[Float]]],
       encoder: (DataFrame, Array[Array[Float]], Array[Array[Array[Float]]])
-        => DataFrame = graft.operators.Vectors.encodeForIndex): Unit = {
-    // same-batch key overlap would TIE the winner-per-vec_id fold (both
-    // rows share `b`) — refuse loudly, as postingsApplyBatch does
-    require(deleteIds.join(upserts.select(col("vec_id")), Seq("vec_id"))
-        .isEmpty,
-      "vectorIndexApplyBatch: a vec_id appears in both upserts and " +
-        "deleteIds of one epoch — the fold would tie; pre-fold the " +
-        "changelog to one winner per key (reembedIndexBatch does).")
-    val enc = encoder(upserts, coarse, books).withColumn("live", lit(true))
-    // tombstone columns derive from the encoder's own output schema so a
-    // CARRYING encoder (encodeForIndexCarry: label, license tier, …)
-    // keeps every epoch schema-identical — carried attributes are typed
-    // nulls on a tombstone, which the fold never serves (live=false)
-    val fixed: Map[String, org.apache.spark.sql.Column] = Map(
-      "cluster" -> lit(-1), "vec_id" -> col("vec_id"))
-    val dead = deleteIds.select(enc.drop("live").schema.fields.map(f =>
-      fixed.getOrElse(f.name, lit(null).cast(f.dataType)).as(f.name))
-      :+ lit(false).as("live"): _*)
-    writeIndexEpoch(enc.unionByName(dead), batchId, indexDir)
-  }
-
-  private def writeIndexEpoch(rows: DataFrame, batchId: Long,
-      indexDir: String): Unit = {
-    rows.withColumn("b", lit(batchId))
-      .write.mode("overwrite").parquet(s"$indexDir/b=$batchId")
-    ()
-  }
+        => DataFrame = graft.operators.Vectors.encodeForIndex): Unit =
+    appendEpoch(upserts.sparkSession, indexDir, batchId) {
+      // same-batch key overlap would TIE the winner-per-vec_id fold (both
+      // rows share `b`) — refuse loudly, as postingsApplyBatch does
+      require(deleteIds.join(upserts.select(col("vec_id")), Seq("vec_id"))
+          .isEmpty,
+        "vectorIndexApplyBatch: a vec_id appears in both upserts and " +
+          "deleteIds of one epoch — the fold would tie; pre-fold the " +
+          "changelog to one winner per key (reembedIndexBatch does).")
+      val enc = encoder(upserts, coarse, books).withColumn("live", lit(true))
+      // tombstone columns derive from the encoder's own output schema so
+      // a CARRYING encoder (encodeForIndexCarry: label, license tier, …)
+      // keeps every epoch schema-identical — carried attributes are
+      // typed nulls on a tombstone, which the fold never serves
+      // (live=false)
+      val fixed: Map[String, org.apache.spark.sql.Column] = Map(
+        "cluster" -> lit(-1), "vec_id" -> col("vec_id"))
+      val dead = deleteIds.select(enc.drop("live").schema.fields.map(f =>
+        fixed.getOrElse(f.name, lit(null).cast(f.dataType)).as(f.name))
+        :+ lit(false).as("live"): _*)
+      enc.unionByName(dead)
+    }
 
   /** The full CDC → re-embed → index pipeline in one micro-batch: a
     * DOCUMENT changelog batch (envelope-shaped, `after.id`/`after.text`)
@@ -884,7 +816,7 @@ object Streams extends Serializable {
 
   /** Consumer view of the incremental index: one row per vec_id, the
     * encoding from its HIGHEST batch id (a vec_id appears at most once
-    * per batch dir, so the winner is unique), tombstone winners
+    * per epoch, so the winner is unique), tombstone winners
     * filtered AFTER the fold — fold-then-filter is what makes a delete
     * irreversible by older encodings. The result feeds `pqSearchIndex`
     * directly.
@@ -896,28 +828,27 @@ object Streams extends Serializable {
   /** The index AS OF epoch `batchId` (inclusive) — byte-reproducible
     * historical serving for lineage and debugging ("which index
     * answered this training job's queries"): the fold runs over only
-    * the batch dirs with id ≤ `batchId`. Compaction collapses history:
-    * after `compactVectorIndex(upTo)` the merged dir carries id `upTo`,
-    * so as-of reads at t ≥ upTo stay exact (the merged rows are the
-    * fold of everything ≤ upTo) while t < upTo is outside the retention
-    * window and REFUSED loudly, never a silently-partial answer.
+    * the epochs with id ≤ `batchId`. Compaction collapses history:
+    * after `compactVectorIndex(upTo)` as-of reads at t ≥ upTo stay exact
+    * (the compacted rows are the fold of everything ≤ upTo) while
+    * t < upTo is outside the retention window and REFUSED loudly, never
+    * a silently-partial answer ([[epochsAsOf]]).
     */
   def readVectorIndexAsOf(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, batchId: Long): DataFrame = {
-    val paths = bandBatchDirs(spark, indexDir)
-      .filter(_._1 <= batchId).map(_._2)
-    require(paths.nonEmpty,
-      s"no index batches ≤ $batchId under $indexDir " +
-        "(outside the compaction retention window, or before the seed)")
+      indexDir: String, batchId: Long): DataFrame =
+    foldVectorIndex(epochsAsOf(spark, indexDir, batchId, "index"))
+      .drop("b", "live")
+
+  /** Latest-batch-wins per vec_id, tombstone winners dropped — shared by
+    * the reads and [[compactVectorIndex]]. */
+  private def foldVectorIndex(df: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("b").desc)
-    spark.read.parquet(paths: _*)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("live"))
-      .drop("__rn", "b", "live")
+    df.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1 && col("live")).drop("__rn")
   }
 
-  /** Compact the vector index: merge batch dirs ≤ `upTo` into one AND
+  /** Compact the vector index: rewrite the epochs ≤ `upTo` as one AND
     * drop shadowed rows (superseded encodings of re-embedded vec_ids) —
     * the winner fold moved from read time into storage, so a
     * long-running index stops paying the read-side window over every
@@ -925,19 +856,12 @@ object Streams extends Serializable {
     * batch ≤ `upTo` participates in the same fold, so nothing older
     * remains for a tombstone to suppress, and any batch > `upTo`
     * out-ranks it anyway — deleted vec_ids simply vanish from storage.
-    * Surviving rows keep their `b` tag (the fold keys on the COLUMN,
-    * not the directory), so reads before and after compaction are
-    * identical. Same staged protocol and quiescent-barrier requirement
-    * as [[compactBandStore]].
+    * Surviving rows keep their `b` tag, so reads before and after
+    * compaction are identical ([[compactEpochs]]).
     */
   def compactVectorIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, upTo: Long): Unit =
-    compactStore(spark, indexDir, upTo, df => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("b").desc)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && col("live")).drop("__rn")
-    })
+    compactEpochs(spark, indexDir, upTo)(foldVectorIndex)
 
   // ------------------------------- T30 incremental BM25 postings index
   /** T30 — incremental SEARCH-index maintenance: the T16 upsert/tombstone
@@ -945,8 +869,9 @@ object Streams extends Serializable {
     * FULL inverted-index rows of just its own documents
     * ([[graft.operators.Text.docPostings]]: per-(doc, token) tf rows plus
     * one META row per doc carrying dl — the doc-exists marker that keeps
-    * corpus statistics exact), under `postingsDir/b=<batchId>`; a delete
-    * rides as a dead META row through the same fold.
+    * corpus statistics exact), as one epoch of the `postingsDir` store
+    * ([[appendEpoch]]); a delete rides as a dead META row through the
+    * same fold.
     *
     * The fold is winner-BATCH-per-doc, not winner-row: a rewritten
     * document may LOSE tokens, so folding per (doc, token) would leak
@@ -958,35 +883,33 @@ object Streams extends Serializable {
     * stream-maintained ≡ batch is exact, not approximate (spec; the
     * `x4t` oracle checks the identical fold in-plan).
     *
-    * IDEMPOTENT REPLAY: a batch's write is a full overwrite of its own
-    * subdirectory derived only from its own rows (the [[nearDupBatch]]
-    * contract). 100 TB shape: per-epoch work is increment-sized
+    * IDEMPOTENT REPLAY: a batch id at-or-below the epoch mark is a no-op
+    * (the [[nearDupBatch]] contract). 100 TB shape: per-epoch work is
+    * increment-sized
     * expression + one map-side-combined groupBy; the read fold is one
     * window keyed by doc_id; production compacts with
     * [[compactPostings]] so the fold stops paying for history.
     */
   def postingsApplyBatch(upserts: DataFrame, deleteIds: DataFrame,
-      batchId: Long, postingsDir: String): Unit = {
-    // key-disjointness is load-bearing: a doc_id in BOTH sides of one
-    // batch would share one `b`, and the winner-batch fold keeps live
-    // rows — the tombstone would silently lose. A changelog-fed caller
-    // cannot produce this (bm25IndexBatch folds to one winner per key);
-    // the public API refuses it loudly.
-    require(deleteIds.join(upserts.select(col("doc_id")), Seq("doc_id"))
-        .isEmpty,
-      "postingsApplyBatch: a doc_id appears in both upserts and " +
-        "deleteIds of one batch — the in-batch tombstone would silently " +
-        "lose to the upsert; pre-fold the changelog to one winner per " +
-        "key (bm25IndexBatch does) or split across batches.")
-    val live = graft.operators.Text.docPostings(upserts)
-      .withColumn("live", lit(true))
-    val dead = deleteIds.select(col("doc_id"),
-      lit(null).cast("string").as("token"), lit(0L).as("tf"),
-      lit(0L).as("dl"), lit(false).as("live"))
-    live.unionByName(dead).withColumn("b", lit(batchId))
-      .write.mode("overwrite").parquet(s"$postingsDir/b=$batchId")
-    ()
-  }
+      batchId: Long, postingsDir: String): Unit =
+    appendEpoch(upserts.sparkSession, postingsDir, batchId) {
+      // key-disjointness is load-bearing: a doc_id in BOTH sides of one
+      // batch would share one `b`, and the winner-batch fold keeps live
+      // rows — the tombstone would silently lose. A changelog-fed caller
+      // cannot produce this (bm25IndexBatch folds to one winner per
+      // key); the public API refuses it loudly.
+      require(deleteIds.join(upserts.select(col("doc_id")), Seq("doc_id"))
+          .isEmpty,
+        "postingsApplyBatch: a doc_id appears in both upserts and " +
+          "deleteIds of one batch — the in-batch tombstone would silently " +
+          "lose to the upsert; pre-fold the changelog to one winner per " +
+          "key (bm25IndexBatch does) or split across batches.")
+      graft.operators.Text.docPostings(upserts)
+        .withColumn("live", lit(true))
+        .unionByName(deleteIds.select(col("doc_id"),
+          lit(null).cast("string").as("token"), lit(0L).as("tf"),
+          lit(0L).as("dl"), lit(false).as("live")))
+    }
 
   /** Seed the postings store from a pre-built corpus (reserved id −1,
     * below every real micro-batch id — [[seedBandStore]]'s convention).
@@ -1027,9 +950,9 @@ object Streams extends Serializable {
     * write through as dead META tombstones — the exact
     * [[bm25IndexBatch]] classification, sourced from the table log.
     * At-least-once delivery composes with the epoch-keyed idempotent
-    * [[postingsApplyBatch]] write: a replayed commit overwrites its own
-    * `b=<version>` directory with identical rows, so the serve is
-    * exactly-once in effect. Returns the commit versions applied. */
+    * [[postingsApplyBatch]] write: a replayed commit version is a no-op
+    * at the store's epoch gate, so the serve is exactly-once in effect.
+    * Returns the commit versions applied. */
   def postingsFromLake(spark: org.apache.spark.sql.SparkSession,
       lakeRoot: String, consumerDir: String, postingsDir: String,
       maxCommits: Int = Int.MaxValue): Seq[Long] =
@@ -1052,8 +975,8 @@ object Streams extends Serializable {
     * carry it as a literal, so Catalyst prunes every other commit's
     * subplan under the filter). The per-batch commit list is O(#commits
     * in the trigger) driver-side — never row-scaled. Idempotence is
-    * [[postingsApplyBatch]]'s epoch-overwrite discipline, absorbing the
-    * engine's at-least-once batch replay after a crash. */
+    * [[postingsApplyBatch]]'s epoch gate, absorbing the engine's
+    * at-least-once batch replay after a crash. */
   def postingsApplyFeedBatch(batch: DataFrame, postingsDir: String): Unit = {
     val versions = batch.select("_commit_version").distinct()
       .collect().map(_.getLong(0)).sorted
@@ -1080,15 +1003,9 @@ object Streams extends Serializable {
     * compacted range are refused loudly, never answered partially.
     */
   def readPostingsAsOf(spark: org.apache.spark.sql.SparkSession,
-      postingsDir: String, batchId: Long): DataFrame = {
-    val paths = bandBatchDirs(spark, postingsDir)
-      .filter(_._1 <= batchId).map(_._2)
-    require(paths.nonEmpty,
-      s"no postings batches ≤ $batchId under $postingsDir " +
-        "(outside the compaction retention window, or before the seed)")
-    graft.operators.Text.foldWinnerBatch(spark.read.parquet(paths: _*))
-      .drop("b", "live")
-  }
+      postingsDir: String, batchId: Long): DataFrame =
+    graft.operators.Text.foldWinnerBatch(
+      epochsAsOf(spark, postingsDir, batchId, "postings")).drop("b", "live")
 
   /** BM25 over the maintained index — the serving path: corpus stats
     * (N, Σdl) from the folded META rows, scoring through the identical
@@ -1104,25 +1021,22 @@ object Streams extends Serializable {
     */
   def servedBm25(spark: org.apache.spark.sql.SparkSession,
       postingsDir: String, terms: Seq[String]): DataFrame = {
-    val paths = bandBatchDirs(spark, postingsDir).map(_._2)
-    require(paths.nonEmpty, s"no postings batches under $postingsDir")
     val folded = graft.operators.Text.foldWinnerBatchForTerms(
-      spark.read.parquet(paths: _*), terms).drop("b", "live")
+      epochs(spark, postingsDir, "postings"), terms).drop("b", "live")
     val stats = folded.filter(col("token").isNull)
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl"))
     graft.operators.Text.bm25FromPostings(folded, stats, terms)
   }
 
-  /** Compact the postings store: merge epochs ≤ `upTo` into one dir,
-    * keeping only each doc's winning epoch rows and dropping dead docs
-    * (nothing older remains for a tombstone to suppress; anything newer
-    * out-ranks it). Rows keep their `b` tag so reads before and after
-    * compaction are identical. Same staged protocol and
-    * quiescent-barrier requirement as [[compactBandStore]].
+  /** Compact the postings store: rewrite epochs ≤ `upTo` keeping only
+    * each doc's winning epoch rows and dropping dead docs (nothing older
+    * remains for a tombstone to suppress; anything newer out-ranks it).
+    * Rows keep their `b` tag so reads before and after compaction are
+    * identical ([[compactEpochs]]).
     */
   def compactPostings(spark: org.apache.spark.sql.SparkSession,
       postingsDir: String, upTo: Long): Unit =
-    compactStore(spark, postingsDir, upTo,
+    compactEpochs(spark, postingsDir, upTo)(
       graft.operators.Text.foldWinnerBatch)
 
   // -------------- T35 incremental positional phrase index (T30's twin)
@@ -1130,12 +1044,12 @@ object Streams extends Serializable {
     * x4w's serving loop the way T30 closes x4r's: phrase queries need
     * (doc, token, pos) rows, and re-extracting positions for the corpus
     * per increment rescans the world. Same protocol as T30 in every
-    * particular — per-epoch `b=<id>` dirs each carrying the batch's own
-    * docs' FULL positional rows plus a null-token META row per doc (the
-    * doc-exists marker a delete tombstone replaces), winner-BATCH-per-doc
-    * read fold (a rewrite may SHORTEN a doc — per-(doc,token,pos) folding
-    * would leak stale positions), batchId-keyed idempotent writes, staged
-    * compaction. [[servedPhrase]] matches through the identical
+    * particular — one [[appendEpoch]] epoch per batch carrying the
+    * batch's own docs' FULL positional rows plus a null-token META row
+    * per doc (the doc-exists marker a delete tombstone replaces),
+    * winner-BATCH-per-doc read fold (a rewrite may SHORTEN a doc —
+    * per-(doc,token,pos) folding would leak stale positions), replays
+    * no-op at the epoch gate, [[compactEpochs]] compaction. [[servedPhrase]] matches through the identical
     * [[graft.operators.Text.phraseFromPositions]] tail as batch x4w, so
     * served ≡ batch exactly (spec; the `x4x` oracle checks the identical
     * fold in-plan against x4wSql verbatim).
@@ -1146,22 +1060,20 @@ object Streams extends Serializable {
     * a deployment that doesn't serve phrase queries never builds it.
     */
   def positionsApplyBatch(upserts: DataFrame, deleteIds: DataFrame,
-      batchId: Long, positionsDir: String): Unit = {
-    require(deleteIds.join(upserts.select(col("doc_id")), Seq("doc_id"))
-        .isEmpty,
-      "positionsApplyBatch: a doc_id appears in both upserts and " +
-        "deleteIds of one batch — the in-batch tombstone would silently " +
-        "lose to the upsert; pre-fold the changelog to one winner per " +
-        "key (phraseIndexBatch does) or split across batches.")
-    val live = graft.operators.Text.docPositions(upserts)
-      .withColumn("live", lit(true))
-    val dead = deleteIds.select(col("doc_id"),
-      lit(null).cast("string").as("token"), lit(-1L).as("pos"),
-      lit(false).as("live"))
-    live.unionByName(dead).withColumn("b", lit(batchId))
-      .write.mode("overwrite").parquet(s"$positionsDir/b=$batchId")
-    ()
-  }
+      batchId: Long, positionsDir: String): Unit =
+    appendEpoch(upserts.sparkSession, positionsDir, batchId) {
+      require(deleteIds.join(upserts.select(col("doc_id")), Seq("doc_id"))
+          .isEmpty,
+        "positionsApplyBatch: a doc_id appears in both upserts and " +
+          "deleteIds of one batch — the in-batch tombstone would silently " +
+          "lose to the upsert; pre-fold the changelog to one winner per " +
+          "key (phraseIndexBatch does) or split across batches.")
+      graft.operators.Text.docPositions(upserts)
+        .withColumn("live", lit(true))
+        .unionByName(deleteIds.select(col("doc_id"),
+          lit(null).cast("string").as("token"), lit(-1L).as("pos"),
+          lit(false).as("live")))
+    }
 
   /** CDC → phrase-index integration ([[bm25IndexBatch]]'s twin). */
   def phraseIndexBatch(changelog: DataFrame, batchId: Long,
@@ -1177,12 +1089,9 @@ object Streams extends Serializable {
   /** Consumer view: each doc's HIGHEST epoch's positional rows, dead
     * docs dropped after the fold (the [[readPostings]] contract). */
   def readPositions(spark: org.apache.spark.sql.SparkSession,
-      positionsDir: String): DataFrame = {
-    val paths = bandBatchDirs(spark, positionsDir).map(_._2)
-    require(paths.nonEmpty, s"no positional batches under $positionsDir")
-    graft.operators.Text.foldWinnerBatch(spark.read.parquet(paths: _*))
-      .drop("b", "live")
-  }
+      positionsDir: String): DataFrame =
+    graft.operators.Text.foldWinnerBatch(
+      epochs(spark, positionsDir, "positional")).drop("b", "live")
 
   /** Phrase matching over the maintained index — the serving path,
     * scoring through the identical shared tail as batch x4w. The winner
@@ -1190,18 +1099,15 @@ object Streams extends Serializable {
     * (META rows ride along for winner determination only;
     * [[graft.operators.Text.phraseFromPositions]] drops them itself). */
   def servedPhrase(spark: org.apache.spark.sql.SparkSession,
-      positionsDir: String, phrase: Seq[String]): DataFrame = {
-    val paths = bandBatchDirs(spark, positionsDir).map(_._2)
-    require(paths.nonEmpty, s"no positional batches under $positionsDir")
+      positionsDir: String, phrase: Seq[String]): DataFrame =
     graft.operators.Text.phraseFromPositions(
       graft.operators.Text.foldWinnerBatchForTerms(
-        spark.read.parquet(paths: _*), phrase).drop("b", "live"),
+        epochs(spark, positionsDir, "positional"), phrase).drop("b", "live"),
       phrase)
-  }
 
   def compactPositions(spark: org.apache.spark.sql.SparkSession,
       positionsDir: String, upTo: Long): Unit =
-    compactStore(spark, positionsDir, upTo,
+    compactEpochs(spark, positionsDir, upTo)(
       graft.operators.Text.foldWinnerBatch)
 
   // ------------------------------- T20 durable streaming heavy hitters
@@ -1303,13 +1209,14 @@ object Streams extends Serializable {
 
   // ------------------- T32 durable graph edge/degree store (x7q's durable half)
   /** T32 — the graph analytics serving store: the symmetric edge set and
-    * its degree table maintained through the per-epoch `b=<id>` layout
-    * (the T30 discipline applied to the graph). Each batch symmetrizes
-    * its edge increment, anti-joins against the STRICTLY-BEFORE folded
-    * edge set (cross-batch re-sends are no-ops — the x7p/T13 idempotent
-    * protocol), and writes only the FRESH edges plus their degree
-    * DELTAS under its own epoch dir — increment-sized writes, never a
-    * store rewrite.
+    * its degree table maintained as two [[appendEpoch]] tables,
+    * `<graphDir>/edges` and `<graphDir>/deg` (the T30 discipline applied
+    * to the graph). Each batch symmetrizes its edge increment,
+    * anti-joins against the STRICTLY-BEFORE folded edge set
+    * ([[epochsBelow]]; cross-batch re-sends are no-ops — the x7p/T13
+    * idempotent protocol), and appends only the FRESH edges plus their
+    * degree DELTAS as its epoch — increment-sized writes, never a store
+    * rewrite.
     *
     * RETRACTIONS are first-class (the delete half of the reference's
     * envelope op set, op ∈ {c,u,d,r} — `README.md:331` — propagates to
@@ -1337,11 +1244,12 @@ object Streams extends Serializable {
     * (`Graph.pageRank(presymmetrized = true, degIn = …)`), so
     * store-served ≡ batch-derived exactly (spec; `x7q_incr_pagerank`
     * oracle-checks the same fold in-plan against q34Sql). Replay: a
-    * batch's write derives only from its own rows + strictly-before
-    * state and overwrites its own subdirectory ([[nearDupBatch]]
-    * contract). [[compactGraph]] merges epochs ≤ upTo through the
-    * shared staged protocol: edges concatenate (already disjoint),
-    * degree deltas re-sum — reads identical before and after.
+    * batch id at-or-below a table's epoch mark is a no-op there, and a
+    * batch that committed its edges but not its degrees completes the
+    * degrees from the same strictly-before state ([[nearDupBatch]]
+    * contract). [[compactGraph]] folds epochs ≤ upTo: edges concatenate
+    * tombstone-free, degree deltas re-sum — reads identical before and
+    * after.
     */
   /** Symmetrize an edge increment: both directions, self-loops excluded
     * (the [[graft.operators.Graph.pageRank]] graph semantics), distinct. */
@@ -1364,55 +1272,55 @@ object Streams extends Serializable {
       .filter(col("w") === 1L)
       .select(col("src"), col("dst"))
 
-  /** The strictly-before present set (empty frame with the edge schema
-    * when no prior epoch exists). */
+  /** The strictly-before present set (None before the first epoch). */
   private def priorGraphEdges(spark: org.apache.spark.sql.SparkSession,
-      graphDir: String, batchId: Long): Option[DataFrame] = {
-    val priorDirs = bandBatchDirs(spark, s"$graphDir/edges")
-      .filter(_._1 < batchId).map(_._2)
-    if (priorDirs.isEmpty) None
-    else Some(foldEdgeEpochs(spark.read.parquet(priorDirs: _*)))
+      graphDir: String, batchId: Long): Option[DataFrame] =
+    epochsBelow(spark, s"$graphDir/edges", batchId).map(foldEdgeEpochs)
+
+  /** Commit one graph epoch: the weighted edge rows `epoch` derives
+    * (src, dst, w) and their per-source degree deltas. `epoch` is read
+    * at most once, and not at all when both tables already hold the
+    * batch. */
+  private def appendGraphEpoch(spark: org.apache.spark.sql.SparkSession,
+      graphDir: String, batchId: Long)(epoch: => DataFrame): Unit = {
+    lazy val rows = epoch.localCheckpoint() // edge write + degree delta
+    appendEpoch(spark, s"$graphDir/edges", batchId)(rows)
+    appendEpoch(spark, s"$graphDir/deg", batchId)(
+      rows.groupBy(col("src")).agg(sum(col("w")).as("deg")))
   }
 
   def graphEdgesBatch(edges: DataFrame, batchId: Long,
       graphDir: String): Unit = {
     val spark = edges.sparkSession
-    val sym = symmetrizeEdges(edges)
-    val fresh = priorGraphEdges(spark, graphDir, batchId)
-      .map(present => sym.join(present, Seq("src", "dst"), "left_anti"))
-      .getOrElse(sym)
-      .localCheckpoint() // read twice: edge write + degree delta
-    fresh.select(col("src"), col("dst"), lit(1L).as("w"))
-      .write.mode("overwrite").parquet(s"$graphDir/edges/b=$batchId")
-    fresh.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .write.mode("overwrite").parquet(s"$graphDir/deg/b=$batchId")
-    ()
+    appendGraphEpoch(spark, graphDir, batchId) {
+      val sym = symmetrizeEdges(edges)
+      priorGraphEdges(spark, graphDir, batchId)
+        .map(present => sym.join(present, Seq("src", "dst"), "left_anti"))
+        .getOrElse(sym)
+        .select(col("src"), col("dst"), lit(1L).as("w"))
+    }
   }
 
   /** T32 delete half: retract edges from the maintained store. The
     * increment symmetrizes exactly like an insert (one logical
     * undirected delete retires both directed rows), semi-joins against
     * the strictly-before PRESENT set — absent deletes (including
-    * cross-batch re-sent deletes) are no-ops — and writes only the hit
-    * edges as w = −1 tombstones plus NEGATIVE degree deltas under its
-    * own epoch dir. Replay derives from strictly-before state and
-    * overwrites its own dir (the insert batch's discipline), so
-    * re-delivery reproduces its bytes; a later re-INSERT of a deleted
-    * edge is fresh again by the weight fold (0 → 1).
+    * cross-batch re-sent deletes) are no-ops — and appends only the hit
+    * edges as w = −1 tombstones plus NEGATIVE degree deltas as its
+    * epoch. Replay is a no-op at the epoch gate (the insert batch's
+    * discipline); a later re-INSERT of a deleted edge is fresh again by
+    * the weight fold (0 → 1).
     */
   def graphEdgesDeleteBatch(deletes: DataFrame, batchId: Long,
       graphDir: String): Unit = {
     val spark = deletes.sparkSession
-    val sym = symmetrizeEdges(deletes)
-    val hit = priorGraphEdges(spark, graphDir, batchId)
-      .map(present => sym.join(present, Seq("src", "dst"), "left_semi"))
-      .getOrElse(sym.limit(0))
-      .localCheckpoint() // read twice: tombstone write + degree delta
-    hit.select(col("src"), col("dst"), lit(-1L).as("w"))
-      .write.mode("overwrite").parquet(s"$graphDir/edges/b=$batchId")
-    hit.groupBy(col("src")).agg((-count(lit(1))).as("deg"))
-      .write.mode("overwrite").parquet(s"$graphDir/deg/b=$batchId")
-    ()
+    appendGraphEpoch(spark, graphDir, batchId) {
+      val sym = symmetrizeEdges(deletes)
+      priorGraphEdges(spark, graphDir, batchId)
+        .map(present => sym.join(present, Seq("src", "dst"), "left_semi"))
+        .getOrElse(sym.limit(0))
+        .select(col("src"), col("dst"), lit(-1L).as("w"))
+    }
   }
 
   /** T32 mixed-op batch (src, dst, op): op "u" rows fold as edge
@@ -1442,22 +1350,19 @@ object Streams extends Serializable {
           "so the fold would be ambiguous; sequence the ops into " +
           "separate batches"))
       .localCheckpoint()
-    val present = priorGraphEdges(spark, graphDir, batchId)
-    val symU = symmetrizeEdges(o.filter(col("op") === "u"))
-    val symD = symmetrizeEdges(o.filter(col("op") === "d"))
-    val fresh = present
-      .map(p => symU.join(p, Seq("src", "dst"), "left_anti"))
-      .getOrElse(symU)
-    val hit = present
-      .map(p => symD.join(p, Seq("src", "dst"), "left_semi"))
-      .getOrElse(symD.limit(0))
-    val epoch = fresh.select(col("src"), col("dst"), lit(1L).as("w"))
-      .unionByName(hit.select(col("src"), col("dst"), lit(-1L).as("w")))
-      .localCheckpoint() // read twice: edge write + degree delta
-    epoch.write.mode("overwrite").parquet(s"$graphDir/edges/b=$batchId")
-    epoch.groupBy(col("src")).agg(sum(col("w")).as("deg"))
-      .write.mode("overwrite").parquet(s"$graphDir/deg/b=$batchId")
-    ()
+    appendGraphEpoch(spark, graphDir, batchId) {
+      val present = priorGraphEdges(spark, graphDir, batchId)
+      val symU = symmetrizeEdges(o.filter(col("op") === "u"))
+      val symD = symmetrizeEdges(o.filter(col("op") === "d"))
+      val fresh = present
+        .map(p => symU.join(p, Seq("src", "dst"), "left_anti"))
+        .getOrElse(symU)
+      val hit = present
+        .map(p => symD.join(p, Seq("src", "dst"), "left_semi"))
+        .getOrElse(symD.limit(0))
+      fresh.select(col("src"), col("dst"), lit(1L).as("w"))
+        .unionByName(hit.select(col("src"), col("dst"), lit(-1L).as("w")))
+    }
   }
 
   /** The committed symmetric edge set: weight fold over the epoch union
@@ -1465,11 +1370,8 @@ object Streams extends Serializable {
     * tombstone-free so the fold degenerates to a scan-shaped groupBy
     * with one row per group. */
   def readGraphEdges(spark: org.apache.spark.sql.SparkSession,
-      graphDir: String): DataFrame = {
-    val paths = bandBatchDirs(spark, s"$graphDir/edges").map(_._2)
-    require(paths.nonEmpty, s"no committed edges under $graphDir")
-    foldEdgeEpochs(spark.read.parquet(paths: _*))
-  }
+      graphDir: String): DataFrame =
+    foldEdgeEpochs(epochs(spark, s"$graphDir/edges", "edge"))
 
   /** The maintained out-degree table: per-epoch deltas re-summed —
     * additively exact, equal to the edge-derived counts by construction
@@ -1478,17 +1380,14 @@ object Streams extends Serializable {
     * served table; a NEGATIVE lifetime sum is a torn protocol and
     * THROWS. */
   def readGraphDegrees(spark: org.apache.spark.sql.SparkSession,
-      graphDir: String): DataFrame = {
-    val paths = bandBatchDirs(spark, s"$graphDir/deg").map(_._2)
-    require(paths.nonEmpty, s"no committed degrees under $graphDir")
-    spark.read.parquet(paths: _*)
+      graphDir: String): DataFrame =
+    epochs(spark, s"$graphDir/deg", "degree")
       .groupBy(col("src")).agg(sum(col("deg")).as("deg"))
       .filter(graft.functions.Guards.assertFilter(col("deg") >= 0L,
         "graph degree store: negative lifetime degree sum — a delete " +
           "delta without its matching insert reached the store; the " +
           "batch protocol guarantees it cannot, so this store is corrupt"))
       .filter(col("deg") > 0L)
-  }
 
   /** PageRank served from the maintained stores — the refresh path that
     * skips the per-run edge re-derivation (x7q's point, one level up:
@@ -1501,20 +1400,17 @@ object Streams extends Serializable {
       iters, scale, topK, presymmetrized = true,
       degIn = Some(readGraphDegrees(spark, graphDir)))
 
-  /** Compact both halves of the graph store through the shared staged
-    * protocol: the edge half CLEARS TOMBSTONES (weight fold → keep
-    * w = 1, re-written as w = +1 rows so the compacted store is
-    * schema-uniform and the post-compaction read fold is one row per
+  /** Compact both halves of the graph store ([[compactEpochs]]): the
+    * edge half CLEARS TOMBSTONES (weight fold → keep w = 1, re-written
+    * as w = +1 rows so the post-compaction read fold is one row per
     * group); the degree half re-sums deltas, dropping nodes swept to 0
-    * and THROWING on negatives. Quiescent-barrier requirement as
-    * [[compactBandStore]]. */
+    * and THROWING on negatives. */
   def compactGraph(spark: org.apache.spark.sql.SparkSession,
       graphDir: String, upTo: Long): Unit = {
-    compactStore(spark, s"$graphDir/edges", upTo,
-      df => foldEdgeEpochs(df)
-        .select(col("src"), col("dst"), lit(1L).as("w")))
-    compactStore(spark, s"$graphDir/deg", upTo,
-      df => df.groupBy(col("src")).agg(sum(col("deg")).as("deg"))
+    compactEpochs(spark, s"$graphDir/edges", upTo)(df =>
+      foldEdgeEpochs(df).select(col("src"), col("dst"), lit(1L).as("w")))
+    compactEpochs(spark, s"$graphDir/deg", upTo)(df =>
+      df.groupBy(col("src")).agg(sum(col("deg")).as("deg"))
         .filter(graft.functions.Guards.assertFilter(col("deg") >= 0L,
           "graph degree store compaction: negative lifetime degree sum " +
             "— torn protocol; refusing to compact a corrupt store"))
@@ -1622,14 +1518,15 @@ object Streams extends Serializable {
     * quarantines those clusters (drop from val, or from both) — an
     * explicit, auditable decision instead of a silent migration.
     *
-    * Store protocol — identical to T30/T32: per-epoch `b=<id>` dirs,
-    * each batch writes only its FRESH docs (anti-join on doc_id against
-    * strictly-before epochs; re-sent docs are no-ops), replay derives
-    * from own rows + strictly-before state and overwrites its own dir —
-    * PLUS a per-batch `ccepoch/b=<id>` manifest recording the cluster
-    * epoch the batch assigned with, because the cluster store advances
-    * under an independent checkpoint and replay must fold the recorded
-    * prefix, not "whatever is committed now" (see the inline comment).
+    * Store protocol — identical to T30/T32: one [[appendEpoch]] epoch
+    * per batch holding only its FRESH docs (anti-join on doc_id against
+    * strictly-before epochs; re-sent docs are no-ops). The cluster
+    * prefix a batch assigns with is the T17 store's epochs ≤ its own id.
+    * That store advances under an INDEPENDENT checkpoint, so a cluster
+    * epoch ≤ batchId can commit after this batch first ran — but a
+    * committed registry batch is a no-op on replay, and a crash before
+    * its commit applied nothing, so re-deriving the prefix on a re-run
+    * commits a fresh decision, never a contradiction of an applied one.
     * Reads are the plain union (epochs disjoint by construction).
     * Scale: per-batch cost is increment-sized (the cluster-map probe
     * broadcasts); the contamination audit is one groupBy over the
@@ -1640,74 +1537,27 @@ object Streams extends Serializable {
       regDir: String, clusterDir: String,
       valPct: Int = graft.operators.Curation.splitValPct): Unit = {
     val spark = newDocs.sparkSession
-    val priorDirs = bandBatchDirs(spark, regDir)
-      .filter(_._1 < batchId).map(_._2)
-    val fresh = (if (priorDirs.isEmpty) newDocs.select(col("doc_id"))
-      else newDocs.select(col("doc_id")).join(
-        spark.read.parquet(priorDirs: _*).select(col("doc_id")),
-        Seq("doc_id"), "left_anti"))
-    // cluster state AS OF this epoch — made REPLAY-STABLE by a recorded
-    // manifest. A bare "committed cluster batches ≤ batchId" filter is
-    // not enough: the cluster store is maintained by an INDEPENDENT
-    // streaming query with its own checkpoint, so a cluster epoch
-    // ≤ batchId can commit AFTER this registry batch first ran; a crash
-    // replay would then fold newer merges and assign DIFFERENT grp/split
-    // bytes to the same docs — the retroactive train/val migration T33
-    // exists to prevent. First execution snapshots the cluster epoch it
-    // assigns with into `ccepoch/b=<id>` BEFORE the data write (the
-    // decision commits first, so a crash between the two writes replays
-    // deterministically); replay folds exactly the recorded prefix and
-    // reproduces the batch dir byte-identically.
-    val manifest = s"$regDir/ccepoch/b=$batchId"
-    val manifestPath = new org.apache.hadoop.fs.Path(manifest)
-    val fs = manifestPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the manifest is authoritative only once its write COMMITTED: a
-    // crash mid-write leaves a partial directory, and a bare exists()
-    // check would treat it as committed — the read then throws on every
-    // replay and wedges the stream. Gate on the committer's _SUCCESS
-    // marker instead; a partial dir fails the gate and is healed by the
-    // mode("overwrite") rewrite below. Re-deriving is sound there
-    // because the manifest commits BEFORE the data write: a partial
-    // manifest means no registry data was ever written under the old
-    // decision, so adopting a fresher cluster prefix commits a new
-    // decision, not a contradiction of an applied one.
-    val committed = fs.exists(
-      new org.apache.hadoop.fs.Path(manifestPath, "_SUCCESS"))
-    val ccEpoch: Long =
-      if (committed)
-        spark.read.parquet(manifest).head().getLong(0)
-      else {
-        val eps = bandBatchDirs(spark, clusterDir).map(_._1)
-          .filter(_ <= batchId)
-        val e = if (eps.isEmpty) Long.MinValue else eps.max
-        spark.range(1).select(lit(e).as("cc_epoch"))
-          .coalesce(1).write.mode("overwrite").parquet(manifest)
-        e
-      }
-    val ccDirs = bandBatchDirs(spark, clusterDir)
-      .filter(_._1 <= ccEpoch).map(_._2)
-    val cc =
-      if (ccDirs.isEmpty)
-        fresh.limit(0).select(col("doc_id").as("node"),
-          col("doc_id").as("cluster"))
-      else foldClusterMap(spark.read.parquet(ccDirs: _*))
-    fresh.join(broadcast(cc), fresh("doc_id") === cc("node"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster"), col("doc_id")).as("grp"))
-      .select(col("doc_id"), col("grp"),
-        graft.operators.Curation.splitOf(col("grp"), valPct).as("split"))
-      .write.mode("overwrite").parquet(s"$regDir/b=$batchId")
-    ()
+    appendEpoch(spark, regDir, batchId) {
+      val docs = newDocs.select(col("doc_id"))
+      val fresh = epochsBelow(spark, regDir, batchId).fold(docs)(prior =>
+        docs.join(prior.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+      val cc = epochsBelow(spark, clusterDir, batchId + 1)
+        .map(foldClusterMap)
+        .getOrElse(fresh.limit(0).select(col("doc_id").as("node"),
+          col("doc_id").as("cluster")))
+      fresh.join(broadcast(cc), fresh("doc_id") === cc("node"), "left")
+        .select(col("doc_id"),
+          coalesce(col("cluster"), col("doc_id")).as("grp"))
+        .select(col("doc_id"), col("grp"),
+          graft.operators.Curation.splitOf(col("grp"), valPct).as("split"))
+    }
   }
 
   /** The committed write-once assignments: (doc_id, grp-at-assignment,
     * split). Epochs are disjoint → plain union, no fold window. */
   def readSplits(spark: org.apache.spark.sql.SparkSession,
-      regDir: String): DataFrame = {
-    val paths = bandBatchDirs(spark, regDir).map(_._2)
-    require(paths.nonEmpty, s"no committed splits under $regDir")
-    spark.read.parquet(paths: _*)
-  }
+      regDir: String): DataFrame =
+    epochs(spark, regDir, "split").drop("b")
 
   /** Clusters whose CURRENT membership mixes train and val assignments —
     * the quarantine list a consumer must act on after merges. Output:
@@ -1816,11 +1666,12 @@ object Streams extends Serializable {
     *     reads and probes drop the doc at once (it can no longer form
     *     new pairs either), and compaction removes its rows physically.
     *
-    * Idempotent and replayable like every epoch write here: each store
-    * write derives only from the ledger + its own epoch id; re-sending
-    * an already-erased id re-tombstones / re-marks, which reads fold to
-    * the same view. The epoch must come from the same monotone sequence
-    * as each store's writer (the [[erasureApplyStore]] contract).
+    * Idempotent and replayable like every epoch write here: a replayed
+    * epoch is a no-op at each store's epoch gate; re-sending an
+    * already-erased id in a later epoch re-tombstones / re-marks, which
+    * reads fold to the same view. The epoch must come from the same
+    * monotone sequence as each store's writer (the
+    * [[erasureApplyStore]] contract).
     */
   def erasureApplySearchStores(spark: org.apache.spark.sql.SparkSession,
       epoch: Long, ledgerRoot: String,
@@ -1852,9 +1703,9 @@ object Streams extends Serializable {
       // undirected edge suffices; the delete path symmetrizes), its
       // degree sweeps to 0, partners' degrees decrement additively.
       // Incident edges derive from the STRICTLY-BEFORE present set, not
-      // the current one — deriving from a view that includes this
-      // epoch's own tombstones would make a crash replay see a smaller
-      // incident set and commit different bytes
+      // the current one — a re-run that finds this epoch's edge
+      // tombstones committed but not its degree deltas must derive the
+      // same incident set, not a smaller one
       graphDir.foreach { d =>
         priorGraphEdges(spark, d, epoch).foreach { present =>
           val incident = present.join(
@@ -1989,9 +1840,8 @@ object Streams extends Serializable {
     * history — a dimension update that lands after the fact's batch was
     * enriched does NOT retro-enrich (that is C22's batch re-run; the
     * spec drives dimensions fully first, making stream ≡ batch exact).
-    * Output lands in batchId-keyed overwrite dirs — the T13 idempotent
-    * replay protocol: a re-delivered batch rewrites its own dir
-    * byte-identically because the history it reads is versioned.
+    * Output lands as one [[appendEpoch]] epoch per batch — the T13
+    * idempotent replay protocol: a re-delivered batch is a no-op.
     *
     * Scale: per batch, one broadcast-or-shuffle equi-join of the batch
     * against the history's committed snapshot
@@ -2001,7 +1851,7 @@ object Streams extends Serializable {
       outDir: String, keyCol: String = "custkey",
       timeCol: String = "flsn"): Unit = {
     val spark = facts.sparkSession
-    val enriched = readScd2(spark, scd2Root) match {
+    appendEpoch(spark, outDir, batchId)(readScd2(spark, scd2Root) match {
       case Some(hist) =>
         facts.join(hist,
           facts(keyCol) === hist("id") &&
@@ -2010,14 +1860,13 @@ object Streams extends Serializable {
           "left")
           .select(facts.columns.map(facts(_)) :+ hist("email"): _*)
       case None => facts.withColumn("email", lit(null).cast("string"))
-    }
-    enriched.write.mode("overwrite").parquet(s"$outDir/b=$batchId")
+    })
   }
 
   /** Every enriched fact across all committed batches. */
   def readEnrichedFacts(spark: org.apache.spark.sql.SparkSession,
       outDir: String): DataFrame =
-    readBatchStore(spark, outDir, "enriched-fact")
+    epochs(spark, outDir, "enriched-fact").drop("b")
 
   // ------------- T28 exactly-once outbox publisher (C23 streaming)
   /** T28 — C23's outbox router under AT-LEAST-ONCE delivery with an
@@ -2031,13 +1880,14 @@ object Streams extends Serializable {
     * so "already published" is exactly "lsn ≤ the committed high-water
     * mark". Per batch: route inserts ([[graft.operators.Cdc
     * .outboxRoute]] — purges never publish), keep lsn > hwm (in-batch
-    * duplicates collapse on lsn), append to a batchId-keyed overwrite
-    * dir, commit max(lsn) as the new hwm through [[foldStore]]. A
-    * re-delivered batch id is a no-op at the fold's txn gate, before
-    * anything is published; a crash between the publish and the hwm
-    * commit re-runs from the same hwm → identical publish set → same dir
-    * overwritten: exactly-once survives both re-delivered batches AND
-    * overlapping re-sends inside later batches. The ordered-
+    * duplicates collapse on lsn), publish them as one [[appendEpoch]]
+    * epoch of `outDir`, commit max(lsn) as the new hwm through
+    * [[foldStore]]. A re-delivered batch id is a no-op at the fold's txn
+    * gate, before anything is published; a crash between the publish
+    * and the hwm commit re-runs from the same hwm, and the publish epoch
+    * is a no-op at its own gate: exactly-once survives both
+    * re-delivered batches AND overlapping re-sends inside later
+    * batches. The ordered-
     * arrival ASSUMPTION is audited per batch (skipped lsns must exist in
     * the published store, else THROW — see the inline note), so a
     * reordered source degrades to a loud failure, not at-most-once.
@@ -2081,7 +1931,7 @@ object Streams extends Serializable {
             "be silently dropped; restore ordered delivery or key the hwm " +
             "by source partition.")
       }
-      fresh.write.mode("overwrite").parquet(s"$outDir/b=$batchId")
+      appendEpoch(spark, outDir, batchId)(fresh)
       val newHwm = Option(fresh.agg(max(col("lsn"))).head().get(0))
         .map(_.asInstanceOf[Long]).map(math.max(_, hwm)).getOrElse(hwm)
       Seq(newHwm).toDF("hwm").coalesce(1)
@@ -2093,7 +1943,7 @@ object Streams extends Serializable {
     */
   def readPublished(spark: org.apache.spark.sql.SparkSession,
       outDir: String): DataFrame =
-    readBatchStore(spark, outDir, "published")
+    epochs(spark, outDir, "published").drop("b")
 
   // ------------- T29 bucketed sketch store (per-day HLL, range-union reads)
   /** T29 — the BUCKETED form of the durable sketch tier: one HLL sketch
@@ -2362,13 +2212,13 @@ object Streams extends Serializable {
     * serving index cannot be rebuilt in place (readers would see old
     * codes scored against new codebooks: silent garbage, not an error).
     * A GENERATION bundles everything that must stay mutually consistent
-    * — coarse centroids, PQ codebooks, and the batchId-keyed index
+    * — coarse centroids, PQ codebooks, and the epoch-keyed index
     * encoded against exactly those models — under one `g=<n>` directory:
     *
     * {{{
     *   root/g=<n>/models/coarse     (cid, vector) parquet
     *   root/g=<n>/models/books      (subspace, code, vector) parquet
-    *   root/g=<n>/index/b=<batch>   the T16 store, THIS generation's codes
+    *   root/g=<n>/index             the T16 store, THIS generation's codes
     *   root/_LATEST                 committed generation number
     * }}}
     *
@@ -2379,7 +2229,9 @@ object Streams extends Serializable {
     * window (a reader that resolved gen n before the flip finishes its
     * query against files that still exist). A crash mid-build leaves a
     * dangling uncommitted `g=<n+1>` and a fully-served gen n — repaired
-    * by re-running the retrain; the same crash calculus as the lake
+    * by re-running the retrain, which discards the uncommitted
+    * generation's half-built index first (its seed epoch would otherwise
+    * gate the re-encode out); the same crash calculus as the lake
     * log's `_last_checkpoint` pointer, through the same helper.
     *
     * Scale: the refit itself is the bounded-sample fit + one full-corpus
@@ -2435,11 +2287,16 @@ object Streams extends Serializable {
   def retrainGeneration(corpus: DataFrame, root: String, gen: Long,
       nlist: Int = 16, m: Int = 8, ksub: Int = 16, iters: Int = 3): Unit = {
     val spark = corpus.sparkSession
+    require(currentGeneration(spark, root).forall(_ < gen),
+      s"generation $gen is not above the committed one under $root — " +
+        "a served generation is never rebuilt in place")
     val coarse = graft.operators.Vectors.kmeansCentroids(corpus, nlist, iters)
     val books = graft.operators.Vectors.pqCodebooks(corpus, m, ksub, iters)
     writeGenerationModels(spark, root, gen, coarse, books)
-    seedVectorIndex(corpus, s"${generationDir(root, gen)}/index",
-      coarse, books)
+    val index = new org.apache.hadoop.fs.Path(generationDir(root, gen), "index")
+    index.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(index, true)
+    seedVectorIndex(corpus, index.toString, coarse, books)
     LakeFormat.writePointer(spark, generationPtr(root), gen)
   }
 
@@ -2513,11 +2370,10 @@ object Streams extends Serializable {
     * newly-discovered pairs advances a durable flat label map by
     * [[graft.operators.Graph.incrementDelta]] — CC runs on the
     * increment-sized label graph only, and the delta (new nodes +
-    * members of merged clusters) is written under
-    * `clusterDir/b=<batchId>`, rows tagged with the batch id.
-    * [[readClusterMap]] folds latest-batch-wins per node: exactly the
-    * T16 layout, so the store inherits its compaction and as-of
-    * machinery unchanged.
+    * members of merged clusters) is appended as one [[appendEpoch]]
+    * epoch, rows tagged with the batch id. [[readClusterMap]] folds
+    * latest-batch-wins per node: exactly the T16 layout, so the store
+    * inherits its compaction machinery unchanged.
     *
     * Because min-label CC is arrival-order-independent, the folded map
     * is IDENTICAL to `Graph.connectedComponents` over every pair seen —
@@ -2525,27 +2381,22 @@ object Streams extends Serializable {
     * the same fold inline against DuckDB's transitive closure.
     *
     * IDEMPOTENT REPLAY, the [[nearDupBatch]] contract: "prior" is the
-    * fold of batch dirs strictly below the current id, and the batch's
-    * write overwrites its own subdirectory — an at-least-once replay
-    * recomputes the identical delta from identical inputs.
+    * fold of the epochs strictly below the current id, and a batch id
+    * at-or-below the epoch mark is a no-op.
     */
   def clusterIndexBatch(pairs: DataFrame, batchId: Long,
       clusterDir: String): Unit = {
     val spark = pairs.sparkSession
-    val priorPaths = bandBatchDirs(spark, clusterDir)
-      .collect { case (id, p) if id < batchId => p }
-    val prior =
-      if (priorPaths.isEmpty) graft.operators.Graph.emptyLabels(pairs)
-      else foldClusterMap(spark.read.parquet(priorPaths: _*))
-    graft.operators.Graph.incrementDelta(prior, pairs)
-      .withColumn("b", lit(batchId))
-      .write.mode("overwrite").parquet(s"$clusterDir/b=$batchId")
-    ()
+    appendEpoch(spark, clusterDir, batchId)(
+      graft.operators.Graph.incrementDelta(
+        epochsBelow(spark, clusterDir, batchId).map(foldClusterMap)
+          .getOrElse(graft.operators.Graph.emptyLabels(pairs)),
+        pairs))
   }
 
   /** The latest-batch-wins fold shared by the read view, the prior of
-    * the next batch, and compaction. A node appears at most once per
-    * batch dir, so the winner is unique.
+    * the next batch, and the T33 registry. A node appears at most once
+    * per epoch, so the winner is unique.
     */
   private def foldClusterMap(df: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -2559,27 +2410,23 @@ object Streams extends Serializable {
     * `Graph.connectedComponents` over all discovered pairs.
     */
   def readClusterMap(spark: org.apache.spark.sql.SparkSession,
-      clusterDir: String): DataFrame = {
-    val paths = bandBatchDirs(spark, clusterDir).map(_._2)
-    require(paths.nonEmpty, s"no cluster batches under $clusterDir")
-    foldClusterMap(spark.read.parquet(paths: _*))
-  }
+      clusterDir: String): DataFrame =
+    foldClusterMap(epochs(spark, clusterDir, "cluster"))
 
-  /** Compact the cluster store: merge batch dirs ≤ `upTo` into one,
-    * dropping shadowed label rows (a node relabeled by a later merge
-    * supersedes every earlier row). Surviving rows keep their `b` tag —
-    * the fold keys on the COLUMN — so reads and subsequent batch priors
-    * are identical before and after. Same staged protocol and
-    * quiescent-barrier requirement as [[compactBandStore]].
+  /** Compact the cluster store: rewrite epochs ≤ `upTo` dropping
+    * shadowed label rows (a node relabeled by a later merge supersedes
+    * every earlier row). Surviving rows keep their `b` tag, so reads and
+    * subsequent batch priors are identical before and after
+    * ([[compactEpochs]]).
     */
   def compactClusterIndex(spark: org.apache.spark.sql.SparkSession,
       clusterDir: String, upTo: Long): Unit =
-    compactStore(spark, clusterDir, upTo, df => {
+    compactEpochs(spark, clusterDir, upTo) { df =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("node")).orderBy(col("b").desc)
       df.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
-    })
+    }
 
   // ------------------------------------------- T12 / C14 streaming gate
   /** One unit of the cross-table transaction gate's input stream: either a

@@ -102,7 +102,7 @@ class LakeFeedSpec extends AnyFunSuite {
     }
     assert(LakeFormat.consumerOffset(spark, cons) === Some(1L),
       "offset must sit at the last COMPLETED commit")
-    // recovery drain: v2 redelivers, its epoch overwrite is idempotent
+    // recovery drain: v2 redelivers, its epoch append is a no-op
     val retried = Streams.postingsFromLake(spark, root, cons, idx)
     assert(retried === Seq(2L))
     val folded = Streams.readPostings(spark, idx)

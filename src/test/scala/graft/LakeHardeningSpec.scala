@@ -402,6 +402,34 @@ class LakeHardeningSpec extends AnyFunSuite {
     try f finally LakeFormat.beforeCommitHook = () => ()
   }
 
+  test("txn-marked append: a racer that finds its own (app, id) committed meanwhile drops its staged files and returns; a later replay is a no-op") {
+    val root = freshRoot()
+    LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
+    def rows(v: String) = Seq((1L, 1L, true, v)).toDF("id", "lsn", "live", "v")
+    // the same batch, delivered twice: the copy fired inside the racer's
+    // commit window lands first
+    val v = withConcurrent {
+      LakeFormat.append(rows("first"), root, txn = Some(("app", 5L)))
+      ()
+    } {
+      LakeFormat.append(rows("racer"), root, txn = Some(("app", 5L)))
+    }
+    val st = LakeFormat.state(spark, root)
+    assert(v === st.version && st.version === 1L)
+    assert(st.txns === Map("app" -> 5L))
+    assert(LakeFormat.snapshot(spark, root).select("v").as[String]
+      .collect().toSeq === Seq("first"))
+    val onDisk = org.apache.commons.io.FileUtils.listFiles(
+        new java.io.File(root, "data"), Array("parquet"), true)
+      .toArray.map(_.asInstanceOf[java.io.File].getPath
+        .stripPrefix(root + "/")).toSet
+    assert(onDisk === st.files.map(_.path).toSet,
+      "the racer's staged files must not outlive its dropped claim")
+    assert(LakeFormat.append(rows("again"), root,
+      txn = Some(("app", 5L))) === st.version)
+    assert(LakeFormat.state(spark, root).version === st.version)
+  }
+
   test("MERGE with an evolved schema: new column lands, old rows read back null, change feed compares it") {
     val root = freshRoot()
     LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 import org.apache.spark.sql.functions._
 import graft.operators.Vectors
 import graft.streaming.Streams
@@ -10,7 +10,12 @@ import graft.streaming.Streams
   * partition of the input into batches (including re-delivered content
   * and re-embedded keys), the folded store must equal the all-at-once
   * batch computation — the T16 analogue of the T23/C20 closure
-  * properties in CdcPropertySpec.
+  * properties in CdcPropertySpec. The epoch-keyed stores (T16, T30,
+  * T35) are also driven through random at-least-once re-deliveries of
+  * already-applied batch ids, older ones included, and one compaction
+  * at a random point: no re-delivery may move the table version. Those
+  * three run unshrunk: shrinking `nBatches` leaves its generator's range
+  * and would report a different exception than the failing case's.
   */
 object StorePropertySpec extends Properties("Stores") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -25,8 +30,25 @@ object StorePropertySpec extends Properties("Stores") {
   lazy val coarse = Vectors.kmeansCentroids(corpus, 8, 2)
   lazy val books = Vectors.pqCodebooks(corpus, 8, 8, 2)
 
+  /** Apply epochs 0 until `n` in order through `apply`; after each one,
+    * re-deliver a random already-applied epoch and check that the store
+    * at `dir` kept its version; `compact` runs once, after a random
+    * epoch, up to a random applied id. True iff every re-delivery was a
+    * no-op. */
+  private def driveWithReplays(rnd: scala.util.Random, dir: String, n: Int)(
+      apply: Int => Unit)(compact: Long => Unit): Boolean = {
+    val compactAfter = rnd.nextInt(n)
+    (0 until n).map { i =>
+      apply(i)
+      if (i == compactAfter) compact(rnd.nextInt(i + 1).toLong)
+      val v = graft.sources.LakeFormat.state(spark, dir).version
+      apply(rnd.nextInt(i + 1))
+      graft.sources.LakeFormat.state(spark, dir).version == v
+    }.forall(identity)
+  }
+
   property("T16 index fold over random batch splits == all-at-once encode of the latest corpus") =
-    forAll(Gen.choose(1, 3), Gen.long) { (nBatches, seed) =>
+    forAllNoShrink(Gen.choose(1, 3), Gen.long) { (nBatches, seed) =>
       import spark.implicits._
       val rnd = new scala.util.Random(seed)
       val rows = corpus.as[(Long, Seq[Float])].collect().toSeq
@@ -42,12 +64,11 @@ object StorePropertySpec extends Properties("Stores") {
       // a final extra batch) — the upsert discipline the changelog fold
       // guarantees upstream
       val dir = java.nio.file.Files.createTempDirectory("vprop").toString
-      batches.zipWithIndex.foreach { case (b, i) =>
-        Streams.vectorIndexBatch(b.toSeq.toDF("vec_id", "embedding"),
+      val epochs = batches.toSeq.map(_.toSeq) :+ reembeds
+      val replaysHeld = driveWithReplays(rnd, dir, epochs.size) { i =>
+        Streams.vectorIndexBatch(epochs(i).toDF("vec_id", "embedding"),
           i.toLong, dir, coarse, books)
-      }
-      Streams.vectorIndexBatch(reembeds.toDF("vec_id", "embedding"),
-        nBatches.toLong, dir, coarse, books)
+      }(Streams.compactVectorIndex(spark, dir, _))
       val latest = rows.filterNot(r => reembedIds(r._1)) ++ reembeds
       val batchIdx = Vectors.encodeForIndex(
         latest.toDF("vec_id", "embedding"), coarse, books)
@@ -56,11 +77,12 @@ object StorePropertySpec extends Properties("Stores") {
           .as[(Long, Int, Seq[Int])].collect().toSet
       val got = content(Streams.readVectorIndex(spark, dir))
       val expected = content(batchIdx)
-      Prop(got == expected) :| s"fold diverged: ${got.size} vs ${expected.size}"
+      (Prop(got == expected) :| s"fold diverged: ${got.size} vs ${expected.size}") &&
+        (Prop(replaysHeld) :| "a re-delivered epoch moved the table version")
     }
 
   property("T30 postings fold over random batch splits (rewrites + deletes) serves == batch BM25 of the latest corpus") =
-    forAll(Gen.choose(1, 3), Gen.long) { (nBatches, seed) =>
+    forAllNoShrink(Gen.choose(1, 3), Gen.long) { (nBatches, seed) =>
       import spark.implicits._
       import graft.operators.Text
       val terms = Seq("rare", "common")
@@ -82,24 +104,25 @@ object StorePropertySpec extends Properties("Stores") {
         scala.collection.mutable.Buffer.empty[(Long, String)])
       docs.foreach(d => batches(rnd.nextInt(nBatches)) += d)
       val dir = java.nio.file.Files.createTempDirectory("pprop").toString
-      batches.zipWithIndex.foreach { case (b, i) =>
-        Streams.postingsApplyBatch(b.toSeq.toDF("doc_id", "text"),
-          Seq.empty[Long].toDF("doc_id"), i.toLong, dir)
-      }
       // rewrites and deletes land AFTER every original (the changelog
       // fold guarantees this ordering upstream)
-      Streams.postingsApplyBatch(rewrites.toDF("doc_id", "text"),
-        deleteIds.toSeq.toDF("doc_id"), nBatches.toLong, dir)
+      val epochs = batches.toSeq.map(b => (b.toSeq, Seq.empty[Long])) :+
+        ((rewrites, deleteIds.toSeq))
+      val replaysHeld = driveWithReplays(rnd, dir, epochs.size) { i =>
+        Streams.postingsApplyBatch(epochs(i)._1.toDF("doc_id", "text"),
+          epochs(i)._2.toDF("doc_id"), i.toLong, dir)
+      }(Streams.compactPostings(spark, dir, _))
       val latest = (docs.toMap ++ rewrites.toMap -- deleteIds).toSeq
       val served = Streams.servedBm25(spark, dir, terms)
         .as[(Long, Long, Long)].collect().toSeq
       val batch = Text.bm25Retrieve(latest.toDF("doc_id", "text"), terms)
         .as[(Long, Long, Long)].collect().toSeq
-      Prop(served == batch) :| s"served $served != batch $batch"
+      (Prop(served == batch) :| s"served $served != batch $batch") &&
+        (Prop(replaysHeld) :| "a re-delivered epoch moved the table version")
     }
 
   property("T35 positional fold over random batch splits (rewrites + deletes) serves == batch phrase match of the latest corpus") =
-    forAll(Gen.choose(1, 3), Gen.long) { (nBatches, seed) =>
+    forAllNoShrink(Gen.choose(1, 3), Gen.long) { (nBatches, seed) =>
       import spark.implicits._
       import graft.operators.Text
       val phrase = Seq("data", "change", "capture")
@@ -124,18 +147,19 @@ object StorePropertySpec extends Properties("Stores") {
         scala.collection.mutable.Buffer.empty[(Long, String)])
       docs.foreach(d => batches(rnd.nextInt(nBatches)) += d)
       val dir = java.nio.file.Files.createTempDirectory("posprop").toString
-      batches.zipWithIndex.foreach { case (b, i) =>
-        Streams.positionsApplyBatch(b.toSeq.toDF("doc_id", "text"),
-          Seq.empty[Long].toDF("doc_id"), i.toLong, dir)
-      }
-      Streams.positionsApplyBatch(rewrites.toDF("doc_id", "text"),
-        deleteIds.toSeq.toDF("doc_id"), nBatches.toLong, dir)
+      val epochs = batches.toSeq.map(b => (b.toSeq, Seq.empty[Long])) :+
+        ((rewrites, deleteIds.toSeq))
+      val replaysHeld = driveWithReplays(rnd, dir, epochs.size) { i =>
+        Streams.positionsApplyBatch(epochs(i)._1.toDF("doc_id", "text"),
+          epochs(i)._2.toDF("doc_id"), i.toLong, dir)
+      }(Streams.compactPositions(spark, dir, _))
       val latest = (docs.toMap ++ rewrites.toMap -- deleteIds).toSeq
       val served = Streams.servedPhrase(spark, dir, phrase)
         .as[(Long, Long)].collect().toSeq
       val batch = Text.phraseMatch(latest.toDF("doc_id", "text"), phrase)
         .as[(Long, Long)].collect().toSeq
-      Prop(served == batch) :| s"served $served != batch $batch"
+      (Prop(served == batch) :| s"served $served != batch $batch") &&
+        (Prop(replaysHeld) :| "a re-delivered epoch moved the table version")
     }
 
   property("T36 closure fold over random insert/re-parent/delete batches == batch resolve of the final pointer state") =

@@ -29,6 +29,17 @@ class StreamingSpec extends AnyFunSuite {
 
   def t(minute: Int): Timestamp = new Timestamp(1700000000000L + minute * 60000L)
 
+  /** The parquet files on disk under a lake table's `data/`, relative to
+    * its root — compared against a version's add set. */
+  def dataFiles(root: String): Set[String] = {
+    val it = org.apache.commons.io.FileUtils.listFiles(
+      new java.io.File(root, "data"), Array("parquet"), true).iterator()
+    val b = Set.newBuilder[String]
+    while (it.hasNext)
+      b += it.next().getPath.stripPrefix(root + "/")
+    b.result()
+  }
+
   val sample: Seq[E] = Seq(
     E(1, t(0), 1, "view", 1.0), E(2, t(3), 1, "view", 2.0),
     E(3, t(12), 2, "click", 3.0), E(4, t(14), 1, "view", 4.0),
@@ -449,20 +460,12 @@ class StreamingSpec extends AnyFunSuite {
 
   test("whole-state fold: after five folds only the current and previous versions' data files remain") {
     val root = java.nio.file.Files.createTempDirectory("foldgc").toString + "/s"
-    def dataFiles() = {
-      val it = org.apache.commons.io.FileUtils.listFiles(
-        new java.io.File(root, "data"), Array("parquet"), true).iterator()
-      val b = Set.newBuilder[String]
-      while (it.hasNext)
-        b += it.next().getPath.stripPrefix(root + "/")
-      b.result()
-    }
     (0L until 5L).foreach(i =>
       Streams.erasureLedgerBatch(Seq(i).toDF("id"), i, root))
     val tip = LakeFormat.state(spark, root).version
     val kept = (tip - 1 to tip)
       .flatMap(v => LakeFormat.state(spark, root, Some(v)).files.map(_.path))
-    assert(kept.nonEmpty && dataFiles() === kept.toSet)
+    assert(kept.nonEmpty && dataFiles(root) === kept.toSet)
     assert(Streams.readErased(spark, root).get.as[Long].collect().toSet ===
       (0L until 5L).toSet)
   }
@@ -498,6 +501,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(pointerFiles(dir) === Set("_offset"))
     LakeFormat.writePointer(spark, latest, 1L)
     assert(Streams.currentGeneration(spark, root) === Some(1L))
+    assert(pointerFiles(root) === Set("_LATEST"))
+    // bytes rewritten behind the checksumming FileSystem's back: the
+    // `.crc` sibling goes stale and a raw read throws ChecksumException —
+    // the helper reads absent instead, and the next write repairs both
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_offset"),
+      "7".getBytes("UTF-8"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_LATEST"),
+      "9".getBytes("UTF-8"))
+    assert(new java.io.File(dir, "._offset.crc").exists)
+    assert(new java.io.File(root, "._LATEST.crc").exists)
+    assert(LakeFormat.consumerOffset(spark, dir) === None)
+    assert(Streams.currentGeneration(spark, root) === None)
+    LakeFormat.commitConsumerOffset(spark, dir, 8L)
+    assert(LakeFormat.consumerOffset(spark, dir) === Some(8L))
+    LakeFormat.writePointer(spark, latest, 2L)
+    assert(Streams.currentGeneration(spark, root) === Some(2L))
+    assert(pointerFiles(dir) === Set("_offset"))
     assert(pointerFiles(root) === Set("_LATEST"))
   }
 
@@ -673,13 +693,15 @@ class StreamingSpec extends AnyFunSuite {
       s"missing=${(all -- staticOnly -- streamed).take(5)} extra=${(streamed -- all).take(5)}")
     assert(streamed.nonEmpty) // the fixture must actually exercise pairs
     // CRASH REPLAY: foreachBatch is at-least-once — re-running the LAST
-    // batch (id 1, the inc2 increment) must leave both stores identical:
-    // same pair set (no double-discovery) and same band count (no
-    // double-append), because the replay excludes its own b=1 bands from
-    // "prior" and overwrites rather than appends
+    // batch (the inc2 increment, at the id its epoch mark records) must
+    // leave both stores untouched: a no-op at each store's epoch gate
     val bandsBefore = Streams.readBandStore(spark, bandDir)
       .select("doc_id", "band", "key").as[(Long, Int, String)].collect().toSet
-    Streams.nearDupBatch(inc2.toDF, 1L, bandDir, pairDir)
+    val last = LakeFormat.state(spark, bandDir).txns("epoch")
+    val versions = Seq(bandDir, pairDir).map(LakeFormat.state(spark, _).version)
+    Streams.nearDupBatch(inc2.toDF, last, bandDir, pairDir)
+    assert(Seq(bandDir, pairDir).map(LakeFormat.state(spark, _).version) ===
+      versions)
     val streamedAfter = Streams.readNearDupPairs(spark, pairDir)
       .as[(Long, Long)].collect().toSet
     val bandsAfter = Streams.readBandStore(spark, bandDir)
@@ -709,10 +731,12 @@ class StreamingSpec extends AnyFunSuite {
     val b = Streams.readBandStore(spark, s"$dirB/bands")
       .select("doc_id", "band", "key").as[(Long, Int, String)].collect().toSet
     assert(a === b)
-    // ...and the directory layout collapsed to one merged dir
-    val bDirs = new java.io.File(s"$dirB/bands").listFiles
-      .map(_.getName).filter(_.startsWith("b=")).sorted.toSeq
-    assert(bDirs === Seq("b=1"))
+    // ...and the epochs collapsed into one overwrite commit carrying the
+    // compaction mark
+    assert(LakeFormat.state(spark, s"$dirB/bands").txns.get("compact") ===
+      Some(1L))
+    assert(LakeFormat.history(spark, s"$dirB/bands", limit = 1)
+      .select("op").as[String].head() === "overwrite")
     // the NEXT increment discovers the same pairs on both stores
     Streams.nearDupBatch(inc2.toDF, 2L, s"$dirA/bands", s"$dirA/pairs")
     Streams.nearDupBatch(inc2.toDF, 2L, s"$dirB/bands", s"$dirB/pairs")
@@ -727,23 +751,26 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy("band", "key").count().agg(max("count"))
       .collect()(0).getLong(0)
     assert(maxAfter <= 2)
-    // torn compaction resumes: simulate a crash AFTER the stage completed
-    // and the batch dirs were deleted but BEFORE the rename published it
+    // torn compaction resumes: a crash after the rewrite is staged but
+    // before its commit leaves the store as it was; the re-run completes
     val dirC = java.nio.file.Files.createTempDirectory("bcC").toString
     Streams.nearDupBatch(inc0.toDF, 0L, s"$dirC/bands", s"$dirC/pairs")
     Streams.nearDupBatch(inc1.toDF, 1L, s"$dirC/bands", s"$dirC/pairs")
-    val preTorn = Streams.readBandStore(spark, s"$dirC/bands")
+    def bandsC() = Streams.readBandStore(spark, s"$dirC/bands")
       .select("doc_id", "band", "key").as[(Long, Int, String)].collect().toSet
-    spark.read.parquet(s"$dirC/bands/b=0", s"$dirC/bands/b=1")
-      .write.parquet(s"$dirC/bands/_compact_b=1") // the completed stage
-    for (bd <- Seq("b=0", "b=1")) {
-      val f = new java.io.File(s"$dirC/bands/$bd")
-      f.listFiles.foreach(_.delete()); f.delete()
+    val preTorn = bandsC()
+    LakeFormat.beforeCommitHook = () => {
+      LakeFormat.beforeCommitHook = () => ()
+      throw new RuntimeException("crash before commit")
     }
+    try intercept[RuntimeException](
+      Streams.compactBandStore(spark, s"$dirC/bands", upTo = 1L))
+    finally LakeFormat.beforeCommitHook = () => ()
+    assert(bandsC() === preTorn)
     Streams.compactBandStore(spark, s"$dirC/bands", upTo = 1L)
-    val recovered = Streams.readBandStore(spark, s"$dirC/bands")
-      .select("doc_id", "band", "key").as[(Long, Int, String)].collect().toSet
-    assert(recovered === preTorn)
+    assert(bandsC() === preTorn)
+    assert(LakeFormat.state(spark, s"$dirC/bands").txns.get("compact") ===
+      Some(1L))
   }
 
   test("T20 durable streaming heavy hitters: MG guarantee survives epochs, O(k) state, replay-idempotent") {
@@ -1055,11 +1082,13 @@ class StreamingSpec extends AnyFunSuite {
     // the late dimension event (lsn 105) is visible to facts in [105,110)
     assert(got.contains((1L, 1L, 102L, Some("a1"))))
     assert(got.contains((2L, 1L, 115L, Some("a2"))))
-    // replay of the last fact batch rewrites its dir with identical rows
-    val lastDir = new java.io.File(outDir).listFiles.map(_.getName)
-      .filter(_.startsWith("b=")).map(_.stripPrefix("b=").toLong).max
+    // replay of the last fact batch (the id its epoch mark records) is a
+    // no-op: the store version does not move, the rows are unchanged
+    val last = LakeFormat.state(spark, outDir).txns("epoch")
+    val v = LakeFormat.state(spark, outDir).version
     Streams.enrichFactsBatch(fb1.toDF("orderkey", "custkey", "flsn"),
-      lastDir, root, outDir)
+      last, root, outDir)
+    assert(LakeFormat.state(spark, outDir).version === v)
     assert(rows(Streams.readEnrichedFacts(spark, outDir)) === got)
   }
 
@@ -1224,9 +1253,11 @@ class StreamingSpec extends AnyFunSuite {
     // the NEXT streamed batch follows the pointer into gen 1
     mem.addData((increment.head._1, increment.head._2))
     q.processAllAvailable(); q.stop()
-    val g1Dirs = new java.io.File(s"${Streams.generationDir(root, 1L)}/index")
-      .listFiles.map(_.getName).filter(_.startsWith("b=")).toSet
-    assert(g1Dirs.size === 2, s"expected seed + new batch in gen 1, got $g1Dirs")
+    val g1Epochs = LakeFormat.snapshot(spark,
+        s"${Streams.generationDir(root, 1L)}/index")
+      .select("b").distinct().as[Long].collect().toSet
+    assert(g1Epochs.size === 2,
+      s"expected seed + new batch in gen 1, got $g1Epochs")
     // crash mid-build of gen 2: models staged, pointer NOT flipped —
     // readers are untouched; re-running the retrain repairs
     Streams.writeGenerationModels(spark, root, 2L, c1, b1)
@@ -1266,14 +1297,16 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(streamed === batch)
     assert(streamed(7L) === 1L && streamed(11L) === 4L) // the merges happened
-    // CRASH REPLAY: re-running the LAST batch must leave the store
-    // byte-identical — the replay's "prior" excludes its own b=2 dir
-    val rawBefore = spark.read.parquet(s"$dir/b=0", s"$dir/b=1", s"$dir/b=2")
-      .as[(Long, Long, Long)].collect().toSet
-    Streams.clusterIndexBatch(inc2.toDF("src", "dst"), 2L, dir)
-    val rawAfter = spark.read.parquet(s"$dir/b=0", s"$dir/b=1", s"$dir/b=2")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(rawAfter === rawBefore, "replayed batch changed the cluster store")
+    // CRASH REPLAY: re-running the LAST batch (the id its epoch mark
+    // records) is a no-op — the stored rows and the version stay put
+    def raw() = LakeFormat.snapshot(spark, dir)
+      .select("node", "cluster", "b").as[(Long, Long, Long)].collect().toSet
+    val rawBefore = raw()
+    val v = LakeFormat.state(spark, dir).version
+    Streams.clusterIndexBatch(inc2.toDF("src", "dst"),
+      LakeFormat.state(spark, dir).txns("epoch"), dir)
+    assert(raw() === rawBefore, "replayed batch changed the cluster store")
+    assert(LakeFormat.state(spark, dir).version === v)
     // COMPACTION between batches is invisible: a second store compacted
     // after batch 1 sees identical reads AND identical final map
     val dirB = java.nio.file.Files.createTempDirectory("t17b").toString
@@ -1285,9 +1318,8 @@ class StreamingSpec extends AnyFunSuite {
     val midAfter = Streams.readClusterMap(spark, dirB)
       .as[(Long, Long)].collect().toMap
     assert(midAfter === midBefore)
-    val layout = new java.io.File(dirB).listFiles
-      .map(_.getName).filter(!_.startsWith("_")).toSeq.sorted
-    assert(layout === Seq("b=1")) // collapsed, shadowed rows folded away
+    // collapsed: shadowed rows folded away, one row per node remains
+    assert(LakeFormat.snapshot(spark, dirB).count() === midAfter.size.toLong)
     Streams.clusterIndexBatch(inc2.toDF("src", "dst"), 2L, dirB)
     assert(Streams.readClusterMap(spark, dirB)
       .as[(Long, Long)].collect().toMap === batch)
@@ -1327,8 +1359,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === batch,
       s"missing=${(batch -- streamed).take(3)} extra=${(streamed -- batch).take(3)}")
     assert(streamed.nonEmpty)
-    // at-least-once replay of the LAST batch: overwrite dirs + strictly-
-    // earlier prior make it idempotent on both stores
+    // at-least-once replay of the LAST batch: a no-op at both stores'
+    // epoch gates
     val shBefore = Streams.readBandStore(spark, shDir)
       .select("doc_id", "hs").as[(Long, String)].collect().toSet
     Streams.containmentBatch(inc2.toDF, 2L, shDir, pairDir)
@@ -1398,7 +1430,7 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("T13 pair-store compaction: identical reads, collapsed layout, torn/partial-delete resume, stale stage re-merged") {
+  test("T13 pair-store compaction: identical reads, collapsed epochs, the next increment agrees") {
     val docs = Tables.documents(spark, TestSpark.sf)
       .select("doc_id", "text").as[DocE].collect().toSeq
     val inc0 = docs.filter(_.doc_id % 3 == 0)
@@ -1417,10 +1449,8 @@ class StreamingSpec extends AnyFunSuite {
     val after = Streams.readNearDupPairs(spark, s"$dirB/pairs")
       .as[(Long, Long)].collect().toSet
     assert(after === before) // compaction is layout-only
-    val layout = new java.io.File(s"$dirB/pairs").listFiles
-      .map(_.getName).filter(!_.startsWith("_")).toSeq.sorted
-    assert(layout === Seq("b=1"))
-    assert(!new java.io.File(s"$dirB/pairs/b=1/_MANIFEST").exists)
+    assert(LakeFormat.state(spark, s"$dirB/pairs").txns.get("compact") ===
+      Some(1L))
     // the next increment discovers the same pairs on both stores
     Streams.nearDupBatch(inc2.toDF, 2L, s"$dirA/bands", s"$dirA/pairs")
     Streams.nearDupBatch(inc2.toDF, 2L, s"$dirB/bands", s"$dirB/pairs")
@@ -1429,71 +1459,62 @@ class StreamingSpec extends AnyFunSuite {
     val pb = Streams.readNearDupPairs(spark, s"$dirB/pairs")
       .as[(Long, Long)].collect().toSet
     assert(pa === pb && pa.nonEmpty)
-    // PARTIAL-delete crash: stage complete (manifest covers {0,1}), only
-    // b=0 deleted before the crash — the re-run must ADOPT (the stage
-    // covers the surviving b=1), not re-merge the partial set
-    def mkStage(root: String, df: org.apache.spark.sql.DataFrame,
-        ids: String): Unit = {
-      df.write.parquet(s"$root/_compact_b=1")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/_compact_b=1/_MANIFEST"), ids)
-      ()
-    }
-    val dirC = java.nio.file.Files.createTempDirectory("pcC").toString
-    Streams.nearDupBatch(inc0.toDF, 0L, s"$dirC/bands", s"$dirC/pairs")
-    Streams.nearDupBatch(inc1.toDF, 1L, s"$dirC/bands", s"$dirC/pairs")
-    mkStage(s"$dirC/pairs",
-      spark.read.parquet(s"$dirC/pairs/b=0", s"$dirC/pairs/b=1"), "0,1")
-    locally { val f = new java.io.File(s"$dirC/pairs/b=0")
-      f.listFiles.foreach(_.delete()); f.delete(); () }
-    Streams.compactPairStore(spark, s"$dirC/pairs", upTo = 1L)
-    assert(Streams.readNearDupPairs(spark, s"$dirC/pairs")
-      .as[(Long, Long)].collect().toSet === before)
-    // STALE stage: manifest covers only {0} while b=0 AND b=1 are present
-    // (an abandoned compaction predating batch 1) — adopting it verbatim
-    // would delete b=1's pairs; the re-run must discard it and re-merge
-    val dirD = java.nio.file.Files.createTempDirectory("pcD").toString
-    Streams.nearDupBatch(inc0.toDF, 0L, s"$dirD/bands", s"$dirD/pairs")
-    Streams.nearDupBatch(inc1.toDF, 1L, s"$dirD/bands", s"$dirD/pairs")
-    mkStage(s"$dirD/pairs", spark.read.parquet(s"$dirD/pairs/b=0"), "0")
-    Streams.compactPairStore(spark, s"$dirD/pairs", upTo = 1L)
-    assert(Streams.readNearDupPairs(spark, s"$dirD/pairs")
-      .as[(Long, Long)].collect().toSet === before)
   }
 
-  test("band stores: a torn batch dir (no _SUCCESS marker) is invisible to readers and healed by replay; a non-empty store with no markers at all fails loudly") {
+  test("epoch stores: an append whose commit throws leaves reads unchanged; re-running the batch id completes it, also when only one of a batch's two tables landed") {
     val docs = Tables.documents(spark, TestSpark.sf)
       .select("doc_id", "text").as[DocE].collect().toSeq
     val inc0 = docs.filter(_.doc_id % 3 == 0)
     val inc1 = docs.filter(_.doc_id % 3 == 1)
+    def pairs(d: String) = Streams.readNearDupPairs(spark, s"$d/pairs")
+      .as[(Long, Long)].collect().toSet
+    def bands(d: String) = Streams.readBandStore(spark, s"$d/bands")
+      .select("doc_id", "band", "key").as[(Long, Int, String)].collect().toSet
+    def marks(d: String) = Seq("bands", "pairs")
+      .map(t => LakeFormat.state(spark, s"$d/$t").txns("epoch"))
+    // crash the n-th epoch commit of batch 1 (after its data is staged)
+    def crashAt(d: String, n: Int): Unit = {
+      var fired = 0
+      LakeFormat.beforeCommitHook = () => {
+        fired += 1
+        if (fired == n) {
+          LakeFormat.beforeCommitHook = () => ()
+          throw new RuntimeException("crash before commit")
+        }
+      }
+      try intercept[RuntimeException](
+        Streams.nearDupBatch(inc1.toDF, 1L, s"$d/bands", s"$d/pairs"))
+      finally LakeFormat.beforeCommitHook = () => ()
+      ()
+    }
     val d = java.nio.file.Files.createTempDirectory("torn").toString
     Streams.nearDupBatch(inc0.toDF, 0L, s"$d/bands", s"$d/pairs")
-    val committed = Streams.readNearDupPairs(spark, s"$d/pairs")
-      .as[(Long, Long)].collect().toSet
+    val committed = pairs(d)
+    val bands0 = bands(d)
+    // the FIRST commit (the pair epoch) throws: nothing of batch 1 shows
+    crashAt(d, 1)
+    assert(marks(d) === Seq(0L, 0L))
+    assert(pairs(d) === committed && bands(d) === bands0)
+    // the replay of batch 1 completes both epochs
     Streams.nearDupBatch(inc1.toDF, 1L, s"$d/bands", s"$d/pairs")
-    val withB1 = Streams.readNearDupPairs(spark, s"$d/pairs")
-      .as[(Long, Long)].collect().toSet
+    assert(marks(d) === Seq(1L, 1L))
+    val withB1 = pairs(d)
     assert(withB1.size > committed.size)
-    // simulate the crash mid-batch-1-write: part files landed, the job
-    // committer's marker did not — the sink write precedes the
-    // checkpoint advance, so this batch WILL be replayed
-    assert(new java.io.File(s"$d/pairs/b=1/_SUCCESS").delete())
-    assert(Streams.readNearDupPairs(spark, s"$d/pairs")
-      .as[(Long, Long)].collect().toSet === committed)
-    // the replay overwrites the torn dir; its pairs reappear, committed
-    Streams.nearDupBatch(inc1.toDF, 1L, s"$d/bands", s"$d/pairs")
-    assert(Streams.readNearDupPairs(spark, s"$d/pairs")
-      .as[(Long, Long)].collect().toSet === withB1)
-    // EVERY dir unmarked on a non-empty store is not a crash artifact —
-    // it is a torn store or a committer without success markers; serving
-    // an empty view must fail loudly instead
-    assert(new java.io.File(s"$d/pairs/b=0/_SUCCESS").delete())
-    assert(new java.io.File(s"$d/pairs/b=1/_SUCCESS").delete())
-    intercept[Exception](
-      Streams.readNearDupPairs(spark, s"$d/pairs").collect())
+    // the SECOND commit throws: the pair epoch landed, the band epoch did
+    // not — the re-run completes the bands from the same strictly-below
+    // prior and leaves the pairs alone
+    val d2 = java.nio.file.Files.createTempDirectory("torn2").toString
+    Streams.nearDupBatch(inc0.toDF, 0L, s"$d2/bands", s"$d2/pairs")
+    crashAt(d2, 2)
+    assert(marks(d2) === Seq(0L, 1L))
+    val pv = LakeFormat.state(spark, s"$d2/pairs").version
+    Streams.nearDupBatch(inc1.toDF, 1L, s"$d2/bands", s"$d2/pairs")
+    assert(marks(d2) === Seq(1L, 1L))
+    assert(LakeFormat.state(spark, s"$d2/pairs").version === pv)
+    assert(pairs(d2) === withB1 && bands(d2) === bands(d))
   }
 
-  test("band stores: a torn INTERIOR dir (below a committed id) is a hole, never a pending replay — reads fail loudly instead of serving around it") {
+  test("epoch stores: a data file an epoch commit references, once lost, makes reads fail loudly instead of serving around the hole") {
     val docs = Tables.documents(spark, TestSpark.sf)
       .select("doc_id", "text").as[DocE].collect().toSeq
     val d = java.nio.file.Files.createTempDirectory("gap").toString
@@ -1501,21 +1522,13 @@ class StreamingSpec extends AnyFunSuite {
       Streams.nearDupBatch(docs.filter(_.doc_id % 3 == i).toDF, i.toLong,
         s"$d/bands", s"$d/pairs")
     }
-    val full = Streams.readNearDupPairs(spark, s"$d/pairs")
-      .as[(Long, Long)].collect().toSet
-    // tear the MIDDLE epoch's marker: under the single-writer protocol
-    // only the MAX id can be a legitimately-pending replay, so an
-    // interior gap means manual cleanup / fs fault — a silent hole
-    assert(new java.io.File(s"$d/pairs/b=1/_SUCCESS").delete())
-    val e = intercept[IllegalArgumentException](
-      Streams.readNearDupPairs(spark, s"$d/pairs").collect())
-    assert(e.getMessage.contains("BELOW committed"))
-    // the MAX id torn stays skippable (the crash-mid-batch case)
-    assert(new java.io.File(s"$d/pairs/b=1/_SUCCESS").createNewFile())
-    assert(new java.io.File(s"$d/pairs/b=2/_SUCCESS").delete())
-    val served = Streams.readNearDupPairs(spark, s"$d/pairs")
-      .as[(Long, Long)].collect().toSet
-    assert(served.subsetOf(full) && served.size < full.size)
+    assert(Streams.readBandStore(spark, s"$d/bands").count() > 0)
+    // lose one file of the MIDDLE epoch (manual cleanup / fs fault)
+    val lost = LakeFormat.state(spark, s"$d/bands").files
+      .find(_.stats("b").min.contains("1")).get
+    assert(new java.io.File(s"$d/bands/${lost.path}").delete())
+    intercept[Exception](
+      Streams.readBandStore(spark, s"$d/bands").collect())
   }
 
   test("T16 incremental vector index: stream-built upsert index ≡ batch encode of the latest corpus; replay idempotent; compaction drops shadowed rows") {
@@ -1573,24 +1586,25 @@ class StreamingSpec extends AnyFunSuite {
     // changed something vs the original encode (non-vacuous upsert)
     val orig = content(Vectors.encodeForIndex(e, coarse, books))
     assert(content(idx) !== orig)
-    // CRASH REPLAY: re-running the last micro-batch (id 1 = inc2) leaves
-    // the store identical — batchId-keyed overwrite, frozen models
-    Streams.vectorIndexBatch(inc2.toDF("vec_id", "embedding"), 1L,
+    // CRASH REPLAY: re-running the last micro-batch (inc2, at the id its
+    // epoch mark records) is a no-op — the version does not move
+    val last = LakeFormat.state(spark, dir).txns("epoch")
+    val v = LakeFormat.state(spark, dir).version
+    Streams.vectorIndexBatch(inc2.toDF("vec_id", "embedding"), last,
       dir, coarse, books)
+    assert(LakeFormat.state(spark, dir).version === v)
     assert(content(Streams.readVectorIndex(spark, dir)) === content(batchIdx))
     // AS-OF (time travel): the index as of batch 0 = seed + inc1 only,
     // with the seed-era encodings of the later-re-embedded ids intact
     val asOf0 = content(Streams.readVectorIndexAsOf(spark, dir, 0L))
     val corpus0 = e.filter(col("vec_id") % 3 === 0 || col("vec_id") % 3 === 1)
     assert(asOf0 === content(Vectors.encodeForIndex(corpus0, coarse, books)))
-    // COMPACTION: reads identical, layout collapses, shadowed encodings
-    // (the re-embedded ids' seed-era rows) are physically dropped
+    // COMPACTION: reads identical, shadowed encodings (the re-embedded
+    // ids' seed-era rows) are physically dropped
     Streams.compactVectorIndex(spark, dir, upTo = 1L)
     assert(content(Streams.readVectorIndex(spark, dir)) === content(batchIdx))
-    val layout = new java.io.File(dir).listFiles
-      .map(_.getName).filter(!_.startsWith("_")).toSeq.sorted
-    assert(layout === Seq("b=1"))
-    assert(spark.read.parquet(s"$dir/b=1").count() === latest.count())
+    assert(LakeFormat.state(spark, dir).txns.get("compact") === Some(1L))
+    assert(LakeFormat.snapshot(spark, dir).count() === latest.count())
     // ...and as-of INSIDE the compacted range is refused (retention
     // window), not answered partially; as-of AT the compaction point
     // still serves the exact folded state
@@ -1740,7 +1754,7 @@ class StreamingSpec extends AnyFunSuite {
     val preCompact = content(Streams.readVectorIndex(spark, dir))
     Streams.compactVectorIndex(spark, dir, upTo = 4L)
     assert(content(Streams.readVectorIndex(spark, dir)) === preCompact)
-    val stored = spark.read.parquet(s"$dir/b=4")
+    val stored = LakeFormat.snapshot(spark, dir)
     assert(stored.filter(col("vec_id") === 9L || !col("live")).count() === 0)
     assert(stored.count() === preCompact.size)
   }
@@ -1764,13 +1778,14 @@ class StreamingSpec extends AnyFunSuite {
         val rows = b.collect()
         released ++= rows.filter(_.kind == "release")
           .map(g => (g.txId, g.table, g.event.ts_ms))
-        // C8 routing: expired txs land in the dead-letter store,
-        // batch-keyed for idempotent replay (the nearDupBatch discipline)
+        // C8 routing: expired txs land in the dead-letter store, one
+        // epoch per batch for idempotent replay (the nearDupBatch
+        // discipline)
         val dead = rows.filter(_.kind == "deadletter")
         if (dead.nonEmpty) {
           val spark2 = b.sparkSession
           import spark2.implicits._
-          dead.toSeq.toDS.write.mode("overwrite").parquet(s"$dl/b=$id")
+          Streams.appendEpoch(spark2, dl, id)(dead.toSeq.toDS.toDF)
         }
         ()
       }.start()
@@ -1794,7 +1809,7 @@ class StreamingSpec extends AnyFunSuite {
     // have expired yet.
     mem.addData(ev("tx-later", "customers", 5, 2100, sec(120)))
     q.processAllAvailable()
-    assert(!new java.io.File(dl).exists || new java.io.File(dl).listFiles.isEmpty,
+    assert(!LakeFormat.tableExists(spark, dl),
       "tx-stuck expired before its grace elapsed")
     // batch 4: tx-later touched again at sec(350) -> re-arms to
     // wm(sec 60) + 300s = sec(360); wm := sec(290), which passes
@@ -1811,76 +1826,89 @@ class StreamingSpec extends AnyFunSuite {
     assert(released.toSet === Set(
       ("tx-ok", "customers", 100L), ("tx-ok", "orders", 150L)))
     // the abandoned tx's buffered events are in the dead-letter store
-    val dead = spark.read.parquet(
-      new java.io.File(dl).listFiles.map(_.getPath): _*)
+    val dead = LakeFormat.snapshot(spark, dl).drop("b")
       .as[GatedOut].collect().toSeq
     assert(dead.map(_.kind).toSet === Set("deadletter"))
     assert(dead.map(g => (g.txId, g.table, g.event.source.lsn.get)).toSet ===
       Set(("tx-stuck", "customers", 1100L), ("tx-stuck", "orders", 1150L)))
   }
 
-  test("compaction protocol: a crash at EVERY protocol step converges to the identical store on re-run") {
-    // exhaustive crash-point walk of compactStore's staged-merge protocol
-    // (via compactPairStore): stage written without manifest, stage
-    // complete, each partial-delete prefix, all-deleted, manifest
-    // deleted pre-rename. From every crash state the re-run must
-    // converge to the same final store a crash-free compaction produces.
-    def seed(root: String): Unit =
-      for ((ids, b) <- Seq(Seq(1L, 2L), Seq(3L), Seq(4L, 5L)).zipWithIndex)
-        ids.map(i => (i, i * 10)).toDF("doc_a", "doc_b")
-          .coalesce(1).write.parquet(s"$root/b=$b")
-    def readAll(root: String) = Streams.readNearDupPairs(spark, root)
+  test("compaction: a commit that throws leaves reads identical; the re-run converges and vacuums; a second run with the same bound is a no-op") {
+    val root = java.nio.file.Files.createTempDirectory("ccp").toString + "/pairs"
+    for ((ids, b) <- Seq(Seq(1L, 2L), Seq(3L), Seq(4L, 5L)).zipWithIndex)
+      Streams.appendEpoch(spark, root, b.toLong)(
+        ids.map(i => (i, i * 10)).toDF("doc_a", "doc_b"))
+    def readAll() = Streams.readNearDupPairs(spark, root)
       .as[(Long, Long)].collect().toSet
     val expected = Set(1L, 2L, 3L, 4L, 5L).map(i => (i, i * 10))
-    // the crash-free reference
-    val ref = java.nio.file.Files.createTempDirectory("ccREF").toString
-    seed(ref)
-    Streams.compactPairStore(spark, ref, upTo = 2L)
-    assert(readAll(ref) === expected)
-    def stage(root: String, withManifest: Boolean, withSuccess: Boolean = true): Unit = {
-      spark.read.parquet(s"$root/b=0", s"$root/b=1", s"$root/b=2")
-        .coalesce(1).write.parquet(s"$root/_compact_b=2")
-      if (!withSuccess)
-        new java.io.File(s"$root/_compact_b=2/_SUCCESS").delete()
-      if (withManifest) {
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$root/_compact_b=2/_MANIFEST"), "0,1,2")
-        ()
-      }
+    assert(readAll() === expected)
+    val v = LakeFormat.state(spark, root).version
+    // the compaction CRASHES after staging its rewrite, before its commit
+    LakeFormat.beforeCommitHook = () => {
+      LakeFormat.beforeCommitHook = () => ()
+      throw new RuntimeException("crash before commit")
     }
-    def rmDir(p: String): Unit = {
-      val f = new java.io.File(p)
-      if (f.exists) { f.listFiles.foreach(_.delete()); f.delete(); () }
-    }
-    // crash points: (name, how to mangle a freshly-seeded store)
-    val crashes: Seq[(String, String => Unit)] = Seq(
-      ("mid-merge, no _SUCCESS yet", r => stage(r, withManifest = false, withSuccess = false)),
-      ("stage written, manifest not yet", r => stage(r, withManifest = false)),
-      ("stage complete, nothing deleted", r => stage(r, withManifest = true)),
-      ("stage complete, b=0 deleted", { r =>
-        stage(r, withManifest = true); rmDir(s"$r/b=0") }),
-      ("stage complete, b=0 and b=1 deleted", { r =>
-        stage(r, withManifest = true); rmDir(s"$r/b=0"); rmDir(s"$r/b=1") }),
-      ("all batch dirs deleted", { r =>
-        stage(r, withManifest = true)
-        rmDir(s"$r/b=0"); rmDir(s"$r/b=1"); rmDir(s"$r/b=2") }),
-      ("manifest deleted, rename pending", { r =>
-        stage(r, withManifest = true)
-        rmDir(s"$r/b=0"); rmDir(s"$r/b=1"); rmDir(s"$r/b=2")
-        new java.io.File(s"$r/_compact_b=2/_MANIFEST").delete(); () }),
-      ("stale foreign-upTo stage lying around", { r =>
-        spark.read.parquet(s"$r/b=0")
-          .coalesce(1).write.parquet(s"$r/_compact_b=1") }))
-    for ((name, mangle) <- crashes) {
-      val root = java.nio.file.Files.createTempDirectory("ccp").toString
-      seed(root)
-      mangle(root)
-      Streams.compactPairStore(spark, root, upTo = 2L)
-      assert(readAll(root) === expected, s"crash point [$name] lost data")
-      val layout = new java.io.File(root).listFiles.map(_.getName)
-        .filterNot(_.startsWith("_compact")).toSeq.sorted
-      assert(layout === Seq("b=2"), s"crash point [$name] layout $layout")
-    }
+    try intercept[RuntimeException](
+      Streams.compactPairStore(spark, root, upTo = 2L))
+    finally LakeFormat.beforeCommitHook = () => ()
+    assert(readAll() === expected)
+    assert(LakeFormat.state(spark, root).version === v)
+    assert(LakeFormat.state(spark, root).txns.get("compact") === None)
+    // the re-run converges, and its vacuum leaves only the compacted
+    // version's files on disk (the crashed attempt's staged files too
+    // are gone)
+    Streams.compactPairStore(spark, root, upTo = 2L)
+    assert(readAll() === expected)
+    val st = LakeFormat.state(spark, root)
+    assert(st.txns.get("compact") === Some(2L))
+    assert(dataFiles(root) === st.files.map(_.path).toSet)
+    // a second run with the same bound commits nothing
+    Streams.compactPairStore(spark, root, upTo = 2L)
+    assert(LakeFormat.state(spark, root).version === st.version)
+    assert(readAll() === expected)
+  }
+
+  test("replay after compaction: an older batch id re-delivered after compactVectorIndex or compactPostings serves no deleted key, and the table version does not move") {
+    import graft.operators.Vectors
+    val e = Tables.embeddings(spark, TestSpark.sf).select("vec_id", "embedding")
+    val coarse = Vectors.kmeansCentroids(e, 8, 2)
+    val books = Vectors.pqCodebooks(e, 8, 8, 2)
+    val Seq(kept, gone) = e.select("vec_id").as[Long].collect().sorted.take(2).toSeq
+    def vec(id: Long) = e.filter(col("vec_id") === id)
+    val noVecs = spark.emptyDataset[Long].toDF("vec_id")
+    val vdir = java.nio.file.Files.createTempDirectory("replayc").toString
+    // `kept` at batch 0; `gone` upserted at batch 1, deleted at batch 2
+    Streams.vectorIndexApplyBatch(vec(kept), noVecs, 0L, vdir, coarse, books)
+    Streams.vectorIndexApplyBatch(vec(gone), noVecs, 1L, vdir, coarse, books)
+    Streams.vectorIndexApplyBatch(vec(gone).limit(0), Seq(gone).toDF("vec_id"),
+      2L, vdir, coarse, books)
+    def served() = Streams.readVectorIndex(spark, vdir)
+      .select("vec_id").as[Long].collect().toSet
+    assert(served() === Set(kept))
+    Streams.compactVectorIndex(spark, vdir, upTo = 2L)
+    val v = LakeFormat.state(spark, vdir).version
+    // at-least-once re-delivery of batch 1 AFTER the compaction
+    Streams.vectorIndexApplyBatch(vec(gone), noVecs, 1L, vdir, coarse, books)
+    assert(served() === Set(kept))
+    assert(LakeFormat.state(spark, vdir).version === v)
+    // the same schedule through the postings store
+    val pdir = java.nio.file.Files.createTempDirectory("replayp").toString
+    val noDocs = spark.emptyDataset[Long].toDF("doc_id")
+    Streams.postingsApplyBatch(Seq(2L -> "kept doc").toDF("doc_id", "text"),
+      noDocs, 0L, pdir)
+    Streams.postingsApplyBatch(Seq(1L -> "erased doc").toDF("doc_id", "text"),
+      noDocs, 1L, pdir)
+    Streams.postingsApplyBatch(Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      Seq(1L).toDF("doc_id"), 2L, pdir)
+    def docs() = Streams.readPostings(spark, pdir)
+      .filter(col("token").isNull).select("doc_id").as[Long].collect().toSet
+    assert(docs() === Set(2L))
+    Streams.compactPostings(spark, pdir, upTo = 2L)
+    val pv = LakeFormat.state(spark, pdir).version
+    Streams.postingsApplyBatch(Seq(1L -> "erased doc").toDF("doc_id", "text"),
+      noDocs, 1L, pdir)
+    assert(docs() === Set(2L))
+    assert(LakeFormat.state(spark, pdir).version === pv)
   }
 
   test("T15 bloom decontamination holds its oracle booleans at a 4x larger benchmark slice (sized-from-measurement)") {
@@ -1986,7 +2014,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(served() === batch(corpus1))
     assert(!served().map(_._1).contains(1L)) // adjacency broken → no match
     assert(!served().map(_._1).contains(4L)) // deleted → no match
-    // CRASH REPLAY: same batch id, same rows → identical store read
+    // CRASH REPLAY: same batch id, same rows → a no-op, identical read
     Streams.phraseIndexBatch(chg(
       (9L to 12L).map(i => (i, textOf(i), 100 + i, "c")) ++
         Seq((1L, rew1, 200L, "u"), (4L, "x", 201L, "d"))), 0L, dir)
@@ -1997,12 +2025,10 @@ class StreamingSpec extends AnyFunSuite {
     val corpus2 = corpus1 :+ (4L -> reborn)
     assert(served() === batch(corpus2))
     assert(served().map(_._1).contains(4L))
-    // COMPACTION: layout collapses, reads identical
+    // COMPACTION: epochs collapse into one commit, reads identical
     Streams.compactPositions(spark, dir, upTo = 1L)
     assert(served() === batch(corpus2))
-    val layout = new java.io.File(dir).listFiles
-      .map(_.getName).filter(!_.startsWith("_")).toSeq.sorted
-    assert(layout === Seq("b=1"))
+    assert(LakeFormat.state(spark, dir).txns.get("compact") === Some(1L))
     // same-batch upsert+delete of one doc is refused loudly
     intercept[IllegalArgumentException](Streams.positionsApplyBatch(
       Seq(7L -> "data change capture").toDF("doc_id", "text"),
@@ -2060,7 +2086,7 @@ class StreamingSpec extends AnyFunSuite {
       (9L to 12L).map(i => i -> textOf(i))
     assert(served() === batch(corpus1))
     assert(!served().map(_._1).contains(1L)) // gate token gone → unranked
-    // CRASH REPLAY: same batch id, same rows → identical store read
+    // CRASH REPLAY: same batch id, same rows → a no-op, identical read
     Streams.bm25IndexBatch(chg(
       (9L to 12L).map(i => (i, textOf(i), 100 + i, "c")) ++
         Seq((1L, rew1, 200L, "u"), (4L, "x", 201L, "d"))), 0L, dir)
@@ -2071,13 +2097,11 @@ class StreamingSpec extends AnyFunSuite {
     val corpus2 = corpus1 :+ (4L -> reborn)
     assert(served() === batch(corpus2))
     assert(served().map(_._1).contains(4L))
-    // COMPACTION: layout collapses to the highest id, reads identical,
+    // COMPACTION: epochs collapse into one commit, reads identical,
     // as-of inside the compacted range refused
     Streams.compactPostings(spark, dir, upTo = 1L)
     assert(served() === batch(corpus2))
-    val layout = new java.io.File(dir).listFiles
-      .map(_.getName).filter(!_.startsWith("_")).toSeq.sorted
-    assert(layout === Seq("b=1"))
+    assert(LakeFormat.state(spark, dir).txns.get("compact") === Some(1L))
     intercept[IllegalArgumentException](
       Streams.readPostingsAsOf(spark, dir, 0L).collect())
     // same-batch upsert+delete of one doc is refused loudly (the winner-
@@ -2283,8 +2307,8 @@ class StreamingSpec extends AnyFunSuite {
     val (nTrain, nVal) = (cont.head._2, cont.head._3)
     assert(nTrain >= 1 && nVal >= 1 && nTrain + nVal === 3)
     // cluster store advances (unrelated pair) — then a CRASH REPLAY of
-    // registry batch 1 re-derives from cluster state AS OF epoch ≤ 1 and
-    // strictly-before assignments: the store is unchanged
+    // registry batch 1 is a no-op at the epoch gate: the store is
+    // unchanged
     Streams.clusterIndexBatch(Seq((300L, 301L)).toDF("da", "db"), 2L, ccDir)
     Streams.splitRegistryBatch(Seq(trainId, newId).toDF("doc_id"), 1L,
       regDir, ccDir, valPct = 50)
@@ -2439,8 +2463,8 @@ class StreamingSpec extends AnyFunSuite {
     // commit AFTER that registry batch first executed. A crash replay
     // that re-read "committed cluster state ≤ batchId" would then fold
     // the late merge and re-coin the docs by their new shared
-    // representative — silently violating write-once. The recorded
-    // ccepoch manifest pins the replay to the state actually used.
+    // representative — silently violating write-once. The committed
+    // batch's epoch mark makes the replay a no-op instead.
     val regDir = java.nio.file.Files.createTempDirectory("reg33r").toString
     val ccDir = java.nio.file.Files.createTempDirectory("cc33r").toString
     val (a, b) = (5L, 6L)
@@ -2455,50 +2479,13 @@ class StreamingSpec extends AnyFunSuite {
     // the independently-checkpointed cluster writer now commits an epoch
     // INSIDE the registry batch's window (1 ≤ 2) merging the two docs
     Streams.clusterIndexBatch(Seq((a, b)).toDF("da", "db"), 1L, ccDir)
-    // crash replay of registry batch 2: must reproduce its bytes from
-    // the recorded cluster epoch, not from the advanced store
+    // crash replay of registry batch 2: must keep its recorded
+    // assignments, not re-coin from the advanced store
+    val v = LakeFormat.state(spark, regDir).version
     Streams.splitRegistryBatch(Seq(a, b).toDF("doc_id"), 2L,
       regDir, ccDir, valPct = 50)
     assert(splits() === before)
-  }
-
-  test("T33 manifest crash mid-write: a partial ccepoch dir (no _SUCCESS) is not authoritative — replay heals it and commits a fresh decision") {
-    // A crash DURING the manifest write leaves a partial directory. If
-    // bare existence made it authoritative, every replay would throw
-    // reading it (no committed footer) and the stream would wedge until
-    // someone hand-deleted the dir. The gate is the committer's
-    // _SUCCESS marker; re-deriving is sound because the manifest
-    // commits before the data write — a partial manifest proves no
-    // registry data was written under the old decision.
-    val regDir = java.nio.file.Files.createTempDirectory("reg33p").toString
-    val ccDir = java.nio.file.Files.createTempDirectory("cc33p").toString
-    val (a, b) = (7L, 8L)
-    // the cluster store has already merged the two docs
-    Streams.clusterIndexBatch(Seq((a, b)).toDF("da", "db"), 1L, ccDir)
-    // simulate the crash artifact: a partial manifest dir for batch 2 —
-    // a stray temp file, no _SUCCESS
-    val partial = new java.io.File(s"$regDir/ccepoch/b=2")
-    assert(partial.mkdirs())
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(partial.getPath, "part-00000.tmp"),
-      Array[Byte](1, 2, 3))
-    // replay of batch 2 must not read the partial dir as a decision: it
-    // re-derives against the committed cluster prefix (epoch 1), heals
-    // the manifest, and assigns both docs their merged representative
-    Streams.splitRegistryBatch(Seq(a, b).toDF("doc_id"), 2L,
-      regDir, ccDir, valPct = 50)
-    val rep = math.min(a, b)
-    val got = Streams.readSplits(spark, regDir)
-      .as[(Long, Long, String)].collect().toSeq.sorted
-    assert(got.map(s => (s._1, s._2)) === Seq((a, rep), (b, rep)))
-    // the healed manifest is now committed and pins the replayed epoch
-    assert(new java.io.File(s"$regDir/ccepoch/b=2/_SUCCESS").exists())
-    assert(spark.read.parquet(s"$regDir/ccepoch/b=2").head().getLong(0) === 1L)
-    // and a SECOND replay reproduces the same bytes off the manifest
-    Streams.splitRegistryBatch(Seq(a, b).toDF("doc_id"), 2L,
-      regDir, ccDir, valPct = 50)
-    assert(Streams.readSplits(spark, regDir)
-      .as[(Long, Long, String)].collect().toSeq.sorted === got)
+    assert(LakeFormat.state(spark, regDir).version === v)
   }
 
   test("T34 erasure propagation: in-place store sweep touches only erased buckets, intervals survive, ingest guard redacts stragglers, ledger folds, replay idempotent") {
@@ -2617,13 +2604,13 @@ class StreamingSpec extends AnyFunSuite {
     val batchPr = Graph.pageRank(edges.toDF("src", "dst"), iters = 3,
       scale = 1000000000000L, topK = 20).as[(Long, Long)].collect().toSeq
     assert(pr() === batchPr)
-    // CRASH REPLAY: the last epoch recomputes against strictly-before
-    // state and overwrites its own dir — reads unchanged
+    // CRASH REPLAY: the last epoch is a no-op at both tables' epoch
+    // gates — reads unchanged
     Streams.graphEdgesBatch(batches.last.toDF("src", "dst"),
       (batches.size - 1).toLong, dir)
     assert(degs() === derived())
     assert(pr() === batchPr)
-    // compaction merges epochs; reads identical, epoch dirs collapsed
+    // compaction merges epochs; reads identical
     Streams.compactGraph(spark, dir, (batches.size - 1).toLong)
     assert(degs() === derived())
     assert(pr() === batchPr)
@@ -2678,8 +2665,8 @@ class StreamingSpec extends AnyFunSuite {
       Seq((4L, 5L), (9L, 9L)).toDF("src", "dst"), 2L, dir)
     assert(present() === sym(kept))
     assert(degs() === derived())
-    // CRASH REPLAY of the delete batch: derives from strictly-before
-    // state and overwrites its own dir — reads unchanged
+    // CRASH REPLAY of the delete batch: a no-op at the epoch gates —
+    // reads unchanged
     Streams.graphEdgesDeleteBatch(
       Seq((4L, 5L), (10L, 11L)).toDF("src", "dst"), 1L, dir)
     assert(present() === sym(kept))
@@ -2692,12 +2679,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(degs() === derived())
     assert(servedPr() === batchPr(back))
     // COMPACTION clears tombstones: reads identical, and the compacted
-    // epoch's raw rows carry no w = −1
+    // table's stored rows carry no w = −1
     Streams.compactGraph(spark, dir, 3L)
     assert(present() === sym(back))
     assert(degs() === derived())
     assert(servedPr() === batchPr(back))
-    val rawW = spark.read.parquet(s"$dir/edges/b=3")
+    val rawW = LakeFormat.snapshot(spark, s"$dir/edges")
       .select(col("w")).as[Long].collect().toSet
     assert(rawW === Set(1L))
   }
@@ -2885,8 +2872,8 @@ class StreamingSpec extends AnyFunSuite {
       (math.min(900000L, partner), math.max(900000L, partner))))
     assert(Streams.readNearDupPairs(spark, cPairDir)
       .filter(col("da") === gone || col("db") === gone).isEmpty)
-    // COMPACTION removes the content PHYSICALLY: raw parquet of every
-    // compacted store carries zero rows referencing the erased id
+    // COMPACTION removes the content PHYSICALLY: every parquet file left
+    // under a compacted store carries zero rows referencing the erased id
     Streams.compactPostings(spark, postingsDir, 2L)
     Streams.compactPositions(spark, positionsDir, 2L)
     Streams.compactVectorIndex(spark, vidxDir, 2L)
@@ -2894,7 +2881,7 @@ class StreamingSpec extends AnyFunSuite {
     Streams.compactPairStore(spark, pairDir, 2L)
     Streams.compactShingleStore(spark, shDir, 2L)
     Streams.compactPairStore(spark, cPairDir, 2L)
-    def raw(dir: String) = spark.read.parquet(s"$dir/b=2")
+    def raw(dir: String) = spark.read.parquet(s"$dir/data")
     assert(raw(postingsDir).filter(col("doc_id") === gone).isEmpty)
     assert(raw(positionsDir).filter(col("doc_id") === gone).isEmpty)
     assert(raw(vidxDir).filter(col("vec_id") === gone).isEmpty)
@@ -2940,8 +2927,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(gServed() === gBatch)
     assert(!Streams.readGraphDegrees(spark, gDir)
       .as[(Long, Long)].collect().map(_._1).contains(gone))
-    // crash replay of the erasure epoch derives from strictly-before
-    // state and overwrites its own dirs — reads unchanged
+    // crash replay of the erasure epoch is a no-op at the epoch gates —
+    // reads unchanged
     Streams.erasureApplySearchStores(spark, 4L, ledger,
       graphDir = Some(gDir))
     assert(gServed() === gBatch)
