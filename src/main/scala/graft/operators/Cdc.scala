@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Schemas, Staged, Tables}
+import graft.sources.LakeFormat
 
 /** CDC core (SURVEY.md §2.2 C1–C8): the capability surface implied by the
   * reference's Debezium envelope stream (ez-cdc `README.md:331`,
@@ -161,37 +162,7 @@ object Cdc {
     * Library combinator: works on any envelope-shaped DataFrame.
     */
   def snapshot(changelog: DataFrame): DataFrame =
-    snapshotWithTombstones(changelog)
-      .filter(col("live"))
-      .select(col("id"), col("first_name"), col("last_name"), col("email"))
-
-  /** Latest state per key INCLUDING tombstones (live=false for deletes),
-    * with the winning lsn — the mergeable form used by incremental
-    * snapshot maintenance (streaming foreachBatch upsert): a delete must
-    * outrank a previously materialized live row when snapshots are folded
-    * across epochs. The newest-per-key fold of [[eventsWithTombstones]].
-    */
-  def snapshotWithTombstones(changelog: DataFrame): DataFrame =
-    newestPerKey(eventsWithTombstones(changelog), Seq("id"))
-
-  /** One row per envelope in the mergeable shape of
-    * [[snapshotWithTombstones]] (`id`, `live`, `lsn`, after-image) —
-    * unfolded: [[graft.sources.LakeFormat.merge]] folds any number of
-    * rows per key against the stored rows in its own window, so a sink
-    * hands it this projection and skips a fold (and its shuffle) of its
-    * own.
-    */
-  def eventsWithTombstones(changelog: DataFrame): DataFrame =
-    changelog.select(coalesce(col("after.id"), col("before.id")).as("id"),
-      (col("op") =!= "d").as("live"), col("source.lsn").as("lsn"),
-      col("after.first_name"), col("after.last_name"), col("after.email"))
-
-  // newest row per key by lsn — the C4 fold over the mergeable shape
-  private def newestPerKey(events: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("lsn").desc)
-    events.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
+    materializeLatestBy(changelog, Seq("id"))
 
   val cdcSnapshot: Q = (spark, dir) => snapshot(changelog(spark, dir)).orderBy(col("id"))
   val cdcSnapshotSql: String = changelogCte +
@@ -304,46 +275,28 @@ object Cdc {
     * have valid_to NULL; deletes close the last interval without opening a
     * new one. The other classic CDC materialization besides latest-state
     * (C4) — "maintaining data replicas" per the reference's motivation
-    * (README.md:56-63). Key-partitioned window: one shuffle on the PK.
-    */
-  def scd2(changelog: DataFrame,
-      attrs: Seq[String] = Seq("email")): DataFrame = {
-    changelog
-      .withColumn("key", coalesce(col("after.id"), col("before.id")))
-      .select(Seq(col("key").as("id"), col("op"),
-        col("source.lsn").as("lsn")) ++
-        attrs.map(a => col(s"after.$a").as(a)): _*)
-      .withColumn("valid_to", lead(col("lsn"), 1).over(
-        Window.partitionBy(col("id")).orderBy(col("lsn").asc)))
-      .filter(col("op") =!= "d")
-      .select(Seq(col("id"), col("lsn").as("valid_from"),
-        col("valid_to")) ++ attrs.map(col): _*)
-  }
-
-  /** Composite-key, schema-derived SCD2 — the C17 discipline (every
-    * fold takes `Seq[String]` keys) extended to the history
-    * materialization: version rows keyed by the FULL tuple (emitted as
-    * `key_<col>` columns, the crossCollectionOrder convention), with
-    * the tracked attributes derived from the after-image schema (every
-    * non-key field) instead of a caller-supplied list. One window over
-    * the key tuple — the same single keyed shuffle as the single-key
-    * form.
+    * (README.md:56-63).
+    *
+    * Keyed by the FULL key tuple (the C17 discipline: every fold takes
+    * `Seq[String]` keys), key columns under their own names as in
+    * [[latestWithTombstonesBy]]; the tracked attributes are every
+    * non-key after-image field, schema-derived — callers project the
+    * ones they need (one version row per event either way). One window
+    * over the key tuple: one keyed shuffle.
     */
   def scd2By(changelog: DataFrame, keyCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "scd2By needs at least one key column")
     val attrs = changelog.select(col("after.*")).columns.toSeq
       .filterNot(keyCols.contains)
-    val keyed = keyCols.foldLeft(changelog)((df, k) =>
-      df.withColumn(s"key_$k", coalesce(col(s"after.`$k`"), col(s"before.`$k`"))))
-      .select(keyCols.map(k => col(s"key_$k")) ++
-        Seq(col("op"), col("source.lsn").as("lsn")) ++
-        attrs.map(a => col(s"after.`$a`").as(a)): _*)
-    val w = Window.partitionBy(keyCols.map(k => col(s"key_$k")): _*)
-      .orderBy(col("lsn").asc)
+    val keyed = changelog.select(keyCols.map(k =>
+        coalesce(col(s"after.`$k`"), col(s"before.`$k`")).as(k)) ++
+      Seq(col("op"), col("source.lsn").as("lsn")) ++
+      attrs.map(a => col(s"after.`$a`").as(a)): _*)
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("lsn").asc)
     keyed
       .withColumn("valid_to", lead(col("lsn"), 1).over(w))
       .filter(col("op") =!= "d")
-      .select(keyCols.map(k => col(s"key_$k")) ++
+      .select(keyCols.map(col) ++
         Seq(col("lsn").as("valid_from"), col("valid_to")) ++
         attrs.map(col): _*)
   }
@@ -365,8 +318,7 @@ object Cdc {
       .drop("valid_from", "valid_to")
 
   val cdcScd2: Q = (spark, dir) =>
-    scd2(changelog(spark, dir),
-      Seq("first_name", "last_name", "email"))
+    scd2By(changelog(spark, dir), Seq("id"))
       .orderBy(col("id"), col("valid_from"))
   val cdcScd2Sql: String = changelogCte +
     """
@@ -389,8 +341,7 @@ object Cdc {
     val chg = changelog(spark, dir)
     val cutoff = chg.agg(expr("max(source.lsn) * 6 DIV 10").as("cutoff"))
     scd2AsOf(
-      scd2(chg, Seq("first_name", "last_name", "email"))
-        .crossJoin(broadcast(cutoff)),
+      scd2By(chg, Seq("id")).crossJoin(broadcast(cutoff)),
       col("cutoff"))
       .drop("cutoff")
       .orderBy(col("id"))
@@ -479,7 +430,8 @@ object Cdc {
     * after-delete.
     */
   val cdcScd2Join: Q = (spark, dir) => {
-    val hist = scd2(changelog(spark, dir), Seq("email"))
+    val hist = scd2By(changelog(spark, dir), Seq("id"))
+      .select(col("id"), col("valid_from"), col("valid_to"), col("email"))
     val facts = Tables.orders(spark, dir)
       .select(col("o_orderkey").as("orderkey"),
         col("o_custkey").as("custkey"))
@@ -1027,51 +979,40 @@ object Cdc {
       log.join(complete, log("transaction.id") === complete("__tx"), "left_semi"))
   }
 
-  /** Latest live after-image per key for ANY envelope changelog (the
-    * table-agnostic form of [[snapshot]] — key-partitioned window, shards
-    * at any scale).
+  /** Latest live row per key for ANY envelope changelog, keyed by a
+    * COMPOSITE primary key — the multi-tenant `(tenant_id, id)` shape any
+    * real deployment hits (the reference's table has a single serial PK,
+    * `init.sql:3`: [[snapshot]] is this at `Seq("id")`). The live rows of
+    * [[latestWithTombstonesBy]]: key columns first, then every non-key
+    * after-image field. One window partitioned by the full key tuple —
+    * the shuffle keys on all columns at once, so cardinality and skew
+    * behavior only improve vs a single column.
     */
-  def materializeLatest(changelog: DataFrame): DataFrame =
-    materializeLatestBy(changelog, Seq("id"))
-
-  /** [[materializeLatest]] generalized to a COMPOSITE primary key — the
-    * multi-tenant `(tenant_id, id)` shape any real deployment hits (the
-    * reference's table has a single serial PK, `init.sql:3`, so the
-    * single-column forms match it; this is the implied general form).
-    * Each key column is taken from the after-image with before-image
-    * fallback (deletes carry only `before`), and the fold is ONE window
-    * partitioned by the full key tuple — identical shuffle shape to the
-    * single-key fold: the shuffle keys on all columns at once, so
-    * cardinality and skew behavior only improve vs a single column.
-    */
-  def materializeLatestBy(changelog: DataFrame, keyCols: Seq[String]): DataFrame = {
-    require(keyCols.nonEmpty, "materializeLatestBy needs at least one key column")
-    val keyed = keyCols.foldLeft(changelog)((df, k) =>
-      df.withColumn(s"__k_$k", coalesce(col(s"after.`$k`"), col(s"before.`$k`"))))
-    val w = Window.partitionBy(keyCols.map(k => col(s"__k_$k")): _*)
-      .orderBy(col("source.lsn").desc)
-    keyed.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("op") =!= "d")
-      .select(col("after.*"))
-  }
+  def materializeLatestBy(changelog: DataFrame, keyCols: Seq[String]): DataFrame =
+    latestWithTombstonesBy(changelog, keyCols).filter(col("live"))
+      .drop("live", "lsn")
 
   /** Winner per composite key INCLUDING tombstones, for ANY
-    * envelope-shaped frame — the table-agnostic, composite-key form of
-    * [[snapshotWithTombstones]] (the mergeable shape
+    * envelope-shaped frame — the mergeable shape
     * [[graft.sources.LakeFormat.merge]] folds across micro-batches: a
     * delete must retain its winning lsn so a redelivered older update
-    * cannot resurrect the row). Output:
+    * cannot resurrect the row. Output:
     * key columns (top level), `live`, `lsn`, then every non-key
-    * after-image field, schema-derived. The newest-per-key fold of
+    * after-image field, schema-derived. The newest-per-key fold
+    * ([[graft.sources.LakeFormat.newestPerKey]] by lsn) of
     * [[eventsWithTombstonesBy]].
     */
   def latestWithTombstonesBy(changelog: DataFrame,
       keyCols: Seq[String]): DataFrame =
-    newestPerKey(eventsWithTombstonesBy(changelog, keyCols), keyCols)
+    LakeFormat.newestPerKey(eventsWithTombstonesBy(changelog, keyCols),
+      keyCols.map(col), col("lsn").desc)
 
-  /** [[eventsWithTombstones]] for ANY envelope-shaped frame and composite
-    * key: one row per envelope in the [[latestWithTombstonesBy]] shape,
-    * unfolded (the form a sink hands [[graft.sources.LakeFormat.merge]]).
+  /** One row per envelope in the [[latestWithTombstonesBy]] shape
+    * (key columns, `live`, `lsn`, after-image), for ANY envelope-shaped
+    * frame and composite key — unfolded: [[graft.sources.LakeFormat.merge]]
+    * folds any number of rows per key against the stored rows in its own
+    * window, so a sink hands it this projection and skips a fold (and
+    * its shuffle) of its own.
     */
   def eventsWithTombstonesBy(changelog: DataFrame,
       keyCols: Seq[String]): DataFrame = {
@@ -1117,8 +1058,8 @@ object Cdc {
       .unionAll(ords.select(col("source.lsn").as("lsn")))
       .agg(expr("max(lsn) * 6 DIV 10").as("cutoff"))
     val Seq(custC, ordsC) = multiTableCompleteTx(Seq(cust, ords), cutoff)
-    val snapC = materializeLatest(custC)
-    val snapO = materializeLatest(ordsC)
+    val snapC = snapshot(custC)
+    val snapO = materializeLatestBy(ordsC, Seq("id"))
     snapO.select(col("id").as("orderkey"), col("custkey"),
         col("status"), col("total"))
       .join(snapC.select(col("id").as("custkey"), col("first_name"), col("email")),
@@ -1271,11 +1212,10 @@ object Cdc {
     * events. The (id, name, email) state must hash-match [[cdcSnapshot]]'s.
     */
   val cdcIncrSnapshot: Q = (spark, dir) => {
-    val w = Window.partitionBy(col("key")).orderBy(col("source.lsn").desc)
-    incrementalChangelog(spark, dir)
+    val keyed = incrementalChangelog(spark, dir)
       .withColumn("key", coalesce(col("after.id"), col("before.id")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") =!= "d")
+    LakeFormat.newestPerKey(keyed, Seq(col("key")), col("source.lsn").desc)
+      .filter(col("op") =!= "d")
       .select(col("key").as("id"), col("after.first_name"),
         col("after.last_name"), col("after.email"),
         col("source.snapshot").as("src_snapshot"))
@@ -1642,14 +1582,7 @@ object Cdc {
     * `raw` must carry (lsn, raw) with `raw` the envelope JSON
     * `{"op":…,"key":…,"after":{…}|null}` (key present even for deletes,
     * whose after is null — the message-key the wire format always has).
-    */
-  def evolveSnapshot(raw: DataFrame,
-      after: org.apache.spark.sql.types.StructType,
-      keyField: String = "id"): DataFrame =
-    evolveSnapshotBy(raw, after, Seq(keyField))
-
-  /** [[evolveSnapshot]] generalized to a COMPOSITE key. Wire contract:
-    * a single-column key rides as a bare scalar (`"key":123` — the
+    * A single-column key rides as a bare scalar (`"key":123` — the
     * Debezium message-key for a serial PK, typed long), a composite key
     * as an object of its columns (`"key":{"tenant":"a","id":7}` — the
     * message-key struct Debezium emits for a multi-column PK), each key
@@ -1680,12 +1613,11 @@ object Cdc {
     val keyRefs: Seq[Column] =
       if (keyCols.size == 1) Seq(col("key"))
       else keyCols.map(k => col(s"key.`$k`"))
-    val w = Window.partitionBy(keyRefs: _*).orderBy(col("lsn").desc)
-    raw.select(col("lsn"), from_json(col("raw"), env).as("e"))
+    val events = raw.select(col("lsn"), from_json(col("raw"), env).as("e"))
       .select(col("e.op").as("op"), col("e.key").as("key"), col("lsn"),
         col("e.after").as("after"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") =!= "d")
+    LakeFormat.newestPerKey(events, keyRefs, col("lsn").desc)
+      .filter(col("op") =!= "d")
       .select(keyRefs.zip(keyCols).map { case (c, k) => c.as(k) } ++
         after.fieldNames.filterNot(keyCols.contains).sorted
           .map(f => col(s"after.`$f`").as(f)): _*)
@@ -1727,8 +1659,8 @@ object Cdc {
     // explicit numPartitions so AQE cannot re-coalesce it away.
     val spread = raw.repartition(
       spark.sessionState.conf.numShufflePartitions, col("lsn"))
-    evolveSnapshot(spread, evolvedAfterSchema(spread.withColumn("tbl",
-      lit("customers")))).orderBy(col("id"))
+    evolveSnapshotBy(spread, evolvedAfterSchema(spread.withColumn("tbl",
+      lit("customers"))), Seq("id")).orderBy(col("id"))
   }
   val cdcSchemaEvolveSql: String = changelogCte +
     """,
@@ -1809,9 +1741,9 @@ object Cdc {
     val spread = raw.repartition(
       spark.sessionState.conf.numShufflePartitions, col("lsn"))
     val widened = typedSchemaFromWire(spread)
-    evolveSnapshot(
+    evolveSnapshotBy(
       spread.withColumn("raw", get_json_object(col("raw"), "$.payload")),
-      widened)
+      widened, Seq("id"))
       .orderBy(col("id"))
   }
   val cdcSchemaEvolveTypedSql: String = changelogCte +
@@ -1921,25 +1853,19 @@ object Cdc {
     * table — #buckets rows, the documented tiny-window pattern. Union is
     * exactly the global consecutive-pair set; top-k plans as
     * TakeOrderedAndProject.
-    */
-  /** The audit over an arbitrary one-column `lsn` frame (property-tested
-    * against the naive global-sort computation on random multisets).
-    */
-  def seqAudit(lsns: DataFrame, topK: Int = 100): DataFrame =
-    seqAuditBy(lsns, Nil, topK)
-
-  /** [[seqAudit]] generalized to KEYED sequence streams — one audited
-    * lsn sequence per key tuple (per captured table, per topic
+    *
+    * KEYED sequence streams get one audited lsn sequence per key tuple
+    * (per captured table, per topic
     * partition: the C17 composite convention applied to the monitor;
     * every real deployment's WAL offsets advance independently per
     * slot/partition). All three passes key on the tuple: the
     * intra-bucket window partitions by (keys, bucket), the cross-bucket
     * lag by keys over per-bucket bounds (#keys × #buckets rows — still
-    * the documented tiny-window class per key; with Nil keys this IS
-    * the global seqAudit), and duplicates group by (keys, lsn). Output
-    * rows carry the key columns; severity order breaks ties on the full
-    * (gap desc, keys, prev_lsn) tuple so the top-K cutoff is
-    * deterministic in both engines. */
+    * the documented tiny-window class per key; Nil keys audit one global
+    * sequence, property-tested against the naive global sort), and
+    * duplicates group by (keys, lsn). Output rows carry the key columns;
+    * severity order breaks ties on the full (gap desc, keys, prev_lsn)
+    * tuple so the top-K cutoff is deterministic in both engines. */
   def seqAuditBy(lsnsIn: DataFrame, keys: Seq[String],
       topK: Int = 100): DataFrame = {
     val kc = keys.map(col)
@@ -1979,7 +1905,7 @@ object Cdc {
   }
 
   val cdcSeqAudit: Q = (spark, dir) =>
-    seqAudit(changelog(spark, dir).select(col("source.lsn").as("lsn")))
+    seqAuditBy(changelog(spark, dir).select(col("source.lsn").as("lsn")), Nil)
 
   /** Registered keyed instance: the customers and orders logs audited as
     * independent sequences keyed by the envelope's own `source.table` —
@@ -2040,20 +1966,13 @@ object Cdc {
     * Scale: one key-partitioned window (the same shuffle C4 already
     * pays) + a scalar agg; the watermark cross-join is a 1-row
     * broadcast.
+    *
+    * Keys are COMPOSITE-capable through the same [[latestWithTombstonesBy]]
+    * fold every other C17-convention operator uses — Kafka compacts on
+    * the full message key, and Debezium keys multi-column-PK topics by
+    * the whole tuple. Output: key columns, live, lsn, non-key
+    * after-image fields (schema-derived).
     */
-  def compactedTopic(changelog: DataFrame): DataFrame =
-    compactedTopicBy(changelog, Seq("id"))
-      .select(col("id"), col("live"), col("lsn"),
-        col("first_name"), col("last_name"), col("email"))
-
-  /** [[compactedTopic]] generalized to COMPOSITE record keys via the
-    * same [[latestWithTombstonesBy]] fold every other C17-convention
-    * operator uses — Kafka compacts on the full message key, and
-    * Debezium keys multi-column-PK topics by the whole tuple, so the
-    * per-key winner and the tombstone-retention filter must key
-    * identically. Output: key columns, live, lsn, non-key after-image
-    * fields (schema-derived), retention-filtered against the observed
-    * lsn-span midpoint (1-row broadcast, as before). */
   def compactedTopicBy(changelog: DataFrame, keys: Seq[String]): DataFrame = {
     val wTab = changelog.agg(
       expr("(min(source.lsn) + max(source.lsn)) DIV 2").as("w"))
@@ -2084,7 +2003,7 @@ object Cdc {
       |FROM snap, w WHERE live OR lsn >= w
       |ORDER BY custkey, orderkey""".stripMargin
   val cdcCompactedTopic: Q = (spark, dir) =>
-    compactedTopic(changelog(spark, dir)).orderBy(col("id"))
+    compactedTopicBy(changelog(spark, dir), Seq("id")).orderBy(col("id"))
   val cdcCompactedTopicSql: String = changelogCte + """,
       |last AS (SELECT *, row_number() OVER (PARTITION BY id ORDER BY lsn DESC) AS rn
       |         FROM chg),

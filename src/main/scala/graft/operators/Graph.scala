@@ -642,11 +642,11 @@ object Graph {
       when(col("depth") === 0, lit(null).cast("long"))
         .otherwise(element_at(split(col("path"), "/"), -2).cast("long"))
         .as("parent"))
-    val w = Window.partitionBy(col("node")).orderBy(col("pri").desc)
-    val ptr = up.select(col("node"), col("parent"), lit(2).as("pri"))
-      .unionByName(storedPtr.select(col("node"), col("parent"),
-        lit(1).as("pri")))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val ptr = graft.sources.LakeFormat.newestPerKey(
+        up.select(col("node"), col("parent"), lit(2).as("pri"))
+          .unionByName(storedPtr.select(col("node"), col("parent"),
+            lit(1).as("pri"))),
+        Seq(col("node")), col("pri").desc)
       .select(col("node"), col("parent"))
     val unaffected = closure.join(affected, Seq("node"), "left_anti")
     val recomputed = hierarchyPathsFrom(ptr.join(affected, Seq("node")),

@@ -47,7 +47,7 @@ object Lake {
         liveCol = "live", statsCols = Seq("id"))
       val chg = Cdc.changelog(spark, dir)
       def wave(pred: Column): DataFrame =
-        Cdc.snapshotWithTombstones(chg.filter(pred))
+        Cdc.latestWithTombstonesBy(chg.filter(pred), Seq("id"))
       val band = col("source.lsn") % 100
       LakeFormat.merge(wave(band <= 1), root)                      // v1: r/c
       LakeFormat.merge(wave(band.between(2, 3)), root)             // v2: u
@@ -361,8 +361,8 @@ object Lake {
       // irrelevant: a key whose events span bands folds to its true
       // newest event regardless of which wave landed first
       def wave(i: Long) = Map(
-        "customers" -> Cdc.snapshotWithTombstones(
-          custC.filter(col("source.lsn") % 3 === i)),
+        "customers" -> Cdc.latestWithTombstonesBy(
+          custC.filter(col("source.lsn") % 3 === i), Seq("id")),
         "orders" -> Cdc.latestWithTombstonesBy(
           ordsC.filter(col("source.lsn") % 3 === i), Seq("id")))
       (0L to 2L).foreach(i =>
@@ -471,11 +471,8 @@ object Lake {
     val out = stagedTxFeedStoreDir(spark, dir)
     def serve(table: String): DataFrame = {
       val df = graft.streaming.Streams.epochs(spark, s"$out/$table", table)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("id")).orderBy(col("b").desc)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && col("__live"))
-        .drop("__rn", "__live", "b")
+      LakeFormat.newestPerKey(df, Seq(col("id")), col("b").desc)
+        .filter(col("__live")).drop("__live", "b")
     }
     serve("orders").select(col("id").as("orderkey"), col("custkey"),
         col("status"), col("total"))

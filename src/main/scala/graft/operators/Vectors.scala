@@ -1389,11 +1389,11 @@ object Vectors {
       e.filter(col("vec_id") % 3 === 1),
       e.filter(col("vec_id") % 3 === 2)) :+ reemb).zipWithIndex
       .map { case (inc, i) => inc.withColumn("b", lit(i.toLong)) }
-    val wUp = Window.partitionBy(col("vec_id")).orderBy(col("b").desc)
-    val incrIndex = encodeForIndexCarry(
-        tagged.reduce(_ unionByName _), coarse, books, Seq("b"))
-      .withColumn("__rn", row_number().over(wUp))
-      .filter(col("__rn") === 1).drop("__rn", "b")
+    val incrIndex = graft.sources.LakeFormat.newestPerKey(
+        encodeForIndexCarry(tagged.reduce(_ unionByName _), coarse, books,
+          Seq("b")),
+        Seq(col("vec_id")), col("b").desc)
+      .drop("b")
     val batchIndex = encodeForIndex(latest, coarse, books)
     val q = latest.filter(col("vec_id") < 10)
     // wider routing than x3j (nprobe 8/16, shortlist 400): re-embedded

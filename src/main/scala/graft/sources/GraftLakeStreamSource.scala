@@ -141,7 +141,8 @@ class GraftLakeProvider extends DataSourceRegister with StreamSourceProvider
     * sink resolution, closing the format round trip (a lake table is
     * now a first-class source AND sink of the streaming engine).
     * Modes: `option("mode", "cdc")` (default) projects CDC envelope
-    * rows to the mergeable per-event shape with tombstones, which the
+    * rows to the mergeable per-event shape with tombstones
+    * ([[graft.operators.Cdc.eventsWithTombstonesBy]] on `id`), which the
     * merge folds to newest-per-key; `"merge"` takes
     * rows already in the merge shape (key cols + orderCol + liveCol).
     * Exactly-once identity: the engine replays at most the last batch
@@ -314,7 +315,8 @@ private[sources] class GraftLakeSink(root: String, appId: String,
       data: org.apache.spark.sql.Dataset[Row]): Unit = {
     val batch = GraftBridge.sinkBatchDataFrame(data.toDF)
     val shaped =
-      if (mode == "cdc") graft.operators.Cdc.eventsWithTombstones(batch)
+      if (mode == "cdc")
+        graft.operators.Cdc.eventsWithTombstonesBy(batch, Seq("id"))
       else batch
     LakeFormat.merge(shaped, root, txn = Some((appId, batchId)))
     ()

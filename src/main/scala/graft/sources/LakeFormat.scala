@@ -1031,9 +1031,20 @@ object LakeFormat {
       limit: Long): DataFrame =
     if (rows <= limit) broadcast(keySet) else keySet
 
+  /** The newest row per key: rank 1 of a window partitioned by `keys`
+    * and ordered by `order` (newest first, then the caller's
+    * tie-breaks). The one winner-per-key fold shared by the batch C4
+    * snapshot, this table's [[merge]] and [[commitDiff]], and the
+    * batch-keyed stream stores — they cannot drift apart. */
+  private[graft] def newestPerKey(df: DataFrame, keys: Seq[Column],
+      order: Column*): DataFrame =
+    df.withColumn("__rn",
+        row_number().over(Window.partitionBy(keys: _*).orderBy(order: _*)))
+      .filter(col("__rn") === 1).drop("__rn")
+
   /** Transactional CDC MERGE: fold `updates` (any number of rows per
     * key, each carrying `meta.orderCol` and `meta.liveCol` — e.g. one
-    * row per CDC event, [[graft.operators.Cdc.eventsWithTombstones]])
+    * row per CDC event, [[graft.operators.Cdc.eventsWithTombstonesBy]])
     * into the table, rewriting ONLY the files that contain touched keys.
     *
     * Steps: (1) materialize the batch once, observing its key range and
@@ -1142,12 +1153,9 @@ object LakeFormat {
           allowMissingColumns = true)
       case None => updates.withColumn("__src", lit(1))
     }
-    val w = Window.partitionBy(m.keyCols.map(col): _*)
-      .orderBy(col(m.orderCol).desc, col("__src").desc)
-    val folded = unioned
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__src")
+    val folded = newestPerKey(unioned, m.keyCols.map(col),
+        col(m.orderCol).desc, col("__src").desc)
+      .drop("__src")
     // nothing stored and nothing incoming: only the marker commits
     val adds =
       if (stored.isEmpty && batchRows == 0L) Seq.empty
@@ -1503,9 +1511,7 @@ object LakeFormat {
       val ord = (if (df.columns.contains(meta.orderCol))
         Seq(col(meta.orderCol).desc) else Seq.empty[Column]) :+
         xxhash64(hashed.map(col) :+ lit(0L): _*).desc // :+ lit — never zero-arg
-      val w = Window.partitionBy(meta.keyCols.map(col): _*).orderBy(ord: _*)
-      df.withColumn("__cdf_rn", row_number().over(w))
-        .filter(col("__cdf_rn") === 1).drop("__cdf_rn")
+      newestPerKey(df, meta.keyCols.map(col), ord: _*)
     }
     val post = if (adds.isEmpty) None
       else Some(folded(readFiles(spark, root, adds)))

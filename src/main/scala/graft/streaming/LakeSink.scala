@@ -12,8 +12,8 @@ import graft.sources.LakeFormat
   * micro-batch merges.
   *
   * Exactly-once mechanics: each micro-batch projects its envelopes to
-  * one mergeable row per event ([[graft.operators.Cdc.eventsWithTombstones]])
-  * and merges them with a `txn(appId, batchId)` marker in the SAME
+  * one mergeable row per event
+  * ([[graft.operators.Cdc.eventsWithTombstonesBy]] on `id`) and merges them with a `txn(appId, batchId)` marker in the SAME
   * atomic log commit as the data. The merge's window keeps the newest
   * event per key over stored ∪ batch (the C4 discipline), so the sink
   * runs no fold of its own. A crash between the commit and the stream
@@ -41,7 +41,8 @@ object LakeSink {
     * ids are not 1:1 with addData). */
   def applyBatch(envelopes: DataFrame, root: String, appId: String,
       batchId: Long): Unit = {
-    LakeFormat.merge(graft.operators.Cdc.eventsWithTombstones(envelopes),
+    LakeFormat.merge(
+      graft.operators.Cdc.eventsWithTombstonesBy(envelopes, Seq("id")),
       root, txn = Some((appId, batchId)))
     ()
   }

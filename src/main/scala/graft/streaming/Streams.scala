@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-import graft.Schemas.{CdcEvent, CdcRow}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.sources.LakeFormat
 
 /** Structured Streaming surface (SURVEY.md §2.2 T1–T7). Every combinator
@@ -63,72 +61,6 @@ object Streams extends Serializable {
     */
   def dedupWithinWatermark(events: DataFrame, delay: String = "1 hour"): DataFrame =
     events.withWatermark("ts", delay).dropDuplicatesWithinWatermark("event_id")
-
-  // ----------------------------------------------------------------- T11
-  /** Per-key running-snapshot state: the in-memory twin of batch
-    * Cdc.snapshot (C4); state per key is O(1) (latest lsn + row image).
-    */
-  case class SnapState(lsn: Long, live: Boolean,
-      first_name: Option[String], last_name: Option[String], email: Option[String])
-  case class SnapUpdate(id: Long, live: Boolean, lsn: Long,
-      first_name: Option[String], last_name: Option[String], email: Option[String])
-
-  /** The per-key fold: the winning (max-lsn) incoming event against the
-    * prior state; None when the batch is stale/out-of-order.
-    */
-  def advance(id: Long, prior: Option[SnapState],
-      incoming: Seq[CdcEvent]): Option[SnapState] = {
-    if (incoming.isEmpty) None
-    else {
-      val best = incoming.maxBy(e => e.source.lsn.getOrElse(Long.MinValue))
-      val bestLsn = best.source.lsn.getOrElse(Long.MinValue)
-      if (prior.exists(_.lsn >= bestLsn)) None // stale / out-of-order
-      else if (best.op == "d") Some(SnapState(bestLsn, live = false, None, None, None))
-      else {
-        val row = best.after.getOrElse(CdcRow(id, None, None, None))
-        Some(SnapState(bestLsn, live = true, row.first_name, row.last_name, row.email))
-      }
-    }
-  }
-
-  /** T11 — the running snapshot as an update stream on the Spark 4
-    * arbitrary-state API (`transformWithState` + [[StatefulProcessor]]):
-    * typed named state ([[ValueState]]) with per-state TTL support, timers
-    * decoupled from output mode, and state evolution across query
-    * versions. Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`); the state
-    * transition is [[advance]]. The durable replica of the same fold is
-    * [[LakeSink]].
-    */
-  class SnapshotProcessor extends StatefulProcessor[Long, CdcEvent, SnapUpdate] {
-    @transient private var latest: ValueState[SnapState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      latest = getHandle.getValueState[SnapState]("latest",
-        Encoders.product[SnapState], TTLConfig.NONE)
-
-    override def handleInputRows(id: Long, rows: Iterator[CdcEvent],
-        timerValues: TimerValues): Iterator[SnapUpdate] = {
-      val prior = if (latest.exists()) Some(latest.get()) else None
-      advance(id, prior, rows.toSeq) match {
-        case None => Iterator.empty
-        case Some(next) =>
-          latest.update(next)
-          Iterator.single(SnapUpdate(id, next.live, next.lsn,
-            next.first_name, next.last_name, next.email))
-      }
-    }
-  }
-
-  def snapshotStreamTws(events: Dataset[CdcEvent]): Dataset[SnapUpdate] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .filter(e => e.after.orElse(e.before).isDefined)
-      .groupByKey(e => e.after.orElse(e.before).map(_.id).get)
-      .transformWithState(new SnapshotProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
 
   /** Drive `f` with each micro-batch of `ds` and its batch id — the one
     * `foreachBatch` adapter for this module's `*Batch` functions, each of
@@ -841,12 +773,9 @@ object Streams extends Serializable {
 
   /** Latest-batch-wins per vec_id, tombstone winners dropped — shared by
     * the reads and [[compactVectorIndex]]. */
-  private def foldVectorIndex(df: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("b").desc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("live")).drop("__rn")
-  }
+  private def foldVectorIndex(df: DataFrame): DataFrame =
+    LakeFormat.newestPerKey(df, Seq(col("vec_id")), col("b").desc)
+      .filter(col("live"))
 
   /** Compact the vector index: rewrite the epochs ≤ `upTo` as one AND
     * drop shadowed rows (superseded encodings of re-embedded vec_ids) —
@@ -2398,12 +2327,8 @@ object Streams extends Serializable {
     * the next batch, and the T33 registry. A node appears at most once
     * per epoch, so the winner is unique.
     */
-  private def foldClusterMap(df: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("node")).orderBy(col("b").desc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", "b")
-  }
+  private def foldClusterMap(df: DataFrame): DataFrame =
+    LakeFormat.newestPerKey(df, Seq(col("node")), col("b").desc).drop("b")
 
   /** Consumer view of the incremental cluster map: one (node, cluster)
     * row per node ever seen in a pair — byte-equal to
@@ -2421,12 +2346,8 @@ object Streams extends Serializable {
     */
   def compactClusterIndex(spark: org.apache.spark.sql.SparkSession,
       clusterDir: String, upTo: Long): Unit =
-    compactEpochs(spark, clusterDir, upTo) { df =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("node")).orderBy(col("b").desc)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    }
+    compactEpochs(spark, clusterDir, upTo)(
+      LakeFormat.newestPerKey(_, Seq(col("node")), col("b").desc))
 
   // ------------------------------------------- T12 / C14 streaming gate
   /** One unit of the cross-table transaction gate's input stream: either a

@@ -50,10 +50,25 @@ object CdcPropertySpec extends Properties("CdcSnapshot") {
       Prop.collect(events.size) {
         if (events.isEmpty) Prop.passed
         else {
-          val got = Cdc.snapshot(events.toDS.toDF).collect()
-            .map(r => r.getLong(0) -> r.getString(3)).toMap
+          import org.apache.spark.sql.functions.col
+          val chg = events.toDS.toDF
+          val live = col("live")
+          // every entry point onto the newest-per-key fold, as (id, email)
+          val forms = Seq(
+            "snapshot" -> Cdc.snapshot(chg),
+            "materializeLatestBy" -> Cdc.materializeLatestBy(chg, Seq("id")),
+            "latestWithTombstonesBy" ->
+              Cdc.latestWithTombstonesBy(chg, Seq("id")).filter(live),
+            "compactedTopicBy" ->
+              Cdc.compactedTopicBy(chg, Seq("id")).filter(live),
+            "scd2By" ->
+              Cdc.scd2By(chg, Seq("id")).filter(col("valid_to").isNull))
           val expected = replay(keyed)
-          Prop(got == expected) :| s"got=$got expected=$expected"
+          forms.map { case (name, df) =>
+            val got = df.select("id", "email").collect()
+              .map(r => r.getLong(0) -> r.getString(1)).toMap
+            Prop(got == expected) :| s"$name: got=$got expected=$expected"
+          }.reduce(_ && _)
         }
       }
     }
@@ -149,7 +164,7 @@ object CdcPropertySpec extends Properties("CdcSnapshot") {
       val lsns = if (lsns0.isEmpty) List(0L) else lsns0
       val sp = spark
       import sp.implicits._
-      val got = Cdc.seqAudit(lsns.toDF("lsn"), topK).collect()
+      val got = Cdc.seqAuditBy(lsns.toDF("lsn"), Nil, topK).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
         .toList
       // naive: sort the multiset, consecutive positive gaps + dup values
@@ -264,7 +279,7 @@ object CdcPropertySpec extends Properties("CdcSnapshot") {
               r.getString(3))).toSet
         val got = graft.streaming.Streams.readScd2(spark, root)
           .map(hist).getOrElse(Set.empty)
-        val expected = hist(Cdc.scd2(events.toDS.toDF))
+        val expected = hist(Cdc.scd2By(events.toDS.toDF, Seq("id")))
         Prop(got == expected) :| s"got=$got expected=$expected"
       }
     }

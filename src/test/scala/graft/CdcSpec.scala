@@ -97,7 +97,8 @@ class CdcSpec extends AnyFunSuite {
       ev(40, "u", 101, row(40, "f", "l", "v1@x"), row(40, "f", "l", "v2@x")),
       ev(40, "d", 102, row(40, "f", "l", "v2@x"), None),
       ev(41, "c", 200, None, row(41, "g", "m", "w1@x")))
-    val h = Cdc.scd2(events.toDS.toDF).orderBy("id", "valid_from").collect()
+    val h = Cdc.scd2By(events.toDS.toDF, Seq("id"))
+      .orderBy("id", "valid_from").collect()
     assert(h.length === 3)
     assert(h(0).getLong(1) === 100L && h(0).getLong(2) === 101L) // closed by update
     assert(h(1).getLong(1) === 101L && h(1).getLong(2) === 102L) // closed by delete
@@ -205,7 +206,7 @@ class CdcSpec extends AnyFunSuite {
     // appears, and the torn tx's customers show their PRE-tx state (their
     // ids are absent entirely here, since all a customer's events share
     // one tx in the fixture schedule)
-    val snapO = Cdc.materializeLatest(ordsC)
+    val snapO = Cdc.materializeLatestBy(ordsC, Seq("id"))
     val tornBlock = tornTx.stripPrefix("tx-").toLong
     assert(snapO.filter(col("custkey") >= tornBlock * 10 &&
       col("custkey") < tornBlock * 10 + 10).count() === 0)
@@ -385,8 +386,9 @@ class CdcSpec extends AnyFunSuite {
     val widened = Cdc.typedSchemaFromWire(raw)
     assert(widened("id").dataType ===
       org.apache.spark.sql.types.StringType)
-    val got = Cdc.evolveSnapshot(
-      raw.withColumn("raw", get_json_object(col("raw"), "$.payload")), widened)
+    val got = Cdc.evolveSnapshotBy(
+      raw.withColumn("raw", get_json_object(col("raw"), "$.payload")), widened,
+      Seq("id"))
       .orderBy("id").collect()
     // two distinct UUID keys folded separately; the deleted one is gone
     assert(got.map(r => (r.getString(0), r.getString(1))).toSeq ===
@@ -625,7 +627,7 @@ class CdcSpec extends AnyFunSuite {
       ev2("b", 1, "u", 130, "f2"))
     val chg = events.toDS.toDF
     val hist = Cdc.scd2By(chg, Seq("first_name", "id"))
-      .orderBy("key_first_name", "key_id", "valid_from")
+      .orderBy("first_name", "id", "valid_from")
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getString(5)))
@@ -635,14 +637,21 @@ class CdcSpec extends AnyFunSuite {
       ("a", 1L, 110L, Some(120L), "e2"),   // closed by the delete
       ("b", 1L, 105L, Some(130L), "f1"),   // NOT closed by tenant a's events
       ("b", 1L, 130L, None, "f2")))
-    // single-key form agrees with scd2 modulo the key_ column convention
+    // key columns keep their own names, as in latestWithTombstonesBy
+    assert(Cdc.scd2By(chg, Seq("first_name", "id")).columns.toSeq ===
+      Seq("first_name", "id", "valid_from", "valid_to", "last_name", "email"))
+    // the single-key form interleaves both tenants into ONE history of id 1
     val single = Cdc.scd2By(chg, Seq("id"))
-      .select(col("key_id").as("id"), col("valid_from"), col("valid_to"),
-        col("email"))
-      .orderBy("id", "valid_from").collect().toSeq
-    val classic = Cdc.scd2(chg, Seq("email"))
-      .orderBy("id", "valid_from").collect().toSeq
-    assert(single === classic)
+      .select("id", "valid_from", "valid_to", "first_name", "email")
+      .orderBy("id", "valid_from").collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getString(3),
+        r.getString(4)))
+    assert(single.toSeq === Seq(
+      (1L, 100L, Some(105L), "a", "e1"),
+      (1L, 105L, Some(110L), "b", "f1"),
+      (1L, 110L, Some(120L), "a", "e2"),
+      (1L, 130L, None, "b", "f2")))
   }
 
   test("C26 erasure sweep: erased keys lose every PII attribute across their whole history, the log structure survives, and derived stores inherit the redaction") {
@@ -682,8 +691,8 @@ class CdcSpec extends AnyFunSuite {
     // structure but carries no attribute values for erased keys
     assert(Cdc.snapshot(swept.drop("redacted"))
       .except(Cdc.snapshot(chg)).count() === 0)
-    val histSwept = Cdc.scd2(swept.drop("redacted"), Seq("email"))
-    val histOrig = Cdc.scd2(chg, Seq("email"))
+    val histSwept = Cdc.scd2By(swept.drop("redacted"), Seq("id"))
+    val histOrig = Cdc.scd2By(chg, Seq("id"))
     assert(histSwept.filter(col("id").isin(erasedIds.toSeq: _*))
       .filter(col("email").isNotNull).count() === 0)
     assert(histSwept.filter(col("id").isin(erasedIds.toSeq: _*)).count() ===

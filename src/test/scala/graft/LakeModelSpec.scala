@@ -40,7 +40,7 @@ class LakeModelSpec extends AnyFunSuite {
 
     def mergeOp(): Unit = {
       val n = 1 + rnd.nextInt(5)
-      // one winner per key inside a batch (the snapshotWithTombstones
+      // one winner per key inside a batch (the latestWithTombstonesBy
       // contract merge documents): distinct keys per batch
       val keys = scala.collection.mutable.LinkedHashSet.empty[Long]
       while (keys.size < n) keys += rnd.nextInt(30).toLong

@@ -646,7 +646,7 @@ class LakeSpec extends AnyFunSuite {
         when(col("_change_type") === "d", col(c)).as(s"b_$c"),
         col(c).as(s"a_$c"))): _*)
     val chained = Cdc.diffAsChangelog(diff, Seq("id"), col("_commit_version"))
-    val downstream = Cdc.materializeLatest(chained)
+    val downstream = Cdc.materializeLatestBy(chained, Seq("id"))
       .orderBy("id").collect().map(_.toSeq).toSeq
     val upstream = LakeFormat.snapshot(spark, root).filter(col("live"))
       .drop("live", "lsn").orderBy("id").collect().map(_.toSeq).toSeq

@@ -266,49 +266,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(relLsns === Seq(1100L, 1150L, 1151L, 2100L, 2150L))
   }
 
-  test("T11 transformWithState snapshot: same fold as T6 on the Spark 4 state API") {
-    implicit val ctx = spark.sqlContext
-    // the new state API requires the RocksDB provider; scope it to this query
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[CdcEvent]
-      val q = Streams.snapshotStreamTws(mem.toDS).writeStream
-        .format("memory").queryName("t11").outputMode("update").start()
-      mem.addData(
-        CdcEvent(None, row(40, "a@x"), src(400), "c", 400),
-        CdcEvent(None, row(41, "b@x"), src(410), "c", 410))
-      q.processAllAvailable()
-      mem.addData(
-        CdcEvent(row(40, "a@x"), row(40, "a2@x"), src(401), "u", 401),
-        CdcEvent(row(40, "z@stale"), row(40, "z@stale"), src(399), "u", 399), // must lose
-        CdcEvent(row(41, "b@x"), None, src(411), "d", 411))
-      q.processAllAvailable(); q.stop()
-      // max-lsn row per id via struct-max (lsn leads the struct): a hash
-      // aggregation does not preserve sorted-within-group order, so
-      // orderBy + first() would be partitioning-dependent
-      val last = spark.table("t11")
-        .groupBy("id")
-        .agg(max(struct(col("lsn"), col("live"), col("email"))).as("s"))
-        .select(col("id"), col("s.live").as("live"), col("s.email").as("email"),
-          col("s.lsn").as("lsn"))
-        .orderBy("id").collect()
-      assert(last.length === 2)
-      assert(last(0).getBoolean(1) === true && last(0).getString(2) === "a2@x")
-      assert(last(1).getBoolean(1) === false) // deleted
-      // the stale event emitted nothing in batch 2 (fold rejected it)
-      val emitted40 = spark.table("t11").filter(col("id") === 40).count()
-      assert(emitted40 === 2) // insert + winning update, never the stale one
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("T5b dropDuplicatesWithinWatermark dedups and bounds state") {
     implicit val ctx = spark.sqlContext
     val mem = MemoryStream[E]
@@ -339,10 +296,12 @@ class StreamingSpec extends AnyFunSuite {
       CdcEvent(row(30, "a@x"), row(30, "a2@x"), src(301), "u", 301),
       CdcEvent(row(31, "b@x"), None, src(311), "d", 311))
     q.processAllAvailable()
-    // epoch 3: redelivered OLDER update for the deleted key — the persisted
-    // tombstone (lsn 311) must outrank it; no resurrection
+    // epoch 3: redelivered OLDER updates — for the deleted key the
+    // persisted tombstone (lsn 311) must outrank it (no resurrection); for
+    // the still-live key 30 the stored row (lsn 301) must outrank it
     val stale = CdcEvent(row(31, "b@x"), row(31, "stale@x"), src(309), "u", 309)
-    mem.addData(stale)
+    mem.addData(stale,
+      CdcEvent(row(30, "a@x"), row(30, "z@stale"), src(299), "u", 299))
     q.processAllAvailable(); q.stop()
     val stored = LakeFormat.snapshot(spark, root)
     val live = stored.filter(col("live")).select("id", "email")
@@ -856,7 +815,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = hist(Streams.readScd2(spark, root).get)
     // the batch operator over the concatenated changelog is the oracle —
     // including the late event, which a close-and-append form would corrupt
-    val expected = hist(Cdc.scd2((b4 ++ b0 ++ b1 ++ b2).toDS.toDF))
+    val expected = hist(Cdc.scd2By((b4 ++ b0 ++ b1 ++ b2).toDS.toDF, Seq("id")))
     assert(got === expected)
     // the re-created key's history shows the gap: [200,210) then [230,)
     assert(got.contains((2L, 200L, Some(210L), "b1")))
@@ -1068,7 +1027,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = rows(Streams.readEnrichedFacts(spark, outDir))
     // C22 batch oracle: the same interval join against the batch fold
     val factsDf = (fb0 ++ fb1).toDF("orderkey", "custkey", "flsn")
-    val hist = Cdc.scd2(dims.toDS.toDF)
+    val hist = Cdc.scd2By(dims.toDS.toDF, Seq("id"))
     val exp = rows(factsDf.join(hist,
       factsDf("custkey") === hist("id") &&
         factsDf("flsn") >= hist("valid_from") &&
