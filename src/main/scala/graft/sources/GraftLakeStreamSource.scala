@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SQLContext, Sp
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, StreamSinkProvider, StreamSourceProvider}
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, InsertableRelation, PrunedFilteredScan, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The lake change feed as a REAL Spark streaming source:
@@ -128,7 +128,7 @@ class GraftLakeProvider extends DataSourceRegister with StreamSourceProvider
       case SaveMode.ErrorIfExists => throw new IllegalStateException(
         s"graft-lake table at $root already exists (mode=ErrorIfExists)")
     }
-    new GraftLakeRelation(sqlContext, root,
+    GraftLakeRelation.table(sqlContext, root,
       parameters.filterNot { case (k, _) =>
         val lk = k.toLowerCase(java.util.Locale.ROOT)
         lk == "versionasof" || lk == "timestampasof"
@@ -198,7 +198,7 @@ class GraftLakeProvider extends DataSourceRegister with StreamSourceProvider
       val from = parameters.get("startingVersion").map(_.toLong).getOrElse(1L)
       val to = parameters.get("endingVersion").map(_.toLong)
       new GraftLakeChangeFeedRelation(sqlContext, root, from, to)
-    } else new GraftLakeRelation(sqlContext, root, parameters)
+    } else GraftLakeRelation.table(sqlContext, root, parameters)
   }
 }
 
@@ -298,7 +298,7 @@ class GraftLakeTxProvider extends DataSourceRegister with StreamSourceProvider
     val asOf = byM.map(_.toLong).orElse(byT.map(s =>
       LakeTx.manifestAtTimestamp(sqlContext.sparkSession, root,
         LakeFormat.parseTsOption(s))))
-    new GraftLakeTxRelation(sqlContext, root, table, asOf)
+    GraftLakeRelation.txMember(sqlContext, root, table, asOf)
   }
 }
 
@@ -314,11 +314,9 @@ private[sources] class GraftLakeSink(root: String, appId: String,
   override def addBatch(batchId: Long,
       data: org.apache.spark.sql.Dataset[Row]): Unit = {
     val batch = GraftBridge.sinkBatchDataFrame(data.toDF)
-    val shaped =
-      if (mode == "cdc")
-        graft.operators.Cdc.eventsWithTombstonesBy(batch, Seq("id"))
-      else batch
-    LakeFormat.merge(shaped, root, txn = Some((appId, batchId)))
+    if (mode == "cdc")
+      graft.streaming.LakeSink.applyBatch(batch, root, appId, batchId)
+    else LakeFormat.merge(batch, root, txn = Some((appId, batchId)))
     ()
   }
   override def toString: String = s"GraftLakeSink[$root]"
@@ -370,65 +368,39 @@ private[sources] object LakeFilters {
     scala.util.Try(c).toOption
 }
 
+/** The BATCH relation of one lake table version — a `graft-lake` read
+  * ([[GraftLakeRelation.table]]) or one `graft-lake-tx` member
+  * ([[GraftLakeRelation.txMember]]). It is told how to resolve the table
+  * version it serves: `explicitPin`, fixed for the relation's lifetime,
+  * or else `tip()` pinned PER SQL EXECUTION ([[PerExecutionPin]]): every
+  * scan planned under one execution reads ONE version (a self-join can
+  * never mix two — the Delta snapshot rule), while a NEW action
+  * re-resolves — so a relation cached in the session catalog's table
+  * cache (the V1 CREATE TABLE path, which Spark resolves once and
+  * reuses) serves fresh commits instead of the version current at first
+  * resolution. Pushed filters feed the stats pruning of every pin,
+  * current and historical alike; Spark re-applies every filter above. */
 private[sources] class GraftLakeRelation(val sqlContext: SQLContext,
-    root: String, parameters: Map[String, String])
-    extends BaseRelation with PrunedFilteredScan
-    with org.apache.spark.sql.sources.InsertableRelation {
+    root: String, explicitPin: Option[Long], tip: () => Long)
+    extends BaseRelation with PrunedFilteredScan {
 
   private def spark: SparkSession = sqlContext.sparkSession
 
-  /** SQL `INSERT INTO t SELECT ...` / `INSERT OVERWRITE t ...` over a
-    * catalog-registered lake table (Spark matches columns by position
-    * against [[schema]] and casts before calling). Readers after the
-    * insert see the new commit — the per-execution pin re-resolves on
-    * their next action, even through the session catalog's cached
-    * relation. Time-travel relations refuse writes. */
-  override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-    require(LakeStreamSources.opt(parameters, "versionAsOf").isEmpty &&
-      LakeStreamSources.opt(parameters, "timestampAsOf").isEmpty,
-      "cannot INSERT into a versionAsOf/timestampAsOf time-travel relation")
-    if (overwrite) LakeFormat.overwrite(data, root)
-    else LakeFormat.append(data, root)
-    ()
-  }
-
-  /** An explicitly requested historical pin — versionAsOf /
-    * timestampAsOf (the last version whose recorded commit wall-clock
-    * is ≤ the requested instant, epoch ms or ISO-8601) — fixed for the
-    * relation's lifetime. Without one, the served version is pinned
-    * PER SQL EXECUTION ([[PerExecutionPin]]): every scan planned under
-    * one execution reads ONE version (a self-join can never mix two —
-    * the Delta snapshot rule), while a NEW action re-resolves the tip —
-    * so a relation cached in the session catalog's table cache (the V1
-    * CREATE TABLE path, which Spark resolves once and reuses) serves
-    * fresh commits instead of the version current at first resolution. */
-  private val explicitPin: Option[Long] = {
-    val byV = LakeStreamSources.opt(parameters, "versionAsOf")
-    val byT = LakeStreamSources.opt(parameters, "timestampAsOf")
-    require(byV.isEmpty || byT.isEmpty,
-      "versionAsOf and timestampAsOf are mutually exclusive")
-    byV.map(_.toLong)
-      .orElse(byT.map(s => LakeFormat.versionAtTimestamp(spark, root,
-        LakeFormat.parseTsOption(s))))
-  }
-
-  private val tipPin = new PerExecutionPin(
-    () => LakeFormat.listLogVersions(spark, root).max)
-
-  private def pinnedVersion(): Long = explicitPin.getOrElse(tipPin(spark))
+  private val tipPin = new PerExecutionPin(tip)
 
   // committed versions are immutable: one log replay per served
   // version for the relation's lifetime, shared by schema, sizing and
-  // every scan (was: an independent replay per planner/scan call)
+  // every scan
   private val states =
     scala.collection.concurrent.TrieMap.empty[Long, LakeFormat.LakeState]
-  private def stateFor(v: Long): LakeFormat.LakeState = {
+  private def pinnedState(): LakeFormat.LakeState = {
+    val v = explicitPin.getOrElse(tipPin(spark))
     if (states.size > 8) states.clear()
     states.getOrElseUpdate(v, LakeFormat.state(spark, root, Some(v)))
   }
 
   override val schema: StructType =
-    LakeFormat.readState(spark, root, stateFor(pinnedVersion())).schema
+    LakeFormat.readState(spark, root, pinnedState()).schema
 
   /** Recorded per-file bytes OF THE SERVED VERSION, so the planner can
     * size THIS relation (e.g. auto-broadcast a small lake dim in a
@@ -437,24 +409,75 @@ private[sources] class GraftLakeRelation(val sqlContext: SQLContext,
     * the current tip's. Logs predating byte recording fall back to the
     * default — never report a fake small size. */
   override def sizeInBytes: Long = {
-    val files = stateFor(pinnedVersion()).files
+    val files = pinnedState().files
     if (files.nonEmpty && files.forall(_.bytes > 0L)) files.map(_.bytes).sum
     else super.sizeInBytes
   }
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    val pred = filters.toSeq.flatMap(LakeFilters.toColumn)
-      .reduceOption(_ && _)
-    val st = stateFor(pinnedVersion())
-    // stats pruning applies to every pin — current and historical alike
-    // ([[LakeFormat.scanFromState]]); an empty requiredColumns
-    // (count(*)) projects to zero-width rows instead of the full row
-    val df = pred match {
-      case Some(p) => LakeFormat.scanFromState(spark, root, st, p).df
+    val st = pinnedState()
+    // an empty requiredColumns (count(*)) projects to zero-width rows
+    // instead of the full row
+    val df = filters.toSeq.flatMap(LakeFilters.toColumn)
+      .reduceOption(_ && _) match {
+      case Some(p) => LakeFormat.scanState(spark, root, st, p).df
       case None    => LakeFormat.readState(spark, root, st)
     }
     df.select(requiredColumns.toSeq.map(col): _*).rdd
+  }
+}
+
+private[sources] object GraftLakeRelation {
+
+  /** `spark.read.format("graft-lake")`: the version an explicit
+    * versionAsOf / timestampAsOf names (the last version whose recorded
+    * commit wall-clock is ≤ the requested instant, epoch ms or
+    * ISO-8601), else the per-execution tip. The one writable relation:
+    * SQL `INSERT INTO t SELECT ...` / `INSERT OVERWRITE t ...` over a
+    * catalog-registered table (Spark matches columns by position
+    * against the schema and casts before calling) commits, and the next
+    * action's pin serves the commit. Time-travel relations refuse
+    * writes. */
+  def table(sqlContext: SQLContext, root: String,
+      parameters: Map[String, String]): GraftLakeRelation with InsertableRelation = {
+    val spark = sqlContext.sparkSession
+    val byV = LakeStreamSources.opt(parameters, "versionAsOf")
+    val byT = LakeStreamSources.opt(parameters, "timestampAsOf")
+    require(byV.isEmpty || byT.isEmpty,
+      "versionAsOf and timestampAsOf are mutually exclusive")
+    val explicit = byV.map(_.toLong)
+      .orElse(byT.map(s => LakeFormat.versionAtTimestamp(spark, root,
+        LakeFormat.parseTsOption(s))))
+    new GraftLakeRelation(sqlContext, root, explicit,
+        () => LakeFormat.listLogVersions(spark, root).max)
+        with InsertableRelation {
+      override def insert(data: DataFrame, overwrite: Boolean): Unit = {
+        require(explicit.isEmpty,
+          "cannot INSERT into a versionAsOf/timestampAsOf time-travel relation")
+        if (overwrite) LakeFormat.overwrite(data, root)
+        else LakeFormat.append(data, root)
+        ()
+      }
+    }
+  }
+
+  /** `spark.read.format("graft-lake-tx").option("table", t)`: member `t`
+    * at the version the manifest `manifestAsOf` pins, else the current
+    * manifest's pin resolved per execution — a concurrent commitTx
+    * between two scans of one query cannot split it across two
+    * transaction-consistent views. */
+  def txMember(sqlContext: SQLContext, root: String, table: String,
+      manifestAsOf: Option[Long]): GraftLakeRelation = {
+    val spark = sqlContext.sparkSession
+    def pinAt(mv: Long): Long = {
+      val pins = LakeTx.manifest(spark, root, Some(mv))
+      require(pins.contains(table), s"$table not a member of $root")
+      pins(table)
+    }
+    new GraftLakeRelation(sqlContext, LakeTx.tableRoot(root, table),
+      manifestAsOf.map(pinAt),
+      () => pinAt(LakeTx.manifestVersion(spark, root)))
   }
 }
 
@@ -513,68 +536,6 @@ private[sources] class GraftLakeChangeFeedRelation(
     val filtered = filters.toSeq.flatMap(LakeFilters.toColumn)
       .reduceOption(_ && _).map(df.filter).getOrElse(df)
     filtered.select(requiredColumns.toSeq.map(col): _*).rdd
-  }
-}
-
-private[sources] class GraftLakeTxRelation(val sqlContext: SQLContext,
-    root: String, table: String, manifestAsOf: Option[Long])
-    extends BaseRelation with PrunedFilteredScan {
-
-  private def spark: SparkSession = sqlContext.sparkSession
-
-  // an explicit manifestAsOf is fixed; otherwise the manifest is
-  // pinned PER EXECUTION: a concurrent commitTx between two scans of
-  // one query cannot split it across two transaction-consistent
-  // views, while a new action serves the newest published manifest
-  private val tipPin = new PerExecutionPin(
-    () => LakeTx.manifestVersion(spark, root))
-  private def pinnedManifest(): Long = manifestAsOf.getOrElse(tipPin(spark))
-
-  private val tRoot: String = LakeTx.tableRoot(root, table)
-
-  // manifest → the member's pinned table version (one small-file read,
-  // cached: manifests are immutable), and table version → replayed
-  // state (cached: committed versions are immutable)
-  private val memberPins =
-    scala.collection.concurrent.TrieMap.empty[Long, Long]
-  private def tableVersionAt(m: Long): Long =
-    memberPins.getOrElseUpdate(m, {
-      if (memberPins.size > 64) memberPins.clear()
-      val pins = LakeTx.manifest(spark, root, Some(m))
-      require(pins.contains(table), s"$table not a member of $root")
-      pins(table)
-    })
-
-  private val states =
-    scala.collection.concurrent.TrieMap.empty[Long, LakeFormat.LakeState]
-  private def stateFor(tv: Long): LakeFormat.LakeState = {
-    if (states.size > 8) states.clear()
-    states.getOrElseUpdate(tv, LakeFormat.state(spark, tRoot, Some(tv)))
-  }
-
-  private def currentState(): LakeFormat.LakeState =
-    stateFor(tableVersionAt(pinnedManifest()))
-
-  override val schema: StructType =
-    LakeFormat.readState(spark, tRoot, currentState()).schema
-
-  override def sizeInBytes: Long = {
-    val files = currentState().files
-    if (files.nonEmpty && files.forall(_.bytes > 0L)) files.map(_.bytes).sum
-    else super.sizeInBytes
-  }
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    // pushed filters feed the member table's stats pruning at the
-    // manifest-pinned version; Spark re-applies every filter above
-    val st = currentState()
-    val df = filters.toSeq.flatMap(LakeFilters.toColumn)
-      .reduceOption(_ && _) match {
-      case Some(p) => LakeFormat.scanFromState(spark, tRoot, st, p).df
-      case None    => LakeFormat.readState(spark, tRoot, st)
-    }
-    df.select(requiredColumns.toSeq.map(col): _*).rdd
   }
 }
 
@@ -936,45 +897,28 @@ private[sources] class GraftLakeTxSource(spark0: SparkSession,
   /** Bytes a MANIFEST version admits = the sum of its advanced members'
     * commit-range added bytes — one manifest pair read plus one small
     * log read per advanced commit, the same reads [[batchPlan]] pays. */
-  override private[sources] def versionBytes(mv: Long): Long = {
-    val prev = LakeTx.manifest(spark, root, Some(mv - 1))
-    val cur = LakeTx.manifest(spark, root, Some(mv))
-    cur.toSeq.map { case (t, pin) =>
-      val before = prev.getOrElse(t, 0L)
-      if (pin <= before) 0L
-      else (before + 1L to pin).map(v =>
+  override private[sources] def versionBytes(mv: Long): Long =
+    LakeTx.memberRanges(spark, root, mv, mv).flatMap(_._2).map {
+      case (t, lo, hi) => (lo to hi).map(v =>
         LakeFormat.commitAddedBytes(spark, LakeTx.tableRoot(root, t), v)).sum
     }.sum
-  }
 
   /** One piece per (manifest step, advanced member): that member's
-    * change feed between its previous and new pins, tagged. Pieces
-    * union flat with the [[LakeFormat.ChangeFeedLineageCut]] grouping —
-    * a long catch-up range stays bounded-depth. */
+    * change feed between its previous and new pins, tagged, unioned
+    * with the change feed's lineage cut ([[LakeFormat.unionCut]]) — a
+    * long catch-up range stays bounded-depth. */
   override private[sources] def batchPlan(fromM: Long, toM: Long): DataFrame = {
-    var prev = LakeTx.manifest(spark, root, Some(fromM - 1))
-    val pieces = (fromM to toM).flatMap { mv =>
-      val cur = LakeTx.manifest(spark, root, Some(mv))
-      val ps = cur.toSeq.sortBy(_._1).flatMap { case (t, pin) =>
-        val before = prev.getOrElse(t, 0L)
-        if (pin <= before) None
-        else Some(conform(
-          LakeFormat.changeFeed(spark, LakeTx.tableRoot(root, t),
-              before + 1L, pin)
+    val pieces = LakeTx.memberRanges(spark, root, fromM, toM).flatMap {
+      case (mv, ranges) => ranges.map { case (t, lo, hi) =>
+        conform(
+          LakeFormat.changeFeed(spark, LakeTx.tableRoot(root, t), lo, hi)
             .withColumn("_table", lit(t))
             .withColumn("_manifest_version", lit(mv)),
-          schema, root))
+          schema, root)
       }
-      prev = cur
-      ps
     }
     if (pieces.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else {
-      val groups = pieces.grouped(LakeFormat.ChangeFeedLineageCut)
-        .map(_.reduce(_.unionByName(_))).toSeq
-      if (groups.size == 1) groups.head
-      else groups.map(_.localCheckpoint(false)).reduce(_.unionByName(_))
-    }
+    else LakeFormat.unionCut(pieces)
   }
 }

@@ -43,15 +43,19 @@ import org.apache.spark.sql.catalyst.expressions.{
   * a writer prepares its data files, then claims version V by renaming a
   * temp file to `_log/V.json` WITHOUT overwrite — on HDFS-semantics
   * filesystems that rename is atomic and fails if the name is taken, so
-  * exactly one of two racing writers wins V; the loser re-reads the log
-  * and either retries on top (blind append — no read-set, always safe)
-  * or aborts with ConcurrentModificationException (MERGE — its rewrite
-  * was derived from a snapshot that is no longer the tip). In-JVM racers
-  * are additionally serialized per root so the local-filesystem rename
-  * (whose no-overwrite check is not atomic on POSIX) is race-free in
-  * tests; an object store without atomic create-if-absent needs the
-  * usual external log-store/conditional-PUT shim — the same requirement
-  * the public Delta protocol documents.
+  * exactly one of two racing writers wins V. Every write commits through
+  * ONE rule set ([[commit]]) over the commits that landed since it read:
+  * one carrying the writer's own exactly-once marker means a replay of
+  * the same write landed first — the writer drops its files and returns
+  * the tip; one that overlaps the writer's read/write set (its per-write
+  * conflict rule — none for a blind append, every action for an
+  * overwrite) aborts with ConcurrentModificationException; anything else
+  * rebases to the new tip. In-JVM racers are additionally serialized per
+  * root so the local-filesystem rename (whose no-overwrite check is not
+  * atomic on POSIX) is race-free in tests; an object store without
+  * atomic create-if-absent needs the usual external
+  * log-store/conditional-PUT shim — the same requirement the public
+  * Delta protocol documents.
   *
   * SCALE: the log is the only driver-side state — O(#files) entries,
   * checkpointed to parquet every [[checkpoint]] call so replay reads one
@@ -170,7 +174,7 @@ object LakeFormat {
 
   // ------------------------------------------------------------ JSON
 
-  private def esc(s: String): String = s.flatMap {
+  private[sources] def esc(s: String): String = s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -201,7 +205,7 @@ object LakeFormat {
   }
 
   // Jackson ships with Spark; thread-safe after construction
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private[sources] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private def parseStats(n: com.fasterxml.jackson.databind.JsonNode)
       : Map[String, ColStats] =
@@ -589,76 +593,42 @@ object LakeFormat {
   /** Atomic full-table OVERWRITE: ONE commit removes every current file
     * and adds the new rows — readers see the old contents or the new,
     * never a mix, and the replaced version stays time-travelable until
-    * [[vacuum]] (the same history contract as every rewrite). Uses the
-    * strict write-serializable rule (no rebase): an overwrite derived
+    * [[vacuum]] (the same history contract as every rewrite). Its
+    * conflict rule is strict write-serializability: an overwrite derived
     * its intent from the read snapshot, so ANY intervening commit
     * aborts with ConcurrentModificationException and the caller
     * re-runs. `txn` is [[merge]]'s exactly-once marker: it commits with
     * the new contents, and a replayed (appId, version) at-or-below the
-    * committed mark is a no-op. */
+    * committed mark is a no-op ([[commit]] applies the same rule to a
+    * replay that lands mid-window). */
   def overwrite(df: DataFrame, root: String,
       txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
     val st = state(spark, root)
-    if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
-      return st.version
+    if (landed(st, txn)) return st.version
     val adds = writeData(df, root, st.meta)
     val lines = st.files.map(a => removeJson(a.path)) ++ adds.map(addJson) ++
       txn.map { case (app, tv) => txnJson(app, tv) }
-    strictCommit(spark, root, st.version, lines, adds, "overwrite")
+    commit(spark, root, Some(st.version), lines, adds, "overwrite", txn,
+      _ => true)
   }
 
-  /** Blind append: no read-set, so a lost race just retries on the new
-    * tip — two concurrent appends both land, at consecutive versions.
-    * `txn` is [[merge]]'s exactly-once marker: a replayed (appId, version)
-    * at-or-below the committed mark is a no-op, and a retry that finds
-    * the same app's mark at-or-above ours among the commits it raced
-    * (a concurrent replay of this very batch landed first) drops its
-    * staged files and returns, as [[merge]]'s rule (c) does. */
+  /** Blind append: no read-set, so nothing that lands meanwhile
+    * conflicts — two concurrent appends both land, at consecutive
+    * versions. Without a marker it replays no state at all. `txn` is
+    * [[merge]]'s exactly-once marker: a replayed (appId, version)
+    * at-or-below the committed mark is a no-op, before or during the
+    * commit ([[commit]]). */
   def append(df: DataFrame, root: String,
       txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
-    // the version the exactly-once gate last checked (txn appends only)
-    var seen = -1L
-    txn.foreach { case (app, tv) =>
-      val st = state(spark, root)
-      if (st.txns.get(app).exists(_ >= tv)) return st.version
-      seen = st.version
-    }
-    val adds = writeData(df, root, readMeta(spark, root))
+    val read = txn.map(_ => state(spark, root))
+    if (read.exists(landed(_, txn))) return read.get.version
+    val adds = writeData(df, root, read.fold(readMeta(spark, root))(_.meta))
     val lines = adds.map(addJson) ++
       txn.map { case (app, tv) => txnJson(app, tv) }
-    beforeCommitHook()
-    var attempts = 0
-    while (attempts < 1000) {
-      val claimed = lockFor(root).synchronized {
-        val tip = listLogVersions(spark, root).max
-        val replayed = txn.exists { case (app, tv) =>
-          (seen + 1 to tip).exists(v =>
-            readLogLines(spark, root, v).map(parseLine).exists {
-              case TxnA(`app`, t) => t >= tv
-              case _              => false
-            })
-        }
-        if (replayed) {
-          val f = fs(spark, root)
-          adds.foreach(a => f.delete(new Path(root, a.path), false))
-          return tip
-        }
-        seen = tip
-        val v = tip + 1
-        if (tryCommit(spark, root, v, lines, op = "append")) Some(v) else None
-      }
-      claimed.foreach { v =>
-        // OUTSIDE the lock: the checkpoint replays state and runs a
-        // Spark write job — holding the per-root lock through it would
-        // stall every concurrent in-JVM writer on each interval commit
-        maybeAutoCheckpoint(spark, root, v)
-        return v
-      }
-      attempts += 1
-    }
-    throw new IllegalStateException(s"append lost $attempts races at $root")
+    commit(spark, root, read.map(_.version), lines, adds, "append", txn,
+      _ => false)
   }
 
   // ------------------------------------------------------------ read
@@ -688,20 +658,14 @@ object LakeFormat {
 
   /** The committed snapshot (all stored rows — MERGE tombstones included;
     * callers filter on `liveCol` for the live view). */
-  def snapshot(spark: SparkSession, root: String): DataFrame = {
-    val st = state(spark, root)
-    if (st.files.isEmpty) emptyLike(spark, st)
-    else readFiles(spark, root, st.files)
-  }
+  def snapshot(spark: SparkSession, root: String): DataFrame =
+    readState(spark, root, state(spark, root))
 
   /** Time travel: the table exactly as of committed `version`. Data files
     * are immutable and [[vacuum]]-protected for the retention window, so
     * this is a log-prefix replay plus the same pruned read. */
-  def readAsOf(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val st = state(spark, root, Some(version))
-    if (st.files.isEmpty) emptyLike(spark, st)
-    else readFiles(spark, root, st.files)
-  }
+  def readAsOf(spark: SparkSession, root: String, version: Long): DataFrame =
+    readState(spark, root, state(spark, root, Some(version)))
 
   /** Zero-row frame with the table's WIDEST schema: every vintage's
     * fields merged by name in deterministic (ddl-sorted vintage, field
@@ -896,21 +860,18 @@ object LakeFormat {
       pred: Column): LakeScan =
     scanState(spark, root, state(spark, root, Some(version)), pred)
 
-  /** [[scan]] over an ALREADY-REPLAYED state — for callers (the batch
-    * relations) that cache the [[LakeState]] of a pinned version and
-    * must not pay a fresh log replay per planner/scan call. */
-  private[sources] def scanFromState(spark: SparkSession, root: String,
-      st: LakeState, pred: Column): LakeScan = scanState(spark, root, st, pred)
-
   /** Read an already-replayed state's rows (schema-true empty frame for
-    * a zero-file state) — the cached-state sibling of [[readAsOf]]. */
+    * a zero-file state) — [[snapshot]], [[readAsOf]] and the batch
+    * relation, which caches the [[LakeState]] of its pinned version. */
   private[sources] def readState(spark: SparkSession, root: String,
       st: LakeState): DataFrame =
     if (st.files.isEmpty) emptyLike(spark, st)
     else readFiles(spark, root, st.files)
 
-  private def scanState(spark: SparkSession, root: String, st: LakeState,
-      pred: Column): LakeScan = {
+  /** [[scan]] over an already-replayed state ([[readState]]'s pruned
+    * sibling). */
+  private[sources] def scanState(spark: SparkSession, root: String,
+      st: LakeState, pred: Column): LakeScan = {
     // resolve the predicate against the table schema ONCE (no data file
     // opened — [[resolvePred]]): analysis failures (unknown column)
     // throw here, loudly, instead of silently disabling pruning.
@@ -963,16 +924,15 @@ object LakeFormat {
     val adds = writeData(transform(readFiles(spark, root, touched)),
       root, st.meta)
     val touchedPaths = touched.map(_.path).toSet
-    val safe: Seq[Action] => Boolean = _.forall {
+    val lines = touched.map(a => removeJson(a.path)) ++ adds.map(addJson)
+    commit(spark, root, Some(st.version), lines, adds, what, None, {
       // an intervening add whose stats prove NO row can match `pred` is
       // invisible to this DML; anything that may match must abort — a
       // rebased delete would silently miss its rows
-      case AddA(a)    => !scala.util.Try(mayMatch(predExpr, a)).getOrElse(true)
-      case RemoveA(p) => !touchedPaths.contains(p)
-      case _          => true
-    }
-    val lines = touched.map(a => removeJson(a.path)) ++ adds.map(addJson)
-    strictCommit(spark, root, st.version, lines, adds, what, safe)
+      case AddA(a)    => scala.util.Try(mayMatch(predExpr, a)).getOrElse(true)
+      case RemoveA(p) => touchedPaths.contains(p)
+      case _          => false
+    })
   }
 
   /** Predicate DELETE — physical row removal, the direct user-facing
@@ -1063,21 +1023,20 @@ object LakeFormat {
     * the materialization, the key broadcast, the probe, and the fold's
     * shuffle and write.
     *
-    * Concurrency: the commit claims exactly read-version+1. Any
-    * intervening commit aborts with ConcurrentModificationException —
-    * the rewrite was derived from a superseded snapshot (Delta's
-    * write-serializable rule for non-blind transactions); the caller
-    * re-runs the merge, which re-reads the new tip.
+    * Concurrency ([[commit]]): a commit that landed after the read
+    * version rebases this merge when it is provably disjoint from it
+    * (the key-range proof below) and aborts it with
+    * ConcurrentModificationException otherwise — the rewrite was derived
+    * from a superseded snapshot; the caller re-runs the merge, which
+    * re-reads the new tip. A replay of this very (appId, batch) that
+    * landed meanwhile makes the merge drop its files and return the tip.
     */
   def merge(updatesIn: DataFrame, root: String,
       txn: Option[(String, Long)] = None,
       broadcastKeyLimit: Long = DefaultBroadcastKeyLimit): Long = {
     val spark = updatesIn.sparkSession
     val st = state(spark, root)
-    // exactly-once gate: a replayed (appId, batchVersion) at-or-below the
-    // committed high-water mark already landed — no-op, same answer
-    if (txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) })
-      return st.version
+    if (landed(st, txn)) return st.version
     val m = st.meta
     (m.keyCols :+ m.orderCol :+ m.liveCol).foreach(c =>
       require(updatesIn.columns.contains(c), s"merge updates missing column $c"))
@@ -1168,24 +1127,17 @@ object LakeFormat {
     //     at read time, and files it added mid-window are covered by b);
     // (b) every file it adds is key-disjoint from our updates' range
     //     (our fold could not have needed its rows — requires the
-    //     single-key range proof; composite keys abort, conservative);
-    // (c) it carries no exactly-once marker of OUR app at-or-above our
-    //     batch id (a concurrent replay of this very batch already
-    //     landed — rebasing would double-apply; the re-run no-ops
-    //     through the read-time gate instead).
+    //     single-key range proof; composite keys abort, conservative).
     // So continuous ingest rebases over disjoint-key ingest, appends,
     // and compactions of other partitions, and aborts on real overlap.
     val candPaths = cands.map(_.path).toSet
-    val safe: Seq[Action] => Boolean = _.forall {
-      case AddA(a)       => keyDisjoint(a)
-      case RemoveA(p)    => !candPaths.contains(p)
-      case TxnA(app, tv) =>
-        !txn.exists { case (a0, t0) => a0 == app && tv >= t0 }
-      case MetaA(_) | (_: CommitA) => true
-    }
     val lines = touched.map(a => removeJson(a.path)) ++ adds.map(addJson) ++
       txn.map { case (app, tv) => txnJson(app, tv) }
-    strictCommit(spark, root, st.version, lines, adds, "merge", safe)
+    commit(spark, root, Some(st.version), lines, adds, "merge", txn, {
+      case AddA(a)    => !keyDisjoint(a)
+      case RemoveA(p) => candPaths.contains(p)
+      case _          => false
+    })
   }
 
   /** Test seam: invoked between a transaction's read/stage phase and its
@@ -1195,47 +1147,72 @@ object LakeFormat {
     * itself first or nested commits recurse. */
   private[graft] var beforeCommitHook: () => Unit = () => ()
 
-  /** Commit `lines` at the current tip + 1. When the tip moved past
-    * `readVersion`, the intervening commits' actions are handed to
-    * `safeOver`: true means PROVABLY DISJOINT from this transaction's
-    * read/write set, so the commit REBASES — claims the new tip + 1 with
-    * the same lines — instead of aborting (the file-level conflict
-    * detection the public Delta protocol performs, replacing the naive
-    * version-equality rule: without it, continuous CDC ingest and
-    * periodic compaction serialize — every OPTIMIZE aborts a concurrent
-    * merge window and vice versa, which a 100 TB deployment cannot
-    * afford). A real conflict (safeOver false) aborts with
-    * ConcurrentModificationException and drops the staged `adds`; the
-    * caller re-runs against the new tip. The default predicate rejects
-    * everything — the old write-serializable rule. */
-  private def strictCommit(spark: SparkSession, root: String,
-      readVersion: Long, lines: Seq[String], adds: Seq[AddFile],
-      what: String,
-      safeOver: Seq[Action] => Boolean = _ => false): Long = {
+  /** The exactly-once gate at read time: whether `st` already carries
+    * `txn`'s (app, id) marker at or above its id — the write landed
+    * before and returns `st.version` untouched. */
+  private def landed(st: LakeState, txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (app, tv) => st.txns.get(app).exists(_ >= tv) }
+
+  /** THE COMMIT of every data-table write: claim the tip + 1 for `lines`
+    * (the staged `adds` among them). [[beforeCommitHook]] fires once;
+    * then, under the per-root lock, the commits that landed after
+    * `readVersion` are read — none when the tip has not moved, none
+    * ever for a blind write without a marker (`readVersion` None) — and
+    * one rule set applies, in order:
+    *  1. one of them carries `txn`'s own (app, id) at or above its id: a
+    *     replay of this very write landed first — drop the staged files
+    *     and return the tip, committing nothing (rebasing would apply
+    *     the batch twice);
+    *  2. `conflicts` holds for one of their actions — the writer's
+    *     read/write set overlaps them: drop the staged files and throw
+    *     ConcurrentModificationException; the caller re-runs against
+    *     the new tip;
+    *  3. otherwise claim tip + 1 — a REBASE when the tip moved (the
+    *     file-level conflict detection of the public Delta protocol:
+    *     continuous CDC ingest and periodic compaction do not
+    *     serialize). An out-of-process writer that took that version
+    *     first ([[tryCommit]]'s readback) re-runs the same checks from
+    *     its commit on.
+    * The auto-checkpoint runs after the claim, outside the lock: it
+    * replays state and runs a Spark write job, and holding the lock
+    * through it would stall every concurrent in-JVM writer. */
+  private def commit(spark: SparkSession, root: String,
+      readVersion: Option[Long], lines: Seq[String], adds: Seq[AddFile],
+      op: String, txn: Option[(String, Long)],
+      conflicts: Action => Boolean): Long = {
     beforeCommitHook()
-    def abort(base: Long): Nothing = {
-      // our rewrite is stale: drop the files it staged and abort
+    def drop(): Unit = {
       val f = fs(spark, root)
       adds.foreach(a => f.delete(new Path(root, a.path), false))
-      throw new java.util.ConcurrentModificationException(
-        s"$what read v$base but a conflicting commit intervened at $root" +
-          " — re-run")
     }
-    val v = lockFor(root).synchronized {
-      val tip = listLogVersions(spark, root).max
-      if (tip != readVersion) {
-        val intervening = (readVersion + 1 to tip)
-          .flatMap(v => readLogLines(spark, root, v).map(parseLine))
-        if (!safeOver(intervening)) abort(readVersion)
+    val own: Action => Boolean = {
+      case TxnA(app, t) => txn.exists { case (a, tv) => a == app && t >= tv }
+      case _            => false
+    }
+    var checked = readVersion
+    var attempts = 0
+    while (attempts < 1000) {
+      val claimed = lockFor(root).synchronized {
+        val tip = listLogVersions(spark, root).max
+        val since = checked.filter(_ < tip).toSeq.flatMap(c =>
+          (c + 1 to tip).flatMap(v => readLogLines(spark, root, v).map(parseLine)))
+        if (since.exists(own)) { drop(); return tip }
+        if (since.exists(conflicts)) {
+          drop()
+          throw new java.util.ConcurrentModificationException(
+            s"$op read v${checked.get} but a conflicting commit " +
+              s"intervened at $root — re-run")
+        }
+        checked = checked.map(_ => tip)
+        Option.when(tryCommit(spark, root, tip + 1, lines, op))(tip + 1)
       }
-      // a lost claim here means an OUT-OF-PROCESS racer slipped past the
-      // in-JVM lock: indistinguishable from a mid-window tip move, abort
-      if (!tryCommit(spark, root, tip + 1, lines, op = what)) abort(tip)
-      tip + 1
+      claimed.foreach { v =>
+        maybeAutoCheckpoint(spark, root, v)
+        return v
+      }
+      attempts += 1
     }
-    // outside the lock — see append's auto-checkpoint note
-    maybeAutoCheckpoint(spark, root, v)
-    v
+    throw new IllegalStateException(s"$op lost $attempts claims at $root")
   }
 
   /** OPTIMIZE: rewrite the files `select` picks from the current live
@@ -1266,14 +1243,13 @@ object LakeFormat {
       .repartitionByRange(targetFiles, layout: _*)
     val adds = writeData(df, root, st.meta)
     val pickedPaths = picked.map(_.path).toSet
+    val lines = picked.map(a => removeJson(a.path)) ++ adds.map(addJson)
     // a pure rewrite of the picked files conflicts ONLY with a removal
     // of a picked file; adds and removes elsewhere are untouched by it
-    val safe: Seq[Action] => Boolean = _.forall {
-      case RemoveA(p) => !pickedPaths.contains(p)
-      case _          => true
-    }
-    val lines = picked.map(a => removeJson(a.path)) ++ adds.map(addJson)
-    strictCommit(spark, root, st.version, lines, adds, "optimize", safe)
+    commit(spark, root, Some(st.version), lines, adds, "optimize", None, {
+      case RemoveA(p) => pickedPaths.contains(p)
+      case _          => false
+    })
   }
 
   /** [[optimize]] selector: only files under `maxBytes` on disk — the
@@ -1327,26 +1303,31 @@ object LakeFormat {
         .withColumn("_commit_version", lit(null).cast("long"))
         .filter(lit(false))
     else {
-      // LINEAGE CUT every [[ChangeFeedLineageCut]] commits: each commit
-      // contributes a join+window subtree, and a months-long feed
-      // (thousands of commits) would otherwise hand the optimizer one
-      // O(#commits)-deep nest of them. Groups of k commits union
-      // normally; past one group, each group is localCheckpoint'd LAZILY
-      // (the plan collapses to a LogicalRDD leaf now, rows materialize
-      // once on first use) and the result is one FLAT union of O(n/k)
-      // leaves — bounded plan depth at any range length, each commit's
-      // rows computed exactly once. Short ranges (≤ k commits, the
-      // registered query's shape) take the plain-union path unchanged.
-      val groups = perCommit.grouped(ChangeFeedLineageCut)
-        .map(_.reduce(_.unionByName(_, allowMissingColumns = true))).toSeq
-      if (groups.size == 1) groups.head
-      else groups.map(_.localCheckpoint(false))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
+      unionCut(perCommit)
     }
   }
 
   /** Commits per change-feed lineage-cut group — the plan-depth bound. */
   val ChangeFeedLineageCut: Int = 16
+
+  /** Union per-commit feed pieces by name with a LINEAGE CUT every
+    * [[ChangeFeedLineageCut]] pieces — [[changeFeed]]'s and the tx
+    * stream source's. Each piece is a join+window subtree, and a
+    * months-long feed (thousands of commits) would otherwise hand the
+    * optimizer one O(#commits)-deep nest of them. Groups of k pieces
+    * union normally; past one group, each group is localCheckpoint'd
+    * LAZILY (the plan collapses to a LogicalRDD leaf now, rows
+    * materialize once on first use) and the result is one FLAT union of
+    * O(n/k) leaves — bounded plan depth at any range length, each
+    * piece's rows computed exactly once. Short ranges (≤ k pieces, the
+    * registered query's shape) take the plain-union path. */
+  private[sources] def unionCut(pieces: Seq[DataFrame]): DataFrame = {
+    val groups = pieces.grouped(ChangeFeedLineageCut)
+      .map(_.reduce(_.unionByName(_, allowMissingColumns = true))).toSeq
+    if (groups.size == 1) groups.head
+    else groups.map(_.localCheckpoint(false))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+  }
 
   /** The change feed's row schema for the table's CURRENT widest schema:
     * key + payload columns (order/live bookkeeping folded away) plus

@@ -55,17 +55,9 @@ object LakeTx {
     * and [[LakeFormat.history]] read tx-layer bookkeeping from. */
   private[sources] def txLogRoot(root: String): String = txRoot(root)
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def manifestJson(vs: Map[String, Long]): String =
-    vs.toSeq.sortBy(_._1).map { case (t, v) => s""""${esc(t)}":$v""" }
+    vs.toSeq.sortBy(_._1).map { case (t, v) =>
+      s""""${LakeFormat.esc(t)}":$v""" }
       .mkString("""{"manifest":{""", ",", "}}")
 
   /** Initialize the transactional root over already-created member
@@ -99,7 +91,7 @@ object LakeTx {
       asOf: Option[Long] = None): Map[String, Long] = {
     val v = asOf.getOrElse(manifestVersion(spark, root))
     LakeFormat.readLogLines(spark, txRoot(root), v)
-      .map(mapper.readTree)
+      .map(LakeFormat.mapper.readTree)
       .collectFirst { case n if n.has("manifest") =>
         n.get("manifest").properties().asScala
           .map(e => e.getKey -> e.getValue.asLong).toMap
@@ -196,21 +188,28 @@ object LakeTx {
     if (from > tip) return Seq.empty
     val toV = math.min(tip, from + math.max(0, maxManifests).toLong - 1L)
     if (toV < from) return Seq.empty
-    val applied = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var prev = manifest(spark, root, Some(from - 1))
-    (from to toV).foreach { mv =>
-      val cur = manifest(spark, root, Some(mv))
-      cur.toSeq.sortBy(_._1).foreach { case (t, pin) =>
-        val before = prev.getOrElse(t, 0L)
-        if (pin > before)
-          apply(t, LakeFormat.changeFeed(spark, tableRoot(root, t),
-            before + 1L, pin), mv)
+    memberRanges(spark, root, from, toV).map { case (mv, ranges) =>
+      ranges.foreach { case (t, lo, hi) =>
+        apply(t, LakeFormat.changeFeed(spark, tableRoot(root, t), lo, hi), mv)
       }
       LakeFormat.commitConsumerOffset(spark, consumerDir, mv)
-      applied += mv
-      prev = cur
+      mv
     }
-    applied.toSeq
+  }
+
+  /** The one walk of the manifest log: per manifest version in [fromM,
+    * toM], the commit range each member advanced by — (table, first,
+    * last), from its previous pin + 1 to its new pin, tables in name
+    * order; a member whose pin did not move is absent. */
+  private[sources] def memberRanges(spark: SparkSession, root: String,
+      fromM: Long, toM: Long): Seq[(Long, Seq[(String, Long, Long)])] = {
+    val pins = (fromM - 1 to toM).map(mv => mv -> manifest(spark, root, Some(mv)))
+    pins.zip(pins.drop(1)).map { case ((_, prev), (mv, cur)) =>
+      mv -> cur.toSeq.sortBy(_._1).flatMap { case (t, pin) =>
+        val before = prev.getOrElse(t, 0L)
+        Option.when(pin > before)((t, before + 1L, pin))
+      }
+    }
   }
 
   /** MANIFEST-COORDINATED VACUUM: reclaim member-table files while

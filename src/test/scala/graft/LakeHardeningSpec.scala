@@ -498,21 +498,56 @@ class LakeHardeningSpec extends AnyFunSuite {
     assert(live === Map(1L -> "mid"))
   }
 
-  test("merge aborts when a concurrent replay of its own exactly-once batch landed") {
+  /** Relative paths of every parquet data file under `root`. */
+  private def dataFilesOnDisk(root: String): Set[String] =
+    org.apache.commons.io.FileUtils.listFiles(
+        new java.io.File(root, "data"), Array("parquet"), true)
+      .toArray.map(_.asInstanceOf[java.io.File].getPath
+        .stripPrefix(root + "/")).toSet
+
+  test("merge whose own (app, id) landed mid-window returns the tip, commits nothing, leaves no staged file") {
     val root = freshRoot()
     LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
     val batch = Seq((50L, 1L, true, "x")).toDF("id", "lsn", "live", "v")
-    intercept[java.util.ConcurrentModificationException] {
-      withConcurrent {
-        LakeFormat.merge(batch, root, txn = Some(("app", 7L)))
-      } {
-        LakeFormat.merge(batch, root, txn = Some(("app", 7L)))
-      }
+    // the same batch, delivered twice: the copy fired inside the racer's
+    // commit window lands first, and the racer must not apply it again
+    val v = withConcurrent {
+      LakeFormat.merge(batch, root, txn = Some(("app", 7L)))
+      ()
+    } {
+      LakeFormat.merge(batch, root, txn = Some(("app", 7L)))
     }
-    // the re-run no-ops through the read-time marker gate — applied ONCE
-    val tip = LakeFormat.merge(batch, root, txn = Some(("app", 7L)))
-    assert(tip === LakeFormat.state(spark, root).version)
+    val st = LakeFormat.state(spark, root)
+    assert(v === st.version && st.version === 1L)
+    assert(st.txns === Map("app" -> 7L))
     assert(LakeFormat.snapshot(spark, root).count() === 1L)
+    assert(dataFilesOnDisk(root) === st.files.map(_.path).toSet,
+      "the racer's staged files must not outlive its dropped claim")
+    // a later replay no-ops through the read-time marker gate
+    assert(LakeFormat.merge(batch, root, txn = Some(("app", 7L))) === 1L)
+    assert(LakeFormat.state(spark, root).version === 1L)
+  }
+
+  test("overwrite whose own (app, id) landed mid-window returns the tip, commits nothing, leaves no staged file") {
+    val root = freshRoot()
+    LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
+    def rows(v: String) = Seq((1L, 1L, true, v)).toDF("id", "lsn", "live", "v")
+    val v = withConcurrent {
+      LakeFormat.overwrite(rows("first"), root, txn = Some(("app", 3L)))
+      ()
+    } {
+      LakeFormat.overwrite(rows("racer"), root, txn = Some(("app", 3L)))
+    }
+    val st = LakeFormat.state(spark, root)
+    assert(v === st.version && st.version === 1L)
+    assert(st.txns === Map("app" -> 3L))
+    assert(LakeFormat.snapshot(spark, root).select("v").as[String]
+      .collect().toSeq === Seq("first"))
+    assert(dataFilesOnDisk(root) === st.files.map(_.path).toSet,
+      "the racer's staged files must not outlive its dropped claim")
+    assert(LakeFormat.overwrite(rows("again"), root,
+      txn = Some(("app", 3L))) === st.version)
+    assert(LakeFormat.state(spark, root).version === st.version)
   }
 
   test("optimize rebases over concurrent ingest; aborts only when a picked file was rewritten") {

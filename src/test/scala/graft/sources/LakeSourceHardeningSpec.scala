@@ -166,7 +166,7 @@ class LakeSourceHardeningSpec extends AnyFunSuite {
 
   test("batch relation: one execution reads one version; a new action reads the new tip") {
     val root = tableWithCommits(2)
-    val rel = new GraftLakeRelation(spark.sqlContext, root,
+    val rel = GraftLakeRelation.table(spark.sqlContext, root,
       Map("path" -> root))
     // within ONE execution the pin holds across scans even as a commit
     // lands between them (the self-join consistency rule)
@@ -248,7 +248,7 @@ class LakeSourceHardeningSpec extends AnyFunSuite {
     def up(id: Long) = Seq((id, id, true, s"r$id"))
       .toDF("id", "lsn", "live", "v")
     LakeTx.commitTx(spark, root, Map("a" -> up(1)), app = "lsh2", txv = 1L)
-    val rel = new GraftLakeTxRelation(spark.sqlContext, root, "a", None)
+    val rel = GraftLakeRelation.txMember(spark.sqlContext, root, "a", None)
     val (t1, t2) = underExecution("lsh-tx-1") {
       val a = rel.buildScan(Array("id"), Array.empty).count()
       LakeTx.commitTx(spark, root, Map("a" -> up(2)), app = "lsh2", txv = 2L)
@@ -274,9 +274,9 @@ class LakeSourceHardeningSpec extends AnyFunSuite {
     val tipBytes = LakeFormat.state(spark, root).files.map(_.bytes).sum
     assert(tipBytes > v1Bytes)
     val sqlCtx = spark.sqlContext
-    val asOf = new GraftLakeRelation(sqlCtx, root,
+    val asOf = GraftLakeRelation.table(sqlCtx, root,
       Map("path" -> root, "versionAsOf" -> "1"))
-    val cur = new GraftLakeRelation(sqlCtx, root, Map("path" -> root))
+    val cur = GraftLakeRelation.table(sqlCtx, root, Map("path" -> root))
     assert(asOf.sizeInBytes === v1Bytes)
     assert(cur.sizeInBytes === tipBytes)
   }
@@ -285,7 +285,7 @@ class LakeSourceHardeningSpec extends AnyFunSuite {
 
   test("empty-projection buildScan ships zero-width rows (count(*) path)") {
     val root = tableWithCommits(2)
-    val rel = new GraftLakeRelation(spark.sqlContext, root,
+    val rel = GraftLakeRelation.table(spark.sqlContext, root,
       Map("path" -> root))
     val widths = rel.buildScan(Array.empty, Array.empty)
       .map(_.length).distinct().collect().toSeq
@@ -429,7 +429,7 @@ class LakeSourceHardeningSpec extends AnyFunSuite {
     val root = freshDir("lsh_ttw")
     Seq((1L, "a")).toDF("id", "v")
       .write.format("graft-lake").option("keyCols", "id").save(root)
-    val rel = new GraftLakeRelation(spark.sqlContext, root,
+    val rel = GraftLakeRelation.table(spark.sqlContext, root,
       Map("path" -> root, "versionAsOf" -> "1"))
     val ex = intercept[IllegalArgumentException] {
       rel.insert(Seq((2L, "b")).toDF("id", "v"), overwrite = false)

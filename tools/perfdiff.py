@@ -20,9 +20,66 @@ fictitious regression.
 
 Usage: python3 tools/perfdiff.py <old.json> <new.json> [ratio=2.0]
 Exit 1 if any query regressed past the threshold (after normalization).
+
+COUNTERS MODE compares two result lines of the repo benchmark run traced
+(`python3 perfbench/run.py --workload <w> --seed <n> --trace 1`, each saved
+to a file; the last line of the file that parses as JSON is read). Every
+per-layer metric whose `unit` in BENCHMARK.json is `count` or `bytes` is
+compared: counts must match exactly (jobs and tasks per batch are
+deterministic for one seed), while byte metrics and any count of rows may
+move by 0.03 % — the drift measured between two runs of one seed.
+
+Usage: python3 tools/perfdiff.py --counters <old.json> <new.json>
+Exit 1 if a metric moved past its tolerance or is missing from a side.
 """
 import json
+import os
 import sys
+
+BENCHMARK = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "BENCHMARK.json")
+COUNTER_UNITS = ("count", "bytes")
+DRIFT = 0.0003  # relative tolerance of byte and row metrics
+
+
+def tolerance(name, unit):
+    """Relative tolerance of a counter: DRIFT for bytes and rows, else 0."""
+    return DRIFT if unit == "bytes" or "rows" in name else 0.0
+
+
+def last_result(path):
+    """The `metrics` map of the last line of `path` that parses as JSON."""
+    with open(path) as fh:
+        lines = [l for l in fh.read().splitlines() if l.strip()]
+    for line in reversed(lines):
+        try:
+            return json.loads(line)["metrics"]
+        except (ValueError, KeyError, TypeError):
+            continue
+    raise SystemExit(f"no benchmark result line in {path}")
+
+
+def counters(old_path, new_path, bench_path=BENCHMARK):
+    with open(bench_path) as fh:
+        units = {m["name"]: m["unit"] for m in json.load(fh)["per_layer"]}
+    old, new = last_result(old_path), last_result(new_path)
+    bad = []
+    for name, unit in units.items():
+        if unit not in COUNTER_UNITS:
+            continue
+        if name not in old or name not in new:
+            bad.append(name)
+            print(f"MISSING {name}")
+            continue
+        o, n = old[name]["value"], new[name]["value"]
+        tol = tolerance(name, unit)
+        moved = abs(n - o) > tol * abs(o)
+        if moved:
+            bad.append(name)
+        print(f"{'MOVED' if moved else 'same '} {name} ({unit}, "
+              f"tol {tol * 100:g} %): {o} -> {n}")
+    print(f"{len(bad)} counter(s) moved" if bad else "no counter moved")
+    return 1 if bad else 0
 
 
 def seg_normalized(new_doc, cal_o):
@@ -120,5 +177,7 @@ def main(old_path, new_path, ratio=2.0):
 
 
 if __name__ == "__main__":
+    if sys.argv[1] == "--counters":
+        sys.exit(counters(sys.argv[2], sys.argv[3]))
     r = float(sys.argv[3]) if len(sys.argv) > 3 else 2.0
     sys.exit(main(sys.argv[1], sys.argv[2], r))

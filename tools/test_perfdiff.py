@@ -6,6 +6,8 @@ synthetic BENCH_FULL-shaped JSONs (no Spark run needed):
  2. MID-RUN drift (pass 2 only 2x slower — the r7 pathology)    -> clean
  3. a real per-query regression under a clean host              -> flagged
  4. legacy new-doc without series fields                        -> old path
+ 5. counters mode over perfbench `--trace 1` result lines: exact counts,
+    0.03 % on bytes, time metrics ignored, a missing counter flagged
 
 Run: python3 tools/test_perfdiff.py   (exit 0 = all behaviors correct)
 """
@@ -48,6 +50,62 @@ def run(old, new, ratio=2.0):
     finally:
         os.unlink(fo.name)
         os.unlink(fn.name)
+
+
+def result_line(values):
+    """A perfbench `--trace 1` result line over every per-layer metric of
+    BENCHMARK.json: `values` overrides, every other metric reads 1.0."""
+    with open(perfdiff.BENCHMARK) as fh:
+        spec = json.load(fh)["per_layer"]
+    metrics = {m["name"]: {"value": values.get(m["name"], 1.0),
+                           "unit": m["unit"]} for m in spec}
+    return json.dumps({"correct": True, "attempted": 12, "failed": 0,
+                       "metrics": metrics})
+
+
+def run_counters(old_values, new_values, drop=None):
+    """perfdiff --counters over two fixture files; `drop` removes one
+    metric from the new side. The new file carries log lines before its
+    result line, as a captured run does."""
+    new_line = json.loads(result_line(new_values))
+    if drop:
+        del new_line["metrics"][drop]
+    with tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as fo, \
+         tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as fn:
+        fo.write(result_line(old_values) + "\n")
+        fn.write("[perfbench] building\nnot json\n" + json.dumps(new_line) + "\n")
+    try:
+        return perfdiff.counters(fo.name, fn.name)
+    finally:
+        os.unlink(fo.name)
+        os.unlink(fn.name)
+
+
+def counter_scenarios(failures):
+    base = {"LakeSink.jobs_per_batch": 5.1667,
+            "LakeSink.tasks_per_batch": 11.0833,
+            "LakeFormat.bytes_added_per_batch": 434000.0,
+            "LakeSink.apply_ms_p50": 790.0}
+    if run_counters(base, dict(base)) != 0:
+        failures.append("counters: identical runs flagged")
+    # 0.023 % byte drift is inside the tolerance; a 2x slower apply is a
+    # time metric and never compared here
+    if run_counters(base, dict(base, **{
+            "LakeFormat.bytes_added_per_batch": 434100.0,
+            "LakeSink.apply_ms_p50": 1580.0})) != 0:
+        failures.append("counters: in-tolerance drift or a time metric flagged")
+    if run_counters(base, dict(base, **{
+            "LakeFormat.bytes_added_per_batch": 434200.0})) != 1:
+        failures.append("counters: 0.046 % byte drift NOT flagged")
+    if run_counters(base, dict(base, **{
+            "LakeSink.jobs_per_batch": 5.25})) != 1:
+        failures.append("counters: one more job per 12 batches NOT flagged")
+    if run_counters(base, dict(base, **{
+            "LakeSink.tasks_per_batch": 11.1667})) != 1:
+        failures.append("counters: one more task per 12 batches NOT flagged")
+    if run_counters(base, dict(base),
+                    drop="LakeFormat.files_removed_per_batch") != 1:
+        failures.append("counters: a missing counter NOT flagged")
 
 
 def main():
@@ -104,10 +162,12 @@ def main():
     if run(old, new5) != 1:
         failures.append("legacy real regression NOT flagged")
 
+    counter_scenarios(failures)
+
     if failures:
         print("FAIL:", "; ".join(failures))
         return 1
-    print("perfdiff self-test: all 7 scenarios behave correctly")
+    print("perfdiff self-test: all 13 scenarios behave correctly")
     return 0
 
 
