@@ -26,8 +26,7 @@ import org.apache.spark.sql.catalyst.expressions.{
   * Layout under `root`:
   * {{{
   *   root/_log/<v padded to 20>.json        one commit: JSON action lines
-  *   root/_log/<v>.checkpoint.parquet       log checkpoint (replay shortcut)
-  *   root/_log/_last_checkpoint             pointer to the newest checkpoint
+  *   root/_log/<v>.checkpoint.json          log checkpoint (replay shortcut)
   *   root/data/<uuid>.parquet               immutable data files
   * }}}
   *
@@ -58,17 +57,22 @@ import org.apache.spark.sql.catalyst.expressions.{
   * Delta protocol documents.
   *
   * SCALE: the log is the only driver-side state — O(#files) entries,
-  * checkpointed to parquet every [[checkpoint]] call so replay reads one
-  * parquet file plus the JSON tail instead of the whole history (the
-  * Delta `_last_checkpoint` design). Reads prune files by the per-column
-  * min/max stats BEFORE any scan ([[scan]]): a predicate that touches 1%
-  * of a 100 TB table's key range opens ~1% of its files. Those stats
-  * are gathered by the write tasks while they write each file, so every
-  * write (merge, append, overwrite, optimize, delete, update) is one
-  * write job with no read-back. MERGE rewrites only the files that
-  * actually contain touched keys — stats-pruned first, then confirmed by
-  * one key-probe scan — so applying a kilobyte-sized CDC batch never
-  * rewrites terabytes, in five Spark jobs ([[merge]]).
+  * checkpointed every [[checkpoint]] call so replay reads one checkpoint
+  * file plus the JSON tail instead of the whole history, with no Spark
+  * job: a checkpoint is the commits' own encoding (an `add` line per
+  * live file, a `txn` line per app), claimed like a commit. Parquet
+  * checkpoint directories of older trees are not listed: such a table
+  * replays from its JSON entries, or fails loudly on a missing entry
+  * that [[pruneLog]] removed — never a wrong state. Reads prune files
+  * by the per-column min/max stats BEFORE any scan ([[scan]]): a
+  * predicate that touches 1% of a 100 TB table's key range opens ~1% of
+  * its files. Those stats are gathered by the write tasks while they
+  * write each file, so every write (merge, append, overwrite, optimize,
+  * delete, update) is one write job with no read-back. MERGE rewrites
+  * only the files that actually contain touched keys — stats-pruned
+  * first, then confirmed by one key-probe scan — so applying a
+  * kilobyte-sized CDC batch never rewrites terabytes, in five Spark
+  * jobs ([[merge]]).
   */
 object LakeFormat {
 
@@ -120,9 +124,7 @@ object LakeFormat {
   private def logFile(root: String, v: Long) =
     new Path(logDir(root), f"$v%020d.json")
   private def checkpointFile(root: String, v: Long) =
-    new Path(logDir(root), f"$v%020d.checkpoint.parquet")
-  private def lastCheckpointPtr(root: String) =
-    new Path(logDir(root), "_last_checkpoint")
+    new Path(logDir(root), f"$v%020d.checkpoint.json")
 
   /** Delete log entries below `floorV` — retention for SELF-CONTAINED
     * logs whose every version is readable on its own ([[LakeTx]]'s
@@ -147,30 +149,29 @@ object LakeFormat {
   private[sources] def lockFor(root: String): Object =
     commitLocks.getOrElseUpdate(root, new Object)
 
-  private[sources] def listLogVersions(spark: SparkSession, root: String): Seq[Long] = {
+  /** One `_log` listing: (commit versions, checkpoint versions). Names
+    * starting with a dot are unclaimed temp files ([[claim]]); a claimed
+    * name is complete, so no per-entry probe is needed. */
+  private def listLog(spark: SparkSession,
+      root: String): (Seq[Long], Seq[Long]) = {
     val f = fs(spark, root)
     val d = logDir(root)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq.map(_.getPath.getName)
-      .filter(n => n.endsWith(".json") && !n.startsWith("."))
-      .flatMap(n => n.stripSuffix(".json").toLongOption)
+    val names =
+      if (!f.exists(d)) Seq.empty
+      else f.listStatus(d).toSeq.map(_.getPath.getName)
+        .filterNot(_.startsWith("."))
+    def versions(suffix: String) =
+      names.filter(_.endsWith(suffix)).flatMap(_.stripSuffix(suffix).toLongOption)
+    (versions(".json"), versions(".checkpoint.json"))
   }
 
-  /** Committed checkpoint versions (a checkpoint is a parquet DIR; only
-    * fully-written ones — `_SUCCESS` present — count, so a crashed
-    * checkpoint writer leaves no readable half-state). */
+  private[sources] def listLogVersions(spark: SparkSession, root: String): Seq[Long] =
+    listLog(spark, root)._1
+
+  /** Committed checkpoint versions. */
   private[sources] def listCheckpointVersions(spark: SparkSession,
-      root: String): Seq[Long] = {
-    val f = fs(spark, root)
-    val d = logDir(root)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq
-      .filter(s => s.isDirectory
-        && s.getPath.getName.endsWith(".checkpoint.parquet")
-        && f.exists(new Path(s.getPath, "_SUCCESS")))
-      .flatMap(_.getPath.getName.stripSuffix(".checkpoint.parquet")
-        .toLongOption)
-  }
+      root: String): Seq[Long] =
+    listLog(spark, root)._2
 
   // ------------------------------------------------------------ JSON
 
@@ -255,56 +256,53 @@ object LakeFormat {
     } else throw new IllegalArgumentException(s"unknown lake action: $line")
   }
 
-  private[sources] def readLogLines(spark: SparkSession, root: String,
-      v: Long): Seq[String] = {
-    val f = fs(spark, root)
-    val in = f.open(logFile(root, v))
+  private def readLines(spark: SparkSession, p: Path): Seq[String] = {
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
     try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
       .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
     finally in.close()
   }
 
+  private[sources] def readLogLines(spark: SparkSession, root: String,
+      v: Long): Seq[String] =
+    readLines(spark, logFile(root, v))
+
   // ------------------------------------------------------------ commit
 
-  /** Claim `v` atomically: temp write + rename WITHOUT overwrite — false
-    * when another writer already owns `v`.
+  /** Claim `target` in `_log` atomically: temp write + rename WITHOUT
+    * overwrite — false when another writer already owns the name. The
+    * one publish of the log: commits ([[tryCommit]]) and checkpoints
+    * ([[writeCheckpointFile]]).
     *
-    * Each commit leads with a `commit` action carrying a fresh writer
-    * UUID, and after the rename the claimed file is RE-READ and verified
-    * to hold this writer's bytes: on HDFS-semantics filesystems the
+    * After the rename the claimed file is RE-READ and verified to hold
+    * this writer's `lines`: on HDFS-semantics filesystems the
     * no-overwrite rename is atomic and the readback is a cheap no-op
     * check, but on POSIX local filesystems (and object stores without
     * conditional PUT) the existence check inside rename is NOT atomic —
     * two out-of-process writers can both pass it and the second rename
     * silently replaces the first. The readback detects the replaced
-    * writer, which returns false and retries at the next version instead
-    * of silently losing its commit. (In-JVM racers are fully serialized
-    * by [[lockFor]]; the readback narrows the cross-process window to
-    * the rename→readback instant — the same residual the public Delta
-    * protocol closes with an external log store, documented here rather
-    * than hidden.) */
-  private[sources] def tryCommit(spark: SparkSession, root: String, v: Long,
-      lines: Seq[String], op: String = ""): Boolean = {
+    * writer, which returns false instead of silently losing its write.
+    * (In-JVM committers are fully serialized by [[lockFor]]; the
+    * readback narrows the cross-process window to the rename→readback
+    * instant — the same residual the public Delta protocol closes with
+    * an external log store, documented here rather than hidden.) A
+    * crash before the rename leaves a `_log/.tmp-*` file, which no
+    * listing reads and [[vacuum]] reclaims. */
+  private def claim(spark: SparkSession, root: String, target: Path,
+      lines: Seq[String]): Boolean = {
     val f = fs(spark, root)
     f.mkdirs(logDir(root))
     val tmp = new Path(logDir(root), s".tmp-${UUID.randomUUID.toString.take(12)}")
-    val payload = (commitJson(UUID.randomUUID.toString, op,
-      System.currentTimeMillis()) +: lines)
-      .mkString("\n") + "\n"
     val out = f.create(tmp, false)
-    try out.write(payload.getBytes("UTF-8"))
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     val fc = FileContext.getFileContext(new Path(root).toUri,
       spark.sparkContext.hadoopConfiguration)
     try {
-      fc.rename(tmp, logFile(root, v))
+      fc.rename(tmp, target)
       // ownership readback — never delete the file on mismatch: the
-      // bytes there are the WINNER's commit
-      val in = f.open(logFile(root, v))
-      val back = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-      back == payload
+      // bytes there are the WINNER's
+      readLines(spark, target) == lines
     }
     catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException
@@ -313,6 +311,16 @@ object LakeFormat {
         f.delete(tmp, false); false
     }
   }
+
+  /** Claim log version `v` for `lines` ([[claim]]). Each commit leads
+    * with a `commit` action carrying a fresh writer UUID, so two writers'
+    * commits never read back alike: a writer whose claim another
+    * replaced retries at the next version. */
+  private[sources] def tryCommit(spark: SparkSession, root: String, v: Long,
+      lines: Seq[String], op: String = ""): Boolean =
+    claim(spark, root, logFile(root, v),
+      commitJson(UUID.randomUUID.toString, op, System.currentTimeMillis()) +:
+        lines)
 
   /** Create an empty table: commit version 0 carrying only the `meta`
     * action. Throws if a log already exists at `root`. `schema` is the
@@ -336,8 +344,8 @@ object LakeFormat {
   // ------------------------------------------------------------ replay
 
   /** A POINTER file: one small file naming a version, the commit point
-    * of every pointer-published state here (`_last_checkpoint`, a
-    * consumer's `_offset`, the T18 generation `_LATEST`). Absent, empty,
+    * of every pointer-published state here (a consumer's `_offset`, the
+    * T18 generation `_LATEST`). Absent, empty,
     * unparsable and checksum-mismatched (bytes rewritten behind a
     * checksumming FileSystem's back) all read as None — a torn or foreign
     * write must never read as a committed version, and the next
@@ -370,62 +378,29 @@ object LakeFormat {
       .rename(tmp, p, Options.Rename.OVERWRITE)
   }
 
-  // the checkpoint's fixed row schema ([[writeCheckpointFile]]): reading
-  // with it skips parquet schema inference, a job of its own per replay
-  private val CheckpointSchema = StructType.fromDDL(
-    "kind STRING, path STRING, rows BIGINT, bytes BIGINT, " +
-      "schemaDdl STRING, stats STRING, appId STRING, txnVersion BIGINT")
-
-  // checkpoint rows are a tagged union: kind=add carries a file entry,
-  // kind=txn an (appId, version) high-water mark — txn state MUST ride
-  // the checkpoint or a replay-from-checkpoint would forget applied
-  // batches and double-merge them
-  private def readCheckpoint(spark: SparkSession, root: String,
-      v: Long): (Seq[AddFile], Map[String, Long]) = {
-    val rows = spark.read.schema(CheckpointSchema)
-      .parquet(checkpointFile(root, v).toString).collect().toSeq
-    val adds = rows.filter(_.getString(0) == "add")
-      // pre-r17 checkpoints lack the bytes column: it reads NULL → 0
-      // (legacy degradation)
-      .map(r => AddFile(r.getString(1), r.getLong(2), r.getString(4),
-        parseStats(mapper.readTree(r.getString(5))),
-        if (r.isNullAt(3)) 0L else r.getLong(3)))
-      .sortBy(_.path)
-    val txns = rows.filter(_.getString(0) == "txn")
-      .map(r => r.getString(6) -> r.getLong(7)).toMap
-    (adds, txns)
-  }
-
   /** Reconstruct the table state at `asOf` (default: the latest committed
-    * version): meta from commit 0, files from checkpoint + JSON tail
-    * replay. Versions are dense (each commit claims tip+1), so `asOf`
-    * beyond the tip throws rather than silently serving the tip. */
+    * version) on the driver: meta from commit 0, then one fold over the
+    * newest checkpoint at-or-below the target (historical ones keep
+    * versions replayable after [[pruneLog]]) and the JSON commits after
+    * it, both found by one `_log` listing. Versions are dense (each
+    * commit claims tip+1), so `asOf` beyond the tip throws rather than
+    * silently serving the tip. */
   def state(spark: SparkSession, root: String,
       asOf: Option[Long] = None): LakeState = {
-    val vs = listLogVersions(spark, root)
+    val (vs, cps) = listLog(spark, root)
     require(vs.nonEmpty, s"not a lake table (no _log): $root")
     val latest = vs.max
     val target = asOf.getOrElse(latest)
     require(target >= 0L && target <= latest,
       s"version $target not committed at $root (latest=$latest)")
     val meta = readMeta(spark, root)
-    // the NEWEST fully-written checkpoint at-or-below the target (from
-    // the checkpoint listing, not just the `_last_checkpoint` pointer —
-    // historical checkpoints keep retained versions replayable after
-    // [[pruneLog]] reclaims the JSON entries below them)
-    val cp = listCheckpointVersions(spark, root).filter(_ <= target)
-      .maxOption.orElse(readPointer(spark, lastCheckpointPtr(root))
-        .filter(_ <= target))
+    val cp = cps.filter(_ <= target).maxOption
+    val replay = cp.map(checkpointFile(root, _)).toSeq ++
+      (cp.fold(0L)(_ + 1) to target).map(logFile(root, _))
     val files = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
     val txns = scala.collection.mutable.Map.empty[String, Long]
-    cp.foreach { v =>
-      val (adds, cpTxns) = readCheckpoint(spark, root, v)
-      adds.foreach(a => files += a.path -> a)
-      txns ++= cpTxns
-    }
-    val from = cp.map(_ + 1).getOrElse(0L)
-    (from to target).foreach { v =>
-      readLogLines(spark, root, v).map(parseLine).foreach {
+    replay.foreach { file =>
+      readLines(spark, file).map(parseLine).foreach {
         case AddA(a)     => files += a.path -> a
         case RemoveA(p)  => files -= p
         case TxnA(app, tv) =>
@@ -1174,7 +1149,7 @@ object LakeFormat {
     *     first ([[tryCommit]]'s readback) re-runs the same checks from
     *     its commit on.
     * The auto-checkpoint runs after the claim, outside the lock: it
-    * replays state and runs a Spark write job, and holding the lock
+    * replays state and claims a file of its own, and holding the lock
     * through it would stall every concurrent in-JVM writer. */
   private def commit(spark: SparkSession, root: String,
       readVersion: Option[Long], lines: Seq[String], adds: Seq[AddFile],
@@ -1352,13 +1327,26 @@ object LakeFormat {
     * lazily per commit; a txn/meta-only commit yields no pair. */
   def changeFeedBatches(spark: SparkSession, root: String, fromV: Long,
       toV: Long): Seq[(Long, DataFrame)] = {
-    val meta = readMeta(spark, root)
     require(fromV >= 1L && fromV <= toV, s"bad feed range [$fromV, $toV]")
     val tip = listLogVersions(spark, root).max
     require(toV <= tip, s"version $toV not committed (tip=$tip)")
+    val (base, commits) = walkCommits(spark, root, fromV, toV)
+    commits.collect { // a txn/meta-only commit yields no pair
+      case (v, adds, removes) if adds.nonEmpty || removes.nonEmpty =>
+        v -> commitDiff(spark, root, base.meta, adds, removes, v)
+    }
+  }
+
+  /** The forward log walk of [[changeFeedBatches]] and [[vacuum]]: ONE
+    * state replay at `fromV - 1`, then each commit in [fromV, toV] as
+    * (version, the files it added, the live entries its removes
+    * retired), folding the live set as it goes. */
+  private def walkCommits(spark: SparkSession, root: String, fromV: Long,
+      toV: Long): (LakeState, Seq[(Long, Seq[AddFile], Seq[AddFile])]) = {
+    val base = state(spark, root, Some(fromV - 1))
     val live = scala.collection.mutable.Map.empty[String, AddFile]
-    state(spark, root, Some(fromV - 1)).files.foreach(a => live += a.path -> a)
-    (fromV to toV).flatMap { v =>
+    base.files.foreach(a => live += a.path -> a)
+    base -> (fromV to toV).map { v =>
       var addsV = List.empty[AddFile]
       var removesV = List.empty[AddFile]
       readLogLines(spark, root, v).map(parseLine).foreach {
@@ -1369,8 +1357,7 @@ object LakeFormat {
       }
       removesV.foreach(a => live -= a.path)
       addsV.foreach(a => live += a.path -> a)
-      if (addsV.isEmpty && removesV.isEmpty) None // txn/meta-only commit
-      else Some(v -> commitDiff(spark, root, meta, addsV, removesV, v))
+      (v, addsV, removesV)
     }
   }
 
@@ -1557,36 +1544,28 @@ object LakeFormat {
             s"[lake] auto-checkpoint at v$v failed: ${e.getMessage}")
       }
 
-  /** Write the parquet checkpoint rows for `st` at its version (no
-    * pointer update). File BYTES ride the checkpoint (r17) so a
-    * replay-from-checkpoint state keeps sizing relations, byte-capped
-    * triggers and size-aware optimize; pre-r17 checkpoints read back 0
-    * (the documented legacy-bytes degradation). */
+  /** Publish `st` as the checkpoint at its version: the `add` line of
+    * every live file (recorded bytes and stats included) and one `txn`
+    * line per writer app — the txn marks MUST ride the checkpoint or a
+    * replay from it would forget applied batches and double-merge them.
+    * The file is claimed like a commit ([[claim]]); a checkpoint that
+    * already exists at the version holds the same state, so losing the
+    * claim is a no-op. */
   private def writeCheckpointFile(spark: SparkSession, root: String,
-      st: LakeState): Unit = {
-    import spark.implicits._
-    val addRows = st.files.map(a => ("add", a.path, a.rows, a.bytes,
-      a.schemaDdl, statsJson(a.stats), "", 0L))
-    val txnRows = st.txns.toSeq.sortBy(_._1).map { case (app, tv) =>
-      ("txn", "", 0L, 0L, "", "{}", app, tv)
-    }
-    (addRows ++ txnRows)
-      .toDF("kind", "path", "rows", "bytes", "schemaDdl", "stats", "appId",
-        "txnVersion")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(checkpointFile(root, st.version).toString)
-  }
+      st: LakeState): Unit =
+    claim(spark, root, checkpointFile(root, st.version),
+      st.files.map(addJson) ++ st.txns.toSeq.sortBy(_._1).map {
+        case (app, tv) => txnJson(app, tv) })
 
-  /** Write a parquet checkpoint of the CURRENT state and point
-    * `_last_checkpoint` at it: replay afterwards reads one parquet file
-    * plus the JSON tail. JSON commits are retained (they stay the source
-    * of truth for time travel and audits) until [[pruneLog]] explicitly
-    * reclaims old ones; the checkpoint is a replay accelerator and the
-    * replay FLOOR for pruned history. Returns the checkpointed version. */
+  /** Checkpoint the CURRENT state: replay afterwards reads one small
+    * JSON file plus the JSON tail, with no Spark job either way. JSON
+    * commits are retained (they stay the source of truth for time travel
+    * and audits) until [[pruneLog]] explicitly reclaims old ones; the
+    * checkpoint is a replay accelerator and the replay FLOOR for pruned
+    * history. Returns the checkpointed version. */
   def checkpoint(spark: SparkSession, root: String): Long = {
     val st = state(spark, root)
     writeCheckpointFile(spark, root, st)
-    writePointer(spark, lastCheckpointPtr(root), st.version)
     st.version
   }
 
@@ -1595,7 +1574,7 @@ object LakeFormat {
     * lifetime (at one commit a minute, a year is ~500k driver-side
     * listing entries): ensure a CHECKPOINT exists at the retention
     * floor (so every retained version replays as checkpoint + tail),
-    * then delete JSON entries and stale checkpoints below it. Version
+    * then delete JSON entries and checkpoint files below it. Version
     * 0 is always kept — it carries the immutable table meta.
     *
     * Contract: time travel, change feeds and [[history]] below the
@@ -1616,20 +1595,17 @@ object LakeFormat {
     if (floor <= 1L) return Seq.empty
     consumerRetentionGate(spark, root, floor,
       s"pruneLog(keepVersions=$keepVersions)", expireConsumersOlderThanMs)
-    if (!listCheckpointVersions(spark, root).contains(floor))
-      writeCheckpointFile(spark, root, state(spark, root, Some(floor)))
+    writeCheckpointFile(spark, root, state(spark, root, Some(floor)))
     val f = fs(spark, root)
     val now = System.currentTimeMillis()
-    val pruned = listLogVersions(spark, root)
-      .filter(v => v >= 1L && v < floor).sorted
-      .filter(v => now - f.getFileStatus(logFile(root, v))
-        .getModificationTime >= olderThanMs)
+    def old(p: Path) = now - f.getFileStatus(p).getModificationTime >= olderThanMs
+    val (vs, cps) = listLog(spark, root)
+    val pruned = vs.filter(v => v >= 1L && v < floor).sorted
+      .filter(v => old(logFile(root, v)))
       .map { v => f.delete(logFile(root, v), false); v }
     // checkpoints below the floor serve only pruned versions — reclaim
-    listCheckpointVersions(spark, root).filter(_ < floor)
-      .filter(v => now - f.getFileStatus(checkpointFile(root, v))
-        .getModificationTime >= olderThanMs)
-      .foreach(v => f.delete(checkpointFile(root, v), true))
+    cps.filter(_ < floor).map(checkpointFile(root, _)).filter(old)
+      .foreach(f.delete(_, false))
     pruned
   }
 
@@ -1744,16 +1720,17 @@ object LakeFormat {
 
   /** Reclaim data files unreferenced by every retained snapshot (the
     * newest `keepVersions` versions stay time-travelable) and sweep
-    * crashed-writer `_tmp-*` staging debris. `olderThanMs` is the
-    * in-flight-writer guard: a file younger than it is NEVER deleted even
-    * if unreferenced, because a concurrent writer may have staged it for
-    * a commit that hasn't claimed its log slot yet (production keeps
-    * hours here; single-writer tests pass 0). REFUSES to run when the
-    * requested window would break the change feed for a registered
-    * consumer ([[registerConsumer]]): commits above its offset need
-    * every file removed after that offset as a pre-image, so reclaiming
-    * them would turn the consumer's next drain into a missing-file
-    * failure — the refusal names the laggard and the remedies instead.
+    * crashed writers' `_tmp-*` staging dirs and `_log/.tmp-*` files.
+    * `olderThanMs` is the in-flight-writer guard: a file younger than it
+    * is NEVER deleted even if unreferenced, because a concurrent writer
+    * may have staged it for a commit that hasn't claimed its log slot
+    * yet (production keeps hours here; single-writer tests pass 0).
+    * REFUSES to run when the requested window would break the change
+    * feed for a registered consumer ([[registerConsumer]]): commits
+    * above its offset need every file removed after that offset as a
+    * pre-image, so reclaiming them would turn the consumer's next drain
+    * into a missing-file failure — the refusal names the laggard and
+    * the remedies instead.
     * Returns the deleted relative paths. `dryRun=true` returns the
     * paths the same call WOULD reclaim — refusing exactly when the real
     * call would refuse (expiry policy included) — without mutating
@@ -1764,13 +1741,16 @@ object LakeFormat {
       dryRun: Boolean = false): Seq[String] = {
     require(keepVersions >= 1, "must retain at least the current version")
     val f = fs(spark, root)
-    val latest = state(spark, root).version
+    val latest = listLogVersions(spark, root).max
     val floor = math.max(0L, latest - keepVersions + 1)
     consumerRetentionGate(spark, root, floor,
       s"vacuum(keepVersions=$keepVersions)", expireConsumersOlderThanMs,
       dryRun)
-    val referenced = (floor to latest)
-      .flatMap(v => state(spark, root, Some(v)).files.map(_.path)).toSet
+    // every file live at a retained version: the floor's files plus each
+    // later commit's adds (a file added and removed inside the window
+    // was live at a retained version) — one forward walk
+    val (atFloor, retained) = walkCommits(spark, root, floor + 1, latest)
+    val referenced = (atFloor.files ++ retained.flatMap(_._2)).map(_.path).toSet
     val now = System.currentTimeMillis()
     val dataDir = new Path(root, "data")
     val rootUri = new Path(root).toUri.getPath
@@ -1790,10 +1770,11 @@ object LakeFormat {
     if (dryRun) return reclaimable
     val deleted = reclaimable
       .map { rel => f.delete(new Path(root, rel), false); rel }
-    // crashed-writer staging dirs (data never referenced by any commit)
-    f.listStatus(new Path(root)).toSeq
-      .filter(s => s.getPath.getName.startsWith("_tmp-")
-        && now - s.getModificationTime >= olderThanMs)
+    // crashed writers' debris: staging dirs (data never referenced by any
+    // commit) and unclaimed log temp files ([[claim]])
+    (f.listStatus(new Path(root)).filter(_.getPath.getName.startsWith("_tmp-")) ++
+      f.listStatus(logDir(root)).filter(_.getPath.getName.startsWith(".tmp-")))
+      .filter(s => now - s.getModificationTime >= olderThanMs)
       .foreach(s => f.delete(s.getPath, true))
     deleted
   }

@@ -2160,8 +2160,8 @@ object Streams extends Serializable {
     * dangling uncommitted `g=<n+1>` and a fully-served gen n — repaired
     * by re-running the retrain, which discards the uncommitted
     * generation's half-built index first (its seed epoch would otherwise
-    * gate the re-encode out); the same crash calculus as the lake
-    * log's `_last_checkpoint` pointer, through the same helper.
+    * gate the re-encode out); the same crash calculus as a change-feed
+    * consumer's `_offset` pointer, through the same helper.
     *
     * Scale: the refit itself is the bounded-sample fit + one full-corpus
     * encode pass (per-row expression work) — the expensive, rare path;

@@ -96,17 +96,13 @@ class LakeHardeningSpec extends AnyFunSuite {
     assert(build(0L) === build(LakeFormat.DefaultBroadcastKeyLimit))
   }
 
-  test("a single-key merge into a one-file table runs at most five jobs and never reads its written files back") {
-    val root = freshRoot()
-    LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
-    LakeFormat.append(spark.range(100).select(col("id"), lit(1L).as("lsn"),
-      lit(true).as("live"), col("id").cast("string").as("v")).coalesce(1),
-      root)
-    assert(LakeFormat.state(spark, root).files.size === 1)
-    // record every job THIS thread's job group launches during a merge
-    // (suites share the session concurrently — group-filter the bus),
-    // and which stages wrote output
-    val group = s"merge-budget-${java.util.UUID.randomUUID}"
+  /** Run `body` under a fresh job group and return the jobs THAT group
+    * launched (id -> stage ids and names; suites share the session
+    * concurrently, so the bus is group-filtered) and the ids of the
+    * stages that wrote output. */
+  private def groupJobs(what: String)(body: => Unit)
+      : (Map[Int, (Seq[Int], Seq[String])], Set[Int]) = {
+    val group = s"$what-${java.util.UUID.randomUUID}"
     val jobs = collection.mutable.Map.empty[Int, (Seq[Int], Seq[String])]
     val writers = collection.mutable.Set.empty[Int]
     val l = new org.apache.spark.scheduler.SparkListener {
@@ -126,16 +122,27 @@ class LakeHardeningSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      spark.sparkContext.setJobGroup(group, "merge job budget")
-      LakeFormat.merge(spark.range(30).select(col("id"), lit(2L).as("lsn"),
-        lit(true).as("live"), lit("u").as("v")), root)
+      spark.sparkContext.setJobGroup(group, what)
+      body
     } finally {
       spark.sparkContext.clearJobGroup()
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(l)
     }
-    val got = jobs.synchronized(jobs.toMap)
-    val wrote = writers.synchronized(writers.toSet)
+    (jobs.synchronized(jobs.toMap), writers.synchronized(writers.toSet))
+  }
+
+  test("a single-key merge into a one-file table runs at most five jobs and never reads its written files back") {
+    val root = freshRoot()
+    LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
+    LakeFormat.append(spark.range(100).select(col("id"), lit(1L).as("lsn"),
+      lit(true).as("live"), col("id").cast("string").as("v")).coalesce(1),
+      root)
+    assert(LakeFormat.state(spark, root).files.size === 1)
+    val (got, wrote) = groupJobs("merge job budget") {
+      LakeFormat.merge(spark.range(30).select(col("id"), lit(2L).as("lsn"),
+        lit(true).as("live"), lit("u").as("v")), root)
+    }
     val shown = got.toSeq.sortBy(_._1).map { case (id, (_, names)) =>
       s"$id:${names.mkString("+")}" }.mkString(", ")
     // materialize (+ observed key range and count), key broadcast,
@@ -149,6 +156,42 @@ class LakeHardeningSpec extends AnyFunSuite {
     assert(got.keys.forall(_ <= writeJobs.head),
       s"a job ran after the write: $shown")
     assert(LakeFormat.snapshot(spark, root).filter(col("v") === "u").count() === 30L)
+  }
+
+  test("checkpoint, a post-checkpoint state and a marker-gated append replay run no Spark job") {
+    val root = freshRoot()
+    LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
+    // v1..v21, each carrying its marker: v20 auto-checkpoints
+    (1 to 21).foreach(i => LakeFormat.append(
+      Seq((i.toLong, i.toLong, true, s"r$i")).toDF("id", "lsn", "live", "v"),
+      root, txn = Some(("app", i.toLong))))
+    def checkpoints(dir: String) = new java.io.File(dir, "_log").list()
+      .filter(_.endsWith(".checkpoint.json")).sorted.toSeq
+    assert(checkpoints(root) === Seq(f"${20L}%020d.checkpoint.json"))
+    def noJobs(what: String)(body: => Unit): Unit = {
+      val (got, _) = groupJobs(what)(body)
+      assert(got.isEmpty, s"$what ran ${got.size} jobs: " +
+        got.values.map(_._2.mkString("+")).mkString(", "))
+    }
+    noJobs("checkpoint")(assert(LakeFormat.checkpoint(spark, root) === 21L))
+    var st: LakeFormat.LakeState = null
+    noJobs("state") { st = LakeFormat.state(spark, root) }
+    assert(st.version === 21L && st.files.size === 21 &&
+      st.txns === Map("app" -> 21L))
+    val replayed = Seq((21L, 21L, true, "r21")).toDF("id", "lsn", "live", "v")
+    noJobs("gated append")(assert(
+      LakeFormat.append(replayed, root, txn = Some(("app", 21L))) === 21L))
+    // the checkpointed state is the replay from v0: a copy of the table
+    // without its checkpoint files reads the same state at every version
+    // a checkpoint serves
+    val copy = new java.io.File(freshRoot(), "t")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(root), copy)
+    new java.io.File(copy, "_log").listFiles()
+      .filter(_.getName.contains(".checkpoint.json")).foreach(_.delete())
+    assert(checkpoints(copy.toString).isEmpty)
+    assert(LakeFormat.state(spark, copy.toString) === st)
+    assert(LakeFormat.state(spark, copy.toString, Some(20L)) ===
+      LakeFormat.state(spark, root, Some(20L)))
   }
 
   test("selective OPTIMIZE rewrites only the fragmented partition; other entries untouched") {

@@ -170,9 +170,25 @@ class LakeSpec extends AnyFunSuite {
     val root = freshRoot()
     LakeFormat.create(spark, root, Seq("id"), statsCols = Seq("id"))
     (1 to 5).foreach(i => LakeFormat.merge(rows((i.toLong, i.toLong, true, s"r$i")), root))
+    def rowsNow() = LakeFormat.snapshot(spark, root).collect().map(_.toString)
+      .sorted.toSeq
     val before = LakeFormat.snapshot(spark, root).filter(col("live")).count()
+    val rows5 = rowsNow()
     val cv = LakeFormat.checkpoint(spark, root)
     assert(cv === 5L)
+    // the checkpoint is one JSON action file in _log, published by the
+    // log's own claim: a second checkpoint at the version loses the
+    // rename and leaves the first file's bytes
+    val ck = new java.io.File(root, f"_log/$cv%020d.checkpoint.json").toPath
+    val bytes = Files.readAllBytes(ck)
+    assert(LakeFormat.checkpoint(spark, root) === cv)
+    assert(Files.readAllBytes(ck).sameElements(bytes))
+    // a crash between the temp write and the rename leaves a partial
+    // `.tmp-*` file, which no read lists
+    Files.write(new java.io.File(root, "_log/.tmp-partial").toPath,
+      bytes.take(bytes.length / 2))
+    assert(rowsNow() === rows5)
+    assert(LakeFormat.state(spark, root).version === cv)
     // post-checkpoint commits replay as the JSON tail on top of it
     LakeFormat.merge(rows((6L, 6L, true, "r6")), root)
     assert(LakeFormat.snapshot(spark, root).filter(col("live")).count() === before + 1)
@@ -198,9 +214,17 @@ class LakeSpec extends AnyFunSuite {
     assert(LakeFormat.snapshot(spark, root).select("v").as[String].collect()
       .toSeq === Seq("v3"))
     // ...and the in-flight-writer guard refuses young files even when
-    // unreferenced: nothing young is ever deleted with the default guard
+    // unreferenced: nothing young is ever deleted with the default guard.
+    // An unclaimed log temp file (a crash before a commit's or a
+    // checkpoint's rename) is swept once old, kept while young.
     LakeFormat.merge(rows((1L, 4L, true, "v4")), root)
+    val oldTmp = new java.io.File(root, "_log/.tmp-x")
+    val youngTmp = new java.io.File(root, "_log/.tmp-y")
+    Seq(oldTmp, youngTmp).foreach(t => Files.write(t.toPath, "{".getBytes))
+    assert(oldTmp.setLastModified(System.currentTimeMillis() - 2 * 3600L * 1000))
     assert(LakeFormat.vacuum(spark, root, keepVersions = 1).isEmpty)
+    assert(!oldTmp.exists(), "an old _log/.tmp-* must be swept")
+    assert(youngTmp.exists(), "a young _log/.tmp-* must be kept")
   }
 
   test("txn marker makes merge exactly-once: replayed batches no-op, even from a checkpoint") {
@@ -215,7 +239,7 @@ class LakeSpec extends AnyFunSuite {
     assert(LakeFormat.merge(b1, root, txn = Some(("app", 1L))) === v1)
     assert(LakeFormat.state(spark, root).version === v1)
     // txn survives the checkpoint: replay AFTER checkpointing must still
-    // no-op (the marker rides the parquet checkpoint, not just the JSONs)
+    // no-op (the checkpoint carries a txn line per app, like a commit)
     LakeFormat.checkpoint(spark, root)
     assert(LakeFormat.merge(b1, root, txn = Some(("app", 1L))) === v1)
     val v2 = LakeFormat.merge(b2, root, txn = Some(("app", 2L)))

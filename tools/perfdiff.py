@@ -31,6 +31,8 @@ move by 0.03 % — the drift measured between two runs of one seed.
 
 Usage: python3 tools/perfdiff.py --counters <old.json> <new.json>
 Exit 1 if a metric moved past its tolerance or is missing from a side.
+
+`--help` prints this text; bad usage prints it to stderr and exits 2.
 """
 import json
 import os
@@ -176,8 +178,25 @@ def main(old_path, new_path, ratio=2.0):
     return 1 if bad or removed else 0
 
 
+def cli(args):
+    """Dispatch the command line: `--help` prints the usage and exits 0;
+    a wrong argument count or a non-numeric ratio prints it to stderr and
+    exits 2."""
+    if args in (["--help"], ["-h"]):
+        print(__doc__)
+        return 0
+    if len(args) == 3 and args[0] == "--counters":
+        return counters(args[1], args[2])
+    if len(args) in (2, 3) and not args[0].startswith("-"):
+        try:
+            ratio = float(args[2]) if len(args) == 3 else 2.0
+        except ValueError:
+            ratio = None
+        if ratio is not None:
+            return main(args[0], args[1], ratio)
+    print(__doc__, file=sys.stderr)
+    return 2
+
+
 if __name__ == "__main__":
-    if sys.argv[1] == "--counters":
-        sys.exit(counters(sys.argv[2], sys.argv[3]))
-    r = float(sys.argv[3]) if len(sys.argv) > 3 else 2.0
-    sys.exit(main(sys.argv[1], sys.argv[2], r))
+    sys.exit(cli(sys.argv[1:]))

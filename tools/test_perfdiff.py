@@ -8,11 +8,14 @@ synthetic BENCH_FULL-shaped JSONs (no Spark run needed):
  4. legacy new-doc without series fields                        -> old path
  5. counters mode over perfbench `--trace 1` result lines: exact counts,
     0.03 % on bytes, time metrics ignored, a missing counter flagged
+ 6. the command line: `--help` prints the usage (exit 0); no arguments
+    or a short `--counters` print it to stderr (exit 2), no traceback
 
 Run: python3 tools/test_perfdiff.py   (exit 0 = all behaviors correct)
 """
 import json
 import os
+import subprocess
 import sys
 import tempfile
 
@@ -108,6 +111,20 @@ def counter_scenarios(failures):
         failures.append("counters: a missing counter NOT flagged")
 
 
+def usage_scenarios(failures):
+    def run_cli(*args):
+        return subprocess.run([sys.executable, perfdiff.__file__, *args],
+                              capture_output=True, text=True)
+    r = run_cli("--help")
+    if r.returncode != 0 or "Usage:" not in r.stdout:
+        failures.append(f"--help: exit {r.returncode}, no usage printed")
+    for args in ([], ["--counters", "old.json"]):
+        r = run_cli(*args)
+        if r.returncode != 2 or "Usage:" not in r.stderr \
+                or "Traceback" in r.stderr:
+            failures.append(f"bad usage {args}: exit {r.returncode}")
+
+
 def main():
     base = {q: 1.0 for q in QS}
     old = doc(dict(base), cal=0.5)
@@ -163,11 +180,12 @@ def main():
         failures.append("legacy real regression NOT flagged")
 
     counter_scenarios(failures)
+    usage_scenarios(failures)
 
     if failures:
         print("FAIL:", "; ".join(failures))
         return 1
-    print("perfdiff self-test: all 13 scenarios behave correctly")
+    print("perfdiff self-test: all 16 scenarios behave correctly")
     return 0
 
 
